@@ -36,15 +36,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import os
-import uuid
 
 from aws_flight_data_pipeline_spark.functions.text import tokens, word_count
 from aws_flight_data_pipeline_spark.sources.versioned import (
-    _data_dir,
-    _file_blooms,
-    _footer_stats,
-    _publish,
+    _publish_version,
     _read_manifest,
+    _scan,
+    _stage,
     commit,
     latest_version,
     plan_files,
@@ -141,13 +139,11 @@ def refresh_index(
         docs = read(spark, docs_path, version=head)
         # persist BEFORE the range partitioning: repartitionByRange's
         # sampling pass evaluates its child once and the write evaluates it
-        # again — without the persist the full tokenize + aggregate ran
-        # twice per build (r14, guide §2.4). The corpus stats (n_docs,
-        # sum_dl) ride the SAME materialization as an Observation on the
-        # docs scan (observed BEFORE the explode, so zero-token docs still
-        # count): the old shape paid a second full docs-table scan just for
-        # the two integers (r14, guide §1.2 — at corpus scale that scan is
-        # the build's second-largest cost).
+        # again — without the persist the full tokenize + aggregate would
+        # run twice per build. The corpus stats (n_docs, sum_dl) ride the
+        # SAME materialization as an Observation on the docs scan (observed
+        # BEFORE the explode, so zero-token docs still count), so no second
+        # full docs-table scan runs just for the two integers.
         obs = Observation()
         docs_obs = docs.observe(
             obs,
@@ -167,8 +163,8 @@ def refresh_index(
                 # NOTHING probes a doc_id bloom on postings files (deletes
                 # are tombstones, never doc_id point reads), and at corpus
                 # scale a per-file bloom over distinct doc_ids is the
-                # dominant manifest payload — pure dead weight (r15,
-                # guide §1.2; absent bloom = conservative no-skip)
+                # dominant manifest payload — pure dead weight (absent
+                # bloom = conservative no-skip)
                 bloom_cols=tuple(bloom_cols),
                 meta={
                     "source_version": int(head),
@@ -217,17 +213,14 @@ def refresh_index(
             "index_sum_dl": state["sum_dl"] + int(agg["d_s"] or 0),
         }
 
-        # stage all data for this refresh into one txn dir, publish ONCE
-        v = latest_version(index_path)
-        m = _read_manifest(index_path, v)
-        new_v = v + 1
-        # two FLAT txn dirs (vacuum's sweep and referenced-set arithmetic
-        # work at txn-dir grain with top-level parquet files)
-        base = f"v{new_v:09d}-{uuid.uuid4().hex[:12]}"
+        # stage postings and tombstones under one version as two FLAT txn
+        # dirs (vacuum's sweep and referenced-set arithmetic work at
+        # txn-dir grain with top-level parquet files), publish ONCE
+        m = _read_manifest(index_path, latest_version(index_path))
+        new_v = m["version"] + 1
 
-        post_files: list[str] = []
+        post = None
         if int(agg["n_ins"] or 0) > 0:
-            txn_p = f"{base}-post"
             ins = changes.where(F.col("_change_type") == "insert")
             # hash-cluster the refresh batch by token instead of range-
             # clustering it: repartitionByRange pays a sampling pass that
@@ -238,16 +231,16 @@ def refresh_index(
             # (every token's postings still land in exactly one file).
             # The INITIAL build keeps range clustering: corpus-scale file
             # count is where range locality earns its sampling pass.
-            post = _postings(ins, int(head), tokenizer).repartition(
-                _REFRESH_PARTITIONS, "tok"
-            )
-            post.write.mode("error").option("compression", "snappy").parquet(
-                os.path.join(_data_dir(index_path), txn_p)
-            )
-            post_files = sorted(
-                os.path.join("data", txn_p, f)
-                for f in os.listdir(os.path.join(_data_dir(index_path), txn_p))
-                if f.endswith(".parquet")
+            post = _stage(
+                index_path,
+                new_v,
+                _postings(ins, int(head), tokenizer).repartition(
+                    _REFRESH_PARTITIONS, "tok"
+                ),
+                stats_cols=("tok",),
+                # see the initial build's bloom_cols note
+                bloom_cols=tuple(bloom_cols),
+                tag="post",
             )
 
         tomb_files: list[str] = list(m.get("tombstones", []))
@@ -256,7 +249,6 @@ def refresh_index(
             # doc-grain delete cuts across every token-clustered file: a
             # physical rewrite touches the whole index, the tombstone is
             # O(churn). Queries anti-join; compact_index folds physically.
-            txn_t = f"{base}-tomb"
             tomb = (
                 changes.where(F.col("_change_type") == "delete")
                 .select("doc_id")
@@ -264,48 +256,21 @@ def refresh_index(
                 .withColumn("gen", F.lit(int(cur)).cast("bigint"))
                 .coalesce(1)
             )
-            tomb.write.mode("error").option("compression", "snappy").parquet(
-                os.path.join(_data_dir(index_path), txn_t)
-            )
-            tomb_files += sorted(
-                os.path.join("data", txn_t, f)
-                for f in os.listdir(os.path.join(_data_dir(index_path), txn_t))
-                if f.endswith(".parquet")
-            )
+            tomb_files += _stage(index_path, new_v, tomb, tag="tomb")["files"]
 
-        stats = {f: st for f, st in m.get("stats", {}).items()}
-        blooms = {f: b for f, b in m.get("blooms", {}).items()}
-        for f in post_files:
-            stats[f] = _footer_stats(os.path.join(index_path, f), ("tok",))
-            # see the initial build's bloom_cols note
-            fb = (
-                _file_blooms(os.path.join(index_path, f), tuple(bloom_cols), 0.01)
-                if bloom_cols
-                else {}
-            )
-            if fb:
-                blooms[f] = fb
-        _publish(
+        _publish_version(
             index_path,
-            new_v,
-            {
-                "version": new_v,
-                "parent": v,
-                "mode": "index-refresh",
-                "files": m["files"] + post_files,
-                "n_files": len(m["files"]) + len(post_files),
-                "tombstones": tomb_files,
-                "stats": stats,
-                "blooms": blooms,
-                "committed_at": __import__("time").time(),
-                **meta,
-            },
+            m,
+            "index-refresh",
+            keep=m["files"],
+            new=post,
+            extra={"tombstones": tomb_files, **meta},
         )
         return {
             "refreshed": True,
             "from_version": cur,
             "to_version": head,
-            "postings_added": len(post_files),
+            "postings_added": 0 if post is None else len(post["files"]),
             "docs_removed": docs_removed,
         }
     finally:
@@ -365,8 +330,7 @@ def bm25_topk_from_index(
     # identical (per-term point probes against the same manifest), each
     # posting row matches at most one term so the row set is exactly the
     # union's, and the plan carries ONE parquet scan however many terms
-    # the query has (r14 — the 4-term union was ~0.5 s of per-plan driver
-    # work in the index lifecycle episode, guide §3.3 plan-size note).
+    # the query has (per-plan driver work grows with the plan's size).
     terms_sorted = sorted(set(terms))
     kept_union: list[str] = []
     seen: set[str] = set()
@@ -377,9 +341,7 @@ def bm25_topk_from_index(
                 seen.add(f)
                 kept_union.append(f)
     if kept_union:
-        post = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(index_path, f) for f in kept_union]
-        )
+        post = _scan(spark, index_path, kept_union)
     else:
         # every file pruned for every term: empty frame over the schema
         post = read(spark, index_path, version=v).where(F.lit(False))
@@ -408,8 +370,6 @@ def compact_index(spark: SparkSession, index_path: str) -> dict:
     token-clustered, the tombstone list resets to empty, and the cursor +
     running stats carry forward unchanged (compaction is a layout
     operation, not a refresh). Returns ``{compacted, files, tombstones_dropped}``."""
-    import time as _time
-
     v = latest_version(index_path)
     if v is None:
         raise FileNotFoundError(f"{index_path} has no committed versions")
@@ -419,36 +379,20 @@ def compact_index(spark: SparkSession, index_path: str) -> dict:
         return {"compacted": False, "files": m["n_files"], "tombstones_dropped": 0}
     state = index_state(index_path)
     live = _mask_tombstones(spark, index_path, m, read(spark, index_path, version=v))
-    new_v = v + 1
-    txn = f"v{new_v:09d}-{uuid.uuid4().hex[:12]}"
-    txn_dir = os.path.join(_data_dir(index_path), txn)
-    live.repartitionByRange(_INITIAL_PARTITIONS, "tok").write.mode("error").option(
-        "compression", "snappy"
-    ).parquet(txn_dir)
-    new_files = sorted(
-        os.path.join("data", txn, f)
-        for f in os.listdir(txn_dir)
-        if f.endswith(".parquet")
-    )
-    stats = {f: _footer_stats(os.path.join(index_path, f), ("tok",)) for f in new_files}
-    blooms = {
-        f: fb
-        for f in new_files
-        if (fb := _file_blooms(os.path.join(index_path, f), ("tok",), 0.01))
-    }
-    _publish(
+    staged = _stage(
         index_path,
-        new_v,
-        {
-            "version": new_v,
-            "parent": v,
-            "mode": "index-compact",
-            "files": new_files,
-            "n_files": len(new_files),
+        v + 1,
+        live.repartitionByRange(_INITIAL_PARTITIONS, "tok"),
+        stats_cols=("tok",),
+        bloom_cols=("tok",),
+    )
+    _publish_version(
+        index_path,
+        m,
+        "index-compact",
+        new=staged,
+        extra={
             "tombstones": [],
-            "stats": stats,
-            "blooms": blooms,
-            "committed_at": _time.time(),
             "source_version": state["cursor"],
             "index_n_docs": state["n_docs"],
             "index_sum_dl": state["sum_dl"],
@@ -456,6 +400,6 @@ def compact_index(spark: SparkSession, index_path: str) -> dict:
     )
     return {
         "compacted": True,
-        "files": len(new_files),
+        "files": len(staged["files"]),
         "tombstones_dropped": len(tomb_files),
     }

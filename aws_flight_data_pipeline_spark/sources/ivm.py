@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from aws_flight_data_pipeline_spark.sources.versioned import (
     _list_versions,
+    _publish_version,
     _read_manifest,
     commit,
     latest_version,
@@ -176,27 +177,9 @@ def _stamp_cursor(rollup_path: str, head: int) -> None:
     """Metadata-only commit that carries the cursor forward: republish the
     newest manifest's file set with the new ``source_version`` (atomic
     O_EXCL publication, no data movement)."""
-    import time as _time
-
-    from aws_flight_data_pipeline_spark.sources.versioned import _publish
-
-    v = latest_version(rollup_path)
-    m = _read_manifest(rollup_path, v)
-    new_v = v + 1
-    _publish(
-        rollup_path,
-        new_v,
-        {
-            "version": new_v,
-            "parent": v,
-            "mode": "cursor",
-            "files": m["files"],
-            "n_files": m["n_files"],
-            "stats": m.get("stats", {}),
-            "blooms": m.get("blooms", {}),
-            "source_version": head,
-            "committed_at": _time.time(),
-        },
+    m = _read_manifest(rollup_path, latest_version(rollup_path))
+    _publish_version(
+        rollup_path, m, "cursor", keep=m["files"], extra={"source_version": head}
     )
 
 

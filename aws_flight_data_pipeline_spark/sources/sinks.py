@@ -67,6 +67,38 @@ def write_summary(df: DataFrame, path: str, partition_cols: tuple[str, ...] = ("
     writer.parquet(path)
 
 
+def _partitions_pred(parts: list[dict], partition_cols: tuple[str, ...]) -> Column:
+    """OR over the affected partitions of the AND of their column
+    equalities — the filter that prunes a lake scan to exactly those
+    partitions."""
+    pred = None
+    for p in parts:
+        clause = None
+        for c in partition_cols:
+            eq = F.col(c) == F.lit(p[c])
+            clause = eq if clause is None else (clause & eq)
+        pred = clause if pred is None else (pred | clause)
+    return pred
+
+
+def _overwrite_partitions(df: DataFrame, path: str, partition_cols: tuple[str, ...]) -> None:
+    """Dynamic partition overwrite: atomically replace ONLY the partitions
+    present in ``df``; the session's overwrite mode is restored after."""
+    spark = df.sparkSession
+    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try:
+        (
+            df.repartition(*[F.col(c) for c in partition_cols])
+            .write.mode("overwrite")
+            .option("compression", "snappy")
+            .partitionBy(*partition_cols)
+            .parquet(path)
+        )
+    finally:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+
+
 def upsert_partitions(
     increment: DataFrame,
     path: str,
@@ -99,15 +131,7 @@ def upsert_partitions(
             F.lit(0).cast("bigint").alias("rows_kept"),
             F.lit(0).cast("bigint").alias("rows_inserted"),
         )
-    pred = None
-    for p in parts:
-        clause = None
-        for c in partition_cols:
-            eq = F.col(c) == F.lit(p[c])
-            clause = eq if clause is None else (clause & eq)
-        pred = clause if pred is None else (pred | clause)
-
-    existing = spark.read.parquet(path).filter(pred)
+    existing = spark.read.parquet(path).filter(_partitions_pred(parts, partition_cols))
     keys = increment.select(*key_cols).distinct()
     # localCheckpoint materializes the (small, affected-slice) survivor set
     # BEFORE the overwrite — Spark refuses to lazily overwrite an input path,
@@ -120,18 +144,7 @@ def upsert_partitions(
     inserted = increment.count()
 
     merged = survivors.unionByName(increment.select(*survivors.columns))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.repartition(*[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            .option("compression", "snappy")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(merged, path, partition_cols)
     return spark.range(1).select(
         F.lit(len(parts)).cast("bigint").alias("partitions_touched"),
         F.lit(replaced).cast("bigint").alias("rows_replaced"),
@@ -185,13 +198,6 @@ def merge_rollup_increment(
             F.lit(0).cast("bigint").alias("partitions_touched"),
             F.lit(0).cast("bigint").alias("groups_written"),
         )
-    pred = None
-    for p in parts:
-        clause = None
-        for c in partition_cols:
-            eq = F.col(c) == F.lit(p[c])
-            clause = eq if clause is None else (clause & eq)
-        pred = clause if pred is None else (pred | clause)
 
     # Only "path does not exist yet" may fall back to the bare increment: a
     # broad except here would also swallow schema-mismatch (unionByName
@@ -199,7 +205,9 @@ def merge_rollup_increment(
     # overwrite below would then silently REPLACE affected rollup partitions
     # with increment-only partials — losing accumulated aggregates.
     try:
-        existing = spark.read.parquet(rollup_path).filter(pred)
+        existing = spark.read.parquet(rollup_path).filter(
+            _partitions_pred(parts, partition_cols)
+        )
     except AnalysisException:  # first increment: rollup does not exist yet
         combined = inc_partial
     else:
@@ -212,18 +220,7 @@ def merge_rollup_increment(
     merged = merged.localCheckpoint()
     groups_written = merged.count()
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.repartition(*[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            .option("compression", "snappy")
-            .partitionBy(*partition_cols)
-            .parquet(rollup_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(merged, rollup_path, partition_cols)
     return spark.range(1).select(
         F.lit(len(parts)).cast("bigint").alias("partitions_touched"),
         F.lit(groups_written).cast("bigint").alias("groups_written"),

@@ -204,15 +204,10 @@ def row_count(path: str, version: int | None = None) -> int:
     """Exact row count at ``version`` (default head) from parquet FOOTER
     metadata — no data pages read, O(files) driver work. The lake-side
     input to planner decisions (broadcast thresholds, bucket counts)."""
-    import pyarrow.parquet as pq
-
     v = versioned.latest_version(path) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no versioned table at {path}")
-    files = versioned._read_manifest(path, v)["files"]
-    return sum(
-        pq.ParquetFile(os.path.join(path, f)).metadata.num_rows for f in files
-    )
+    return versioned._footer_rows(path, versioned._read_manifest(path, v)["files"])
 
 
 #: Session-lifetime NDV cache for PLAIN-PARQUET planner inputs, keyed by the
@@ -344,10 +339,7 @@ class _Relation:
                 kept, _ = versioned.plan_files(self.path, v, where)
             else:
                 kept = versioned._read_manifest(self.path, v)["files"]
-            return sum(
-                pq.ParquetFile(os.path.join(self.path, f)).metadata.num_rows
-                for f in kept
-            )
+            return versioned._footer_rows(self.path, kept)
         total = 0
         for f in self._files():
             md = pq.ParquetFile(f).metadata

@@ -29,6 +29,29 @@ file creation):
 
 Schema evolution is additive: reads use parquet schema merging, so columns
 added by later commits surface as nulls for older files.
+
+**One write path.** Every writer — ``commit``, ``rollback``, ``merge_into``,
+``delete_where``, the inverted index's refresh and compaction
+(``invindex.py``) and the view cursor stamp (``ivm.py``) — goes through
+the same two private steps, and nothing outside this module builds a
+manifest or names a txn dir:
+
+1. :func:`_stage` writes a DataFrame into a fresh
+   ``data/v{version:09d}-{uuid12}[-tag]`` txn dir and describes its parquet
+   files (footer stats, blooms). Rollback and the cursor stamp stage
+   nothing.
+2. :func:`_publish_version` assembles the manifest over the parent
+   manifest the caller already holds and publishes it through
+   :func:`_publish`, the only O_EXCL commit point.
+
+The manifest, ``_commits/{version:09d}.json``, always carries ``version``,
+``parent``, ``mode``, ``files``, ``n_files``, ``stats``, ``blooms`` and
+``committed_at``; ``schema`` and ``tombstones`` are inherited from the
+parent unless the writer sets them; writers add their own keys on top
+(``rows_*``, ``rolled_back_to``, ``source_version``, ``index_*``,
+``batch_id``, ``merge_on``). Kept files carry their stats and blooms;
+files a merge or delete rewrites get stats on every column the table
+records stats for, plus the merge keys.
 """
 
 from __future__ import annotations
@@ -172,57 +195,22 @@ def commit(
     os.makedirs(_commits_dir(path), exist_ok=True)
 
     parent = latest_version(path)
-    version = 0 if parent is None else parent + 1
+    pm = None if parent is None else _read_manifest(path, parent)
 
     # write-time schema enforcement, BEFORE the data write (fail fast; a
-    # rebase retry re-validates against the new parent in _assemble)
+    # rebase retry re-validates against the new parent below)
     new_schema = _df_schema(df)
-    if mode == "append" and parent is not None:
-        _check_append_schema(new_schema, _read_manifest(path, parent).get("schema"))
+    if mode == "append" and pm is not None:
+        _check_append_schema(new_schema, pm.get("schema"))
 
-    txn = f"v{version:09d}-{uuid.uuid4().hex[:12]}"
-    txn_dir = os.path.join(_data_dir(path), txn)
-    df.write.mode("error").option("compression", "snappy").parquet(txn_dir)
-    new_files = sorted(
-        os.path.join("data", txn, f) for f in os.listdir(txn_dir) if f.endswith(".parquet")
+    staged = _stage(
+        path,
+        0 if parent is None else parent + 1,
+        df,
+        stats_cols=stats_cols,
+        bloom_cols=bloom_cols,
+        bloom_fpp=bloom_fpp,
     )
-
-    new_stats = (
-        {f: _footer_stats(os.path.join(path, f), stats_cols) for f in new_files}
-        if stats_cols
-        else {}
-    )
-    new_blooms = (
-        {f: _file_blooms(os.path.join(path, f), bloom_cols, bloom_fpp) for f in new_files}
-        if bloom_cols
-        else {}
-    )
-    new_blooms = {f: b for f, b in new_blooms.items() if b}
-
-    def _assemble(parent_v: int | None) -> tuple[int, dict]:
-        v = 0 if parent_v is None else parent_v + 1
-        files = list(new_files)
-        stats = dict(new_stats)
-        blooms = dict(new_blooms)
-        schema = list(new_schema)
-        if mode == "append" and parent_v is not None:
-            pm = _read_manifest(path, parent_v)
-            files = pm["files"] + files
-            stats = {**pm.get("stats", {}), **stats}
-            blooms = {**pm.get("blooms", {}), **blooms}
-            schema = _check_append_schema(new_schema, pm.get("schema"))
-        return v, {
-            "version": v,
-            "parent": parent_v,
-            "mode": mode,
-            "schema": schema,
-            "files": files,
-            "n_files": len(files),
-            "stats": stats,
-            "blooms": blooms,
-            "committed_at": time.time(),
-            **(meta or {}),
-        }
 
     # publish with bounded retry-with-REBASE: the data files are written
     # exactly once; a losing O_EXCL race only re-reads the new head and
@@ -231,15 +219,132 @@ def commit(
     # no orphaned rows — the loser's work is preserved, not redone.
     attempt = 0
     while True:
-        version, manifest = _assemble(parent)
+        if mode == "append" and pm is not None:
+            keep = pm["files"]
+            schema = _check_append_schema(new_schema, pm.get("schema"))
+        else:
+            keep, schema = [], new_schema
         try:
-            _publish(path, version, manifest)
-            return version
+            return _publish_version(
+                path,
+                pm,
+                mode,
+                keep=keep,
+                new=staged,
+                extra={"schema": schema, **(meta or {})},
+            )
         except CommitConflict:
             if attempt >= retries:
                 raise
             attempt += 1
-            parent = latest_version(path)
+            pm = _read_manifest(path, latest_version(path))
+
+
+def _stage(
+    path: str,
+    version: int,
+    df: DataFrame,
+    stats_cols: tuple[str, ...] = (),
+    bloom_cols: tuple[str, ...] = (),
+    bloom_fpp: float = 0.01,
+    tag: str = "",
+) -> dict:
+    """Write ``df`` into a fresh txn dir for ``version`` and describe it:
+    ``{dir, files, stats, blooms}`` with table-relative file paths and the
+    footer stats / blooms of each new file. The dir is referenced by no
+    manifest until :func:`_publish_version` lands, so a crash or a lost
+    race leaves garbage that vacuum reaps, never a torn table."""
+    txn = f"v{version:09d}-{uuid.uuid4().hex[:12]}" + (f"-{tag}" if tag else "")
+    txn_dir = os.path.join(_data_dir(path), txn)
+    df.write.mode("error").option("compression", "snappy").parquet(txn_dir)
+    files = sorted(
+        os.path.join("data", txn, f) for f in os.listdir(txn_dir) if f.endswith(".parquet")
+    )
+    stats = (
+        {f: _footer_stats(os.path.join(path, f), stats_cols) for f in files}
+        if stats_cols
+        else {}
+    )
+    blooms = (
+        {
+            f: b
+            for f in files
+            if (b := _file_blooms(os.path.join(path, f), bloom_cols, bloom_fpp))
+        }
+        if bloom_cols
+        else {}
+    )
+    return {"dir": txn_dir, "files": files, "stats": stats, "blooms": blooms}
+
+
+def _publish_version(
+    path: str,
+    pm: dict | None,
+    mode: str,
+    keep: list[str] | tuple = (),
+    new: dict | None = None,
+    carry_from: dict | None = None,
+    extra: dict | None = None,
+) -> int:
+    """Assemble the next version's manifest on top of the parent manifest
+    ``pm`` (None for a table's first version) and publish it; returns the
+    version. ``keep`` lists the files carried over, with the stats and
+    blooms ``carry_from`` (default ``pm``) records for them; ``new`` is a
+    :func:`_stage` result appended after them. ``schema`` and
+    ``tombstones`` inherit from ``pm`` unless ``extra`` sets them:
+    maintenance commits never change the table schema, so every manifest
+    in the chain carries one once ``commit`` recorded it; and a
+    maintenance op on an index path must not resurrect tombstoned
+    documents by dropping the key (the mask stays valid over rewritten
+    files: the gen column rides the data)."""
+    src = (pm if carry_from is None else carry_from) or {}
+    extra = extra or {}
+    kept = set(keep)
+    files = list(keep)
+    stats = {f: s for f, s in src.get("stats", {}).items() if f in kept}
+    blooms = {f: b for f, b in src.get("blooms", {}).items() if f in kept}
+    if new is not None:
+        files += new["files"]
+        stats.update(new["stats"])
+        blooms.update(new["blooms"])
+    parent = None if pm is None else pm["version"]
+    version = 0 if parent is None else parent + 1
+    manifest = {"version": version, "parent": parent, "mode": mode}
+    for k in ("schema", "tombstones"):
+        if k not in extra and pm and pm.get(k):
+            manifest[k] = pm[k]
+    manifest.update(
+        files=files,
+        n_files=len(files),
+        stats=stats,
+        blooms=blooms,
+        committed_at=time.time(),
+        **extra,
+    )
+    _publish(path, version, manifest)
+    return version
+
+
+def _rewrite_stats_cols(pm: dict, keys: list[str] | tuple = ()) -> tuple[str, ...]:
+    """Stats columns for the files a merge or delete writes: every column
+    the table records stats for, plus the merge keys — so a rewrite never
+    loses the table's pruning power."""
+    return tuple(sorted({c for s in pm.get("stats", {}).values() for c in s} | set(keys)))
+
+
+def _footer_rows(path: str, files: list[str]) -> int:
+    """Total rows of ``files`` from parquet footer metadata — no scan."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(os.path.join(path, f)).metadata.num_rows for f in files)
+
+
+def _scan(spark: SparkSession, path: str, files: list[str]) -> DataFrame:
+    """Schema-merging scan of table-relative ``files``: additively evolved
+    columns read back as NULL for older files."""
+    return spark.read.option("mergeSchema", "true").parquet(
+        *[os.path.join(path, f) for f in files]
+    )
 
 
 def _footer_stats(file_path: str, cols: tuple[str, ...]) -> dict:
@@ -289,8 +394,7 @@ def _bloom_positions(canon: str, m_bits: int, k: int) -> list[int]:
     whenever a file is rewritten), and per-position bits stay independent
     uniform, so the fpp math in ``optimal_params`` is unchanged. Driver-
     side cost matters here: index refreshes hash every distinct key of
-    every new file in the commit path (r14 profile: the bloom build was
-    ~0.7 s of the inverted-index lifecycle episode)."""
+    every new file in the commit path."""
     import hashlib
 
     need = 8 * k
@@ -318,10 +422,9 @@ def _bloom_build(values, fpp: float) -> dict | None:
     canon = set()
     # dedupe RAW values before canonicalizing: postings files carry each
     # token once per document, so the column is far from distinct and the
-    # canon pass was the hottest line of the commit path (r14 profile:
-    # 193k calls for 15k distinct values in one index lifecycle). bool is
-    # canon-None (disables the bloom) and True == 1 in a set, so bools are
-    # routed straight to canon rather than deduped against ints.
+    # canon pass would otherwise run once per posting. bool is canon-None
+    # (disables the bloom) and True == 1 in a set, so bools are routed
+    # straight to canon rather than deduped against ints.
     seen: set = set()
     for v in values:
         if isinstance(v, bool) or v not in seen:
@@ -368,9 +471,8 @@ def _file_blooms(file_path: str, cols: tuple[str, ...], fpp: float) -> dict:
             continue
         # vectorized distinct in Arrow BEFORE crossing to Python: postings
         # files carry each token once per document, so the raw column is
-        # far from unique — to_pylist of every value plus a Python-set
-        # dedupe was the hottest residue of the commit path after r14's
-        # in-build dedupe (guide §1.2: don't ship values you throw away)
+        # far from unique and shipping every value to a Python-set dedupe
+        # would dominate the commit path
         b = _bloom_build(tbl[c].unique().to_pylist(), fpp)
         if b is not None:
             out[c] = b
@@ -453,20 +555,8 @@ def _check_append_schema(new: list[dict], old: list[dict] | None) -> list[dict]:
 
 
 def _publish(path: str, version: int, manifest: dict) -> None:
-    # maintenance commits (rollback/optimize/delete/merge/cursor stamps)
-    # never change the table schema: inherit the parent's record here so
-    # every manifest in the chain carries one once commit() recorded it.
-    # 'tombstones' (the inverted index's side-file protocol) inherits the
-    # same way — a generic maintenance op on an index path must not
-    # silently resurrect tombstoned documents by dropping the key (the
-    # tombstone mask stays valid over rewritten files: the gen column
-    # rides the data, so masking is layout-independent).
-    inherit = [k for k in ("schema", "tombstones") if k not in manifest]
-    if inherit and manifest.get("parent") is not None:
-        pm = _read_manifest(path, manifest["parent"])
-        for k in inherit:
-            if pm.get(k):
-                manifest[k] = pm[k]
+    """The commit point: an O_CREAT|O_EXCL create of the version's
+    manifest, then the head hint and the checkpoint cadence."""
     try:
         fd = os.open(_manifest_path(path, version), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
     except FileExistsError as e:
@@ -508,10 +598,7 @@ def read(
         # every file pruned: preserve result semantics with an empty frame
         # over the version's schema
         all_files, _ = plan_files(path, version)
-        base = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, f) for f in all_files]
-        )
-        return base.where(F.lit(False))
+        return _scan(spark, path, all_files).where(F.lit(False))
     files = [os.path.join(path, f) for f in kept]
     missing = [f for f in files if not os.path.exists(f)]
     if missing:
@@ -519,7 +606,7 @@ def read(
             f"version {version} of {path} references vacuumed data "
             f"(e.g. {missing[0]}); time travel is bounded by vacuum retention"
         )
-    df = spark.read.option("mergeSchema", "true").parquet(*files)
+    df = _scan(spark, path, kept)
     for col, (lo, hi) in (where or {}).items():
         df = df.where(F.col(col).between(lo, hi))
     return df
@@ -532,28 +619,24 @@ def rollback(path: str, to_version: int) -> int:
     over, it just republishes the old file set at the head.
     """
     old = _read_manifest(path, to_version)
-    parent = latest_version(path)
-    version = parent + 1
-    manifest = {
-        "version": version,
-        "parent": parent,
-        "mode": "rollback",
-        "rolled_back_to": to_version,
-        # the schema travels with the snapshot: rolling back across an
-        # additive evolution restores the OLD schema (not the head's);
-        # same for tombstones — the mask is part of the snapshot (an
-        # explicit empty list is carried too, overriding _publish's
-        # parent inheritance: rolling back past a delete un-deletes)
-        **({"schema": old["schema"]} if "schema" in old else {}),
-        "tombstones": old.get("tombstones", []),
-        "files": old["files"],
-        "n_files": len(old["files"]),
-        "stats": old.get("stats", {}),
-        "blooms": old.get("blooms", {}),
-        "committed_at": time.time(),
-    }
-    _publish(path, version, manifest)
-    return version
+    pm = _read_manifest(path, latest_version(path))
+    return _publish_version(
+        path,
+        pm,
+        "rollback",
+        keep=old["files"],
+        carry_from=old,
+        extra={
+            "rolled_back_to": to_version,
+            # the schema travels with the snapshot: rolling back across an
+            # additive evolution restores the OLD schema (not the head's);
+            # same for tombstones — the mask is part of the snapshot (an
+            # explicit empty list is carried too, overriding the parent
+            # inheritance: rolling back past a delete un-deletes)
+            **({"schema": old["schema"]} if "schema" in old else {}),
+            "tombstones": old.get("tombstones", []),
+        },
+    )
 
 
 def history(spark: SparkSession, path: str) -> DataFrame:
@@ -1095,19 +1178,13 @@ def _merge_into_once(
                 "rows_inserted": 0,
             }
         v = commit(source, path, mode="append", meta={"merge_on": keys, **(meta or {})})
-        import pyarrow.parquet as pq
-
-        n_rows = sum(
-            pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-            for f in _read_manifest(path, v)["files"]
-        )
         return {
             "version": v,
             "files_rewritten": 0,
             "files_carried": 0,
             "rows_updated": 0,
             "rows_deleted": 0,
-            "rows_inserted": n_rows,
+            "rows_inserted": _footer_rows(path, _read_manifest(path, v)["files"]),
         }
 
     m = _read_manifest(path, version)
@@ -1162,14 +1239,12 @@ def _merge_into_once(
 
     # one limit-1 probe decides the plan shape; the full accounting
     # counts ride the rewrite pass itself as observed metrics (zero
-    # standalone counting jobs - the round-6 design ran two)
+    # standalone counting jobs)
     src_keys = source.select(*keys)
     tgt = None
     matched_any = False
     if affected:
-        tgt = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, f) for f in affected]
-        )
+        tgt = _scan(spark, path, affected)
         matched_any = not tgt.join(src_keys, on=keys, how="left_semi").isEmpty()
 
     count_n = F.count(F.lit(1)).alias("n")
@@ -1213,40 +1288,22 @@ def _merge_into_once(
         for piece in pieces[1:]:
             to_write = to_write.unionByName(piece, allowMissingColumns=True)
 
-    # stats continuity: same policy as delete_where - the union of columns
-    # the affected files carried stats for, plus the merge keys
-    stats_cols = tuple(
-        sorted(
-            {c for f in affected for c in m.get("stats", {}).get(f, {})}
-            | (set(keys) if m.get("stats") else set())
-        )
-    )
-
     # write-time schema enforcement, same contract as commit(): a merge
     # whose source flips an existing column's type fails BEFORE any data
     # lands, and source-only columns (additive evolution through the
     # unionByName(allowMissingColumns=True) above) are RECORDED in the
-    # merge manifest — relying on _publish's parent inheritance here would
-    # stamp the pre-merge schema, letting a later append re-introduce the
+    # merge manifest — relying on the parent inheritance here would stamp
+    # the pre-merge schema, letting a later append re-introduce the
     # evolved column at a different type past _check_append_schema
     evolved_schema = _check_append_schema(_df_schema(to_write), m.get("schema"))
 
-    new_version = version + 1
-    txn = f"v{new_version:09d}-{uuid.uuid4().hex[:12]}"
-    txn_dir = os.path.join(_data_dir(path), txn)
-    to_write.write.mode("error").option("compression", "snappy").parquet(txn_dir)
+    staged = _stage(path, version + 1, to_write, stats_cols=_rewrite_stats_cols(m, keys))
 
     if affected:
         # matched-rewrite accounting: target rows matched = rows the
         # affected files held (parquet footer metadata, no scan) minus the
         # survivors observed during the write
-        import pyarrow.parquet as pq
-
-        n_aff_rows = sum(
-            pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-            for f in affected
-        )
-        n_matched_rows = n_aff_rows - int(obs_surv.get["n"])
+        n_matched_rows = _footer_rows(path, affected) - int(obs_surv.get["n"])
         n_updated = n_matched_rows if when_matched == "update" else 0
         n_deleted = n_matched_rows if when_matched == "delete" else 0
     n_inserted = (
@@ -1258,38 +1315,25 @@ def _merge_into_once(
         # nothing actually changed (e.g. insert-if-absent where every
         # source row already existed): publish nothing; the orphan txn
         # dir is unreferenced garbage that vacuum reaps
-        shutil.rmtree(txn_dir, ignore_errors=True)
+        shutil.rmtree(staged["dir"], ignore_errors=True)
         return no_op
 
-    new_files = sorted(
-        os.path.join("data", txn, f)
-        for f in os.listdir(txn_dir)
-        if f.endswith(".parquet")
+    # blooms carry for untouched files; rewritten files lose theirs
+    # (absent bloom = no skip - conservative, never wrong)
+    new_version = _publish_version(
+        path,
+        m,
+        "merge",
+        keep=carried,
+        new=staged,
+        extra={
+            "schema": evolved_schema,
+            "rows_updated": n_updated,
+            "rows_deleted": n_deleted,
+            "rows_inserted": n_inserted,
+            **(meta or {}),
+        },
     )
-    carried_set = set(carried)
-    stats = {f: s for f, s in m.get("stats", {}).items() if f in carried_set}
-    if stats_cols:
-        stats.update(
-            {f: _footer_stats(os.path.join(path, f), stats_cols) for f in new_files}
-        )
-    manifest = {
-        "version": new_version,
-        "parent": version,
-        "mode": "merge",
-        "schema": evolved_schema,
-        "files": carried + new_files,
-        "n_files": len(carried) + len(new_files),
-        "stats": stats,
-        # blooms carry for untouched files; rewritten files lose theirs
-        # (absent bloom = no skip - conservative, never wrong)
-        "blooms": {f: b for f, b in m.get("blooms", {}).items() if f in carried_set},
-        "rows_updated": n_updated,
-        "rows_deleted": n_deleted,
-        "rows_inserted": n_inserted,
-        "committed_at": time.time(),
-        **(meta or {}),
-    }
-    _publish(path, new_version, manifest)
     return {
         "version": new_version,
         "files_rewritten": len(affected),
@@ -1333,62 +1377,23 @@ def delete_where(spark: SparkSession, path: str, where: dict) -> dict:
     for col, (lo, hi) in where.items():
         c = F.col(col).between(lo, hi)
         cond = c if cond is None else (cond & c)
-    src = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(path, f) for f in affected]
-    )
     # SQL DELETE semantics: a NULL predicate KEEPS the row (~NULL is NULL
     # and a bare where(~cond) would silently drop it — pre-evolution rows
     # read the evolved column as NULL, so this is the schema-evolution
     # data-loss case). Deleted-row accounting is footer arithmetic (rows
     # the affected files held, from parquet metadata — no scan) minus the
-    # survivor count OBSERVED during the rewrite itself: the r14 form paid
-    # a dedicated matching-rows count job per delete on top of the write
-    # (merge_into already used this exact accounting).
+    # survivor count OBSERVED during the rewrite itself, so no separate
+    # count job runs.
     matches = F.coalesce(cond, F.lit(False))
     obs_surv = Observation()
-    survivors = src.where(~matches).observe(
+    survivors = _scan(spark, path, affected).where(~matches).observe(
         obs_surv, F.count(F.lit(1)).alias("n")
     )
-
-    # stats for the rewritten files: the union of columns the affected
-    # files carried stats for (keeps the table's pruning power intact)
-    stats_cols = tuple(
-        sorted({c for f in affected for c in m.get("stats", {}).get(f, {})})
+    staged = _stage(path, version + 1, survivors, stats_cols=_rewrite_stats_cols(m))
+    n_deleted = _footer_rows(path, affected) - int(obs_surv.get["n"])
+    new_version = _publish_version(
+        path, m, "delete", keep=carried, new=staged, extra={"rows_deleted": n_deleted}
     )
-
-    new_version = version + 1
-    txn = f"v{new_version:09d}-{uuid.uuid4().hex[:12]}"
-    txn_dir = os.path.join(_data_dir(path), txn)
-    survivors.write.mode("error").option("compression", "snappy").parquet(txn_dir)
-    import pyarrow.parquet as pq
-
-    n_aff_rows = sum(
-        pq.ParquetFile(os.path.join(path, f)).metadata.num_rows for f in affected
-    )
-    n_deleted = n_aff_rows - int(obs_surv.get["n"])
-    new_files = sorted(
-        os.path.join("data", txn, f)
-        for f in os.listdir(txn_dir)
-        if f.endswith(".parquet")
-    )
-    carried_set = set(carried)
-    stats = {f: s for f, s in m.get("stats", {}).items() if f in carried_set}
-    if stats_cols:
-        stats.update(
-            {f: _footer_stats(os.path.join(path, f), stats_cols) for f in new_files}
-        )
-    manifest = {
-        "version": new_version,
-        "parent": version,
-        "mode": "delete",
-        "files": carried + new_files,
-        "n_files": len(carried) + len(new_files),
-        "stats": stats,
-        "blooms": {f: b for f, b in m.get("blooms", {}).items() if f in carried_set},
-        "rows_deleted": n_deleted,
-        "committed_at": time.time(),
-    }
-    _publish(path, new_version, manifest)
     return {
         "version": new_version,
         "files_rewritten": len(affected),
@@ -1444,16 +1449,12 @@ def table_changes(
         return base.withColumn("_change_type", F.lit("")).where(F.lit(False))
     # one merged-schema read defines the aligned column set for both sides
     # (schema evolution between the versions would otherwise break exceptAll)
-    ref = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(path, f) for f in all_changed]
-    )
+    ref = _scan(spark, path, all_changed)
 
     def _aligned(files: list[str]) -> DataFrame:
         if not files:
             return spark.createDataFrame([], ref.schema)
-        d = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, f) for f in files]
-        )
+        d = _scan(spark, path, files)
         have = set(d.columns)
         return d.select(
             *[
