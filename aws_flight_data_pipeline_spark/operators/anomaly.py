@@ -10,29 +10,32 @@ window shuffle + one tiny stats broadcast at any scale.
 
 from __future__ import annotations
 
+from typing import Callable, Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from aws_flight_data_pipeline_spark.config import AnomalyConfig
 from aws_flight_data_pipeline_spark.functions.geo import EARTH_RADIUS_MILES, haversine
+from aws_flight_data_pipeline_spark.operators.quality import now_column
 
 
-def physical_impossibility_flags(df: DataFrame, cfg: AnomalyConfig | None = None) -> dict[str, Column]:
+def physical_impossibility_flags(cols: Sequence[str], cfg: AnomalyConfig | None = None) -> dict[str, Column]:
     """Hard physics violations (anomaly_detector.py:228-294)."""
     cfg = cfg or AnomalyConfig()
     flags: dict[str, Column] = {}
-    if "baro_altitude_ft" in df.columns:
+    if "baro_altitude_ft" in cols:
         alt = F.col("baro_altitude_ft")
         flags["impossible_altitude"] = alt.isNotNull() & (
             (alt > cfg.max_altitude_feet) | (alt < cfg.min_altitude_feet)
         )
-    if "velocity_knots" in df.columns:
+    if "velocity_knots" in cols:
         v = F.col("velocity_knots")
         flags["impossible_velocity"] = v.isNotNull() & (
             (v > cfg.max_velocity_knots) | (v < cfg.min_velocity_knots)
         )
-    if "vertical_rate_fpm" in df.columns:
+    if "vertical_rate_fpm" in cols:
         vr = F.col("vertical_rate_fpm")
         flags["impossible_vertical_rate"] = vr.isNotNull() & (
             F.abs(vr) > cfg.max_vertical_rate_fpm
@@ -40,11 +43,11 @@ def physical_impossibility_flags(df: DataFrame, cfg: AnomalyConfig | None = None
     return flags
 
 
-def corruption_flags(df: DataFrame, numeric_cols: tuple[str, ...] = (
+def corruption_flags(cols: Sequence[str], numeric_cols: tuple[str, ...] = (
     "latitude", "longitude", "baro_altitude_ft", "velocity_knots", "vertical_rate_fpm"
 )) -> dict[str, Column]:
     """NaN / Inf / absurd-magnitude detection (anomaly_detector.py:565-621)."""
-    present = [c for c in numeric_cols if c in df.columns]
+    present = [c for c in numeric_cols if c in cols]
     corrupt = F.lit(False)
     for c in present:
         col = F.col(c).cast("double")
@@ -55,12 +58,12 @@ def corruption_flags(df: DataFrame, numeric_cols: tuple[str, ...] = (
     return {"data_corruption": corrupt}
 
 
-def geographic_flags(df: DataFrame, cfg: AnomalyConfig | None = None) -> dict[str, Column]:
+def geographic_flags(cols: Sequence[str], cfg: AnomalyConfig | None = None) -> dict[str, Column]:
     """Forbidden-zone membership (anomaly_detector.py:378-418); zones are a
     literal when-chain (broadcast-join a zones table instead if the zone list
     grows beyond a handful)."""
     cfg = cfg or AnomalyConfig()
-    if not {"latitude", "longitude"} <= set(df.columns):
+    if not {"latitude", "longitude"} <= set(cols):
         return {}
     lat, lon = F.col("latitude"), F.col("longitude")
     in_any = F.lit(False)
@@ -71,11 +74,11 @@ def geographic_flags(df: DataFrame, cfg: AnomalyConfig | None = None) -> dict[st
     return {"forbidden_zone": lat.isNotNull() & lon.isNotNull() & in_any}
 
 
-def temporal_flags(df: DataFrame, now_unix: Column, cfg: AnomalyConfig | None = None) -> dict[str, Column]:
+def temporal_flags(cols: Sequence[str], now_unix: Column, cfg: AnomalyConfig | None = None) -> dict[str, Column]:
     """Future timestamps / ancient data (anomaly_detector.py:522-563), vs an
     injected now."""
     cfg = cfg or AnomalyConfig()
-    if "last_contact" not in df.columns:
+    if "last_contact" not in cols:
         return {}
     lc = F.col("last_contact").cast("double")
     now = now_unix.cast("double")
@@ -86,7 +89,7 @@ def temporal_flags(df: DataFrame, now_unix: Column, cfg: AnomalyConfig | None = 
 
 
 def movement_flags(
-    df: DataFrame,
+    cols: Sequence[str],
     cfg: AnomalyConfig | None = None,
     key: str = "icao24",
     ts: str = "last_contact",
@@ -95,7 +98,7 @@ def movement_flags(
     position jump (speed > 0.5 mi/s or distance > 500 mi) and stuck aircraft
     (last 3 fixes within 0.05 mi over >30 min while 'moving')."""
     cfg = cfg or AnomalyConfig()
-    if not {"latitude", "longitude", key, ts} <= set(df.columns):
+    if not {"latitude", "longitude", key, ts} <= set(cols):
         return {}
     w = Window.partitionBy(key).orderBy(ts)
     p_lat, p_lon = F.lag("latitude").over(w), F.lag("longitude").over(w)
@@ -109,8 +112,8 @@ def movement_flags(
     lat3, lon3, ts3 = F.lag("latitude", 2).over(w), F.lag("longitude", 2).over(w), F.lag(ts, 2).over(w)
     span = F.col(ts).cast("double") - ts3.cast("double")
     drift = haversine(lat3, lon3, F.col("latitude"), F.col("longitude"), EARTH_RADIUS_MILES)
-    v = F.col("velocity_knots") if "velocity_knots" in df.columns else F.lit(0.0)
-    og = F.col("on_ground") if "on_ground" in df.columns else F.lit(False)
+    v = F.col("velocity_knots") if "velocity_knots" in cols else F.lit(0.0)
+    og = F.col("on_ground") if "on_ground" in cols else F.lit(False)
     stuck = (
         lat3.isNotNull()
         & (span > cfg.stuck_time_threshold)
@@ -121,18 +124,17 @@ def movement_flags(
     return {"position_jump": jump, "stuck_aircraft": stuck}
 
 
-def statistical_outlier_flags(
-    df: DataFrame,
-    cols: tuple[str, ...] = ("baro_altitude_ft", "velocity_knots"),
+def _outlier_builder(
+    cols: Sequence[str],
+    stat_cols: Sequence[str] = ("baro_altitude_ft", "velocity_knots"),
     cfg: AnomalyConfig | None = None,
-) -> DataFrame:
-    """Z-score + IQR outlier flags vs whole-frame stats (anomaly_detector.py:
-    296-376): one tiny agg row broadcast back to every row (the 04:483-537
-    scalar-stats cross-join shape). Skipped below min_samples_for_stats."""
+) -> tuple[Callable[[DataFrame], DataFrame], list[str]]:
+    """:func:`statistical_outlier_flags` built once for inputs with columns
+    ``cols``; returns the transform and the flag columns it adds."""
     cfg = cfg or AnomalyConfig()
-    present = [c for c in cols if c in df.columns]
+    present = [c for c in stat_cols if c in cols]
     if not present:
-        return df
+        return (lambda df: df), []
     aggs = [F.count("*").alias("_n")]
     for c in present:
         aggs += [
@@ -141,47 +143,73 @@ def statistical_outlier_flags(
             F.percentile(c, F.lit(0.25)).alias(f"_{c}_p25"),
             F.percentile(c, F.lit(0.75)).alias(f"_{c}_p75"),
         ]
-    stats = df.agg(*aggs)
-    out = df.crossJoin(F.broadcast(stats))
     enough = F.col("_n") >= cfg.min_samples_for_stats
+    outliers: dict[str, Column] = {}
     for c in present:
         z = (F.col(c) - F.col(f"_{c}_mean")) / F.nullif(F.col(f"_{c}_std"), F.lit(0.0))
         iqr = F.col(f"_{c}_p75") - F.col(f"_{c}_p25")
         lo = F.col(f"_{c}_p25") - cfg.iqr_multiplier * iqr
         hi = F.col(f"_{c}_p75") + cfg.iqr_multiplier * iqr
-        out = out.withColumn(
-            f"{c}_zscore_outlier",
-            enough & F.col(c).isNotNull() & (F.abs(z) > cfg.z_score_threshold),
-        ).withColumn(
-            f"{c}_iqr_outlier",
-            enough & F.col(c).isNotNull() & ((F.col(c) < lo) | (F.col(c) > hi)),
-        )
+        outliers[f"{c}_zscore_outlier"] = enough & F.col(c).isNotNull() & (F.abs(z) > cfg.z_score_threshold)
+        outliers[f"{c}_iqr_outlier"] = enough & F.col(c).isNotNull() & ((F.col(c) < lo) | (F.col(c) > hi))
     drop = ["_n"] + [f"_{c}_{s}" for c in present for s in ("mean", "std", "p25", "p75")]
-    return out.drop(*drop)
+
+    def apply(df: DataFrame) -> DataFrame:
+        return df.crossJoin(F.broadcast(df.agg(*aggs))).withColumns(outliers).drop(*drop)
+
+    return apply, list(outliers)
 
 
-def detect_anomalies(
-    df: DataFrame, now_unix: int | Column, cfg: AnomalyConfig | None = None
+def statistical_outlier_flags(
+    df: DataFrame,
+    cols: tuple[str, ...] = ("baro_altitude_ft", "velocity_knots"),
+    cfg: AnomalyConfig | None = None,
 ) -> DataFrame:
-    """Full detector suite: boolean flag columns + an ``anomaly_flags``
-    array<string> inventory + ``anomaly_count`` (the Spark form of
-    AnomalyDetector.detect_anomalies, anomaly_detector.py:132-226)."""
+    """Z-score + IQR outlier flags vs whole-frame stats (anomaly_detector.py:
+    296-376): one tiny agg row broadcast back to every row (the 04:483-537
+    scalar-stats cross-join shape). Skipped below min_samples_for_stats."""
+    return _outlier_builder(df.columns, cols, cfg)[0](df)
+
+
+def _appended(cols: Sequence[str], names: Sequence[str]) -> list[str]:
+    """Column names after ``withColumns`` of ``names`` on columns ``cols``
+    (existing names are replaced in place)."""
+    return [*cols, *(n for n in names if n not in cols)]
+
+
+def detect_anomalies_builder(
+    cols: Sequence[str], now_unix: Column, cfg: AnomalyConfig | None = None
+) -> Callable[[DataFrame], DataFrame]:
+    """Build the detector suite once for inputs with columns ``cols``: the
+    returned function applies the flag columns (one ``withColumns``), the
+    outlier-stats crossJoin, then the flag inventory. ``now_unix`` is a
+    Column (a literal, or a column of the input)."""
     cfg = cfg or AnomalyConfig()
-    now_col = F.lit(now_unix) if isinstance(now_unix, int) else now_unix
     flags: dict[str, Column] = {}
-    flags.update(physical_impossibility_flags(df, cfg))
-    flags.update(corruption_flags(df))
-    flags.update(geographic_flags(df, cfg))
-    flags.update(temporal_flags(df, now_col, cfg))
-    flags.update(movement_flags(df, cfg))
-    for name, col in flags.items():
-        df = df.withColumn(name, F.coalesce(col, F.lit(False)))
-    df = statistical_outlier_flags(df, cfg=cfg)
-    flag_names = list(flags.keys()) + [
-        c for c in df.columns if c.endswith("_zscore_outlier") or c.endswith("_iqr_outlier")
+    flags.update(physical_impossibility_flags(cols, cfg))
+    flags.update(corruption_flags(cols))
+    flags.update(geographic_flags(cols, cfg))
+    flags.update(temporal_flags(cols, now_unix, cfg))
+    flags.update(movement_flags(cols, cfg))
+    flag_cols = {name: F.coalesce(col, F.lit(False)) for name, col in flags.items()}
+    cols = _appended(cols, list(flags))
+    outliers, outlier_names = _outlier_builder(cols, cfg=cfg)
+    cols = _appended(cols, outlier_names)
+    flag_names = list(flags) + [
+        c for c in cols if c.endswith("_zscore_outlier") or c.endswith("_iqr_outlier")
     ]
     arr = F.filter(
         F.array(*[F.when(F.col(n), F.lit(n)).otherwise(F.lit(None)) for n in flag_names]),
         lambda x: x.isNotNull(),
     )
-    return df.withColumn("anomaly_flags", arr).withColumn("anomaly_count", F.size(arr))
+    inventory = {"anomaly_flags": arr, "anomaly_count": F.size(arr)}
+    return lambda df: outliers(df.withColumns(flag_cols)).withColumns(inventory)
+
+
+def detect_anomalies(
+    df: DataFrame, now_unix: int | float | Column, cfg: AnomalyConfig | None = None
+) -> DataFrame:
+    """Full detector suite: boolean flag columns + an ``anomaly_flags``
+    array<string> inventory + ``anomaly_count`` (the Spark form of
+    AnomalyDetector.detect_anomalies, anomaly_detector.py:132-226)."""
+    return detect_anomalies_builder(df.columns, now_column(now_unix), cfg)(df)

@@ -2,11 +2,15 @@
 
 Pure DataFrame → DataFrame (no I/O), replacing the reference's per-record
 Python loops (`flight_data_ingestion.py:301-349`, `flight_data_processor.py:
-72-191`) with one whole-stage-codegen withColumns pass — a narrow map with
-zero shuffles at any scale.
+72-191`) with two ``withColumns`` levels — the unit conversions, then the
+business rules that read them — which Catalyst collapses into one narrow
+projection with zero shuffles at any scale. :func:`enrich_builder` builds
+both levels once, so a stream can reuse them for every micro-batch.
 """
 
 from __future__ import annotations
+
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -22,29 +26,28 @@ MS_TO_FPM = 196.850394  # m/s -> ft/min
 KNOTS_TO_MPH = 1.15078
 
 
-def with_unit_conversions(df: DataFrame) -> DataFrame:
+def unit_conversion_columns() -> dict[str, Column]:
     """Metric→aviation unit conversions + has_* presence flags
-    (flight_data_ingestion.py:301-325)."""
-    return (
-        df.withColumn("baro_altitude_m", F.col("baro_altitude"))
-        .withColumn("geo_altitude_m", F.col("geo_altitude"))
-        .withColumn(
-            "baro_altitude_ft", F.round(F.col("baro_altitude") * M_TO_FT, 0).cast("int")
-        )
-        .withColumn("geo_altitude_ft", F.round(F.col("geo_altitude") * M_TO_FT, 0).cast("int"))
-        .withColumn("velocity_ms", F.col("velocity"))
-        .withColumn("velocity_knots", F.round(F.col("velocity") * MS_TO_KNOTS, 1))
-        .withColumn("velocity_kmh", F.round(F.col("velocity") * MS_TO_KMH, 1))
-        .withColumn("vertical_rate_ms", F.col("vertical_rate"))
-        .withColumn(
-            "vertical_rate_fpm", F.round(F.col("vertical_rate") * MS_TO_FPM, 0).cast("int")
-        )
-        .withColumn(
-            "has_position", F.col("latitude").isNotNull() & F.col("longitude").isNotNull()
-        )
-        .withColumn("has_altitude", F.col("baro_altitude").isNotNull())
-        .withColumn("has_velocity", F.col("velocity").isNotNull())
-    )
+    (flight_data_ingestion.py:301-325), as one level of new columns."""
+    return {
+        "baro_altitude_m": F.col("baro_altitude"),
+        "geo_altitude_m": F.col("geo_altitude"),
+        "baro_altitude_ft": F.round(F.col("baro_altitude") * M_TO_FT, 0).cast("int"),
+        "geo_altitude_ft": F.round(F.col("geo_altitude") * M_TO_FT, 0).cast("int"),
+        "velocity_ms": F.col("velocity"),
+        "velocity_knots": F.round(F.col("velocity") * MS_TO_KNOTS, 1),
+        "velocity_kmh": F.round(F.col("velocity") * MS_TO_KMH, 1),
+        "vertical_rate_ms": F.col("vertical_rate"),
+        "vertical_rate_fpm": F.round(F.col("vertical_rate") * MS_TO_FPM, 0).cast("int"),
+        "has_position": F.col("latitude").isNotNull() & F.col("longitude").isNotNull(),
+        "has_altitude": F.col("baro_altitude").isNotNull(),
+        "has_velocity": F.col("velocity").isNotNull(),
+    }
+
+
+def with_unit_conversions(df: DataFrame) -> DataFrame:
+    """:func:`unit_conversion_columns` applied to ``df``."""
+    return df.withColumns(unit_conversion_columns())
 
 
 def altitude_category(altitude_ft: Column) -> Column:
@@ -179,33 +182,44 @@ def completeness_score_8field(df_cols: tuple[str, ...] = COMPLETENESS_FIELDS) ->
     return F.round(present / F.lit(len(df_cols)), 3)
 
 
-def apply_business_rules(df: DataFrame, config: TransformationConfig | None = None) -> DataFrame:
-    """The full business-rule pass (flight_data_processor.py:72-191): altitude
+def business_rule_columns(config: TransformationConfig | None = None) -> dict[str, Column]:
+    """The business-rule pass (flight_data_processor.py:72-191): altitude
     and speed categories, estimated phase, completeness, callsign
-    normalization + airline code, region."""
+    normalization + airline code, region. Reads the unit-conversion
+    columns, so it is the level after :func:`unit_conversion_columns`."""
     alt_ft = F.coalesce(F.col("baro_altitude_ft"), F.col("geo_altitude_ft"))
     cs = F.trim(F.col("callsign"))
-    return (
-        df.withColumn("altitude_category", altitude_category(alt_ft))
-        .withColumn("speed_category", speed_category_processor(F.col("velocity_knots")))
-        .withColumn(
-            "estimated_phase",
-            estimated_phase(
-                F.coalesce(F.col("on_ground"), F.lit(False)),
-                alt_ft,
-                F.col("velocity_knots"),
-                F.col("vertical_rate_fpm"),
-            ),
-        )
-        .withColumn("completeness_score", completeness_score_8field())
-        .withColumn("callsign_normalized", F.when(cs.isNotNull() & (F.length(cs) > 0), F.upper(cs)))
-        .withColumn(
-            "airline_code", F.when(F.length(cs) >= 3, F.substring(cs, 1, 3))
-        )
-        .withColumn("region", region_code(F.col("latitude"), F.col("longitude")))
-    )
+    return {
+        "altitude_category": altitude_category(alt_ft),
+        "speed_category": speed_category_processor(F.col("velocity_knots")),
+        "estimated_phase": estimated_phase(
+            F.coalesce(F.col("on_ground"), F.lit(False)),
+            alt_ft,
+            F.col("velocity_knots"),
+            F.col("vertical_rate_fpm"),
+        ),
+        "completeness_score": completeness_score_8field(),
+        "callsign_normalized": F.when(cs.isNotNull() & (F.length(cs) > 0), F.upper(cs)),
+        "airline_code": F.when(F.length(cs) >= 3, F.substring(cs, 1, 3)),
+        "region": region_code(F.col("latitude"), F.col("longitude")),
+    }
+
+
+def apply_business_rules(df: DataFrame, config: TransformationConfig | None = None) -> DataFrame:
+    """:func:`business_rule_columns` applied to ``df``."""
+    return df.withColumns(business_rule_columns(config))
+
+
+def enrich_builder(
+    cols: Sequence[str], config: TransformationConfig | None = None
+) -> Callable[[DataFrame], DataFrame]:
+    """Build the enrichment once for inputs with columns ``cols``: the
+    returned function applies the two column levels (unit conversions, then
+    the business rules that read them) as two ``withColumns``."""
+    conversions, rules = unit_conversion_columns(), business_rule_columns(config)
+    return lambda df: df.withColumns(conversions).withColumns(rules)
 
 
 def enrich(df: DataFrame, config: TransformationConfig | None = None) -> DataFrame:
     """Unit conversions + business rules in one narrow pass."""
-    return apply_business_rules(with_unit_conversions(df), config)
+    return enrich_builder(df.columns, config)(df)

@@ -13,6 +13,9 @@ Determinism: ``now`` is always injected (never current_timestamp).
 
 from __future__ import annotations
 
+import functools
+from typing import Callable, Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -23,13 +26,13 @@ from aws_flight_data_pipeline_spark.functions.geo import EARTH_RADIUS_MILES, hav
 ICAO24_PATTERN = "^[0-9a-f]{6}$"
 
 
-def completeness_score(df: DataFrame, cfg: QualityConfig | None = None) -> Column:
+def completeness_score(cols: Sequence[str], cfg: QualityConfig | None = None) -> Column:
     """Penalty model (quality_validator.py:284-332): 0.8 per missing critical
     field, 0.2 per missing important field, floored at 0, then min'd with the
-    raw presence ratio."""
+    raw presence ratio. ``cols``: the input's column names."""
     cfg = cfg or QualityConfig()
-    crit = [c for c in cfg.critical_fields if c in df.columns]
-    imp = [c for c in cfg.important_fields if c in df.columns]
+    crit = [c for c in cfg.critical_fields if c in cols]
+    imp = [c for c in cfg.important_fields if c in cols]
     missing_crit = sum(
         (F.when(F.col(c).isNull(), 1).otherwise(0) for c in crit), start=F.lit(0)
     )
@@ -43,7 +46,7 @@ def completeness_score(df: DataFrame, cfg: QualityConfig | None = None) -> Colum
     return F.least(penalized, ratio)
 
 
-def validity_score(df: DataFrame, cfg: QualityConfig | None = None) -> Column:
+def validity_score(cols: Sequence[str], cfg: QualityConfig | None = None) -> Column:
     """1 − failed/checked over range + format checks (quality_validator.py:
     334-522): altitude, velocity, lat/lon bounds, vertical rate, icao24 hex."""
     cfg = cfg or QualityConfig()
@@ -52,22 +55,22 @@ def validity_score(df: DataFrame, cfg: QualityConfig | None = None) -> Column:
     def add(present: Column, ok: Column) -> None:
         checks.append((F.when(present, 1).otherwise(0), F.when(present & ~ok, 1).otherwise(0)))
 
-    if "baro_altitude_ft" in df.columns:
+    if "baro_altitude_ft" in cols:
         alt = F.col("baro_altitude_ft")
         add(alt.isNotNull(), (alt >= cfg.altitude_min) & (alt <= cfg.altitude_max))
-    if "velocity_knots" in df.columns:
+    if "velocity_knots" in cols:
         v = F.col("velocity_knots")
         add(v.isNotNull(), (v >= cfg.velocity_min) & (v <= cfg.velocity_max))
-    if "latitude" in df.columns:
+    if "latitude" in cols:
         lat = F.col("latitude")
         add(lat.isNotNull(), (lat >= -90.0) & (lat <= 90.0) & ~F.isnan(lat))
-    if "longitude" in df.columns:
+    if "longitude" in cols:
         lon = F.col("longitude")
         add(lon.isNotNull(), (lon >= -180.0) & (lon <= 180.0) & ~F.isnan(lon))
-    if "vertical_rate_fpm" in df.columns:
+    if "vertical_rate_fpm" in cols:
         vr = F.col("vertical_rate_fpm")
         add(vr.isNotNull(), F.abs(vr) <= cfg.vertical_rate_max)
-    if "icao24" in df.columns:
+    if "icao24" in cols:
         ic = F.col("icao24")
         add(ic.isNotNull(), ic.rlike(ICAO24_PATTERN))
 
@@ -77,7 +80,7 @@ def validity_score(df: DataFrame, cfg: QualityConfig | None = None) -> Column:
 
 
 def consistency_score(
-    df: DataFrame, cfg: QualityConfig | None = None, key: str = "icao24", ts: str = "last_contact"
+    cols: Sequence[str], cfg: QualityConfig | None = None, key: str = "icao24", ts: str = "last_contact"
 ) -> Column:
     """Cross-field + cross-fix coherence (quality_validator.py:524-634):
     speed/altitude ratio, on_ground vs altitude, airborne-but-static, and
@@ -88,9 +91,9 @@ def consistency_score(
     def add(present: Column, ok: Column) -> None:
         checks.append((F.when(present, 1).otherwise(0), F.when(present & ~ok, 1).otherwise(0)))
 
-    alt = F.col("baro_altitude_ft") if "baro_altitude_ft" in df.columns else F.lit(None)
-    v = F.col("velocity_knots") if "velocity_knots" in df.columns else F.lit(None)
-    og = F.col("on_ground") if "on_ground" in df.columns else F.lit(None)
+    alt = F.col("baro_altitude_ft") if "baro_altitude_ft" in cols else F.lit(None)
+    v = F.col("velocity_knots") if "velocity_knots" in cols else F.lit(None)
+    og = F.col("on_ground") if "on_ground" in cols else F.lit(None)
 
     # speed/altitude ratio (airborne only): > 2 kts per 1000 ft is suspect
     airborne = og.isNotNull() & ~og
@@ -101,7 +104,7 @@ def consistency_score(
     # airborne but low and slow
     add(airborne & alt.isNotNull() & v.isNotNull(), ~((alt < 100) & (v < 50)))
 
-    if {"latitude", "longitude", key, ts} <= set(df.columns):
+    if {"latitude", "longitude", key, ts} <= set(cols):
         w = Window.partitionBy(key).orderBy(ts)
         p_lat, p_lon, p_ts = F.lag("latitude").over(w), F.lag("longitude").over(w), F.lag(ts).over(w)
         dist = haversine(p_lat, p_lon, F.col("latitude"), F.col("longitude"), EARTH_RADIUS_MILES)
@@ -150,40 +153,58 @@ def quality_grade(overall: Column, cfg: QualityConfig | None = None) -> Column:
     )
 
 
-def score_quality(
-    df: DataFrame, now_unix: int | Column, cfg: QualityConfig | None = None
-) -> DataFrame:
-    """Add the four dimension scores, weighted overall, grade, and quarantine
-    decision columns in one pass (the Spark form of
-    DataQualityOrchestrator.process_records, main_validator.py:84-219)."""
+def now_column(now_unix: int | float | Column) -> Column:
+    """The injected ``now`` as a Column: a Column passes through, any other
+    value (int, float, numpy scalar) becomes a literal."""
+    return now_unix if isinstance(now_unix, Column) else F.lit(now_unix)
+
+
+def score_quality_builder(
+    cols: Sequence[str], now_unix: Column, cfg: QualityConfig | None = None
+) -> Callable[[DataFrame], DataFrame]:
+    """Build the quality scoring once for inputs with columns ``cols``: the
+    returned function applies three ``withColumns`` levels — the four
+    dimension scores, the weighted overall, then grade + quarantine
+    decision. ``now_unix`` is a Column (a literal, or a column of the
+    input)."""
     cfg = cfg or QualityConfig()
-    now_col = F.lit(now_unix) if isinstance(now_unix, int) else now_unix
-    if "time_position" not in df.columns:
+    levels: list[dict[str, Column]] = []
+    if "time_position" not in cols:
         # processed tables may drop time_position; null → base timeliness only
-        df = df.withColumn("time_position", F.lit(None).cast("long"))
-    df = (
-        df.withColumn("completeness_score", completeness_score(df, cfg))
-        .withColumn("validity_score", validity_score(df, cfg))
-        .withColumn("consistency_score", consistency_score(df, cfg))
-        .withColumn("timeliness_score", timeliness_score(now_col, cfg))
-    )
-    overall = (
-        cfg.completeness_weight * F.col("completeness_score")
+        levels.append({"time_position": F.lit(None).cast("long")})
+        cols = [*cols, "time_position"]
+    dimensions = {
+        "completeness_score": completeness_score(cols, cfg),
+        "validity_score": validity_score(cols, cfg),
+        "consistency_score": consistency_score(cols, cfg),
+        "timeliness_score": timeliness_score(now_unix, cfg),
+    }
+    overall = {
+        "data_quality_score": cfg.completeness_weight * F.col("completeness_score")
         + cfg.validity_weight * F.col("validity_score")
         + cfg.consistency_weight * F.col("consistency_score")
         + cfg.timeliness_weight * F.col("timeliness_score")
-    )
-    df = df.withColumn("data_quality_score", overall)
-    df = df.withColumn("quality_grade", quality_grade(F.col("data_quality_score"), cfg))
+    }
     critical_issue = (
         (F.col("completeness_score") < 1.0 - cfg.missing_critical_penalty + 1e-9)
         | F.col("icao24").isNull()
         | (~F.col("icao24").rlike(ICAO24_PATTERN))
     )
-    return df.withColumn(
-        "should_quarantine",
-        (F.col("data_quality_score") < cfg.quarantine_threshold) | critical_issue,
-    )
+    decision = {
+        "quality_grade": quality_grade(F.col("data_quality_score"), cfg),
+        "should_quarantine": (F.col("data_quality_score") < cfg.quarantine_threshold) | critical_issue,
+    }
+    levels += [dimensions, overall, decision]
+    return lambda df: functools.reduce(DataFrame.withColumns, levels, df)
+
+
+def score_quality(
+    df: DataFrame, now_unix: int | float | Column, cfg: QualityConfig | None = None
+) -> DataFrame:
+    """Add the four dimension scores, weighted overall, grade, and quarantine
+    decision columns in one pass (the Spark form of
+    DataQualityOrchestrator.process_records, main_validator.py:84-219)."""
+    return score_quality_builder(df.columns, now_column(now_unix), cfg)(df)
 
 
 def quarantine_reason(cfg: QualityConfig | None = None) -> Column:

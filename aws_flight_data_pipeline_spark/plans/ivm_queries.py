@@ -29,7 +29,6 @@ from __future__ import annotations
 
 from aws_flight_data_pipeline_spark.functions import tmproots as _tmproots
 
-import os
 import shutil
 import tempfile
 import time
@@ -238,12 +237,7 @@ def ivm_single_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build 3.0 s vs exec 0.1 s)
     pristine = _ensure_single_base(spark, sf_dir)
     root = _fresh_state_dir(f"{sf_dir}#single")
-    # hardlink clone (r15): the versioned design never mutates a data file
-    # in place (commits create NEW txn files; _head/_batches use atomic
-    # replace, which breaks the link), so linking preserves the pristine
-    # base's byte-identity guarantee while copying only metadata — the
-    # per-invocation byte copy of the standing state was pure I/O overhead
-    shutil.copytree(pristine, root, dirs_exist_ok=True, copy_function=os.link)
+    _tmproots.clone_tree(pristine, root)
     fact, rollup = f"{root}/fact", f"{root}/rollup"
     base = _single_base_frame(spark, sf_dir)
 

@@ -31,8 +31,6 @@ of exact BIGINT sums.
 
 from __future__ import annotations
 
-import os
-
 from aws_flight_data_pipeline_spark.functions import tmproots as _tmproots
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -447,12 +445,7 @@ def index_single_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(old, ignore_errors=True)
     root = _tmproots.mkdtemp(prefix="afdp-invidx-single-")
     _INDEX_DIRS[key] = root
-    # hardlink clone (r15): the versioned design never mutates a data file
-    # in place (commits create NEW txn files; _head/_batches use atomic
-    # replace, which breaks the link), so linking preserves the pristine
-    # base's byte-identity guarantee while copying only metadata — the
-    # per-invocation byte copy of the standing state was pure I/O overhead
-    shutil.copytree(pristine, root, dirs_exist_ok=True, copy_function=os.link)
+    _tmproots.clone_tree(pristine, root)
     dpath, ipath = f"{root}/docs", f"{root}/index"
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")

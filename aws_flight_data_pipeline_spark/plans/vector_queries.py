@@ -1286,12 +1286,7 @@ def ivf_single_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(old, ignore_errors=True)
     root = _tmproots.mkdtemp(prefix="afdp-ivf-single-")
     _IVF_DIRS[key] = root
-    # hardlink clone (r15): the versioned design never mutates a data file
-    # in place (commits create NEW txn files; _head/_batches use atomic
-    # replace, which breaks the link), so linking preserves the pristine
-    # base's byte-identity guarantee while copying only metadata — the
-    # per-invocation byte copy of the standing state was pure I/O overhead
-    shutil.copytree(pristine, root, dirs_exist_ok=True, copy_function=os.link)
+    _tmproots.clone_tree(pristine, root)
     ipath = f"{root}/ivf"
 
     e = load_table(spark, sf_dir, "embeddings")

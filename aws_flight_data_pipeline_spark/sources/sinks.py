@@ -7,11 +7,13 @@ layout is `partitionBy`. Chunking/threading/merging disappear into tasks.
 
 Scale posture: writers repartition by the partition columns first so each
 task writes few files (no small-file explosion at 1000 executors), and the
-quarantine split is two filtered writes off one scored DataFrame — the plan
-is computed once if the caller caches or the source is cheap to rescan.
+quarantine split is two filtered writes off one locally checkpointed copy
+of the scored DataFrame, so its plan is computed once.
 """
 
 from __future__ import annotations
+
+from typing import Callable, Sequence
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
@@ -20,17 +22,26 @@ from pyspark.sql import functions as F
 PARTITION_COLS = ("year", "month", "day", "hour")
 
 
+def time_partitions_builder(
+    cols: Sequence[str], ts_col: str = "collection_time"
+) -> Callable[[DataFrame], DataFrame]:
+    """Build the y/m/d/h partition columns once for inputs with columns
+    ``cols``; the returned function adds them in one ``withColumns``."""
+    ts = F.timestamp_seconds(F.col(ts_col))
+    parts = {
+        "year": F.date_format(ts, "yyyy"),
+        "month": F.date_format(ts, "MM"),
+        "day": F.date_format(ts, "dd"),
+        "hour": F.date_format(ts, "HH"),
+    }
+    return lambda df: df.withColumns(parts)
+
+
 def with_time_partitions(df: DataFrame, ts_col: str = "collection_time") -> DataFrame:
     """Derive string y/m/d/h partition columns from a unix-seconds column —
     the `year=YYYY/month=MM/...` layout of `flight_data_ingestion.py:354-368`
     (zero-padded strings to match the reference's key format)."""
-    ts = F.timestamp_seconds(F.col(ts_col))
-    return (
-        df.withColumn("year", F.date_format(ts, "yyyy"))
-        .withColumn("month", F.date_format(ts, "MM"))
-        .withColumn("day", F.date_format(ts, "dd"))
-        .withColumn("hour", F.date_format(ts, "HH"))
-    )
+    return time_partitions_builder(df.columns, ts_col)(df)
 
 
 def write_processed(df: DataFrame, path: str, mode: str = "append") -> None:
@@ -50,10 +61,19 @@ def write_quarantine_split(
 ) -> None:
     """Split one scored DataFrame into clean + quarantine parquet stores —
     the quarantine lifecycle sink (`quarantine_system.py:238-336`) as two
-    filtered writes."""
+    filtered writes. ``df`` is computed once: it is materialized with
+    ``localCheckpoint``, both halves are written from that copy, and the
+    copy's blocks are released after the writes. (A ``persist`` would write
+    one small file per shuffle partition: a cached plan does not get AQE's
+    partition coalescing.)"""
     q = F.col(quarantine_col) if isinstance(quarantine_col, str) else quarantine_col
-    df.filter(~q).write.mode("append").option("compression", "snappy").parquet(clean_path)
-    df.filter(q).write.mode("append").option("compression", "snappy").parquet(quarantine_path)
+    df = df.localCheckpoint()
+    try:
+        df.filter(~q).write.mode("append").option("compression", "snappy").parquet(clean_path)
+        df.filter(q).write.mode("append").option("compression", "snappy").parquet(quarantine_path)
+    finally:
+        # the checkpointed frame is a scan of one persisted RDD
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def write_summary(df: DataFrame, path: str, partition_cols: tuple[str, ...] = ("year", "month", "day")) -> None:

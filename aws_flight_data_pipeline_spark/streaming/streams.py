@@ -6,7 +6,8 @@ same semantics are first-class Structured Streaming:
 
 - landing-prefix file source with the declared schema (no inference scans),
 - `foreachBatch` reusing the exact batch operators (enrich → score →
-  quarantine split) so batch and streaming share one code path,
+  quarantine split) so batch and streaming share one code path — built
+  once per stream, applied once per micro-batch,
 - `dropDuplicatesWithinWatermark` for the cross-batch (icao24, time_position)
   dedup the reference approximates with a 5-s tolerance
   (`data_transformer.py:109-114`),
@@ -23,7 +24,8 @@ Late data policy follows the reference: late records are *scored down*
 
 from __future__ import annotations
 
-from typing import Iterator
+import functools
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -39,15 +41,19 @@ from pyspark.sql.types import (
 )
 
 from aws_flight_data_pipeline_spark.config import AnomalyConfig
-from aws_flight_data_pipeline_spark.operators.anomaly import detect_anomalies
-from aws_flight_data_pipeline_spark.operators.enrich import enrich
-from aws_flight_data_pipeline_spark.operators.quality import score_quality
+from aws_flight_data_pipeline_spark.operators.anomaly import detect_anomalies_builder
+from aws_flight_data_pipeline_spark.operators.enrich import enrich_builder
+from aws_flight_data_pipeline_spark.operators.quality import now_column, score_quality_builder
 from aws_flight_data_pipeline_spark.schemas import RAW_BATCH_SCHEMA
 from aws_flight_data_pipeline_spark.sources.opensky import decode_states
-from aws_flight_data_pipeline_spark.sources.sinks import (
-    with_time_partitions,
-    write_quarantine_split,
-)
+from aws_flight_data_pipeline_spark.sources.sinks import time_partitions_builder, write_quarantine_split
+
+# The batch operators the micro-batch builders stand for stay importable from
+# this module by name.
+from aws_flight_data_pipeline_spark.operators.anomaly import detect_anomalies  # noqa: F401
+from aws_flight_data_pipeline_spark.operators.enrich import enrich  # noqa: F401
+from aws_flight_data_pipeline_spark.operators.quality import score_quality  # noqa: F401
+from aws_flight_data_pipeline_spark.sources.sinks import with_time_partitions  # noqa: F401
 
 
 def stream_raw_states(spark: SparkSession, landing_path: str) -> DataFrame:
@@ -94,6 +100,33 @@ def windowed_traffic_summary(
     )
 
 
+#: the micro-batch's injected ``now``, a literal column the pre-built
+#: quality and anomaly expressions read; dropped before the write
+_NOW = "_batch_now"
+
+
+def _etl_chain(records: DataFrame) -> Callable[[DataFrame], DataFrame]:
+    """The batch operators' builders, run once for ``records``' columns:
+    enrich → score_quality → detect_anomalies (``now`` read from the
+    :data:`_NOW` column), drop the inventory and ``now``, then the time
+    partitions. Each builder is given the columns the previous step
+    produces, read off an empty frame of the same schema."""
+    now = F.col(_NOW)
+    builders = (
+        enrich_builder,
+        lambda cols: score_quality_builder(cols, now),
+        lambda cols: detect_anomalies_builder(cols, now),
+        lambda cols: lambda df: df.drop("anomaly_flags", _NOW),
+        time_partitions_builder,
+    )
+    probe = records.sparkSession.createDataFrame([], records.schema).withColumn(_NOW, F.lit(0))
+    steps = []
+    for build in builders:
+        steps.append(build(probe.columns))
+        probe = steps[-1](probe)
+    return lambda df: functools.reduce(lambda acc, step: step(acc), steps, df)
+
+
 def micro_batch_pipeline(
     records: DataFrame,
     clean_path: str,
@@ -102,24 +135,38 @@ def micro_batch_pipeline(
     now_provider=None,
     trigger: dict | None = None,
 ):
-    """The full ETL as a foreachBatch stream: each micro-batch runs the SAME
+    """The full ETL as a foreachBatch stream on the SAME transforms as the
     batch operators (enrich → score_quality → detect_anomalies → partitioned
-    quarantine split). One code path for batch and streaming.
+    quarantine split): their builders run once, here, at stream start, and
+    each micro-batch only applies the pre-built chain. ``now`` enters a
+    batch as one literal column that the pre-built expressions read.
+
+    Each non-empty micro-batch runs 8 Spark jobs:
+
+    - one aggregate, the row count and the batch's default ``now`` (2 jobs:
+      its shuffle map stage and the result); empty batches stop here;
+    - the ``localCheckpoint`` of the scored batch in
+      :func:`write_quarantine_split` (4 jobs: the per-aircraft window
+      shuffle, the outlier-stats shuffle and broadcast, the checkpoint);
+    - the clean and the quarantine parquet writes, both read from the
+      checkpoint (1 job each).
 
     ``now_provider``: () -> unix seconds; defaults to the max last_contact in
-    the batch (deterministic in tests, sensible in production where the batch
-    is ~now).
+    the batch, or its max collection_time when every last_contact is null
+    (deterministic in tests, sensible in production where the batch is ~now).
     """
+    chain = _etl_chain(records)
+    batch_stats = (
+        F.count(F.lit(1)),
+        F.coalesce(F.max("last_contact"), F.max("collection_time")),
+    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        rows, latest = batch_df.agg(*batch_stats).first()
+        if rows == 0:
             return
-        if now_provider is not None:
-            now = now_provider()
-        else:
-            now = batch_df.agg(F.max("last_contact")).collect()[0][0]
-        scored = detect_anomalies(score_quality(enrich(batch_df), now), now)
-        out = with_time_partitions(scored.drop("anomaly_flags"))
+        now = now_provider() if now_provider is not None else latest
+        out = chain(batch_df.withColumn(_NOW, now_column(now)))
         write_quarantine_split(out, clean_path, quarantine_path)
 
     writer = records.writeStream.foreachBatch(process_batch).option(

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -376,3 +377,29 @@ def test_anomaly_position_jump(spark):
     ]
     out = detect_anomalies(_quality_df(spark, rows), NOW).orderBy("last_contact").collect()
     assert "position_jump" in set(out[1].anomaly_flags)
+
+
+@pytest.mark.parametrize("now", [float(NOW), np.int64(NOW)], ids=["float", "numpy_int64"])
+def test_now_of_any_numeric_type_scores_like_int_now(spark, now):
+    rows = [
+        _quality_row(last_contact=NOW - 180),
+        _quality_row(last_contact=NOW + 600, baro_altitude_ft=70000.0),
+    ]
+    df = _quality_df(spark, rows)
+
+    def run(n):
+        return detect_anomalies(score_quality(df, n), n).orderBy("rid").collect()
+
+    assert run(now) == run(NOW)
+
+
+def test_anomaly_inventory_lists_preexisting_outlier_columns(spark):
+    # outlier flags already on the input (e.g. a re-scored processed table)
+    # are listed in the inventory next to the ones the suite computes
+    df = _quality_df(spark, [_quality_row(), _quality_row()]).withColumn(
+        "vertical_rate_fpm_zscore_outlier", F.lit(True)
+    ).withColumn("latitude_iqr_outlier", F.col("rid") == 1)
+    out = detect_anomalies(df, NOW).orderBy("rid").collect()
+    assert set(out[0].anomaly_flags) == {"vertical_rate_fpm_zscore_outlier"}
+    assert set(out[1].anomaly_flags) == {"vertical_rate_fpm_zscore_outlier", "latitude_iqr_outlier"}
+    assert [r.anomaly_count for r in out] == [1, 2]

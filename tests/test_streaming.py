@@ -4,6 +4,7 @@ the stateful stuck-aircraft detector."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -11,6 +12,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from aws_flight_data_pipeline_spark.config import AnomalyConfig
+from aws_flight_data_pipeline_spark.operators.anomaly import detect_anomalies
+from aws_flight_data_pipeline_spark.operators.enrich import enrich
+from aws_flight_data_pipeline_spark.operators.quality import score_quality
+from aws_flight_data_pipeline_spark.schemas import RAW_BATCH_SCHEMA
+from aws_flight_data_pipeline_spark.sources.opensky import decode_states, read_flight_records
+from aws_flight_data_pipeline_spark.sources.sinks import with_time_partitions
 from aws_flight_data_pipeline_spark.streaming.streams import (
     micro_batch_pipeline,
     stateful_stuck_detector,
@@ -107,6 +114,110 @@ def test_micro_batch_pipeline_end_to_end(spark, landing, tmp_path):
     assert clean_df.collect()[0].icao24 == "abc123"
     assert "data_quality_score" in clean_df.columns
     assert "year" in clean_df.columns  # partition columns derived
+
+
+def _one_poll_per_batch(spark, landing):
+    """stream_raw_states, but one landed poll per micro-batch."""
+    raw = (
+        spark.readStream.schema(RAW_BATCH_SCHEMA)
+        .option("multiLine", "true")
+        .option("maxFilesPerTrigger", 1)
+        .json(landing)
+    )
+    return decode_states(raw)
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_micro_batch_pipeline_equals_batch_operators(spark, landing, tmp_path):
+    # three polls, one micro-batch each, reusing the chain built at stream
+    # start; the polls carry an invalid icao24, a missing position and an
+    # exact duplicate
+    polls = [
+        [
+            _state("abc123", "UAL123", NOW - 10, -74.0, 40.7),
+            _state("def456", "BAW456", NOW - 9, -0.4, 51.4, alt=21000.0),  # impossible altitude
+            _state("BADICAO", None, NOW - 8, 2.0, 48.0),
+        ],
+        [
+            _state("abc123", "UAL123", NOW + 20, -73.9, 40.8),
+            _state("abc123", "UAL123", NOW + 20, -73.9, 40.8),  # exact duplicate
+            _state("0a1b2c", "JAL789", NOW + 21, None, None),  # missing position
+        ],
+        [
+            _state("abc123", "UAL123", NOW + 50, 139.7, 35.5),  # position jump
+            _state("def456", "BAW456", NOW + 51, -0.3, 51.5, vel=None),
+        ],
+    ]
+    for i, states in enumerate(polls):
+        _write_batch(landing, f"b{i}.json", NOW + 30 * i, states)
+    clean, quar, ckpt = (str(tmp_path / p) for p in ("clean", "quar", "ckpt"))
+    q = micro_batch_pipeline(
+        _one_poll_per_batch(spark, landing), clean, quar, ckpt, now_provider=lambda: NOW + 60
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert sum(p.numInputRows > 0 for p in q.recentProgress) == len(polls)
+
+    expected = None
+    for i in range(len(polls)):
+        recs = read_flight_records(spark, os.path.join(landing, f"b{i}.json"))
+        scored = detect_anomalies(score_quality(enrich(recs), NOW + 60), NOW + 60)
+        out = with_time_partitions(scored.drop("anomaly_flags"))
+        expected = out if expected is None else expected.unionByName(out)
+    for path, keep in ((clean, ~F.col("should_quarantine")), (quar, F.col("should_quarantine"))):
+        got, want = spark.read.parquet(path), expected.filter(keep)
+        assert [(f.name, f.dataType) for f in got.schema] == [(f.name, f.dataType) for f in want.schema]
+        assert _sorted_rows(got) == _sorted_rows(want)
+    assert spark.read.parquet(quar).filter(F.col("icao24") == "BADICAO").count() == 1
+    assert spark.read.parquet(quar).filter(F.col("icao24") == "0a1b2c").count() == 1
+
+
+def test_micro_batch_pipeline_survives_null_last_contact_batch(spark, landing, tmp_path):
+    # every record lacks last_contact: the batch's now falls back to its
+    # collection_time instead of failing the batch (and its replay)
+    _write_batch(landing, "b1.json", NOW, [
+        _state("abc123", "UAL123", None, -74.0, 40.7),
+        _state("def456", "BAW456", None, -0.4, 51.4),
+    ])
+    clean, quar, ckpt = (str(tmp_path / p) for p in ("clean", "quar", "ckpt"))
+    q = micro_batch_pipeline(stream_raw_states(spark, landing), clean, quar, ckpt)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    rows = spark.read.parquet(quar).collect()  # last_contact is a critical field
+    assert sorted(r.icao24 for r in rows) == ["abc123", "def456"]
+    assert all(r.timeliness_score == 1.0 for r in rows)
+
+    # the stream goes on from its checkpoint with the next poll
+    _write_batch(landing, "b2.json", NOW + 30, [_state("abc123", "UAL123", NOW + 20, -73.9, 40.8)])
+    q = micro_batch_pipeline(stream_raw_states(spark, landing), clean, quar, ckpt)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert [r.icao24 for r in spark.read.parquet(clean).collect()] == ["abc123"]
+
+
+def test_micro_batch_pipeline_jobs_and_files_per_batch(spark, landing, tmp_path):
+    # one micro-batch: its Spark jobs (the stream's job group) and the
+    # parquet files it adds per side
+    _write_batch(landing, "b1.json", NOW, [
+        _state("%06x" % i, "UAL123", NOW - i, -74.0 + i * 0.01, 40.7) for i in range(20)
+    ] + [_state("BADICAO", None, NOW, 2.0, 48.0)])
+    clean, quar, ckpt = (str(tmp_path / p) for p in ("clean", "quar", "ckpt"))
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    q = micro_batch_pipeline(
+        stream_raw_states(spark, landing), clean, quar, ckpt, now_provider=lambda: NOW
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert sum(p.numInputRows > 0 for p in q.recentProgress) == 1
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert 0 < len(jobs) <= 8
+    for path in (clean, quar):
+        assert len(glob.glob(os.path.join(path, "*.parquet"))) == 1
+    # the sink's checkpoint is released with the batch
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
 
 @pytest.mark.slow

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import errno
 import os
 import subprocess
 import sys
@@ -39,3 +40,41 @@ def test_double_cleanup_is_harmless():
     tmproots._cleanup()
     tmproots._cleanup()
     assert not os.path.exists(root)
+
+
+def _tree(root):
+    return {
+        os.path.relpath(os.path.join(d, f), root): open(os.path.join(d, f), "rb").read()
+        for d, _, files in os.walk(root)
+        for f in files
+    }
+
+
+def test_clone_tree_hardlinks_files(tmp_path):
+    src = tmp_path / "src"
+    (src / "data").mkdir(parents=True)
+    (src / "data" / "part-0.parquet").write_bytes(b"rows")
+    (src / "_head").write_text("3")
+    dst = tmproots.mkdtemp(prefix="afdp-tmproots-test-")  # exists already
+    tmproots.clone_tree(str(src), dst)
+    assert _tree(dst) == _tree(str(src))
+    assert os.path.samefile(src / "data" / "part-0.parquet", os.path.join(dst, "data", "part-0.parquet"))
+
+
+def test_clone_tree_copies_across_devices(tmp_path, monkeypatch):
+    src = tmp_path / "src"
+    (src / "data").mkdir(parents=True)
+    (src / "data" / "part-0.parquet").write_bytes(b"rows")
+    (src / "_head").write_text("3")
+
+    def cross_device(a, b, *args, **kwargs):
+        raise OSError(errno.EXDEV, os.strerror(errno.EXDEV), a, None, b)
+
+    monkeypatch.setattr(os, "link", cross_device)
+    dst = tmp_path / "dst"
+    tmproots.clone_tree(str(src), str(dst))
+    assert _tree(str(dst)) == _tree(str(src))
+    copied = dst / "data" / "part-0.parquet"
+    assert not os.path.samefile(src / "data" / "part-0.parquet", copied)
+    copied.write_bytes(b"changed")  # the clone is independent of the source
+    assert (src / "data" / "part-0.parquet").read_bytes() == b"rows"
