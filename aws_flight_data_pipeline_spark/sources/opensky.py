@@ -2,8 +2,10 @@
 
 The reference polls /states/all and writes one JSON document per 30-s batch to
 `year=/month=/day=/hour=` prefixes (`flight_data_ingestion.py:354-413`). Here
-the landing prefix is a plain partitioned JSON source: one declared-schema
-scan + explode + positional cast. The HTTP polling itself is out of engine
+the landing prefix is a plain partitioned text source, one row per landed
+document, parsed once by ``from_json`` with the declared schema, then
+explode + positional cast. Batch and stream share the read and parse step
+(:func:`read_raw_documents`). The HTTP polling itself is out of engine
 scope (a feeder process); the engine's contract starts at the landing files.
 
 Scale: explode is a narrow transformation (no shuffle); with Hive-style
@@ -12,25 +14,55 @@ partition discovery the y/m/d/h directories prune on partition filters.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamReader
 
 from aws_flight_data_pipeline_spark.schemas import RAW_BATCH_SCHEMA, STATE_FIELDS
+
+
+def parse_raw_documents(docs: DataFrame) -> DataFrame:
+    """Text rows (``value``, one document each) → raw batch rows
+    ``(time, states)``, followed by any partition columns of the scan.
+
+    ``from_json`` with the declared schema, in its default PERMISSIVE mode:
+    a corrupt document becomes an all-null row instead of failing the read,
+    and a blank one yields no row — the multiLine JSON source's rows. The
+    parsed document comes out of an ``inline`` generator, so the non-empty
+    ``states`` filter that Spark infers from :func:`decode_states`' explode
+    stays above the parse rather than being pushed under it as a second
+    ``from_json`` of the whole document.
+    """
+    doc = F.from_json("value", RAW_BATCH_SCHEMA)
+    return docs.select(
+        F.inline(F.array_compact(F.array(doc))), *[c for c in docs.columns if c != "value"]
+    )
+
+
+def read_raw_documents(
+    reader: DataFrameReader | DataStreamReader, path: str, wholetext: bool = True
+) -> DataFrame:
+    """Text scan of the landed documents under ``path`` → raw batch rows, via
+    :func:`parse_raw_documents`. ``reader`` is ``spark.read`` or
+    ``spark.readStream``, with any source options already set. Each file is
+    one document (``wholetext=True``), or one document per line (JSON
+    Lines, ``wholetext=False``)."""
+    # wholetext goes in as the argument: text() passes its own default,
+    # which would override an .option("wholetext", ...) and read by line
+    return parse_raw_documents(reader.text(path, wholetext=wholetext))
 
 
 def read_raw_batches(spark: SparkSession, path: str, multiline: bool = True) -> DataFrame:
     """Scan raw OpenSky JSON batch documents with the declared schema.
 
-    PERMISSIVE mode keeps corrupt documents from failing the scan — the DLQ
-    semantics of the reference's try/except skip (`optimized_converter.py:
-    282-315`) via Spark's native bad-record handling.
+    The text source reads each file whole and :func:`parse_raw_documents`
+    parses it once, at JSON parser speed (:func:`read_raw_documents`).
+    PERMISSIVE semantics are kept — corrupt documents do not fail the scan,
+    the DLQ semantics of the reference's try/except skip
+    (`optimized_converter.py:282-315`). ``multiline=False`` reads JSON Lines:
+    one document per line, a corrupt line an all-null row, a blank line none.
     """
-    return (
-        spark.read.schema(RAW_BATCH_SCHEMA)
-        .option("multiLine", "true" if multiline else "false")
-        .option("mode", "PERMISSIVE")
-        .json(path)
-    )
+    return read_raw_documents(spark.read, path, wholetext=multiline)
 
 
 def decode_states(raw: DataFrame) -> DataFrame:

@@ -13,7 +13,8 @@ of the scored DataFrame, so its plan is computed once.
 
 from __future__ import annotations
 
-from typing import Callable, Sequence
+import contextlib
+from typing import Callable, Iterator, Sequence
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
@@ -56,24 +57,33 @@ def write_processed(df: DataFrame, path: str, mode: str = "append") -> None:
     )
 
 
+@contextlib.contextmanager
+def materialized(df: DataFrame) -> Iterator[DataFrame]:
+    """``df`` computed once, as a ``localCheckpoint``, for the body of the
+    ``with`` block; the checkpoint's blocks are released when the block
+    exits, also when it raises or returns early. (A ``persist`` would write
+    one small file per shuffle partition downstream: a cached plan does not
+    get AQE's partition coalescing.)"""
+    df = df.localCheckpoint()
+    try:
+        yield df
+    finally:
+        # the checkpointed frame is a scan of one persisted RDD; PySpark has
+        # no public call that unpersists a local checkpoint
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def write_quarantine_split(
     df: DataFrame, clean_path: str, quarantine_path: str, quarantine_col: Column | str = "should_quarantine"
 ) -> None:
     """Split one scored DataFrame into clean + quarantine parquet stores —
     the quarantine lifecycle sink (`quarantine_system.py:238-336`) as two
-    filtered writes. ``df`` is computed once: it is materialized with
-    ``localCheckpoint``, both halves are written from that copy, and the
-    copy's blocks are released after the writes. (A ``persist`` would write
-    one small file per shuffle partition: a cached plan does not get AQE's
-    partition coalescing.)"""
+    filtered writes. ``df`` is computed once: both halves are written from
+    one :func:`materialized` copy, released after the writes."""
     q = F.col(quarantine_col) if isinstance(quarantine_col, str) else quarantine_col
-    df = df.localCheckpoint()
-    try:
-        df.filter(~q).write.mode("append").option("compression", "snappy").parquet(clean_path)
-        df.filter(q).write.mode("append").option("compression", "snappy").parquet(quarantine_path)
-    finally:
-        # the checkpointed frame is a scan of one persisted RDD
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    with materialized(df) as scored:
+        scored.filter(~q).write.mode("append").option("compression", "snappy").parquet(clean_path)
+        scored.filter(q).write.mode("append").option("compression", "snappy").parquet(quarantine_path)
 
 
 def write_summary(df: DataFrame, path: str, partition_cols: tuple[str, ...] = ("year", "month", "day")) -> None:

@@ -4,7 +4,8 @@ The reference has no streaming engine — a 30-s EventBridge schedule triggers
 ingestion and S3 events fan out processing (`README.md:136-153`). Here the
 same semantics are first-class Structured Streaming:
 
-- landing-prefix file source with the declared schema (no inference scans),
+- landing-prefix file source, one whole-document text row per landed poll,
+  parsed by the batch reader's ``from_json`` step (no inference scans),
 - `foreachBatch` reusing the exact batch operators (enrich → score →
   quarantine split) so batch and streaming share one code path — built
   once per stream, applied once per micro-batch,
@@ -28,7 +29,7 @@ import functools
 from typing import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -44,9 +45,8 @@ from aws_flight_data_pipeline_spark.config import AnomalyConfig
 from aws_flight_data_pipeline_spark.operators.anomaly import detect_anomalies_builder
 from aws_flight_data_pipeline_spark.operators.enrich import enrich_builder
 from aws_flight_data_pipeline_spark.operators.quality import now_column, score_quality_builder
-from aws_flight_data_pipeline_spark.schemas import RAW_BATCH_SCHEMA
-from aws_flight_data_pipeline_spark.sources.opensky import decode_states
-from aws_flight_data_pipeline_spark.sources.sinks import time_partitions_builder, write_quarantine_split
+from aws_flight_data_pipeline_spark.sources.opensky import decode_states, read_raw_documents
+from aws_flight_data_pipeline_spark.sources.sinks import materialized, time_partitions_builder, write_quarantine_split
 
 # The batch operators the micro-batch builders stand for stay importable from
 # this module by name.
@@ -58,15 +58,11 @@ from aws_flight_data_pipeline_spark.sources.sinks import with_time_partitions  #
 
 def stream_raw_states(spark: SparkSession, landing_path: str) -> DataFrame:
     """Streaming scan of the raw landing prefix → decoded flight records.
+    Each landed file is one whole-text row, parsed by the batch reader's
+    :func:`~aws_flight_data_pipeline_spark.sources.opensky.read_raw_documents`.
     maxFilesPerTrigger bounds micro-batch size (the 30-s poll writes one file
     per batch, so 1 file ≈ 1 reference batch)."""
-    raw = (
-        spark.readStream.schema(RAW_BATCH_SCHEMA)
-        .option("multiLine", "true")
-        .option("maxFilesPerTrigger", 8)
-        .json(landing_path)
-    )
-    return decode_states(raw)
+    return decode_states(read_raw_documents(spark.readStream.option("maxFilesPerTrigger", 8), landing_path))
 
 
 def with_event_time(records: DataFrame) -> DataFrame:
@@ -141,15 +137,18 @@ def micro_batch_pipeline(
     each micro-batch only applies the pre-built chain. ``now`` enters a
     batch as one literal column that the pre-built expressions read.
 
-    Each non-empty micro-batch runs 8 Spark jobs:
+    Each non-empty micro-batch reads and parses its landed documents once
+    and runs 7 Spark jobs:
 
-    - one aggregate, the row count and the batch's default ``now`` (2 jobs:
-      its shuffle map stage and the result); empty batches stop here;
+    - the ``localCheckpoint`` of the decoded batch (1 job), which also
+      observes the row count and the batch's default ``now``; empty batches
+      stop here;
     - the ``localCheckpoint`` of the scored batch in
       :func:`write_quarantine_split` (4 jobs: the per-aircraft window
-      shuffle, the outlier-stats shuffle and broadcast, the checkpoint);
+      shuffle, the outlier-stats shuffle and broadcast, the checkpoint),
+      computed from the decoded checkpoint;
     - the clean and the quarantine parquet writes, both read from the
-      checkpoint (1 job each).
+      scored checkpoint (1 job each).
 
     ``now_provider``: () -> unix seconds; defaults to the max last_contact in
     the batch, or its max collection_time when every last_contact is null
@@ -157,17 +156,21 @@ def micro_batch_pipeline(
     """
     chain = _etl_chain(records)
     batch_stats = (
-        F.count(F.lit(1)),
-        F.coalesce(F.max("last_contact"), F.max("collection_time")),
+        F.count(F.lit(1)).alias("rows"),
+        F.coalesce(F.max("last_contact"), F.max("collection_time")).alias("latest"),
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows, latest = batch_df.agg(*batch_stats).first()
-        if rows == 0:
-            return
-        now = now_provider() if now_provider is not None else latest
-        out = chain(batch_df.withColumn(_NOW, now_column(now)))
-        write_quarantine_split(out, clean_path, quarantine_path)
+        stats = Observation()
+        # observe directly under the checkpoint: a constant-foldable filter
+        # above an observation lets the optimizer prune it
+        with materialized(batch_df.observe(stats, *batch_stats)) as decoded:
+            observed = stats.get
+            if observed["rows"] == 0:
+                return
+            now = now_provider() if now_provider is not None else observed["latest"]
+            out = chain(decoded.withColumn(_NOW, now_column(now)))
+            write_quarantine_split(out, clean_path, quarantine_path)
 
     writer = records.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_path

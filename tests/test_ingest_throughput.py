@@ -4,10 +4,11 @@
     (reference `src/lambda/etl/README.md:164`, PyArrow chunked converter)
     hard test floor: >=100 rec/s (`tests/integration/test_performance_stress.py:384`)
 
-The engine's equivalent path is read_raw_batches (declared-schema JSON scan)
-→ decode_states (explode + positional cast) → parquet write. The assert is
-the reference's LOWER published bound (10k rec/s) — 100× its own hard test
-floor — measured end-to-end including the write, after a warm-up run.
+The engine's equivalent path is read_raw_batches (whole-document text scan
++ declared-schema from_json) → decode_states (explode + positional cast) →
+parquet write. The assert is the reference's LOWER published bound (10k
+rec/s) — 100× its own hard test floor — measured end-to-end including the
+write, after a warm-up run.
 """
 
 from __future__ import annotations

@@ -1,4 +1,5 @@
-"""Tests for the raw-source helpers: latest-batch scan and ingestion log."""
+"""Tests for the raw-source helpers: raw document reader, latest-batch scan
+and ingestion log."""
 
 from __future__ import annotations
 
@@ -8,10 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from aws_flight_data_pipeline_spark.functions.skew import salted_sum_count, with_salt
+from aws_flight_data_pipeline_spark.schemas import RAW_BATCH_SCHEMA
 from aws_flight_data_pipeline_spark.sources.opensky import (
     ingestion_log_entry,
     read_flight_records,
     read_latest_batch,
+    read_raw_batches,
 )
 
 NOW = 1693401600
@@ -35,6 +38,64 @@ def landing(tmp_path):
                 f,
             )
     return str(d)
+
+
+_GOOD = {"time": NOW, "states": [_state("abc123", "UAL1    ", -73.0, 40.0), _state("def456", None, 0.5, 51.0)]}
+
+RAW_DOCUMENTS = {
+    "good": json.dumps(_GOOD),
+    "truncated": '{"time": 169340, "states": [[[',
+    "empty": "",
+    "two_documents": json.dumps(_GOOD) + "\n" + json.dumps({"time": NOW + 30, "states": []}),
+    "no_states": json.dumps({"time": NOW}),
+    # one value per line: a reader that splits by line sees no whole document
+    "pretty_printed": json.dumps(_GOOD, indent=2),
+}
+
+
+def _multiline_json_source(spark, path):
+    return (
+        spark.read.schema(RAW_BATCH_SCHEMA)
+        .option("multiLine", "true")
+        .option("mode", "PERMISSIVE")
+        .json(path)
+    )
+
+
+def _assert_same_rows(got, want):
+    assert got.schema == want.schema
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+
+@pytest.mark.parametrize("case", sorted(RAW_DOCUMENTS))
+def test_read_raw_batches_matches_multiline_json_source(spark, tmp_path, case):
+    (tmp_path / "poll.json").write_text(RAW_DOCUMENTS[case])
+    got = read_raw_batches(spark, str(tmp_path))
+    _assert_same_rows(got, _multiline_json_source(spark, str(tmp_path)))
+    if case in ("good", "two_documents", "pretty_printed"):
+        assert [r["time"] for r in got.collect()] == [NOW]
+
+
+def test_read_raw_batches_json_lines_matches_json_source(spark, tmp_path):
+    lines = [RAW_DOCUMENTS["good"], RAW_DOCUMENTS["truncated"], "", "   ",
+             RAW_DOCUMENTS["no_states"], json.dumps({"time": NOW + 30, "states": []})]
+    (tmp_path / "polls.jsonl").write_text("\n".join(lines) + "\n")
+    got = read_raw_batches(spark, str(tmp_path), multiline=False)
+    want = spark.read.schema(RAW_BATCH_SCHEMA).option("mode", "PERMISSIVE").json(str(tmp_path))
+    _assert_same_rows(got, want)
+    # one row per non-blank line; the truncated one is all null
+    assert sorted(r["time"] for r in got.collect() if r["time"] is not None) == [NOW, NOW, NOW + 30]
+    assert got.count() == 4
+
+
+def test_read_raw_batches_keeps_partition_columns(spark, tmp_path):
+    for hour, doc in (("00", _GOOD), ("01", {"time": NOW + 3600, "states": []})):
+        d = tmp_path / "year=2023" / f"hour={hour}"
+        d.mkdir(parents=True)
+        (d / "poll.json").write_text(json.dumps(doc, indent=2))
+    got = read_raw_batches(spark, str(tmp_path))
+    assert got.columns == ["time", "states", "year", "hour"]
+    _assert_same_rows(got, _multiline_json_source(spark, str(tmp_path)))
 
 
 def test_read_latest_batch_picks_max_filename(spark, landing):

@@ -16,7 +16,11 @@ from aws_flight_data_pipeline_spark.operators.anomaly import detect_anomalies
 from aws_flight_data_pipeline_spark.operators.enrich import enrich
 from aws_flight_data_pipeline_spark.operators.quality import score_quality
 from aws_flight_data_pipeline_spark.schemas import RAW_BATCH_SCHEMA
-from aws_flight_data_pipeline_spark.sources.opensky import decode_states, read_flight_records
+from aws_flight_data_pipeline_spark.sources.opensky import (
+    decode_states,
+    read_flight_records,
+    read_raw_documents,
+)
 from aws_flight_data_pipeline_spark.sources.sinks import with_time_partitions
 from aws_flight_data_pipeline_spark.streaming.streams import (
     micro_batch_pipeline,
@@ -118,13 +122,7 @@ def test_micro_batch_pipeline_end_to_end(spark, landing, tmp_path):
 
 def _one_poll_per_batch(spark, landing):
     """stream_raw_states, but one landed poll per micro-batch."""
-    raw = (
-        spark.readStream.schema(RAW_BATCH_SCHEMA)
-        .option("multiLine", "true")
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
-    )
-    return decode_states(raw)
+    return decode_states(read_raw_documents(spark.readStream.option("maxFilesPerTrigger", 1), landing))
 
 
 def _sorted_rows(df):
@@ -212,12 +210,62 @@ def test_micro_batch_pipeline_jobs_and_files_per_batch(spark, landing, tmp_path)
     q.awaitTermination(120)
     assert q.exception() is None
     assert sum(p.numInputRows > 0 for p in q.recentProgress) == 1
+    # the landed document is read and parsed once
+    assert [p.numInputRows for p in q.recentProgress if p.numInputRows > 0] == [1]
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
-    assert 0 < len(jobs) <= 8
+    assert 0 < len(jobs) <= 7
     for path in (clean, quar):
         assert len(glob.glob(os.path.join(path, "*.parquet"))) == 1
-    # the sink's checkpoint is released with the batch
+    # the batch's checkpoints are released with the batch
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_micro_batch_pipeline_batch_without_records(spark, landing, tmp_path):
+    # a truncated document and an empty file decode to no records: the
+    # batch's observed count is 0, so it writes nothing, and its checkpoint
+    # is released
+    with open(os.path.join(landing, "b1.json"), "w") as f:
+        f.write('{"time": 169340, "states": [[[')
+    open(os.path.join(landing, "b2.json"), "w").close()
+    clean, quar, ckpt = (str(tmp_path / p) for p in ("clean", "quar", "ckpt"))
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    q = micro_batch_pipeline(stream_raw_states(spark, landing), clean, quar, ckpt)
+    finished = q.awaitTermination(120)
+    q.stop()
+    assert finished and q.exception() is None
+    # one batch, one row: the empty file holds no document
+    assert [(p.batchId, p.numInputRows) for p in q.recentProgress] == [(0, 1)]
+    assert not glob.glob(os.path.join(str(tmp_path), "*", "**", "*.parquet"), recursive=True)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_micro_batch_pipeline_resumes_json_source_checkpoint(spark, landing, tmp_path):
+    # a stream checkpoint written when the landing prefix was read with the
+    # multiLine JSON source resumes under stream_raw_states: the processed
+    # poll is not read again, the next one is
+    first = [_state("%06x" % i, "UAL123", NOW - i, -74.0 + i * 0.01, 40.7) for i in range(5)]
+    second = [_state("%06x" % (100 + i), "BAW456", NOW + 20 - i, -0.4, 51.4 + i * 0.01) for i in range(7)]
+    _write_batch(landing, "b1.json", NOW, first)
+    clean, quar, ckpt = (str(tmp_path / p) for p in ("clean", "quar", "ckpt"))
+    json_source = decode_states(
+        spark.readStream.schema(RAW_BATCH_SCHEMA)
+        .option("multiLine", "true")
+        .option("maxFilesPerTrigger", 8)
+        .json(landing)
+    )
+    q = micro_batch_pipeline(json_source, clean, quar, ckpt, now_provider=lambda: NOW + 30)
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+    _write_batch(landing, "b2.json", NOW + 30, second)
+    q = micro_batch_pipeline(
+        stream_raw_states(spark, landing), clean, quar, ckpt, now_provider=lambda: NOW + 30
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert [p.numInputRows for p in q.recentProgress if p.numInputRows > 0] == [1]
+    written = spark.read.parquet(clean).unionByName(spark.read.parquet(quar)).collect()
+    assert sorted(r.icao24 for r in written) == sorted(s[0] for s in first + second)
 
 
 @pytest.mark.slow
