@@ -98,7 +98,9 @@ def consistency_score(
     # speed/altitude ratio (airborne only): > 2 kts per 1000 ft is suspect
     airborne = og.isNotNull() & ~og
     ratio_present = airborne & alt.isNotNull() & v.isNotNull() & (alt > 0)
-    add(ratio_present, v / (alt / 1000.0) <= cfg.speed_altitude_ratio_max * 1000.0)
+    # v / (alt / 1000) <= max * 1000, multiplied out: a subnormal altitude
+    # makes alt / 1000 zero, and the division raises under ANSI mode
+    add(ratio_present, v <= cfg.speed_altitude_ratio_max * alt)
     # on_ground claimed but altitude high
     add(og.isNotNull() & og & alt.isNotNull(), alt <= 1000)
     # airborne but low and slow

@@ -948,6 +948,24 @@ def commit_stream_batch(
     return version
 
 
+def _start_foreach_batch(
+    stream: DataFrame,
+    process_batch,
+    checkpoint_path: str,
+    trigger: dict | None = None,
+):
+    """Start ``process_batch(batch_df, batch_id)`` as a foreachBatch query
+    over ``stream``, checkpointed at ``checkpoint_path``. ``trigger``
+    defaults to availableNow: drain what has landed, then stop. Every
+    foreachBatch stream in the engine starts here."""
+    return (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
+    )
+
+
 def streaming_versioned_sink(
     values: DataFrame,
     path: str,
@@ -966,11 +984,7 @@ def streaming_versioned_sink(
             return
         commit_stream_batch(batch_df, batch_id, path, stats_cols=stats_cols)
 
-    writer = values.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
+    return _start_foreach_batch(values, process_batch, checkpoint_path, trigger)
 
 
 def streaming_upsert_sink(
@@ -1027,11 +1041,7 @@ def streaming_upsert_sink(
         )
         _record_batch_ids(path, [batch_id])
 
-    writer = values.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
+    return _start_foreach_batch(values, process_batch, checkpoint_path, trigger)
 
 
 #: Above this many distinct source keys, collecting them to probe per-file

@@ -45,6 +45,7 @@ from aws_flight_data_pipeline_spark.config import AnomalyConfig
 from aws_flight_data_pipeline_spark.operators.anomaly import detect_anomalies_builder
 from aws_flight_data_pipeline_spark.operators.enrich import enrich_builder
 from aws_flight_data_pipeline_spark.operators.quality import now_column, score_quality_builder
+from aws_flight_data_pipeline_spark.sources import versioned as vt
 from aws_flight_data_pipeline_spark.sources.opensky import decode_states, read_raw_documents
 from aws_flight_data_pipeline_spark.sources.sinks import materialized, time_partitions_builder, write_quarantine_split
 
@@ -172,11 +173,7 @@ def micro_batch_pipeline(
             out = chain(decoded.withColumn(_NOW, now_column(now)))
             write_quarantine_split(out, clean_path, quarantine_path)
 
-    writer = records.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
+    return vt._start_foreach_batch(records, process_batch, checkpoint_path, trigger)
 
 
 def sliding_realtime_metrics(
@@ -649,19 +646,28 @@ def streaming_corpus_admission(
     ).select(*_ADMISSION_PUBLIC_COLS)
 
 
+def _state_head(spark: SparkSession, state_path: str) -> DataFrame | None:
+    """The head of a stream's versioned state table; None before its first
+    commit. Each micro-batch commits its state last, and a batch whose
+    state stamp is already committed is skipped whole, so a batch that
+    runs always finds the head at exactly the state before it."""
+    if vt.latest_version(state_path) is None:
+        return None
+    return vt.read(spark, state_path)
+
+
 def _fold_admission_state(
     spark: SparkSession,
     fp_index: DataFrame,
     band_buckets: DataFrame,
     state_path: str,
-    batch_id: int,
 ) -> tuple[DataFrame, DataFrame]:
-    """Fold every prior batch's admitted-doc index DELTA (versions strictly
-    ``< batch_id`` — replay-safe) into the base index: fingerprints union
+    """Fold every prior batch's admitted-doc index DELTA (the head of the
+    append-mode state table) into the base index: fingerprints union
     into ``fp_index``; band entries regroup into ``band_buckets``
     (flatten-merge of bucket arrays on the band key). Shared by the
     incremental admission tier and the unified gate."""
-    state = read_admission_state(spark, state_path, before_batch=batch_id)
+    state = _state_head(spark, state_path)
     if state is None:
         return fp_index, band_buckets
     fp_comb = fp_index.unionByName(
@@ -744,9 +750,8 @@ def streaming_corpus_admission_incremental(
     Per micro-batch (foreachBatch — the decision logic itself is the same
     pure DataFrame plan as the stateless tier):
 
-    1. read the admitted-doc index DELTAS of every prior batch (versioned
-       parquet, versions strictly ``< batch_id`` — replay-safe exactly like
-       :func:`streaming_sketch_rollup`) and fold them into the base index:
+    1. read the admitted-doc index DELTAS of every prior batch (the head
+       of the append-mode state table) and fold them into the base index:
        fingerprints union into ``fp_index``; band entries regroup into
        ``band_buckets`` (flatten-merge of bucket arrays on the band key);
     2. decide each batch doc against the COMBINED index
@@ -757,24 +762,28 @@ def streaming_corpus_admission_incremental(
        ``dedup_pipeline_end_to_end`` keep-first) shares its fingerprint or
        verifies as a near-dup through a shared LSH band. Banded self-join on
        the batch's survivors only — O(batch), never O(corpus);
-    4. write the batch's decisions to ``decisions_path/v{batch_id}`` and the
-       FINALLY-admitted docs' index rows (doc_id, fp, toks, b0, b1) as a
-       state DELTA to ``state_path/v{batch_id}`` — both overwrite their own
-       version directory, so an at-least-once replay is idempotent.
+    4. commit the batch's decisions to the ``decisions_path`` table, then
+       the FINALLY-admitted docs' index rows (doc_id, fp, toks, b0, b1) as
+       a state DELTA to the ``state_path`` table — both batch-stamped
+       appends (``versioned.commit_stream_batch``). The state commits last and a batch whose state stamp is committed
+       is skipped, so an at-least-once replay is a no-op; a replay after a
+       crash between the two commits recomputes the same decisions from
+       the same head, skips the decisions commit and lands the delta.
 
-    State size: O(admitted docs) index rows, written incrementally (each
-    version holds only its batch's delta). At 100 TB the deltas are exactly
-    the rows a compaction job folds into the materialized corpus index
-    (``corpus_admission_index``) on its own cadence — the streaming tier
-    stays append-only and never rewrites the base index.
+    Both tables read back with ``versioned.read``. State size: O(admitted
+    docs) index rows, written incrementally (each commit appends only its
+    batch's delta). At 100 TB the deltas are exactly the rows a compaction
+    job folds into the materialized corpus index (``corpus_admission_index``)
+    on its own cadence — the streaming tier stays append-only and never
+    rewrites the base index.
     """
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        if batch_id in vt._batch_versions(state_path) or batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         fp_comb, buckets_comb = _fold_admission_state(
-            spark, fp_index, band_buckets, state_path, batch_id
+            spark, fp_index, band_buckets, state_path
         )
         decided = _admission_decide(
             _admission_enrich(batch_df), fp_comb, buckets_comb
@@ -791,50 +800,22 @@ def streaming_corpus_admission_incremental(
             "admitted",
             F.col("admitted") & ~F.coalesce("intra_batch_dup", F.lit(False)),
         )
-        final.select(
-            *_ADMISSION_PUBLIC_COLS, F.lit(batch_id).alias("batch_id")
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{decisions_path}/v{batch_id:09d}"
+        vt.commit_stream_batch(
+            final.select(
+                *_ADMISSION_PUBLIC_COLS, F.lit(batch_id).alias("batch_id")
+            ).coalesce(1),
+            batch_id,
+            decisions_path,
         )
-        import os as _os
-
-        _os.makedirs(state_path, exist_ok=True)
-        with open(f"{state_path}/{DELTA_LAYOUT_MARKER}", "w") as fh:
-            fh.write("delta")  # versions are DELTAS — never prune (see prune_state_versions)
-        final.where("admitted").select(
-            "doc_id", "fp", "toks", "b0", "b1"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_path}/v{batch_id:09d}"
+        vt.commit_stream_batch(
+            final.where("admitted")
+            .select("doc_id", "fp", "toks", "b0", "b1")
+            .coalesce(1),
+            batch_id,
+            state_path,
         )
 
-    writer = docs.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
-
-
-def read_admission_state(
-    spark: SparkSession, state_path: str, before_batch: int | None = None
-) -> DataFrame | None:
-    """Union of ALL admitted-doc index deltas with version strictly below
-    ``before_batch`` (every delta matters, unlike the sketch state where the
-    latest version is cumulative). None before the first admitting batch."""
-    import os
-
-    if not os.path.isdir(state_path):
-        return None
-    versions = sorted(v for v in os.listdir(state_path) if v.startswith("v"))
-    if before_batch is not None:
-        versions = [v for v in versions if int(v[1:]) < before_batch]
-    if not versions:
-        return None
-    return spark.read.parquet(*(f"{state_path}/{v}" for v in versions))
-
-
-def read_admission_decisions(spark: SparkSession, decisions_path: str) -> DataFrame:
-    """Every batch's admission decisions (versioned directories unioned)."""
-    return read_admission_state(spark, decisions_path)
+    return vt._start_foreach_batch(docs, process_batch, checkpoint_path, trigger)
 
 
 def streaming_sketch_rollup(
@@ -845,9 +826,9 @@ def streaming_sketch_rollup(
     trigger: dict | None = None,
 ):
     """Incremental distinct-document accounting over a stream: mergeable
-    HyperLogLog sketches maintained in a tiny versioned state table — the
-    streaming twin of the batch ``sketch_distinct_rollup``
-    (plans/sketch_queries.py).
+    HyperLogLog sketches maintained in a tiny versioned state table
+    (sources/versioned.py) — the streaming twin of the batch
+    ``sketch_distinct_rollup`` (plans/sketch_queries.py).
 
     THE 100 TB streaming pattern: COUNT(DISTINCT) over an unbounded stream
     either retains every key seen (state O(distinct keys) — the thing that
@@ -860,71 +841,40 @@ def streaming_sketch_rollup(
 
     Each micro-batch: (1) aggregate the batch into one (source, sketch,
     n_rows) row per source via ``hll_sketch_agg`` over the normalized-content
-    fingerprint; (2) union with the previous state VERSION and re-aggregate
-    with ``hll_union_agg``; (3) write state version ``v{batch_id}`` — a new
-    directory per batch, so the read side never races an overwrite of the
-    files it is lazily reading, and past versions give sketch time-travel
-    for free. State size: one ~4 KB binary per source per version, never
-    corpus rows.
+    fingerprint; (2) union with the state table's head and re-aggregate
+    with ``hll_union_agg``; (3) commit the merged state as one batch-stamped
+    overwrite (``versioned.commit_stream_batch``). Data files are
+    immutable, so the lazy read of the head never races the commit, and
+    past versions give sketch time-travel (``versioned.read(...,
+    version=)``) for free. Exactly-once: a batch whose stamp is already in
+    the state table is skipped whole (HLL max-merge is idempotent, but
+    n_rows sums and CMS table addition are not), and any other batch reads
+    a head that is exactly the state before it — a crash mid-write leaves
+    only unreferenced files, never an unreadable state. State size: one
+    ~4 KB binary per source per version, never corpus rows.
     """
     from aws_flight_data_pipeline_spark.functions.text import fingerprint
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        if batch_id in vt._batch_versions(state_path) or batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         batch_state = batch_df.groupBy("source").agg(
             F.hll_sketch_agg(fingerprint(F.col("text")), F.lit(lgk)).alias("sk"),
             F.count("*").alias("n_rows"),
         )
-        prev = read_sketch_state(spark, state_path, before_batch=batch_id)
+        prev = _state_head(spark, state_path)
         if prev is not None:
             batch_state = batch_state.unionByName(prev)
         merged = batch_state.groupBy("source").agg(
             F.hll_union_agg("sk", F.lit(False)).alias("sk"),
             F.sum("n_rows").cast("bigint").alias("n_rows"),
         )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_path}/v{batch_id:09d}"
+        vt.commit_stream_batch(
+            merged.coalesce(1), batch_id, state_path, mode="overwrite"
         )
 
-    writer = docs.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
-
-
-def read_sketch_state(
-    spark: SparkSession, state_path: str, before_batch: int | None = None
-) -> DataFrame | None:
-    """Latest HLL state version under ``state_path`` (None before batch 0).
-
-    ``before_batch`` restricts discovery to versions with index STRICTLY
-    below it. foreachBatch is at-least-once: on a crash between writing
-    ``v{batch_id}`` and the checkpoint commit, the batch REPLAYS — and a
-    naive "latest version" read would hand the replay a state that already
-    contains this batch, double-merging it (HLL max-merge is idempotent,
-    but n_rows sums and CMS table addition are not). Reading only versions
-    ``< batch_id`` and overwriting ``v{batch_id}`` makes the per-batch
-    merge a pure function of (prior state, batch input) — replay-safe.
-
-    Version discovery is a driver-side directory listing — fine for a state
-    table of a few KB per version. On a cluster with object storage, swap
-    the ``os`` calls for the Hadoop FileSystem API (or keep the latest
-    version pointer in a catalog/manifest); the versioned-directory contract
-    itself is storage-agnostic.
-    """
-    import os
-
-    if not os.path.isdir(state_path):
-        return None
-    versions = sorted(v for v in os.listdir(state_path) if v.startswith("v"))
-    if before_batch is not None:
-        versions = [v for v in versions if int(v[1:]) < before_batch]
-    if not versions:
-        return None
-    return spark.read.parquet(f"{state_path}/{versions[-1]}")
+    return vt._start_foreach_batch(docs, process_batch, checkpoint_path, trigger)
 
 
 def sketch_rollup_estimate(state: DataFrame) -> DataFrame:
@@ -976,14 +926,15 @@ def streaming_heavy_hitters(
     (functions/sketches.py) over a ~KB sketch — no ``spark._jvm``.
 
     State: ONE row per version — (sketch bytes, total tokens, candidate
-    structs) — versioned directories like :func:`streaming_sketch_rollup`.
+    structs) — committed and replay-guarded like
+    :func:`streaming_sketch_rollup`; read it with ``versioned.read``.
     """
     from aws_flight_data_pipeline_spark.functions.sketches import (
         CountMinSketchReader,
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        if batch_id in vt._batch_versions(state_path) or batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         tok = batch_df.select(F.explode(F.split("text", " ")).alias("token"))
@@ -1003,7 +954,7 @@ def streaming_heavy_hitters(
         ]
         reader = CountMinSketchReader(bytes(agg["cms"]))
 
-        prev = read_heavy_hitter_state(spark, state_path, before_batch=batch_id)
+        prev = _state_head(spark, state_path)
         cand_set = set(batch_cands)
         if prev is not None:
             row = prev.first()
@@ -1021,27 +972,16 @@ def streaming_heavy_hitters(
                 [(t, est) for est, t in scored],
             )
         ]
-        spark.createDataFrame(
+        state = spark.createDataFrame(
             state_row,
             "cms binary, total_tokens long, "
             "cands array<struct<token:string,cms_est:long>>",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_path}/v{batch_id:09d}"
+        )
+        vt.commit_stream_batch(
+            state.coalesce(1), batch_id, state_path, mode="overwrite"
         )
 
-    writer = docs.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
-
-
-def read_heavy_hitter_state(
-    spark: SparkSession, state_path: str, before_batch: int | None = None
-) -> DataFrame | None:
-    """Latest heavy-hitter state version (None before batch 0); replay-safe
-    via ``before_batch`` exactly like :func:`read_sketch_state`."""
-    return read_sketch_state(spark, state_path, before_batch=before_batch)
+    return vt._start_foreach_batch(docs, process_batch, checkpoint_path, trigger)
 
 
 def heavy_hitter_snapshot(state: DataFrame, k: int = 20) -> DataFrame:
@@ -1080,10 +1020,10 @@ def streaming_quantile_rollup(
     ``values`` is a streaming frame with columns (scope string, x double).
     Each micro-batch: (1) log-bin the batch into integer (scope, bucket,
     count) rows (functions/quantiles.py — the IDENTICAL geometry the batch
-    profile uses); (2) union with the previous state version and merge by
-    bucket-wise integer addition; (3) write version ``v{batch_id}``
-    (replay-safe ``< batch_id`` reads, same contract as
-    :func:`read_sketch_state`).
+    profile uses); (2) union with the state table's head and merge by
+    bucket-wise integer addition; (3) commit the merged state as one
+    batch-stamped overwrite (exactly-once, same contract as
+    :func:`streaming_sketch_rollup`; read it with ``versioned.read``).
 
     Integer addition is associative and commutative, so the stream's state
     after N micro-batches is EXACTLY equal — not approximately, not
@@ -1096,29 +1036,16 @@ def streaming_quantile_rollup(
     from aws_flight_data_pipeline_spark.functions.quantiles import dd_histogram, dd_merge
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        if batch_id in vt._batch_versions(state_path) or batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         hist = dd_histogram(batch_df, "scope", "x", alpha)
-        prev = read_quantile_state(spark, state_path, before_batch=batch_id)
+        prev = _state_head(batch_df.sparkSession, state_path)
         merged = hist if prev is None else dd_merge(hist, prev)
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_path}/v{batch_id:09d}"
+        vt.commit_stream_batch(
+            merged.coalesce(1), batch_id, state_path, mode="overwrite"
         )
 
-    writer = values.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
-
-
-def read_quantile_state(
-    spark: SparkSession, state_path: str, before_batch: int | None = None
-) -> DataFrame | None:
-    """Latest quantile state version (None before batch 0); replay-safe via
-    ``before_batch`` exactly like :func:`read_sketch_state`."""
-    return read_sketch_state(spark, state_path, before_batch=before_batch)
+    return vt._start_foreach_batch(values, process_batch, checkpoint_path, trigger)
 
 
 def quantile_rollup_snapshot(state: DataFrame, alpha: float = 0.01) -> DataFrame:
@@ -1170,7 +1097,6 @@ def streaming_scd2_dimension(
         runs_to_intervals,
         state_runs,
     )
-    from aws_flight_data_pipeline_spark.sources import versioned as vt
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1209,11 +1135,7 @@ def streaming_scd2_dimension(
             new_dim = carried.unionByName(rebuilt.select(*carried.columns))
         vt.commit_stream_batch(new_dim, batch_id, dim_path, mode="overwrite")
 
-    writer = events.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
+    return vt._start_foreach_batch(events, process_batch, checkpoint_path, trigger)
 
 
 _SCD2_OOO_OUTPUT_SCHEMA = "user_id long, state string, from_us long, to_us long"
@@ -1301,44 +1223,6 @@ def streaming_scd2_ooo(events: DataFrame, delay: str = "10 minutes") -> DataFram
     )
 
 
-DELTA_LAYOUT_MARKER = "_DELTA_LAYOUT"
-
-
-def prune_state_versions(state_path: str, keep_last: int = 8) -> dict:
-    """Retention for the SELF-CONTAINED versioned streaming state dirs
-    (sketch / heavy-hitter / quantile): drop all but the newest
-    ``keep_last`` version directories. Each version is a complete merged
-    state (not a delta), so pruning history can never change what
-    ``read_*_state`` returns for any surviving ``before_batch`` — the
-    replay guard only ever needs versions newer than the checkpoint's
-    committed batch, and ``keep_last`` bounds how far back a recovery can
-    reach (match it to the checkpoint retention).
-
-    Delta-layout state (the admission index, whose versions are
-    increments a reader unions) is MECHANICALLY excluded: its writer
-    stamps a ``_DELTA_LAYOUT`` marker and this function raises on it —
-    the docstring is not the safety mechanism. Its compaction path is
-    folding deltas into the materialized corpus index instead (see
-    streaming_corpus_admission_incremental).
-    """
-    import os
-    import shutil
-
-    if not os.path.isdir(state_path):
-        return {"versions_dropped": 0, "versions_kept": 0}
-    if os.path.exists(os.path.join(state_path, DELTA_LAYOUT_MARKER)):
-        raise ValueError(
-            f"{state_path} holds DELTA-layout state (marker {DELTA_LAYOUT_MARKER}): "
-            "versions are increments, pruning would silently corrupt reads; "
-            "compact deltas into the materialized index instead"
-        )
-    versions = sorted(v for v in os.listdir(state_path) if v.startswith("v"))
-    drop = versions[:-keep_last] if keep_last > 0 else versions
-    for v in drop:
-        shutil.rmtree(os.path.join(state_path, v))
-    return {"versions_dropped": len(drop), "versions_kept": len(versions) - len(drop)}
-
-
 def streaming_decontam_gate(
     docs: DataFrame,
     eval_index_path: str,
@@ -1372,9 +1256,6 @@ def streaming_decontam_gate(
     from aws_flight_data_pipeline_spark.plans.curation_queries import (
         decontam_increment,
     )
-    from aws_flight_data_pipeline_spark.sources.versioned import (
-        commit_stream_batch,
-    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1397,11 +1278,11 @@ def streaming_decontam_gate(
                 "jac_ppm",
             )
         )
-        commit_stream_batch(decisions, batch_id, decisions_path)
+        vt.commit_stream_batch(decisions, batch_id, decisions_path)
         clean = batch_df.join(
             hits.select("doc_id"), "doc_id", "left_anti"
         )
-        commit_stream_batch(clean, batch_id, corpus_path)
+        vt.commit_stream_batch(clean, batch_id, corpus_path)
         # decontam_increment tracked_cache's its eval-postings and batch
         # token frames; the batch registry's _self_cleaning release never
         # runs on the streaming path, so without this a long-lived stream
@@ -1410,11 +1291,7 @@ def streaming_decontam_gate(
         # caches, so releasing here is safe.
         release_tracked()
 
-    writer = docs.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
+    return vt._start_foreach_batch(docs, process_batch, checkpoint_path, trigger)
 
 
 def unified_admission_decisions(
@@ -1570,13 +1447,14 @@ def streaming_unified_admission_gate(
     Per micro-batch: fold the admitted-doc index deltas of prior batches
     into the base near-dup index (:func:`_fold_admission_state`), run
     :func:`unified_admission_decisions` (the one shared decision plan),
-    then exactly TWO versioned commits — the full decisions frame to
-    ``decisions_path`` and the admitted documents (original columns) to
-    ``corpus_path`` — plus the admitted docs' index rows as the state
-    delta for the next batch. Exactly-once on both tables via
-    ``commit_stream_batch`` (batch-stamped manifests; replays no-op), and
-    the state delta overwrites its own version directory, so at-least-once
-    delivery is idempotent end to end.
+    then three batch-stamped ``commit_stream_batch`` appends in order —
+    the full decisions frame to ``decisions_path``, the admitted documents
+    (original columns) to ``corpus_path``, and LAST the admitted docs'
+    index rows as the state delta for the next batch. A batch whose state
+    stamp is committed is skipped whole; a replay after a crash between
+    commits reads the same state head, recomputes the same decisions,
+    skips the commits that landed and lands the rest — at-least-once
+    delivery is exactly-once on all three tables.
 
     Stream == batch is pinned in tests over a mixed fixture (duplicate +
     contaminated + low-quality + clean docs): the decisions from N
@@ -1584,20 +1462,18 @@ def streaming_unified_admission_gate(
     documents in one pass, and each table takes exactly one commit per
     non-empty batch.
     """
-    from aws_flight_data_pipeline_spark.functions.caching import release_tracked
-    from aws_flight_data_pipeline_spark.sources.versioned import (
-        commit_stream_batch,
+    from aws_flight_data_pipeline_spark.functions.caching import (
+        release_tracked,
+        tracked_cache,
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        if batch_id in vt._batch_versions(state_path) or batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         fp_comb, buckets_comb = _fold_admission_state(
-            spark, fp_index, band_buckets, state_path, batch_id
+            spark, fp_index, band_buckets, state_path
         )
-        from aws_flight_data_pipeline_spark.functions.caching import tracked_cache
-
         # three consumers share this plan (decisions commit, corpus commit,
         # state delta) — cache it or every micro-batch pays the quality
         # gate + eval probe + banded election three times; released by the
@@ -1610,31 +1486,23 @@ def streaming_unified_admission_gate(
             .transform(tracked_cache)
         )
 
-        admitted_ids = decisions.where("admitted").select("doc_id")
-        commit_stream_batch(decisions, batch_id, decisions_path)
-        commit_stream_batch(
-            batch_df.join(admitted_ids, "doc_id"), batch_id, corpus_path
+        admitted = batch_df.join(
+            decisions.where("admitted").select("doc_id"), "doc_id"
         )
-
-        import os as _os
-
-        _os.makedirs(state_path, exist_ok=True)
-        with open(f"{state_path}/{DELTA_LAYOUT_MARKER}", "w") as fh:
-            fh.write("delta")  # versions are DELTAS — never prune
-        _admission_enrich(batch_df.join(admitted_ids, "doc_id")).select(
-            "doc_id", "fp", "toks", "b0", "b1"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_path}/v{batch_id:09d}"
+        vt.commit_stream_batch(decisions, batch_id, decisions_path)
+        vt.commit_stream_batch(admitted, batch_id, corpus_path)
+        vt.commit_stream_batch(
+            _admission_enrich(admitted)
+            .select("doc_id", "fp", "toks", "b0", "b1")
+            .coalesce(1),
+            batch_id,
+            state_path,
         )
         # same cache discipline as streaming_decontam_gate: the probe
         # tracked_cache's frames with no batch-registry release point
         release_tracked()
 
-    writer = docs.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
+    return vt._start_foreach_batch(docs, process_batch, checkpoint_path, trigger)
 
 
 def unified_admission_batch(

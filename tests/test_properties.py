@@ -12,7 +12,7 @@ import math
 
 import numpy as np
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -68,14 +68,25 @@ RECORD_DDL = (
     "longitude double, baro_altitude_ft double, velocity_knots double, "
     "vertical_rate_fpm double, on_ground boolean, last_contact long, time_position long"
 )
+RECORD_DDL_FIELDS = [f.split(" ")[0] for f in RECORD_DDL.split(", ")]
 
 
 @SLOW
 @given(st.lists(record, min_size=1, max_size=25))
+# an airborne fix at a subnormal altitude: alt / 1000 underflows to zero
+@example(
+    records=[
+        {
+            **dict.fromkeys(RECORD_DDL_FIELDS),
+            "baro_altitude_ft": 5e-324,
+            "velocity_knots": 0.0,
+            "on_ground": False,
+        }
+    ]
+)
 def test_quality_scores_always_bounded(spark, records):
-    fields = [f.split(" ")[0] for f in RECORD_DDL.split(", ")]
     df = spark.createDataFrame(
-        [tuple(r[k] for k in fields) for r in records], schema=RECORD_DDL
+        [tuple(r[k] for k in RECORD_DDL_FIELDS) for r in records], schema=RECORD_DDL
     )
     scored = score_quality(df, 1_700_000_000)
     rows = scored.select(

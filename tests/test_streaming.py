@@ -556,8 +556,8 @@ def test_streaming_sketch_rollup_matches_batch_sketch(spark, tmp_path):
     sketch over the concatenated input — and land within the 5% contract of
     the exact distinct count."""
     from aws_flight_data_pipeline_spark.functions.text import fingerprint
+    from aws_flight_data_pipeline_spark.sources import versioned as vt
     from aws_flight_data_pipeline_spark.streaming.streams import (
-        read_sketch_state,
         sketch_rollup_estimate,
         stream_documents,
         streaming_sketch_rollup,
@@ -579,8 +579,7 @@ def test_streaming_sketch_rollup_matches_batch_sketch(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    final = read_sketch_state(spark, state)
-    assert final is not None
+    final = vt.read(spark, state)
     est = {
         r["scope"]: (r["n_rows"], r["distinct_est"])
         for r in sketch_rollup_estimate(final).collect()
@@ -605,10 +604,69 @@ def test_streaming_sketch_rollup_matches_batch_sketch(spark, tmp_path):
     assert abs(g_est - g_exact) <= 0.05 * g_exact
 
     # one state version per non-empty micro-batch, each a tiny file set
-    import os
+    assert len(vt._batch_versions(state)) == 3
 
-    versions = [v for v in os.listdir(state) if v.startswith("v")]
-    assert len(versions) == 3
+
+def test_sketch_rollup_replay_of_committed_batch_is_skipped(spark, sf_dir, tmp_path):
+    """A crash after the state commit but before the offset commit replays
+    the batch on restart; the replay must be skipped, so the state keeps
+    its bytes, ``n_rows`` is not doubled and the estimates stay the batch
+    sketch's, bit for bit."""
+    from aws_flight_data_pipeline_spark.functions.text import fingerprint
+    from aws_flight_data_pipeline_spark.sources import versioned as vt
+    from aws_flight_data_pipeline_spark.streaming.streams import (
+        stream_documents,
+        streaming_sketch_rollup,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    src, state, ckpt = (str(tmp_path / d) for d in ("incoming", "state", "ckpt"))
+    for i in range(3):
+        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    def run():
+        q = streaming_sketch_rollup(
+            stream_documents(spark, src, max_files_per_trigger=1), state, ckpt
+        )
+        q.awaitTermination(120)
+        return q
+
+    def state_rows():
+        return {
+            r["source"]: (r["n_rows"], bytes(r["sk"]), r["est"])
+            for r in vt.read(spark, state)
+            .withColumn("est", F.hll_sketch_estimate("sk"))
+            .collect()
+        }
+
+    run()
+    head, before = vt.latest_version(state), state_rows()
+    for f in ("2", ".2.crc"):  # the offset commit and its checksum
+        os.remove(os.path.join(ckpt, "commits", f))
+    q = run()
+    # batch 2 ran again, was skipped before it read a row, and committed
+    # nothing new
+    assert [(p["batchId"], p["numInputRows"]) for p in q.recentProgress] == [(2, 0)]
+    assert os.path.exists(os.path.join(ckpt, "commits", "2"))
+    assert vt.latest_version(state) == head
+    assert vt._batch_versions(state) == {0, 1, 2}
+    after = state_rows()
+    assert after == before
+
+    batch = {
+        r["source"]: (r["n"], r["est"])
+        for r in docs.groupBy("source")
+        .agg(
+            F.count("*").alias("n"),
+            F.hll_sketch_estimate(
+                F.hll_sketch_agg(fingerprint(F.col("text")), F.lit(12))
+            ).alias("est"),
+        )
+        .collect()
+    }
+    assert {s: (n, est) for s, (n, _, est) in after.items()} == batch
 
 
 @pytest.mark.slow
@@ -619,7 +677,6 @@ def test_streaming_heavy_hitters_matches_batch_sketch(spark, tmp_path):
     estimates inside the eps bound."""
     from aws_flight_data_pipeline_spark.streaming.streams import (
         heavy_hitter_snapshot,
-        read_heavy_hitter_state,
         stream_documents,
         streaming_heavy_hitters,
     )
@@ -639,8 +696,9 @@ def test_streaming_heavy_hitters_matches_batch_sketch(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    final = read_heavy_hitter_state(spark, state)
-    assert final is not None
+    from aws_flight_data_pipeline_spark.sources import versioned as vt
+
+    final = vt.read(spark, state)
     row = final.first()
 
     tok = docs.select(F.explode(F.split("text", " ")).alias("token"))

@@ -4,8 +4,8 @@ The stateless tier (`streaming_corpus_admission`) decides against a frozen
 corpus index, so a near-dup pair split across two micro-batches is admitted
 TWICE — the exact gap this suite pins, then proves closed by
 `streaming_corpus_admission_incremental`: batch N's admitted docs fold into
-the index (versioned parquet deltas, replay-safe `< batch_id` reads) and
-reject their near/exact dups in batch N+1.
+the index (batch-stamped appends to a versioned state table, read at its
+head) and reject their near/exact dups in batch N+1.
 
 Ground truth is by construction (no re-derivation through the same code):
 the planted texts' band collisions are deterministic (fixed hash family) and
@@ -21,10 +21,9 @@ import time
 
 from pyspark.sql import functions as F
 
+from aws_flight_data_pipeline_spark.sources import versioned as vt
 from aws_flight_data_pipeline_spark.streaming.streams import (
     corpus_admission_index,
-    read_admission_decisions,
-    read_admission_state,
     stream_documents,
     streaming_corpus_admission,
     streaming_corpus_admission_incremental,
@@ -118,7 +117,7 @@ def test_incremental_index_rejects_cross_batch_dups(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    out = read_admission_decisions(spark, decisions)
+    out = vt.read(spark, decisions)
     got = _decisions(out)
     batch_of = {r["doc_id"]: r["batch_id"] for r in out.collect()}
 
@@ -133,7 +132,7 @@ def test_incremental_index_rejects_cross_batch_dups(spark, tmp_path):
     assert got[203] == (False, False, True, [])
 
     # the state deltas hold exactly the admitted docs' index rows
-    st = read_admission_state(spark, state)
+    st = vt.read(spark, state)
     assert sorted(r["doc_id"] for r in st.select("doc_id").collect()) == [101, 203]
 
 
@@ -158,9 +157,64 @@ def test_incremental_intra_batch_keep_first(spark, tmp_path):
         str(tmp_path / "adm_decisions"),
     )
     q.awaitTermination(120)
-    got = _decisions(read_admission_decisions(spark, str(tmp_path / "adm_decisions")))
+    got = _decisions(vt.read(spark, str(tmp_path / "adm_decisions")))
     assert got[301][2] is True
     assert got[302][2] is False and got[303][2] is False
+
+
+def _run_incremental(spark, tmp_path):
+    """Both planted batches through the incremental tier; returns the
+    (state, decisions, checkpoint) paths. Rerunning it restarts the stream
+    from its checkpoint."""
+    state, decisions, ckpt = (
+        str(tmp_path / d) for d in ("adm_state", "adm_decisions", "ckpt")
+    )
+    corpus = _corpus(spark)
+    fp_index, band_buckets = corpus_admission_index(corpus)
+    q = streaming_corpus_admission_incremental(
+        stream_documents(spark, str(tmp_path / "incoming"), max_files_per_trigger=1),
+        fp_index,
+        band_buckets,
+        state,
+        ckpt,
+        decisions,
+    )
+    q.awaitTermination(120)
+    return state, decisions, ckpt
+
+
+def test_incremental_replay_of_committed_batch_is_skipped(spark, tmp_path):
+    """A crash after batch 1's commits but before its offset commit replays
+    the batch on restart: the replay is skipped, so every admitted doc keeps
+    exactly one index delta row and every doc one decision row."""
+    _write_batches(spark, str(tmp_path / "incoming"))
+    state, decisions, ckpt = _run_incremental(spark, tmp_path)
+    heads = vt.latest_version(state), vt.latest_version(decisions)
+    for f in ("1", ".1.crc"):  # the offset commit and its checksum
+        os.remove(os.path.join(ckpt, "commits", f))
+    _run_incremental(spark, tmp_path)
+
+    assert os.path.exists(os.path.join(ckpt, "commits", "1"))
+    assert (vt.latest_version(state), vt.latest_version(decisions)) == heads
+    deltas = [r["doc_id"] for r in vt.read(spark, state).collect()]
+    assert sorted(deltas) == [101, 203]
+    ids = [r["doc_id"] for r in vt.read(spark, decisions).collect()]
+    assert sorted(ids) == [101, 102, 201, 202, 203]
+
+
+def test_vacuum_keeps_admission_delta_state_reads_identical(spark, tmp_path):
+    """The admission state is an append table of per-batch DELTAS. Vacuum
+    retention drops old manifests, but the head manifest lists every live
+    delta file, so no delta is deleted and the folded state reads the
+    same."""
+    _write_batches(spark, str(tmp_path / "incoming"))
+    state, _, _ = _run_incremental(spark, tmp_path)
+    before = sorted(map(tuple, vt.read(spark, state).collect()))
+
+    stats = vt.vacuum(state, keep_last=1, min_age_seconds=0)
+    assert stats == {"versions_dropped": 1, "files_deleted": 0}
+    assert sorted(map(tuple, vt.read(spark, state).collect())) == before
+    assert vt._batch_versions(state) == {0, 1}
 
 
 def _frozen_snapshot(spark, ipath):

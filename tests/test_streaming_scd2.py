@@ -181,21 +181,3 @@ def test_ooo_state_survives_delimiter_heavy_event_types(spark, tmp_path):
         ).collect()
     ]
     assert rows == [("a;b:c",)]
-
-
-def test_prune_refuses_delta_layout_state(tmp_path):
-    import os
-
-    from aws_flight_data_pipeline_spark.streaming.streams import (
-        DELTA_LAYOUT_MARKER,
-        prune_state_versions,
-    )
-
-    state = str(tmp_path / "adm_state")
-    os.makedirs(f"{state}/v000000000")
-    open(f"{state}/{DELTA_LAYOUT_MARKER}", "w").write("delta")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="DELTA-layout"):
-        prune_state_versions(state, keep_last=1)
-    assert os.path.isdir(f"{state}/v000000000")  # nothing was touched

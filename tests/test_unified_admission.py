@@ -167,6 +167,72 @@ def test_unified_gate_stream_equals_batch_one_commit_per_table(spark, tmp_path):
     assert batch_dec == {d: _decision_key(dec[d]) for d in dec}
 
 
+def _table_rows(spark, path) -> list[tuple]:
+    return sorted(map(tuple, vt.read(spark, path).collect()))
+
+
+def _run_gate(spark, root, ipath: str) -> dict:
+    """The fixture's two batches through the unified gate under ``root``
+    (rerunning restarts from the checkpoint); returns the table paths."""
+    paths = {t: str(root / t) for t in ("corpus", "decisions", "state")}
+    fp_index, band_buckets = _base_index(spark)
+    q = streaming_unified_admission_gate(
+        stream_documents(spark, str(root / "incoming"), max_files_per_trigger=1),
+        ipath,
+        fp_index,
+        band_buckets,
+        paths["state"],
+        str(root / "ckpt"),
+        paths["corpus"],
+        paths["decisions"],
+    )
+    q.awaitTermination(180)
+    return paths
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_gate(spark, tmp_path_factory) -> tuple[str, dict]:
+    """The eval index path, and the rows of the three tables after an
+    uninterrupted two-batch run against it."""
+    root = tmp_path_factory.mktemp("uninterrupted")
+    ipath = _eval_index(spark, root)
+    _write_batches(spark, str(root / "incoming"))
+    paths = _run_gate(spark, root, ipath)
+    return ipath, {t: _table_rows(spark, p) for t, p in paths.items()}
+
+
+@pytest.mark.parametrize("crash_after", ["decisions", "corpus"])
+def test_unified_gate_restart_after_crash_between_commits(
+    spark, tmp_path, monkeypatch, uninterrupted_gate, crash_after
+):
+    """Batch 1 crashes right after its ``crash_after`` commit, before the
+    state delta and the offset commit. The restart replays batch 1 against
+    the same state head, skips the commits that landed and lands the
+    rest: decisions, corpus and state equal the uninterrupted run."""
+    ipath, want = uninterrupted_gate
+    _write_batches(spark, str(tmp_path / "incoming"))
+    crash_path = str(tmp_path / crash_after)
+    commit = vt.commit_stream_batch
+
+    def crashing_commit(df, batch_id, path, *args, **kwargs):
+        version = commit(df, batch_id, path, *args, **kwargs)
+        if batch_id == 1 and path == crash_path:
+            raise RuntimeError(f"injected crash after the {crash_after} commit")
+        return version
+
+    monkeypatch.setattr(vt, "commit_stream_batch", crashing_commit)
+    with pytest.raises(Exception, match="injected crash"):
+        _run_gate(spark, tmp_path, ipath)
+    monkeypatch.undo()
+    assert vt._batch_versions(crash_path) == {0, 1}
+    assert vt._batch_versions(str(tmp_path / "state")) == {0}
+
+    paths = _run_gate(spark, tmp_path, ipath)
+    for t, p in paths.items():
+        assert vt._batch_versions(p) == {0, 1}, t
+        assert _table_rows(spark, p) == want[t], t
+
+
 @pytest.mark.slow
 def test_unified_gate_soak_bounded_state_flat_latency(spark, tmp_path):
     """Verdict-r10 #7: a 50-micro-batch soak over the unified gate. The
