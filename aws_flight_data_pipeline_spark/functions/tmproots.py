@@ -43,7 +43,7 @@ def clone_tree(src: str, dst: str) -> None:
     hard-linking each file and copying it where a link fails.
 
     Linking is safe for versioned state: a data file is never changed in
-    place (commits write NEW txn files; ``_head``/``_batches`` are replaced
+    place (commits write NEW txn files; the ``_head`` hint is replaced
     atomically, which breaks the link), so the clone cannot alter ``src``,
     and only metadata is copied."""
     shutil.copytree(src, dst, dirs_exist_ok=True, copy_function=_link_or_copy)

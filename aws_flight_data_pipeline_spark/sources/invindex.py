@@ -20,7 +20,10 @@ INCREMENTALLY from the documents table's change feed, never rebuilt:
   query-time stats cost ZERO scans;
 - every refresh is ONE atomic manifest publication carrying the new posting
   files, the appended tombstone file, the updated running stats, and the
-  cursor — a crashed refresh left nothing visible and replays exactly-once.
+  cursor — a crashed refresh left nothing visible and replays exactly-once;
+  later commits on the index (compaction, OPTIMIZE, rollback) carry the
+  cursor and stats of the snapshot they publish, so the state is always
+  the head manifest's.
 
 The index table itself is committed clustered by token
 (``repartitionByRange('tok')``) with per-file token range stats and blooms,
@@ -39,8 +42,9 @@ import os
 
 from aws_flight_data_pipeline_spark.functions.text import tokens, word_count
 from aws_flight_data_pipeline_spark.sources.versioned import (
+    _head_manifest,
     _publish_version,
-    _read_manifest,
+    _rewrite_cols,
     _scan,
     _stage,
     commit,
@@ -85,24 +89,19 @@ def _postings(docs: DataFrame, gen: int, tokenizer=None) -> DataFrame:
 
 
 def index_state(index_path: str) -> dict | None:
-    """Newest refresh stamp: ``{cursor, n_docs, sum_dl}`` from the most
-    recent manifest carrying ``source_version`` (walked newest-first over
-    the KB-scale commit log; maintenance commits like OPTIMIZE are
-    skipped). None = never refreshed."""
-    v = latest_version(index_path)
-    while v is not None and v >= 0:
-        try:
-            m = _read_manifest(index_path, v)
-        except FileNotFoundError:
-            return None
-        if m.get("source_version") is not None:
-            return {
-                "cursor": int(m["source_version"]),
-                "n_docs": int(m["index_n_docs"]),
-                "sum_dl": int(m["index_sum_dl"]),
-            }
-        v -= 1
-    return None
+    """The index's refresh state, ``{cursor, n_docs, sum_dl}``, from the
+    head manifest. None = never refreshed."""
+    return _state_of(_head_manifest(index_path))
+
+
+def _state_of(m: dict | None) -> dict | None:
+    if m is None or m.get("source_version") is None:
+        return None
+    return {
+        "cursor": int(m["source_version"]),
+        "n_docs": int(m["index_n_docs"]),
+        "sum_dl": int(m["index_sum_dl"]),
+    }
 
 
 def refresh_index(
@@ -216,7 +215,7 @@ def refresh_index(
         # stage postings and tombstones under one version as two FLAT txn
         # dirs (vacuum's sweep and referenced-set arithmetic work at
         # txn-dir grain with top-level parquet files), publish ONCE
-        m = _read_manifest(index_path, latest_version(index_path))
+        m = _head_manifest(index_path)
         new_v = m["version"] + 1
 
         post = None
@@ -317,13 +316,12 @@ def bm25_topk_from_index(
     same contract as the scan-side ``text_bm25_topk``."""
     if not terms:
         raise ValueError("bm25_topk_from_index requires at least one term")
-    state = index_state(index_path)
+    m = _head_manifest(index_path)
+    state = _state_of(m)
     if state is None:
         raise FileNotFoundError(f"{index_path} has never been refreshed")
     n_docs, avgdl = state["n_docs"], state["sum_dl"] / max(1, state["n_docs"])
-
-    v = latest_version(index_path)
-    m = _read_manifest(index_path, v)
+    v = m["version"]
     # one scan over the UNION of each term's stats/bloom-pruned file set
     # with a single IN filter, instead of one read (scan node + per-file
     # listing + row filter) per term unioned together: the pruning is
@@ -367,36 +365,26 @@ def bm25_topk_from_index(
 def compact_index(spark: SparkSession, index_path: str) -> dict:
     """Fold accumulated tombstones into a physical rewrite: live postings
     (current files anti-join tombstoned doc_ids) are rewritten
-    token-clustered, the tombstone list resets to empty, and the cursor +
-    running stats carry forward unchanged (compaction is a layout
-    operation, not a refresh). Returns ``{compacted, files, tombstones_dropped}``."""
-    v = latest_version(index_path)
-    if v is None:
+    token-clustered with the stats and bloom columns the index records,
+    the tombstone list resets to empty, and the cursor + running stats
+    carry forward unchanged (compaction is a layout operation, not a
+    refresh). Returns ``{compacted, files, tombstones_dropped}``."""
+    m = _head_manifest(index_path)
+    if m is None:
         raise FileNotFoundError(f"{index_path} has no committed versions")
-    m = _read_manifest(index_path, v)
+    v = m["version"]
     tomb_files = m.get("tombstones", [])
     if not tomb_files:
         return {"compacted": False, "files": m["n_files"], "tombstones_dropped": 0}
-    state = index_state(index_path)
     live = _mask_tombstones(spark, index_path, m, read(spark, index_path, version=v))
     staged = _stage(
         index_path,
         v + 1,
         live.repartitionByRange(_INITIAL_PARTITIONS, "tok"),
-        stats_cols=("tok",),
-        bloom_cols=("tok",),
+        **_rewrite_cols(m),
     )
     _publish_version(
-        index_path,
-        m,
-        "index-compact",
-        new=staged,
-        extra={
-            "tombstones": [],
-            "source_version": state["cursor"],
-            "index_n_docs": state["n_docs"],
-            "index_sum_dl": state["sum_dl"],
-        },
+        index_path, m, "index-compact", new=staged, extra={"tombstones": []}
     )
     return {
         "compacted": True,

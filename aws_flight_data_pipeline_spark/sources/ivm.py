@@ -20,10 +20,12 @@ The refresh pipeline, per cycle:
    absolute rows merge in via :func:`~.versioned.merge_into` — manifest
    stats prune the rewrite to files that can contain affected groups.
 4. The merge manifest is stamped with ``source_version`` — the cursor
-   moves ATOMICALLY with the data (one O_EXCL manifest publication), so a
+   moves ATOMICALLY with the data (one manifest publication), so a
    crashed refresh replays from the old cursor against the old rollup
    state and a completed refresh can never double-apply: exactly-once
-   maintenance with no side ledger.
+   maintenance with no side ledger. Every later commit on the rollup
+   (OPTIMIZE, rollback) carries the cursor of the snapshot it publishes,
+   so the cursor is always the head manifest's.
 
 Groups whose count reaches zero stay as TOMBSTONE rows (count 0 — still
 correct partials) rather than forcing a second delete commit;
@@ -37,9 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_flight_data_pipeline_spark.sources.versioned import (
-    _list_versions,
+    _head_manifest,
     _publish_version,
-    _read_manifest,
     commit,
     latest_version,
     merge_into,
@@ -49,14 +50,10 @@ from aws_flight_data_pipeline_spark.sources.versioned import (
 
 
 def _cursor(rollup_path: str) -> int | None:
-    """Last fact-table version folded into the rollup: the newest manifest
-    carrying a ``source_version`` stamp (walk is over the KB-scale commit
-    log, newest first; non-refresh commits like OPTIMIZE are skipped)."""
-    for v in reversed(_list_versions(rollup_path)):
-        sv = _read_manifest(rollup_path, v).get("source_version")
-        if sv is not None:
-            return int(sv)
-    return None
+    """Last fact-table version folded into the rollup: the head manifest's
+    ``source_version``. None = never refreshed."""
+    m = _head_manifest(rollup_path)
+    return None if m is None or m.get("source_version") is None else int(m["source_version"])
 
 
 def refresh_view(
@@ -70,10 +67,10 @@ def refresh_view(
     """Bring the rollup up to the fact table's head; returns
     ``{refreshed, from_version, to_version, groups_touched}``.
 
-    First call (or if retention vacuumed every stamped manifest) does a
-    full snapshot build — a pure recompute, so the fallback is always
-    safe. Subsequent calls are change-feed increments as described in the
-    module docstring.
+    First call (or a rollback to a version before the first refresh)
+    does a full snapshot build — a pure recompute, so the fallback is
+    always safe. Subsequent calls are change-feed increments as described
+    in the module docstring.
     """
     head = latest_version(fact_path)
     if head is None:
@@ -176,8 +173,8 @@ def refresh_view(
 def _stamp_cursor(rollup_path: str, head: int) -> None:
     """Metadata-only commit that carries the cursor forward: republish the
     newest manifest's file set with the new ``source_version`` (atomic
-    O_EXCL publication, no data movement)."""
-    m = _read_manifest(rollup_path, latest_version(rollup_path))
+    publication, no data movement)."""
+    m = _head_manifest(rollup_path)
     _publish_version(
         rollup_path, m, "cursor", keep=m["files"], extra={"source_version": head}
     )

@@ -13,9 +13,10 @@ file creation):
 - **Data files are immutable.** Every commit writes NEW parquet files under
   ``data/``; nothing is ever overwritten in place.
 - **A commit is one atomically-published JSON manifest** listing the table's
-  complete active file set. Publication uses ``O_CREAT|O_EXCL`` on the
-  next version's manifest name — two racing writers cannot both win, the
-  loser gets ``CommitConflict`` (optimistic concurrency, no locks).
+  complete active file set. The manifest is written whole into a temp file
+  and hard-linked to the next version's name — two racing writers cannot
+  both win, the loser gets ``CommitConflict`` (optimistic concurrency, no
+  locks), and no reader ever sees a partly written manifest.
 - **Readers resolve a manifest once** and then read only its listed files:
   a reader holds a consistent snapshot no matter what commits land while it
   runs, and at 100 TB the read plans from a KB–MB manifest instead of
@@ -42,16 +43,20 @@ manifest or names a txn dir:
    nothing.
 2. :func:`_publish_version` assembles the manifest over the parent
    manifest the caller already holds and publishes it through
-   :func:`_publish`, the only O_EXCL commit point.
+   :func:`_publish`, the only commit point.
 
 The manifest, ``_commits/{version:09d}.json``, always carries ``version``,
 ``parent``, ``mode``, ``files``, ``n_files``, ``stats``, ``blooms`` and
-``committed_at``; ``schema`` and ``tombstones`` are inherited from the
-parent unless the writer sets them; writers add their own keys on top
-(``rows_*``, ``rolled_back_to``, ``source_version``, ``index_*``,
-``batch_id``, ``merge_on``). Kept files carry their stats and blooms;
-files a merge or delete rewrites get stats on every column the table
-records stats for, plus the merge keys.
+``committed_at``. The snapshot's own keys — ``schema``, ``tombstones`` and
+the cursors ``batch_id``, ``source_version``, ``index_n_docs`` and
+``index_sum_dl`` — are inherited from the manifest the file set comes from
+(the parent; the restored version for a rollback) unless the writer sets
+them, so every cursor read is one read of the head manifest. Writers add
+their own keys on top (``rows_*``, ``rolled_back_to``, ``merge_on``). Kept
+files carry their stats and blooms; files a merge, delete or index
+compaction rewrites get stats on every column the parent records stats
+for, plus the merge keys, and blooms on every column the parent blooms.
+``_commits/`` holds nothing but the manifests and the ``_head.json`` hint.
 """
 
 from __future__ import annotations
@@ -117,7 +122,7 @@ def _head_path(path: str) -> str:
 
 def _write_head(path: str, version: int) -> None:
     """Best-effort head HINT (atomic replace). Correctness never depends on
-    it: the O_EXCL manifest create is the commit point; readers probe
+    it: the manifest's atomic link is the commit point; readers probe
     forward from the hint, so a stale hint (writer crashed between publish
     and hint update, or two writers raced) costs extra probe reads, never
     a wrong answer."""
@@ -169,9 +174,9 @@ def commit(
     ``mode='append'`` extends the parent's file set; ``'overwrite'`` replaces
     it. The data write happens BEFORE publication, into a commit-unique
     subdirectory — a crash mid-write leaves an unreferenced directory (vacuum
-    garbage), never a torn table. Publication is a single O_CREAT|O_EXCL
-    create of the manifest, so concurrent writers serialize: exactly one
-    wins version N, the other raises ``CommitConflict``.
+    garbage), never a torn table. Publication is a single atomic,
+    exclusive link of the manifest, so concurrent writers serialize:
+    exactly one wins version N, the other raises ``CommitConflict``.
 
     ``stats_cols`` records per-file min/max for those columns in the
     manifest (read from the parquet FOOTERS of the commit's new files —
@@ -187,8 +192,8 @@ def commit(
     predicates (lo == hi) — the file skip that works on high-cardinality
     keys whose per-file [min, max] spans the whole domain, where range
     stats prune nothing (Delta's bloom-filter-index role). Blooms carry
-    with untouched files through append/rollback/merge/delete; rewritten
-    files drop theirs (absent bloom = no skip — conservative).
+    with untouched files through append/rollback/merge/delete, and the
+    files a merge or delete rewrites get blooms on the same columns.
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
@@ -213,7 +218,7 @@ def commit(
     )
 
     # publish with bounded retry-with-REBASE: the data files are written
-    # exactly once; a losing O_EXCL race only re-reads the new head and
+    # exactly once; a losing publish race only re-reads the new head and
     # re-assembles the manifest on top of it (append folds onto the
     # winner's file set; overwrite replaces whatever won). No data motion,
     # no orphaned rows — the loser's work is preserved, not redone.
@@ -237,7 +242,7 @@ def commit(
             if attempt >= retries:
                 raise
             attempt += 1
-            pm = _read_manifest(path, latest_version(path))
+            pm = _head_manifest(path)
 
 
 def _stage(
@@ -277,6 +282,27 @@ def _stage(
     return {"dir": txn_dir, "files": files, "stats": stats, "blooms": blooms}
 
 
+#: Manifest keys that describe the snapshot rather than the commit:
+#: :func:`_publish_version` carries them from the manifest the file set
+#: comes from. ``batch_id`` is the newest micro-batch folded into the
+#: snapshot; ``source_version`` the newest source version folded into a
+#: view or index, whose running BM25 stats are the ``index_*`` keys.
+_SNAPSHOT_KEYS = (
+    "schema",
+    "tombstones",
+    "batch_id",
+    "source_version",
+    "index_n_docs",
+    "index_sum_dl",
+)
+
+
+def _head_manifest(path: str) -> dict | None:
+    """The head manifest; None for a table with no committed version."""
+    v = latest_version(path)
+    return None if v is None else _read_manifest(path, v)
+
+
 def _publish_version(
     path: str,
     pm: dict | None,
@@ -290,13 +316,13 @@ def _publish_version(
     ``pm`` (None for a table's first version) and publish it; returns the
     version. ``keep`` lists the files carried over, with the stats and
     blooms ``carry_from`` (default ``pm``) records for them; ``new`` is a
-    :func:`_stage` result appended after them. ``schema`` and
-    ``tombstones`` inherit from ``pm`` unless ``extra`` sets them:
-    maintenance commits never change the table schema, so every manifest
-    in the chain carries one once ``commit`` recorded it; and a
-    maintenance op on an index path must not resurrect tombstoned
-    documents by dropping the key (the mask stays valid over rewritten
-    files: the gen column rides the data)."""
+    :func:`_stage` result appended after them. Every key of
+    :data:`_SNAPSHOT_KEYS` that ``extra`` does not set is inherited from
+    the same source manifest when it has one: the schema, the tombstone
+    mask and the cursors describe the snapshot, so they travel with its
+    file set — a maintenance commit keeps the cursor and the mask (the
+    mask stays valid over rewritten files: the gen column rides the
+    data), and a rollback restores the old version's."""
     src = (pm if carry_from is None else carry_from) or {}
     extra = extra or {}
     kept = set(keep)
@@ -310,9 +336,7 @@ def _publish_version(
     parent = None if pm is None else pm["version"]
     version = 0 if parent is None else parent + 1
     manifest = {"version": version, "parent": parent, "mode": mode}
-    for k in ("schema", "tombstones"):
-        if k not in extra and pm and pm.get(k):
-            manifest[k] = pm[k]
+    manifest.update((k, src[k]) for k in _SNAPSHOT_KEYS if k not in extra and k in src)
     manifest.update(
         files=files,
         n_files=len(files),
@@ -325,11 +349,17 @@ def _publish_version(
     return version
 
 
-def _rewrite_stats_cols(pm: dict, keys: list[str] | tuple = ()) -> tuple[str, ...]:
-    """Stats columns for the files a merge or delete writes: every column
-    the table records stats for, plus the merge keys — so a rewrite never
-    loses the table's pruning power."""
-    return tuple(sorted({c for s in pm.get("stats", {}).values() for c in s} | set(keys)))
+def _rewrite_cols(pm: dict, keys: list[str] | tuple = ()) -> dict:
+    """What the files a merge, delete or index compaction writes record,
+    as :func:`_stage` keyword arguments: stats on every column the parent
+    records stats for, plus the merge keys, and blooms on every column the
+    parent blooms — so a rewrite never loses the table's pruning power."""
+    return {
+        "stats_cols": tuple(
+            sorted({c for s in pm.get("stats", {}).values() for c in s} | set(keys))
+        ),
+        "bloom_cols": tuple(sorted({c for b in pm.get("blooms", {}).values() for c in b})),
+    }
 
 
 def _footer_rows(path: str, files: list[str]) -> int:
@@ -555,18 +585,26 @@ def _check_append_schema(new: list[dict], old: list[dict] | None) -> list[dict]:
 
 
 def _publish(path: str, version: int, manifest: dict) -> None:
-    """The commit point: an O_CREAT|O_EXCL create of the version's
-    manifest, then the head hint and the checkpoint cadence."""
+    """The commit point: the manifest is written whole into a temp file in
+    ``_commits/``, then hard-linked to the version's name. The link is
+    atomic and fails when the name exists, so exactly one writer wins the
+    version and a failure partway through the write publishes nothing.
+    Then the head hint."""
+    mp = _manifest_path(path, version)
+    tmp = f"{mp}.tmp-{uuid.uuid4().hex[:8]}"
     try:
-        fd = os.open(_manifest_path(path, version), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
-        raise CommitConflict(
-            f"version {version} of {path} was committed concurrently"
-        ) from e
-    with os.fdopen(fd, "w") as fh:
-        json.dump(manifest, fh, indent=1)
+        with open(tmp, "w") as fh:
+            json.dump(manifest, fh, indent=1)
+        try:
+            os.link(tmp, mp)
+        except FileExistsError as e:
+            raise CommitConflict(
+                f"version {version} of {path} was committed concurrently"
+            ) from e
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
     _write_head(path, version)
-    _maybe_checkpoint(path, version)
 
 
 def read(
@@ -616,26 +654,18 @@ def rollback(path: str, to_version: int) -> int:
     """Restore an older snapshot as a NEW version (no data movement).
 
     History is append-only — rollback never deletes the versions it skips
-    over, it just republishes the old file set at the head.
+    over, it just republishes the old file set at the head, with the old
+    version's schema, tombstones and cursors: a view or index rolled back
+    refreshes forward from the restored cursor.
     """
     old = _read_manifest(path, to_version)
-    pm = _read_manifest(path, latest_version(path))
     return _publish_version(
         path,
-        pm,
+        _head_manifest(path),
         "rollback",
         keep=old["files"],
         carry_from=old,
-        extra={
-            "rolled_back_to": to_version,
-            # the schema travels with the snapshot: rolling back across an
-            # additive evolution restores the OLD schema (not the head's);
-            # same for tombstones — the mask is part of the snapshot (an
-            # explicit empty list is carried too, overriding the parent
-            # inheritance: rolling back past a delete un-deletes)
-            **({"schema": old["schema"]} if "schema" in old else {}),
-            "tombstones": old.get("tombstones", []),
-        },
+        extra={"rolled_back_to": to_version},
     )
 
 
@@ -678,9 +708,9 @@ def vacuum(path: str, keep_last: int = 2, min_age_seconds: float = 600.0) -> dic
     younger than the grace are kept; only set 0 when no writer can be
     in flight (tests, single-process maintenance windows).
 
-    Before a manifest is dropped, its ``batch_id`` stamp (the streaming
-    sink's exactly-once guard) is folded into the durable ``_batches.json``
-    side-file, so replay detection survives any retention policy.
+    Cursors survive any retention: the head manifest carries them
+    (``batch_id``, ``source_version``, ``index_*`` are inherited by every
+    commit), so dropping older manifests loses no exactly-once guard.
     """
     if keep_last < 1:
         raise ValueError(
@@ -700,11 +730,6 @@ def vacuum(path: str, keep_last: int = 2, min_age_seconds: float = 600.0) -> dic
         # side-files a manifest references outside its data file list
         # (e.g. the inverted index's tombstone parquets) are live too
         referenced.update(mv.get("tombstones", []))
-    dropped_batch_ids = [
-        b for v in drop if (b := _read_manifest(path, v).get("batch_id")) is not None
-    ]
-    if dropped_batch_ids:
-        _record_batch_ids(path, dropped_batch_ids)
 
     now = time.time()
     files_deleted = 0
@@ -794,130 +819,14 @@ def optimize(
     )
 
 
-def _batches_path(path: str) -> str:
-    return os.path.join(_commits_dir(path), "_batches.json")
-
-
-def _record_batch_ids(path: str, batch_ids: list[int]) -> None:
-    """Fold batch ids into the durable side-ledger (never pruned — a sorted
-    int list stays KBs for years of micro-batches)."""
-    known: set[int] = set()
-    bp = _batches_path(path)
-    if os.path.exists(bp):
-        with open(bp) as fh:
-            known = set(json.load(fh))
-    known.update(int(b) for b in batch_ids)
-    tmp = bp + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(sorted(known), fh)
-    os.replace(tmp, bp)
-
-
-def _checkpoint_path(path: str) -> str:
-    return os.path.join(_commits_dir(path), "_checkpoint.json")
-
-
-#: A checkpoint is written every this-many commits (Delta's
-#: ``_last_checkpoint`` cadence idea). Amortized cost per commit is one
-#: manifest read; the payoff is that every newest-first metadata walk is
-#: bounded by the interval instead of the chain length.
-CHECKPOINT_EVERY = 100
-
-
-def _read_checkpoint(path: str) -> dict:
-    try:
-        with open(_checkpoint_path(path)) as fh:
-            return json.load(fh)
-    except (FileNotFoundError, json.JSONDecodeError):
-        return {"folded_through": -1}
-
-
-def checkpoint(path: str, version: int | None = None) -> dict:
-    """Fold every stamped ``batch_id`` at or below ``version`` (default
-    head) into the durable ledger and record the fold horizon, so
-    newest-first metadata walks (:func:`_batch_versions`) stop at the
-    horizon instead of replaying the whole retained chain — a months-long
-    30-second-trigger streaming table retains thousands of manifests, and
-    without a horizon the first streaming commit after a long maintenance
-    run would walk all of them.
-
-    Ordering is crash-safe: ids are folded BEFORE the horizon is
-    published (tmp + atomic replace), so a crash between the two only
-    costs extra walk reads, never a missed replay guard. Like vacuum and
-    OPTIMIZE this assumes one maintenance actor; a concurrent pair wastes
-    work but cannot unfold an id (the ledger only grows). Returns
-    ``{"folded_through": v, "ids_folded": n}``.
-    """
-    v = latest_version(path) if version is None else version
-    if v is None:
-        return {"folded_through": -1, "ids_folded": 0}
-    prev = int(_read_checkpoint(path).get("folded_through", -1))
-    ids: list[int] = []
-    w = v
-    while w > prev and os.path.exists(_manifest_path(path, w)):
-        b = _read_manifest(path, w).get("batch_id")
-        if b is not None:
-            ids.append(int(b))
-        w -= 1
-    if ids:
-        _record_batch_ids(path, ids)
-    cp = _checkpoint_path(path)
-    tmp = f"{cp}.tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump({"folded_through": int(v), "committed_at": time.time()}, fh)
-    os.replace(tmp, cp)
-    return {"folded_through": int(v), "ids_folded": len(ids)}
-
-
-def _maybe_checkpoint(path: str, version: int) -> None:
-    """Called from :func:`_publish` after every commit: advance the fold
-    horizon once the chain has grown :data:`CHECKPOINT_EVERY` past it.
-    Amortized one manifest read per commit; failures are swallowed (the
-    checkpoint is an accelerator — correctness never depends on it)."""
-    try:
-        prev = int(_read_checkpoint(path).get("folded_through", -1))
-        if version - prev >= CHECKPOINT_EVERY:
-            checkpoint(path, version)
-    except Exception:
-        pass
-
-
-def _batch_versions(path: str) -> set[int]:
-    """batch_ids already committed by the streaming sink.
-
-    Amortized O(1) in table history: ids are folded into ``_batches.json``
-    at commit time (and by vacuum before it drops a stamped manifest).
-    The crash window is a streaming commit that published its manifest but
-    died before the ledger fold — and OTHER commits (OPTIMIZE, DELETE,
-    MERGE, IVM refresh) may publish on top before the stream restarts,
-    hiding the stamped manifest behind unstamped ones. So the walk goes
-    newest-first and stops at the first STAMPED manifest whose batch_id is
-    already ledger-folded (everything older is folded too — folds happen
-    in commit order); unstamped maintenance manifests are skipped but
-    never terminate the walk. Steady state reads the ledger plus one or
-    two manifests; replay detection survives vacuum because vacuum folds
-    before it drops.
-    """
-    out: set[int] = set()
-    bp = _batches_path(path)
-    if os.path.exists(bp):
-        with open(bp) as fh:
-            out.update(json.load(fh))
-    folded = frozenset(out)
-    horizon = int(_read_checkpoint(path).get("folded_through", -1))
-    v = latest_version(path)
-    while v is not None and v > horizon and os.path.exists(_manifest_path(path, v)):
-        # missing manifest = vacuumed away = folded by vacuum: safe stop;
-        # v <= horizon = folded by checkpoint(): the walk is bounded by
-        # the checkpoint interval even when maintenance commits bury the
-        # newest stamped manifest arbitrarily deep
-        b = _read_manifest(path, v).get("batch_id")
-        if b is not None:
-            if int(b) in folded:
-                break  # every older stamp is folded too
-            out.add(int(b))
-        v -= 1
-    return out
+def _batch_committed(path: str, batch_id: int) -> bool:
+    """Whether micro-batch ``batch_id`` is already folded into the table:
+    one read of the head manifest, whose ``batch_id`` is the newest batch
+    the snapshot holds. A restarted query re-runs only its last
+    uncommitted batch and no table is written by two queries, so the
+    high-water mark answers exactly what the set of committed ids would."""
+    m = _head_manifest(path)
+    return m is not None and m.get("batch_id") is not None and batch_id <= m["batch_id"]
 
 
 def commit_stream_batch(
@@ -928,24 +837,21 @@ def commit_stream_batch(
     mode: str = "append",
 ) -> int | None:
     """Idempotent per-micro-batch commit: the manifest is stamped with
-    ``batch_id`` and the id is folded into the durable ledger, so a replay
-    of an already-committed batch is a no-op — foreachBatch's
-    at-least-once delivery becomes an EXACTLY-ONCE visible table, and the
-    guard survives vacuum retention. A crash after the data write but
-    before publication leaves only unreferenced files (vacuum garbage),
-    never duplicate rows; a crash between publication and the ledger fold
-    is covered because the id is still readable from the newest manifest."""
-    if batch_id in _batch_versions(path):
+    ``batch_id``, atomically with the data, and every later commit
+    inherits the stamp, so a replay of an already-committed batch is a
+    no-op — foreachBatch's at-least-once delivery becomes an EXACTLY-ONCE
+    visible table, and the guard survives maintenance commits and vacuum
+    retention. A crash after the data write but before publication leaves
+    only unreferenced files (vacuum garbage), never duplicate rows."""
+    if _batch_committed(path, batch_id):
         return None
-    version = commit(
+    return commit(
         batch_df,
         path,
         mode=mode,
         stats_cols=stats_cols,
         meta={"batch_id": int(batch_id)},
     )
-    _record_batch_ids(path, [batch_id])
-    return version
 
 
 def _start_foreach_batch(
@@ -1008,15 +914,15 @@ def streaming_upsert_sink(
     repeat within one micro-batch.
 
     Exactly-once: the merge manifest is stamped with the batch id
-    (ledger-folded, vacuum-safe), so an at-least-once replay of a
-    committed batch is skipped; a no-op merge publishes nothing, and
+    (inherited by later commits, vacuum-safe), so an at-least-once replay
+    of a committed batch is skipped; a no-op merge publishes nothing, and
     replaying a no-op is itself a no-op.
     """
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if batch_id in _batch_versions(path):
+        if _batch_committed(path, batch_id):
             return
         if seq_col is not None:
             cols = batch_df.columns
@@ -1039,7 +945,6 @@ def streaming_upsert_sink(
             on=on,
             meta={"batch_id": int(batch_id)},
         )
-        _record_batch_ids(path, [batch_id])
 
     return _start_foreach_batch(values, process_batch, checkpoint_path, trigger)
 
@@ -1307,7 +1212,7 @@ def _merge_into_once(
     # evolved column at a different type past _check_append_schema
     evolved_schema = _check_append_schema(_df_schema(to_write), m.get("schema"))
 
-    staged = _stage(path, version + 1, to_write, stats_cols=_rewrite_stats_cols(m, keys))
+    staged = _stage(path, version + 1, to_write, **_rewrite_cols(m, keys))
 
     if affected:
         # matched-rewrite accounting: target rows matched = rows the
@@ -1328,8 +1233,6 @@ def _merge_into_once(
         shutil.rmtree(staged["dir"], ignore_errors=True)
         return no_op
 
-    # blooms carry for untouched files; rewritten files lose theirs
-    # (absent bloom = no skip - conservative, never wrong)
     new_version = _publish_version(
         path,
         m,
@@ -1399,7 +1302,7 @@ def delete_where(spark: SparkSession, path: str, where: dict) -> dict:
     survivors = _scan(spark, path, affected).where(~matches).observe(
         obs_surv, F.count(F.lit(1)).alias("n")
     )
-    staged = _stage(path, version + 1, survivors, stats_cols=_rewrite_stats_cols(m))
+    staged = _stage(path, version + 1, survivors, **_rewrite_cols(m))
     n_deleted = _footer_rows(path, affected) - int(obs_surv.get["n"])
     new_version = _publish_version(
         path, m, "delete", keep=carried, new=staged, extra={"rows_deleted": n_deleted}

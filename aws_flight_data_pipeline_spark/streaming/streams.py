@@ -779,7 +779,7 @@ def streaming_corpus_admission_incremental(
     """
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in vt._batch_versions(state_path) or batch_df.isEmpty():
+        if vt._batch_committed(state_path, batch_id) or batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         fp_comb, buckets_comb = _fold_admission_state(
@@ -856,7 +856,7 @@ def streaming_sketch_rollup(
     from aws_flight_data_pipeline_spark.functions.text import fingerprint
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in vt._batch_versions(state_path) or batch_df.isEmpty():
+        if vt._batch_committed(state_path, batch_id) or batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         batch_state = batch_df.groupBy("source").agg(
@@ -934,7 +934,7 @@ def streaming_heavy_hitters(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in vt._batch_versions(state_path) or batch_df.isEmpty():
+        if vt._batch_committed(state_path, batch_id) or batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         tok = batch_df.select(F.explode(F.split("text", " ")).alias("token"))
@@ -1036,7 +1036,7 @@ def streaming_quantile_rollup(
     from aws_flight_data_pipeline_spark.functions.quantiles import dd_histogram, dd_merge
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in vt._batch_versions(state_path) or batch_df.isEmpty():
+        if vt._batch_committed(state_path, batch_id) or batch_df.isEmpty():
             return
         hist = dd_histogram(batch_df, "scope", "x", alpha)
         prev = _state_head(batch_df.sparkSession, state_path)
@@ -1101,7 +1101,7 @@ def streaming_scd2_dimension(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if batch_id in vt._batch_versions(dim_path):
+        if vt._batch_committed(dim_path, batch_id):
             return  # at-least-once replay of a committed batch: no-op
         spark = batch_df.sparkSession
         batch_df = batch_df.select(
@@ -1468,7 +1468,7 @@ def streaming_unified_admission_gate(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in vt._batch_versions(state_path) or batch_df.isEmpty():
+        if vt._batch_committed(state_path, batch_id) or batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         fp_comb, buckets_comb = _fold_admission_state(

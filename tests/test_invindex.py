@@ -175,3 +175,36 @@ def test_term_reads_prune_posting_files(spark, paths):
     kept_z, skipped_z = vt.plan_files(ipath, v, {"tok": ("zebra", "zebra")})
     assert skipped_z >= 1  # the aardvark/apple file(s) pruned by tok stats
     assert set(_bm25(spark, ipath, ("zebra",))) == {100 + i for i in range(50)}
+
+
+def _index_with_delete(spark, dpath, ipath):
+    """Eight docs indexed at docs v0, then docs 0-3 deleted and the index
+    refreshed to docs v1 (one tombstone file)."""
+    vt.commit(
+        _docs(spark, [(i, "alpha") for i in range(8)]), dpath, stats_cols=("doc_id",)
+    )
+    ix.refresh_index(spark, dpath, ipath)
+    vt.delete_where(spark, dpath, {"doc_id": (0, 3)})
+    ix.refresh_index(spark, dpath, ipath)
+
+
+def test_rollback_restores_index_state_and_refresh_catches_up(spark, paths):
+    dpath, ipath = paths
+    _index_with_delete(spark, dpath, ipath)
+    assert ix.index_state(ipath) == {"cursor": 1, "n_docs": 4, "sum_dl": 4}
+    vt.rollback(ipath, 0)
+    assert ix.index_state(ipath) == {"cursor": 0, "n_docs": 8, "sum_dl": 8}
+    out = ix.refresh_index(spark, dpath, ipath)
+    assert out["refreshed"] and out["from_version"] == 0 and out["docs_removed"] == 4
+    assert ix.index_state(ipath) == {"cursor": 1, "n_docs": 4, "sum_dl": 4}
+    assert set(_bm25(spark, ipath)) == {4, 5, 6, 7}
+
+
+def test_index_state_survives_optimize_and_vacuum(spark, paths):
+    dpath, ipath = paths
+    _index_with_delete(spark, dpath, ipath)
+    state, before = ix.index_state(ipath), _bm25(spark, ipath)
+    vt.optimize(spark, ipath, n_files=2)
+    vt.vacuum(ipath, keep_last=1, min_age_seconds=0)
+    assert ix.index_state(ipath) == state
+    assert _bm25(spark, ipath) == before

@@ -211,3 +211,29 @@ def test_refresh_on_empty_fact_raises_cleanly(spark, paths):
     fact, rollup = paths
     with pytest.raises(FileNotFoundError):
         _refresh(spark, fact, rollup)
+
+
+def test_rollback_of_the_rollup_refreshes_from_the_restored_cursor(spark, paths):
+    fact, rollup = paths
+    vt.commit(_fact(spark, [(1, "a", 1)]), fact)
+    _refresh(spark, fact, rollup)
+    vt.commit(_fact(spark, [(2, "b", 2)]), fact, mode="append")
+    _refresh(spark, fact, rollup)
+    # the restored snapshot folds in fact v0 only, and so does its cursor
+    vt.rollback(rollup, 0)
+    assert ivm._cursor(rollup) == 0
+    out = _refresh(spark, fact, rollup)
+    assert out["refreshed"] and out["from_version"] == 0
+    _assert_view_equals_recompute(spark, fact, rollup)
+
+
+def test_rollup_cursor_survives_optimize_and_vacuum(spark, paths):
+    fact, rollup = paths
+    vt.commit(_fact(spark, [(1, "a", 1), (2, "b", 2)]), fact)
+    _refresh(spark, fact, rollup)
+    vt.optimize(spark, rollup, n_files=1)
+    vt.vacuum(rollup, keep_last=1, min_age_seconds=0)
+    vt.commit(_fact(spark, [(3, "b", 3)]), fact, mode="append")
+    out = _refresh(spark, fact, rollup)
+    assert out["from_version"] == 0  # an increment, not a full rebuild
+    _assert_view_equals_recompute(spark, fact, rollup)

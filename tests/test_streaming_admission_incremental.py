@@ -214,7 +214,8 @@ def test_vacuum_keeps_admission_delta_state_reads_identical(spark, tmp_path):
     stats = vt.vacuum(state, keep_last=1, min_age_seconds=0)
     assert stats == {"versions_dropped": 1, "files_deleted": 0}
     assert sorted(map(tuple, vt.read(spark, state).collect())) == before
-    assert vt._batch_versions(state) == {0, 1}
+    assert [vt._read_manifest(state, v)["batch_id"] for v in vt._list_versions(state)] == [1]
+    assert vt._batch_committed(state, 0)
 
 
 def _frozen_snapshot(spark, ipath):

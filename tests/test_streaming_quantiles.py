@@ -52,7 +52,7 @@ def test_streaming_quantile_state_equals_batch_histogram(spark, tmp_path):
     q.awaitTermination(120)
 
     # one state version per micro-batch
-    assert len(vt._batch_versions(state)) == 3
+    assert [vt._read_manifest(state, v)["batch_id"] for v in vt._list_versions(state)] == [0, 1, 2]
 
     batch_hist = dd_histogram(orders.drop("k"), "scope", "x")
     final = vt.read(spark, state)
@@ -119,8 +119,10 @@ def test_state_version_pruning_keeps_reads_intact(spark, tmp_path):
     assert _rows(vt.read(spark, state, version=2))
     with pytest.raises(FileNotFoundError):
         vt.read(spark, state, version=1)
-    # the dropped batches' stamps survive in the ledger: replays stay no-ops
-    assert vt._batch_versions(state) == {0, 1, 2, 3}
+    # the dropped batches stay committed under the head's stamp: replays
+    # stay no-ops
+    assert [vt._read_manifest(state, v)["batch_id"] for v in vt._list_versions(state)] == [2, 3]
+    assert all(vt._batch_committed(state, b) for b in range(4))
 
 
 def test_crash_during_state_write_keeps_last_committed_state(
@@ -170,7 +172,7 @@ def test_crash_during_state_write_keeps_last_committed_state(
     assert _rows(vt.read(spark, state)) == _rows(two)
 
     run().awaitTermination(120)
-    assert vt._batch_versions(state) == {0, 1, 2}
+    assert [vt._read_manifest(state, v)["batch_id"] for v in vt._list_versions(state)] == [0, 1, 2]
     assert _rows(vt.read(spark, state)) == _rows(
         dd_histogram(orders.drop("k"), "scope", "x")
     )

@@ -81,11 +81,11 @@ def test_blooms_carry_through_rollback_and_delete(spark, table):
     vt.rollback(table, to_version=1)
     m = vt._read_manifest(table, vt.latest_version(table))
     assert len(m["blooms"]) == 2  # the two interleaved files, post-rollback
-    # delete rewrites the even file (contains 42); its bloom drops, the
-    # odd file's carries
+    # delete rewrites the even file (contains 42); the rewrite records a
+    # bloom on the parent's bloom column, the odd file's carries
     vt.delete_where(spark, table, {"k": (42, 42)})
     m = vt._read_manifest(table, vt.latest_version(table))
-    assert len(m["blooms"]) == 1
+    assert len(m["blooms"]) == 2 and set(m["blooms"]) == set(m["files"])
     # reads stay exact either way
     assert vt.read(spark, table, where={"k": (42, 42)}).count() == 0
     assert vt.read(spark, table, where={"k": (43, 43)}).count() == 1

@@ -221,17 +221,18 @@ def test_merge_allows_duplicate_null_keys(spark, table):
     assert vt.read(spark, table).where("id IS NULL").count() == 2
 
 
-# ------------------------------------------------- batch ledger walk
+# ---------------------------------------------- batch stamp inheritance
 
 
 def test_batch_stamp_hidden_behind_maintenance_commits(spark, table):
-    # a streaming commit publishes its stamped manifest, crashes before the
-    # ledger fold, and maintenance commits pile on before restart: replay
-    # detection must still see the stamped batch
+    # a streaming commit publishes its stamped manifest, then maintenance
+    # commits pile on before restart: replay detection must still see the
+    # stamped batch
     vt.commit(_df(spark, 0, 10, "a"), table, meta={"batch_id": 7})
     vt.commit(_df(spark, 10, 12, "b"), table, mode="append")  # maintenance
     vt.commit(_df(spark, 12, 14, "c"), table, mode="append")  # maintenance
-    assert 7 in vt._batch_versions(table)
+    assert [vt._read_manifest(table, v)["batch_id"] for v in vt._list_versions(table)] == [7, 7, 7]
+    assert vt._batch_committed(table, 7)
 
 
 # --------------------------------------------------------- vacuum hardening

@@ -1,12 +1,14 @@
 """The versioned table's single write path: every writer stages into a txn
 dir and publishes through ``versioned._publish``. Pins the on-disk format
 (manifest keys per mode, txn-dir and manifest naming) so tables written by
-earlier releases stay readable, injects a publish failure into each writer,
-and checks the stats policy for files a merge writes."""
+earlier releases stay readable, injects a publish failure into each writer
+and a torn manifest write into the commit point, and checks the stats and
+bloom policy for files a rewrite writes."""
 
 from __future__ import annotations
 
 import glob
+import json
 import os
 import re
 
@@ -24,13 +26,14 @@ _BASE_KEYS = {
 _INDEX_KEYS = {"tombstones", "source_version", "index_n_docs", "index_sum_dl"}
 
 #: manifest key set per ``mode``, as written by tables before the single
-#: write path existed
+#: write path existed; a rollback carries the restored version's keys, so
+#: rolling back to a version without tombstones records none
 MANIFEST_KEYS = {
     "append": _BASE_KEYS,
     "overwrite": _BASE_KEYS,
     "merge": _BASE_KEYS | {"rows_updated", "rows_deleted", "rows_inserted"},
     "delete": _BASE_KEYS | {"rows_deleted"},
-    "rollback": _BASE_KEYS | {"rolled_back_to", "tombstones"},
+    "rollback": _BASE_KEYS | {"rolled_back_to"},
     "index-refresh": _BASE_KEYS | _INDEX_KEYS,
     "index-compact": _BASE_KEYS | _INDEX_KEYS,
     "cursor": _BASE_KEYS | {"source_version"},
@@ -233,6 +236,18 @@ def test_manifest_format_per_mode(spark, tmp_path):
     ivm.refresh_view(spark, fact, roll, ("grp",), ("amount",))
     seen["cursor"] = _head(roll)
 
+    # a stream-state table: batch-stamped overwrites and a skipped replay
+    state = str(tmp_path / "state")
+    for b in range(3):
+        vt.commit_stream_batch(spark.range(b, b + 2), b, state, mode="overwrite")
+    assert vt.commit_stream_batch(spark.range(1), 1, state, mode="overwrite") is None
+    assert [vt._read_manifest(state, v)["batch_id"] for v in vt._list_versions(state)] == [
+        0,
+        1,
+        2,
+    ]
+    _assert_naming(state)
+
     for mode, m in seen.items():
         assert m["mode"] == mode
         assert set(m) == MANIFEST_KEYS[mode], mode
@@ -266,3 +281,68 @@ def test_insert_only_merge_keeps_table_stats(spark, tmp_path):
     # every base row has ts <= 9 and every inserted row ts >= 10100
     kept, skipped = vt.plan_files(t, where={"ts": (0, 9)})
     assert set(kept) == base_files and skipped == len(new_files)
+
+
+def test_torn_manifest_write_publishes_nothing(spark, tmp_path, monkeypatch):
+    t = str(tmp_path / "t")
+    _base(spark, t)
+    version, rows = vt.latest_version(t), _rows(spark, t)
+    dump = json.dump
+
+    def torn_dump(obj, fh, **kwargs):
+        if "files" not in obj:
+            return dump(obj, fh, **kwargs)
+        text = json.dumps(obj, **kwargs)
+        fh.write(text[: len(text) // 2])
+        raise OSError("injected failure partway through the manifest write")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="injected"):
+        _base(spark, t, 10, 15)
+    monkeypatch.undo()
+
+    assert vt.latest_version(t) == version
+    assert _rows(spark, t) == rows
+    assert sorted(os.listdir(os.path.join(t, "_commits"))) == ["000000000.json", "_head.json"]
+    assert _base(spark, t, 10, 15) == version + 1
+    assert _rows(spark, t) == sorted(rows + [(i, i * 1000, "a") for i in range(10, 15)])
+
+
+def test_merge_rewrite_keeps_blooms_for_point_lookups(spark, tmp_path):
+    t = str(tmp_path / "t")
+    schema = "id long, tag string"
+    for ids in ((0, 10, 100), (50, 150)):
+        vt.commit(
+            spark.createDataFrame([(i, "a") for i in ids], schema).coalesce(1),
+            t,
+            stats_cols=("id",),
+            bloom_cols=("id",),
+        )
+    before = set(_head(t)["files"])
+    out = vt.merge_into(spark, t, spark.createDataFrame([(10, "m")], schema), on=("id",))
+    assert out["files_rewritten"] == 1
+
+    m = _head(t)
+    assert set(m["blooms"]) == set(m["files"])
+    # the survivors {0, 100} keep a [0, 100] range, so only the bloom can
+    # tell a lookup of 50 that the rewritten file does not hold it
+    rewritten = set(m["files"]) - before
+    spanning = [f for f in rewritten if m["stats"][f]["id"][0] <= 50 <= m["stats"][f]["id"][1]]
+    assert spanning
+    kept, _ = vt.plan_files(t, where={"id": (50, 50)})
+    assert not set(kept) & set(spanning)
+    assert sorted(tuple(r) for r in vt.read(spark, t, where={"id": (50, 50)}).collect()) == [
+        (50, "a")
+    ]
+
+
+def test_compaction_of_a_bloomless_index_stays_bloomless(spark, tmp_path):
+    docs, idx = str(tmp_path / "docs"), str(tmp_path / "idx")
+    vt.commit(_docs(spark, [(1, "alpha beta"), (2, "beta")]), docs, stats_cols=("doc_id",))
+    ix.refresh_index(spark, docs, idx, bloom_cols=())
+    vt.delete_where(spark, docs, {"doc_id": (1, 1)})
+    ix.refresh_index(spark, docs, idx, bloom_cols=())
+    assert ix.compact_index(spark, idx)["compacted"]
+    m = _head(idx)
+    assert m["blooms"] == {}
+    assert set(m["stats"]) == set(m["files"])
