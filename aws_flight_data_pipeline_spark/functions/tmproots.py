@@ -1,17 +1,21 @@
-"""Session-scoped temp-root registry (ADVICE r13 #3, generalized).
+"""Owner of every plans-module state root and of its lifetime.
 
-Every plans-module state dir (ivm rollups, planner tables, inverted
-indexes, IVF indexes, decontam/eval/admission indexes) was created with a
-bare ``tempfile.mkdtemp`` — some modules tore down their PREVIOUS root per
-invocation, but the last root of every family outlived the process, so
-/tmp accumulated hundreds of ``afdp-*`` dirs across bench/test sessions.
-All those call sites now route through :func:`mkdtemp` here, which
-registers the root for one best-effort ``rmtree`` sweep at interpreter
-exit. Modules may still rmtree their own roots earlier (rebuilds,
-explicit teardowns) — removing an already-removed root is a no-op.
+A query's on-disk state (ivm rollups, planner tables, inverted and IVF
+indexes, decontamination and admission indexes) lives in a root made
+here, under one of two lifetimes:
 
-:func:`clone_tree` is the one way a module clones a pristine state root
-into a fresh one.
+* :func:`standing` — built once per session and reused. The root is
+  recorded only after its ``build`` returns, so a build that raises
+  leaves nothing behind and the next call rebuilds it.
+* :func:`fresh` — a new root per call. The previous call's root for the
+  same key is removed then, not earlier, so the lazy frames its caller
+  returned can still collect.
+
+One private dict records both, and one ``atexit`` sweep removes every
+root :func:`mkdtemp` made, recorded or not.
+
+:func:`clone_tree` is the one way a standing base is cloned into a fresh
+root.
 """
 
 from __future__ import annotations
@@ -20,14 +24,58 @@ import atexit
 import os
 import shutil
 import tempfile
+from typing import Callable
 
 _ROOTS: list[str] = []
+
+#: ``(name, key) -> root`` for both lifetimes.
+_RECORDED: dict[tuple[str, str], str] = {}
 
 
 def mkdtemp(prefix: str) -> str:
     """``tempfile.mkdtemp`` that is guaranteed a session-end cleanup."""
     root = tempfile.mkdtemp(prefix=prefix)
     _ROOTS.append(root)
+    return root
+
+
+def standing(name: str, key: str, build: Callable[[str], object]) -> str:
+    """The session's standing root for ``(name, key)``, made as
+    ``afdp-{name}-*`` and filled by ``build(root)`` on first use.
+
+    A standing base is the measured grain's precondition, not its cost:
+    a production deployment maintains its tables and indexes on their own
+    cadence, so a query that times "one increment" or "one probe" starts
+    from state that already exists. Its contents are deterministic per
+    key, so reuse cannot change results; callers that mutate it clone it
+    with :func:`fresh` ``(like=...)`` first.
+
+    The root is recorded only after ``build`` returns. If ``build``
+    raises, the root is removed and the error propagates; the next call
+    rebuilds from scratch instead of reusing a half-built base."""
+    root = _RECORDED.get((name, key))
+    if root is None:
+        root = mkdtemp(prefix=f"afdp-{name}-")
+        try:
+            build(root)
+        except BaseException:
+            shutil.rmtree(root, ignore_errors=True)
+            raise
+        _RECORDED[(name, key)] = root
+    return root
+
+
+def fresh(name: str, key: str, like: str | None = None) -> str:
+    """A new ``afdp-{name}-*`` root for ``(name, key)``; the root the
+    previous call for the same key returned is removed. With ``like``,
+    that tree is cloned into the new root."""
+    old = _RECORDED.pop((name, key), None)
+    if old is not None:
+        shutil.rmtree(old, ignore_errors=True)
+    root = mkdtemp(prefix=f"afdp-{name}-")
+    _RECORDED[(name, key)] = root
+    if like is not None:
+        clone_tree(like, root)
     return root
 
 
@@ -50,6 +98,7 @@ def clone_tree(src: str, dst: str) -> None:
 
 
 def _cleanup() -> None:
+    _RECORDED.clear()
     while _ROOTS:
         shutil.rmtree(_ROOTS.pop(), ignore_errors=True)
 

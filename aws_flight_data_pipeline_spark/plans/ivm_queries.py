@@ -27,80 +27,21 @@ rows doubled — what the oracle aggregates.
 
 from __future__ import annotations
 
-from aws_flight_data_pipeline_spark.functions import tmproots as _tmproots
-
-import shutil
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from aws_flight_data_pipeline_spark.functions import tmproots
 from aws_flight_data_pipeline_spark.plans.registry import builder, query
 from aws_flight_data_pipeline_spark.sources import ivm
 from aws_flight_data_pipeline_spark.sources import versioned as vt
 from aws_flight_data_pipeline_spark.sources.testdata import load_table
 
-#: Previous invocation's state directory per sf_dir — torn down when the
-#: builder runs again (same build-then-materialize contract as the tracked
-#: caches: by the next build, prior consumers have collected).
-_STATE_DIRS: dict[str, str] = {}
-
 #: Wall-clock per lifecycle step of the LAST ``ivm_incremental_view`` run —
 #: the bench harness copies this into its sidecar so the 8-step episode is
 #: graded at step grain, not as one opaque number.
 LAST_STEP_SECONDS: dict[str, float] = {}
-
-
-def _fresh_state_dir(sf_dir: str) -> str:
-    old = _STATE_DIRS.pop(sf_dir, None)
-    if old is not None:
-        shutil.rmtree(old, ignore_errors=True)
-    d = _tmproots.mkdtemp(prefix="afdp-ivm-")
-    _STATE_DIRS[sf_dir] = d
-    return d
-
-
-#: Session-prepared PRISTINE pre-increment state for the single-increment
-#: grain, keyed by sf_dir — the admission gate's ``_ensure_*`` precedent
-#: (verdict r12 #1): a production IVM deployment maintains its fact table
-#: and rollup on its own cadence, so the standing state is the measured
-#: operation's PRECONDITION, not part of its cost. Built once per session
-#: (the bench warm-up pays it) and CLONED via filesystem copy into a fresh
-#: working root per invocation, so every invocation's append runs against
-#: byte-identical pre-increment state — reuse cannot change results, and
-#: the timed grain is exactly "one append + one O(churn) refresh".
-_PRISTINE_SINGLE: dict[str, str] = {}
-
-
-def _single_base_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-    )
-
-
-def _ensure_single_base(spark: SparkSession, sf_dir: str) -> str:
-    root = _PRISTINE_SINGLE.get(sf_dir)
-    if root is None:
-        root = _tmproots.mkdtemp(prefix="afdp-ivm-pristine-")
-        base = _single_base_frame(spark, sf_dir)
-        # everything except the increment (and the % 8 == 0 rows, so the
-        # final state has a closed form the oracle can state)
-        vt.commit(
-            base.where(
-                (F.col("o_orderkey") % 8 != 0) & (F.col("o_orderkey") % 8 != 4)
-            ).repartitionByRange(4, "o_orderkey"),
-            f"{root}/fact",
-            stats_cols=("o_orderkey",),
-        )
-        ivm.refresh_view(
-            spark, f"{root}/fact", f"{root}/rollup",
-            group_cols=("grp",), sum_cols=("cents",),
-        )
-        _PRISTINE_SINGLE[sf_dir] = root
-    return root
 
 
 @builder(
@@ -143,7 +84,7 @@ def ivm_incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
     )
 
-    root = _fresh_state_dir(sf_dir)
+    root = tmproots.fresh("ivm", sf_dir)
     fact, rollup = f"{root}/fact", f"{root}/rollup"
 
     steps = LAST_STEP_SECONDS
@@ -230,23 +171,36 @@ def ivm_incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ivm_single_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pre-built base state (session-prepared, cloned per invocation — see
-    # _PRISTINE_SINGLE): the r13 form re-derived the full base commit +
-    # rollup build inside every invocation, ~2.4 s of the query's 2.6 s
-    # spent rebuilding state the grain declares as standing (r14 profile:
-    # build 3.0 s vs exec 0.1 s)
-    pristine = _ensure_single_base(spark, sf_dir)
-    root = _fresh_state_dir(f"{sf_dir}#single")
-    _tmproots.clone_tree(pristine, root)
+    base = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.col("o_orderpriority").alias("grp"),
+        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+    )
+
+    def build_base(pristine: str) -> None:
+        # everything except the increment (and the % 8 == 0 rows, so the
+        # final state has a closed form the oracle can state)
+        vt.commit(
+            base.where(
+                (F.col("o_orderkey") % 8 != 0) & (F.col("o_orderkey") % 8 != 4)
+            ).repartitionByRange(4, "o_orderkey"),
+            f"{pristine}/fact",
+            stats_cols=("o_orderkey",),
+        )
+        ivm.refresh_view(
+            spark, f"{pristine}/fact", f"{pristine}/rollup",
+            group_cols=("grp",), sum_cols=("cents",),
+        )
+
+    pristine = tmproots.standing("ivm-pristine", sf_dir, build_base)
+    root = tmproots.fresh("ivm-single", sf_dir, like=pristine)
     fact, rollup = f"{root}/fact", f"{root}/rollup"
-    base = _single_base_frame(spark, sf_dir)
 
     # THE measured operation: one append + one O(churn) refresh. Hash-
     # clustered increment (repartitionByRange's sampling job re-evaluates
     # the filtered orders scan, and this grain has no later range op that
-    # would prune the appended files — the r14 invindex refresh-batch
-    # precedent; the lifecycle EPISODE keeps range appends because its
-    # DELETE step is the pruning demo).
+    # would prune the appended files; the lifecycle EPISODE keeps range
+    # appends because its DELETE step is the pruning demo).
     vt.commit(
         base.where(F.col("o_orderkey") % 8 == 4).repartition(2, "o_orderkey"),
         fact,

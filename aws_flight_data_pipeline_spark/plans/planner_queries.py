@@ -24,22 +24,14 @@ un-hinted join.
 
 from __future__ import annotations
 
-from aws_flight_data_pipeline_spark.functions import tmproots as _tmproots
-
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_flight_data_pipeline_spark.functions import tmproots
 from aws_flight_data_pipeline_spark.plans.registry import builder, query
 from aws_flight_data_pipeline_spark.sources import table_stats as ts
 from aws_flight_data_pipeline_spark.sources import versioned as vt
 from aws_flight_data_pipeline_spark.sources.testdata import load_table
-
-#: Session-lifetime committed-table roots per sf_dir — REUSED across
-#: invocations (deterministic contents; see _ensure_tables).
-_STATE_DIRS: dict[str, str] = {}
 
 #: Plan-facts of the LAST ``stats_planned_join_tree`` run (fact table, join
 #: order, per-step cardinality estimates, broadcast decisions) — the
@@ -77,22 +69,12 @@ _EDGES = [
 
 
 def _ensure_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
-    """The six projected versioned tables for ``sf_dir``, committed ONCE
-    per session and reused by later invocations (lake tables are durable
-    state — a user pays the commit when the lake is loaded, not per
-    query; the snapshots tier sets the same precedent for shared dedup
-    state). Contents are deterministic per sf_dir, so reuse cannot
-    change results; a root without its ``_ready`` marker (crashed build)
-    is torn down and rebuilt."""
-    import os
+    """The six projected versioned tables for ``sf_dir``: a standing root
+    (:func:`tmproots.standing`), committed once per session and reused by
+    later invocations — lake tables are durable state a user pays for
+    when the lake is loaded, not per query."""
 
-    root = _STATE_DIRS.get(sf_dir)
-    if root is not None and not os.path.exists(os.path.join(root, "_ready")):
-        shutil.rmtree(root, ignore_errors=True)
-        _STATE_DIRS.pop(sf_dir, None)
-        root = None
-    if root is None:
-        root = _tmproots.mkdtemp(prefix="afdp-planner-")
+    def build(root: str) -> None:
         for name, (tbl, cols, n_files) in _TABLES.items():
             stats_cols = ("r_name",) if name == "region" else ()
             vt.commit(
@@ -100,9 +82,8 @@ def _ensure_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
                 f"{root}/{name}",
                 stats_cols=stats_cols,
             )
-        with open(os.path.join(root, "_ready"), "w") as fh:
-            fh.write("ok")
-        _STATE_DIRS[sf_dir] = root
+
+    root = tmproots.standing("planner", sf_dir, build)
     return {name: f"{root}/{name}" for name in _TABLES}
 
 

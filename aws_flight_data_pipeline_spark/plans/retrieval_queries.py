@@ -31,11 +31,10 @@ of exact BIGINT sums.
 
 from __future__ import annotations
 
-from aws_flight_data_pipeline_spark.functions import tmproots as _tmproots
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from aws_flight_data_pipeline_spark.functions import tmproots
 from aws_flight_data_pipeline_spark.functions.caching import tracked_cache
 from aws_flight_data_pipeline_spark.functions.text import tokens, word_count
 from aws_flight_data_pipeline_spark.plans.registry import builder, query
@@ -231,10 +230,6 @@ def text_lm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Previous inverted-index state dir per sf_dir (same teardown contract as
-#: the IVM builder's _STATE_DIRS).
-_INDEX_DIRS: dict[str, str] = {}
-
 #: Wall-clock per lifecycle step of the LAST ``inverted_index_maintenance``
 #: run — exported into the bench sidecar (step_breakdowns).
 LAST_INDEX_STEP_SECONDS: dict[str, float] = {}
@@ -299,19 +294,12 @@ LAST_INDEX_STEP_SECONDS: dict[str, float] = {}
     """.replace("{WC}", _WORD_COUNT_SQL),
 )
 def inverted_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from pyspark.sql import Observation
 
     from aws_flight_data_pipeline_spark.sources import invindex
     from aws_flight_data_pipeline_spark.sources import versioned as vt
 
-    old = _INDEX_DIRS.pop(sf_dir, None)
-    if old is not None:
-        shutil.rmtree(old, ignore_errors=True)
-    root = _tmproots.mkdtemp(prefix="afdp-invidx-")
-    _INDEX_DIRS[sf_dir] = root
+    root = tmproots.fresh("invidx", sf_dir)
     dpath, ipath = f"{root}/docs", f"{root}/index"
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -412,40 +400,21 @@ def inverted_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def index_single_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from aws_flight_data_pipeline_spark.sources import invindex
     from aws_flight_data_pipeline_spark.sources import versioned as vt
 
-    # pre-built base (docs table + refreshed index WITHOUT the increment):
-    # session-prepared once per sf_dir and CLONED into a fresh working root
-    # per invocation — the admission gate's _ensure_* precedent (a
-    # production index is standing state maintained on its own cadence; the
-    # measured grain is append + O(churn) refresh + index-answered BM25).
-    # The r13 form re-derived the full base commit + index build inside
-    # every invocation: r14 profile 3.6 s build vs 0.6 s exec. Contents are
-    # deterministic per sf_dir and the clone keeps each append fresh, so
-    # reuse cannot change results.
-    pkey = f"{sf_dir}#single-pristine"
-    pristine = _INDEX_DIRS.get(pkey)
-    if pristine is None:
-        pristine = _tmproots.mkdtemp(prefix="afdp-invidx-pristine-")
-        _INDEX_DIRS[pkey] = pristine
+    def build_base(base: str) -> None:
+        # the documents table and its refreshed index WITHOUT the increment
         docs0 = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         vt.commit(
             docs0.where(F.col("doc_id") % 6 != 3).repartitionByRange(4, "doc_id"),
-            f"{pristine}/docs",
+            f"{base}/docs",
             stats_cols=("doc_id",),
         )
-        invindex.refresh_index(spark, f"{pristine}/docs", f"{pristine}/index")
+        invindex.refresh_index(spark, f"{base}/docs", f"{base}/index")
 
-    key = f"{sf_dir}#single"
-    old = _INDEX_DIRS.pop(key, None)
-    if old is not None:
-        shutil.rmtree(old, ignore_errors=True)
-    root = _tmproots.mkdtemp(prefix="afdp-invidx-single-")
-    _INDEX_DIRS[key] = root
-    _tmproots.clone_tree(pristine, root)
+    pristine = tmproots.standing("invidx-pristine", sf_dir, build_base)
+    root = tmproots.fresh("invidx-single", sf_dir, like=pristine)
     dpath, ipath = f"{root}/docs", f"{root}/index"
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -455,9 +424,8 @@ def index_single_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pays a sampling job that re-evaluates the filtered docs scan, and
     # nothing downstream of this grain prunes the DOCS table by doc_id
     # range (the refresh consumes the change feed at file grain; BM25
-    # reads the index) — the r14 invindex refresh-batch precedent, with
-    # initial builds keeping range clustering where corpus-scale locality
-    # earns the sampling pass (guide §2.4).
+    # reads the index). Initial builds keep range clustering, where
+    # corpus-scale locality earns the sampling pass.
     vt.commit(
         docs.where(F.col("doc_id") % 6 == 3).repartition(2, "doc_id"),
         dpath,

@@ -149,7 +149,7 @@ def latest_version(path: str) -> int | None:
         try:
             with open(hp) as fh:
                 v = int(json.load(fh)["version"])
-        except (ValueError, KeyError, json.JSONDecodeError):
+        except (ValueError, KeyError, TypeError):  # torn or garbage hint
             v = None
     if v is None or not os.path.exists(_manifest_path(path, v)):
         versions = _list_versions(path)

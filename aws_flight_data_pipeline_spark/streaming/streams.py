@@ -276,7 +276,6 @@ def _stuck_fn(cfg: AnomalyConfig):
                 rows.append((icao24, int(r.last_contact), span, drift, is_stuck))
 
         state.update((",".join(map(str, lats)), ",".join(map(str, lons)), ",".join(map(str, times))))
-        state.setTimeoutDuration(3600 * 1000)
         yield pd.DataFrame(
             rows, columns=["icao24", "last_contact", "span_seconds", "drift_miles", "is_stuck"]
         )
@@ -290,14 +289,17 @@ def stateful_stuck_detector(
     """Cross-batch stuck-aircraft detection with a real state store — the
     reference's in-memory `aircraft_positions` history dict
     (anomaly_detector.py:656-681) made restart-safe and unbounded across
-    micro-batches. State per aircraft is a bounded ring of recent fixes."""
+    micro-batches. State per aircraft is a bounded ring of recent fixes.
+
+    No state timeout: under a processing-time timeout Spark runs a no-data
+    batch after every batch, so an ``availableNow`` query never ends."""
     cfg = cfg or AnomalyConfig()
     return records.groupBy("icao24").applyInPandasWithState(
         _stuck_fn(cfg),
         outputStructType=_STUCK_OUTPUT_SCHEMA,
         stateStructType=_STUCK_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

@@ -33,3 +33,17 @@ def _release_tracked_caches():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def drain(q, timeout_s: int) -> None:
+    """Wait for a finite (``availableNow``) streaming query to finish.
+
+    A query still running after ``timeout_s`` fails the test here, with its
+    ``exception()`` in the message, instead of letting the test assert on
+    partial output; the query is stopped first so it does not run on into
+    the next test. A query that stopped on an error raises it
+    (``awaitTermination`` re-raises)."""
+    if not q.awaitTermination(timeout_s):
+        err = q.exception()
+        q.stop()
+        pytest.fail(f"query did not drain in {timeout_s} s (exception: {err})")

@@ -8,6 +8,7 @@ import os
 import pytest
 
 from aws_flight_data_pipeline_spark.sources import versioned as vt
+from tests.conftest import drain
 
 
 @pytest.fixture()
@@ -187,7 +188,7 @@ def test_streaming_upsert_sink_converges_with_seq_ordering(spark, tmp_path):
     q = vt.streaming_upsert_sink(
         stream, table, str(tmp_path / "ckpt"), on=("id",), seq_col="ts"
     )
-    q.awaitTermination(180)
+    drain(q, 180)
     got = sorted((r["id"], r["payload"]) for r in vt.read(spark, table).collect())
     assert got == [(1, "k1-v3"), (2, "k2-v1"), (3, "k3-v1")]
     # replayed batch ids are skipped (the head's stamp survives vacuum)

@@ -29,6 +29,7 @@ from aws_flight_data_pipeline_spark.streaming.streams import (
     streaming_dedup,
     windowed_traffic_summary,
 )
+from tests.conftest import drain
 
 NOW = 1693401600
 
@@ -57,7 +58,7 @@ def _run_to_memory(stream_df, name, output_mode="append"):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     return q
 
 
@@ -96,7 +97,7 @@ def test_windowed_traffic_summary(spark, landing):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     rows = spark.sql("SELECT * FROM win_out_c").collect()
     assert len(rows) >= 2  # at least two distinct hour windows
     assert sum(r.total_flights for r in rows) == 3
@@ -111,7 +112,7 @@ def test_micro_batch_pipeline_end_to_end(spark, landing, tmp_path):
     q = micro_batch_pipeline(
         stream_raw_states(spark, landing), clean, quar, ckpt, now_provider=lambda: NOW
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     clean_df = spark.read.parquet(clean)
     quar_df = spark.read.parquet(quar)
     assert clean_df.count() == 1 and quar_df.count() == 1
@@ -155,7 +156,7 @@ def test_micro_batch_pipeline_equals_batch_operators(spark, landing, tmp_path):
     q = micro_batch_pipeline(
         _one_poll_per_batch(spark, landing), clean, quar, ckpt, now_provider=lambda: NOW + 60
     )
-    q.awaitTermination(180)
+    drain(q, 180)
     assert q.exception() is None
     assert sum(p.numInputRows > 0 for p in q.recentProgress) == len(polls)
 
@@ -182,7 +183,7 @@ def test_micro_batch_pipeline_survives_null_last_contact_batch(spark, landing, t
     ])
     clean, quar, ckpt = (str(tmp_path / p) for p in ("clean", "quar", "ckpt"))
     q = micro_batch_pipeline(stream_raw_states(spark, landing), clean, quar, ckpt)
-    q.awaitTermination(120)
+    drain(q, 120)
     assert q.exception() is None
     rows = spark.read.parquet(quar).collect()  # last_contact is a critical field
     assert sorted(r.icao24 for r in rows) == ["abc123", "def456"]
@@ -191,7 +192,7 @@ def test_micro_batch_pipeline_survives_null_last_contact_batch(spark, landing, t
     # the stream goes on from its checkpoint with the next poll
     _write_batch(landing, "b2.json", NOW + 30, [_state("abc123", "UAL123", NOW + 20, -73.9, 40.8)])
     q = micro_batch_pipeline(stream_raw_states(spark, landing), clean, quar, ckpt)
-    q.awaitTermination(120)
+    drain(q, 120)
     assert q.exception() is None
     assert [r.icao24 for r in spark.read.parquet(clean).collect()] == ["abc123"]
 
@@ -207,7 +208,7 @@ def test_micro_batch_pipeline_jobs_and_files_per_batch(spark, landing, tmp_path)
     q = micro_batch_pipeline(
         stream_raw_states(spark, landing), clean, quar, ckpt, now_provider=lambda: NOW
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     assert q.exception() is None
     assert sum(p.numInputRows > 0 for p in q.recentProgress) == 1
     # the landed document is read and parsed once
@@ -254,14 +255,14 @@ def test_micro_batch_pipeline_resumes_json_source_checkpoint(spark, landing, tmp
         .json(landing)
     )
     q = micro_batch_pipeline(json_source, clean, quar, ckpt, now_provider=lambda: NOW + 30)
-    q.awaitTermination(120)
+    drain(q, 120)
     assert q.exception() is None
 
     _write_batch(landing, "b2.json", NOW + 30, second)
     q = micro_batch_pipeline(
         stream_raw_states(spark, landing), clean, quar, ckpt, now_provider=lambda: NOW + 30
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     assert q.exception() is None
     assert [p.numInputRows for p in q.recentProgress if p.numInputRows > 0] == [1]
     written = spark.read.parquet(clean).unionByName(spark.read.parquet(quar)).collect()
@@ -330,7 +331,7 @@ def test_streaming_corpus_dedup_drops_exact_dups(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     out = spark.sql("SELECT fp FROM corpus_dedup")
     assert out.count() == n_unique <= n_total
     assert out.distinct().count() == n_unique  # one survivor per fingerprint
@@ -401,7 +402,7 @@ def test_streaming_quality_gate_matches_batch_rules(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     out = spark.sql("SELECT * FROM quality_gate").collect()
     assert len(out) == docs.count()
 
@@ -451,7 +452,7 @@ def test_streaming_sessionization_matches_batch_session_windows(spark, tmp_path)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    drain(q, 180)
     streamed = spark.sql("SELECT * FROM sess_out")
 
     batch = (
@@ -577,7 +578,7 @@ def test_streaming_sketch_rollup_matches_batch_sketch(spark, tmp_path):
         state,
         str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(120)
+    drain(q, 120)
 
     final = vt.read(spark, state)
     est = {
@@ -630,7 +631,7 @@ def test_sketch_rollup_replay_of_committed_batch_is_skipped(spark, sf_dir, tmp_p
         q = streaming_sketch_rollup(
             stream_documents(spark, src, max_files_per_trigger=1), state, ckpt
         )
-        q.awaitTermination(120)
+        drain(q, 120)
         return q
 
     def state_rows():
@@ -694,7 +695,7 @@ def test_streaming_heavy_hitters_matches_batch_sketch(spark, tmp_path):
         state,
         str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(120)
+    drain(q, 120)
 
     from aws_flight_data_pipeline_spark.sources import versioned as vt
 

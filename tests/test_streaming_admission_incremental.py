@@ -28,6 +28,7 @@ from aws_flight_data_pipeline_spark.streaming.streams import (
     streaming_corpus_admission,
     streaming_corpus_admission_incremental,
 )
+from tests.conftest import drain
 
 # X and its two dups: X_NEAR changes the last of 40 distinct tokens
 # (shingle Jaccard 35/41 ≈ 0.85, both LSH bands collide — verified
@@ -91,7 +92,7 @@ def test_stateless_tier_admits_cross_batch_near_dups(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     got = _decisions(spark.sql("SELECT * FROM stateless_adm"))
     assert got[101][2] and got[201][2] and got[202][2]  # all admitted (the gap)
     # vs-corpus rejection still works (identical text is exact AND — with
@@ -115,7 +116,7 @@ def test_incremental_index_rejects_cross_batch_dups(spark, tmp_path):
         str(tmp_path / "ckpt"),
         decisions,
     )
-    q.awaitTermination(120)
+    drain(q, 120)
 
     out = vt.read(spark, decisions)
     got = _decisions(out)
@@ -156,7 +157,7 @@ def test_incremental_intra_batch_keep_first(spark, tmp_path):
         str(tmp_path / "ckpt"),
         str(tmp_path / "adm_decisions"),
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     got = _decisions(vt.read(spark, str(tmp_path / "adm_decisions")))
     assert got[301][2] is True
     assert got[302][2] is False and got[303][2] is False
@@ -179,7 +180,7 @@ def _run_incremental(spark, tmp_path):
         ckpt,
         decisions,
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     return state, decisions, ckpt
 
 

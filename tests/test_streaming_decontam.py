@@ -23,6 +23,7 @@ from aws_flight_data_pipeline_spark.streaming.streams import (
     stream_documents,
     streaming_decontam_gate,
 )
+from tests.conftest import drain
 
 _EVAL = " ".join(f"bench{i:02d}" for i in range(12))  # 10 distinct shingles
 _CLEAN1 = " ".join(f"alpha{i:02d}" for i in range(12))
@@ -55,7 +56,7 @@ def test_gate_stream_equals_batch_and_is_exactly_once(spark, tmp_path):
 
     docs = stream_documents(spark, src, max_files_per_trigger=1)
     q = streaming_decontam_gate(docs, ipath, corpus, decisions, ckpt)
-    q.awaitTermination(120)
+    drain(q, 120)
 
     got_corpus = {r["doc_id"] for r in vt.read(spark, corpus).collect()}
     assert got_corpus == {1, 3}
@@ -98,5 +99,5 @@ def test_gate_stream_equals_batch_and_is_exactly_once(spark, tmp_path):
     q2 = streaming_decontam_gate(
         docs2, ipath, corpus, decisions, str(tmp_path / "ckpt")
     )
-    q2.awaitTermination(120)
+    drain(q2, 120)
     assert 5 in {r["doc_id"] for r in vt.read(spark, corpus).collect()}

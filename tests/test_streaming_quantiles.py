@@ -22,6 +22,7 @@ from aws_flight_data_pipeline_spark.streaming.streams import (
     quantile_rollup_snapshot,
     streaming_quantile_rollup,
 )
+from tests.conftest import drain
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -49,7 +50,7 @@ def test_streaming_quantile_state_equals_batch_histogram(spark, tmp_path):
     )
     state = str(tmp_path / "q_state")
     q = streaming_quantile_rollup(stream, state, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    drain(q, 120)
 
     # one state version per micro-batch
     assert [vt._read_manifest(state, v)["batch_id"] for v in vt._list_versions(state)] == [0, 1, 2]
@@ -80,7 +81,7 @@ def test_intermediate_state_is_strictly_before_batch(spark, tmp_path):
     )
     state = str(tmp_path / "q_state")
     q = streaming_quantile_rollup(stream, state, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    drain(q, 120)
 
     # a replay of batch 1 must see EXACTLY v0 = chunk 0's histogram — the
     # guard that makes the at-least-once merge idempotent
@@ -108,7 +109,7 @@ def test_state_version_pruning_keeps_reads_intact(spark, tmp_path):
     )
     state = str(tmp_path / "q_state")
     q = streaming_quantile_rollup(stream, state, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    drain(q, 120)
 
     before = _rows(vt.read(spark, state))
     stats = vt.vacuum(state, keep_last=2, min_age_seconds=0)
@@ -149,7 +150,7 @@ def test_crash_during_state_write_keeps_last_committed_state(
 
     for chunk in chunks[:2]:
         chunk.coalesce(1).write.mode("append").parquet(src)
-    run().awaitTermination(120)
+    drain(run(), 120)
     chunks[2].coalesce(1).write.mode("append").parquet(src)
 
     write_parquet = DataFrameWriter.parquet
@@ -165,13 +166,13 @@ def test_crash_during_state_write_keeps_last_committed_state(
 
     monkeypatch.setattr(DataFrameWriter, "parquet", torn_state_write)
     with pytest.raises(Exception, match="injected crash"):
-        run().awaitTermination(120)
+        drain(run(), 120)
     monkeypatch.undo()
 
     two = dd_histogram(chunks[0].unionByName(chunks[1]), "scope", "x")
     assert _rows(vt.read(spark, state)) == _rows(two)
 
-    run().awaitTermination(120)
+    drain(run(), 120)
     assert [vt._read_manifest(state, v)["batch_id"] for v in vt._list_versions(state)] == [0, 1, 2]
     assert _rows(vt.read(spark, state)) == _rows(
         dd_histogram(orders.drop("k"), "scope", "x")

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from aws_flight_data_pipeline_spark.operators.sequence import runs_to_intervals, state_runs
 from aws_flight_data_pipeline_spark.sources import versioned as vt
 from aws_flight_data_pipeline_spark.streaming.streams import streaming_scd2_dimension
+from tests.conftest import drain
 
 SF_DIR = "/root/testdata/sf0.001"
 _COLS = ("user_id", "state", "from_us", "to_us")
@@ -46,7 +47,7 @@ def test_streamed_dimension_equals_batch_intervals(spark, tmp_path):
     )
     dim = str(tmp_path / "dim")
     q = streaming_scd2_dimension(stream, dim, str(tmp_path / "ckpt"))
-    q.awaitTermination(180)
+    drain(q, 180)
 
     assert len(vt._list_versions(dim)) == 3  # one snapshot per micro-batch
     streamed = vt.read(spark, dim)
@@ -72,7 +73,7 @@ def test_replayed_batch_is_a_noop(spark, tmp_path):
     stream = spark.readStream.schema(events.schema).parquet(src)
     dim = str(tmp_path / "dim")
     q = streaming_scd2_dimension(stream, dim, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    drain(q, 120)
     before = vt.latest_version(dim)
 
     # simulate an at-least-once replay of batch 0 (crash before checkpoint
@@ -83,7 +84,7 @@ def test_replayed_batch_is_a_noop(spark, tmp_path):
         dim,
         str(tmp_path / "ckpt2"),
     )
-    q2.awaitTermination(120)
+    drain(q2, 120)
     assert vt.latest_version(dim) == before
 
 
@@ -128,7 +129,7 @@ def test_out_of_order_events_fold_in_true_time_order(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    drain(q, 180)
 
     def us(sec):
         return int((base + dt.timedelta(seconds=sec)).replace(
@@ -174,7 +175,7 @@ def test_ooo_state_survives_delimiter_heavy_event_types(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    drain(q, 180)
     rows = [
         (r["state"],) for r in spark.sql(
             "SELECT state FROM scd2_ooo_delim WHERE user_id = 1"

@@ -27,6 +27,7 @@ from aws_flight_data_pipeline_spark.streaming.streams import (
     streaming_unified_admission_gate,
     unified_admission_batch,
 )
+from tests.conftest import drain
 
 SCHEMA = "doc_id long, text string, source string, lang string"
 
@@ -133,7 +134,7 @@ def test_unified_gate_stream_equals_batch_one_commit_per_table(spark, tmp_path):
         corpus,
         decisions,
     )
-    q.awaitTermination(180)
+    drain(q, 180)
 
     dec = {r["doc_id"]: r for r in vt.read(spark, decisions).collect()}
     assert set(dec) == set(EXPECT)
@@ -191,7 +192,7 @@ def _run_gate(spark, root, ipath: str) -> dict:
         paths["corpus"],
         paths["decisions"],
     )
-    q.awaitTermination(180)
+    drain(q, 180)
     return paths
 
 
@@ -332,7 +333,7 @@ def test_unified_gate_soak_bounded_state_flat_latency(spark, tmp_path):
             str(tmp_path / "corpus"),
             str(tmp_path / "decisions"),
         )
-        q.awaitTermination(600)
+        drain(q, 600)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", "32")
 

@@ -26,12 +26,16 @@ def _df(spark, lo, hi, tag):
 # ---------------------------------------------------------------- head hint
 
 
-@pytest.mark.slow
 def test_long_chain_reads_touch_bounded_manifests(spark, table, monkeypatch):
-    # ~100 commits (a streaming sink's afternoon); resolving the head and
-    # reading the table must NOT list or parse the whole chain
-    for i in range(100):
-        vt.commit(spark.range(i, i + 1).selectExpr("id", "'x' AS tag"), table)
+    # a 100-version chain (a streaming sink's afternoon): one real 100-row
+    # commit, then 99 metadata-only commits through the write path;
+    # resolving the head and reading the table must NOT list or parse the
+    # whole chain
+    vt.commit(spark.range(0, 100).selectExpr("id", "'x' AS tag"), table)
+    pm = vt._read_manifest(table, 0)
+    for v in range(1, 100):
+        vt._publish_version(table, pm, "append", keep=pm["files"])
+        pm = vt._read_manifest(table, v)
     reads = []
     real = vt._read_manifest
 
@@ -69,6 +73,12 @@ def test_head_hint_survives_staleness_and_deletion(spark, table):
     with open(vt._head_path(table), "w") as fh:
         fh.write("not json")
     assert vt.latest_version(table) == 1
+    # well-formed JSON of the wrong shape: fall back to listing too
+    for garbage in ([], {"version": None}, "5"):
+        with open(vt._head_path(table), "w") as fh:
+            json.dump(garbage, fh)
+        assert vt.latest_version(table) == 1
+        assert vt.read(spark, table).count() == 8
 
 
 # ------------------------------------------------------- retry-with-rebase

@@ -9,6 +9,7 @@ import os
 import pytest
 
 from aws_flight_data_pipeline_spark.sources import versioned as vt
+from tests.conftest import drain
 
 
 @pytest.fixture()
@@ -190,7 +191,7 @@ def test_streaming_sink_is_exactly_once(spark, table, tmp_path):
         spark.readStream.schema("id long").option("maxFilesPerTrigger", 1).parquet(src)
     )
     q = vt.streaming_versioned_sink(stream, table, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    drain(q, 120)
 
     assert vt.read(spark, table).count() == 300
     assert len(vt._list_versions(table)) == 3
