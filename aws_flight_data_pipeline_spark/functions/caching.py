@@ -47,10 +47,10 @@ def tracked_cache(df: DataFrame) -> DataFrame:
     return df
 
 
-#: (SparkContext, persistent-RDD ids) created by tracked_localcheckpoint —
-#: released by id through getPersistentRDDs, since the checkpoint's
-#: internal RDD is not reachable through the returned DataFrame.
-_LIVE_RDD_IDS: list[tuple] = []
+#: The persisted JVM RDDs behind tracked_localcheckpoint frames: PySpark has
+#: no public call that unpersists a local checkpoint, so each is released
+#: through the RDD its analyzed plan scans.
+_LIVE_RDDS: list = []
 
 
 def tracked_localcheckpoint(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -81,11 +81,8 @@ def tracked_localcheckpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     deployment that needs recovery across a long-lived pipeline uses
     reliable ``checkpoint()`` to the checkpoint dir instead.
     """
-    sc = df.sparkSession.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
     out = df.localCheckpoint(eager=eager)
-    new_ids = set(sc._jsc.getPersistentRDDs().keySet().toArray()) - before
-    _LIVE_RDD_IDS.append((sc, new_ids))
+    _LIVE_RDDS.append(out._jdf.queryExecution().analyzed().rdd())
     return out
 
 
@@ -110,14 +107,11 @@ def release_tracked(blocking: bool = False) -> int:
             released += 1
         except Exception:
             pass
-    while _LIVE_RDD_IDS:
-        sc, ids = _LIVE_RDD_IDS.pop()
+    while _LIVE_RDDS:
+        rdd = _LIVE_RDDS.pop()
         try:
-            live = sc._jsc.getPersistentRDDs()
-            for rid in ids:
-                if live.containsKey(rid):
-                    live.get(rid).unpersist(blocking)
-                    released += 1
+            rdd.unpersist(blocking)
+            released += 1
         except Exception:
             pass
     while _LIVE_VIEWS:

@@ -130,8 +130,8 @@ class WorkloadMonitor:
         self._plan_rows: list[tuple] = []
 
     def record_plan_facts(self, name: str, facts: dict) -> None:
-        """Append a stats-planner decision (``plan_join_tree``'s facts dict —
-        ``plans/planner_queries.LAST_PLAN_FACTS`` format) to the monitor's
+        """Append a stats-planner decision (the facts dict that
+        ``table_stats.plan_join_tree`` returns) to the monitor's
         planner-evidence table: one row per planned step with the chosen
         strategy and the System-R cardinality estimate that drove it. This
         is the piece the reference's optimizer report cannot have — its

@@ -33,11 +33,6 @@ from aws_flight_data_pipeline_spark.sources import table_stats as ts
 from aws_flight_data_pipeline_spark.sources import versioned as vt
 from aws_flight_data_pipeline_spark.sources.testdata import load_table
 
-#: Plan-facts of the LAST ``stats_planned_join_tree`` run (fact table, join
-#: order, per-step cardinality estimates, broadcast decisions) — the
-#: monitor-format evidence the plan tests and the bench sidecar read.
-LAST_PLAN_FACTS: dict = {}
-
 #: Dimensions broadcast under this row count; the two fact tables
 #: (lineitem, orders at sf0.1) stay above it so their edge remains the one
 #: shuffled join — the shape that survives a 100x scale-up, where every
@@ -102,8 +97,6 @@ def build_planned_join(spark: SparkSession, sf_dir: str):
         broadcast_threshold_rows=_BROADCAST_ROWS,
         filters={"region": {"r_name": ("ASIA", "ASIA")}},
     )
-    LAST_PLAN_FACTS.clear()
-    LAST_PLAN_FACTS.update(facts)
     return df, facts
 
 

@@ -113,20 +113,16 @@ def _partitions_pred(parts: list[dict], partition_cols: tuple[str, ...]) -> Colu
 
 def _overwrite_partitions(df: DataFrame, path: str, partition_cols: tuple[str, ...]) -> None:
     """Dynamic partition overwrite: atomically replace ONLY the partitions
-    present in ``df``; the session's overwrite mode is restored after."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.repartition(*[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            .option("compression", "snappy")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    present in ``df``. The mode is a per-write option (it takes precedence
+    over the session conf), so no other writer on the session sees it."""
+    (
+        df.repartition(*[F.col(c) for c in partition_cols])
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("compression", "snappy")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def upsert_partitions(
@@ -163,18 +159,18 @@ def upsert_partitions(
         )
     existing = spark.read.parquet(path).filter(_partitions_pred(parts, partition_cols))
     keys = increment.select(*key_cols).distinct()
-    # localCheckpoint materializes the (small, affected-slice) survivor set
-    # BEFORE the overwrite — Spark refuses to lazily overwrite an input path,
-    # and the barrier also guarantees the accounting counts and the written
-    # rows are the same snapshot
-    survivors = existing.join(keys, list(key_cols), "left_anti").localCheckpoint()
-    n_existing = existing.count()
-    kept = survivors.count()
-    replaced = n_existing - kept
-    inserted = increment.count()
+    # the (small, affected-slice) survivor set is materialized BEFORE the
+    # overwrite — Spark refuses to lazily overwrite an input path, and the
+    # barrier also guarantees the accounting counts and the written rows are
+    # the same snapshot
+    with materialized(existing.join(keys, list(key_cols), "left_anti")) as survivors:
+        n_existing = existing.count()
+        kept = survivors.count()
+        replaced = n_existing - kept
+        inserted = increment.count()
 
-    merged = survivors.unionByName(increment.select(*survivors.columns))
-    _overwrite_partitions(merged, path, partition_cols)
+        merged = survivors.unionByName(increment.select(*survivors.columns))
+        _overwrite_partitions(merged, path, partition_cols)
     return spark.range(1).select(
         F.lit(len(parts)).cast("bigint").alias("partitions_touched"),
         F.lit(replaced).cast("bigint").alias("rows_replaced"),
@@ -247,10 +243,9 @@ def merge_rollup_increment(
     )
     # materialize before overwriting the path being read (same barrier as
     # upsert_partitions) — the affected slice of a rollup is small by design
-    merged = merged.localCheckpoint()
-    groups_written = merged.count()
-
-    _overwrite_partitions(merged, rollup_path, partition_cols)
+    with materialized(merged) as merged:
+        groups_written = merged.count()
+        _overwrite_partitions(merged, rollup_path, partition_cols)
     return spark.range(1).select(
         F.lit(len(parts)).cast("bigint").alias("partitions_touched"),
         F.lit(groups_written).cast("bigint").alias("groups_written"),

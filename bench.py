@@ -9,8 +9,9 @@ overflowed the window, and was recorded unparsed. Discipline now: the printed
 line is compact-serialized, carries per-query timings for the driver-registered
 queries only (the 50-query correctness surface), and is hard-capped below the
 window with a trim loop. The FULL per-query table (every headline entry, 3 dp)
-is written to BENCH_FULL.json next to this script every run, so
-round-over-round per-query comparison never loses entries.
+is written to BENCH_FULL.json next to this script every run (one fixed,
+gitignored file, overwritten each run), so run-over-run per-query comparison
+never loses entries.
 
 One shared SparkSession for the whole run (per-query session startup would
 dwarf sf0.1 query time — the fixed-overhead risk flagged in SURVEY §6). Each
@@ -516,21 +517,10 @@ def main() -> None:
     # would compound over a long-lived session).
     leaked_caches = spark.sparkContext._jsc.getPersistentRDDs().size()
 
-    # Full table (all headline entries, 3 dp) — sidecar, never truncated.
-    # Each query records BOTH the min (the headline statistic; filters
-    # episodic host stalls) and every raw run, so the min-of-two filter can
-    # never mask a regression trend: round-over-round diffs see the spread.
-    # The sidecar is named per round (BENCH_FULL_rNN.json) so past rounds
-    # stay diffable; BENCH_FULL.json remains as the "latest" pointer. The
-    # round number is inferred monotonically over ALL committed BENCH*_r*
-    # families (r9 fix: driver-line history alone lags when a round records
-    # nothing) and can be pinned with SPARK_GRAFT_ROUND.
-    from aws_flight_data_pipeline_spark.functions.rounds import (
-        full_bench_path,
-        infer_round,
-    )
-
-    round_no = infer_round(repo_dir)
+    # Full table (all headline entries, 3 dp), never truncated. Each query
+    # records BOTH the min (the headline statistic; filters episodic host
+    # stalls) and every raw run, so the min-of-two filter can never mask a
+    # regression trend: run-over-run diffs see the spread.
     host_meta["timestamp_end"] = time.time()
     host_meta["loadavg_end"] = list(os.getloadavg())
     host_meta["wall_seconds"] = round(
@@ -573,15 +563,8 @@ def main() -> None:
         "episodes": episode_timings,
         "step_breakdowns": step_breakdowns,
     }
-    # Per-round sidecar via full_bench_path: the driver's POST-GATE bench is
-    # diverted to _post.json so it never clobbers the builder's committed
-    # gated artifact (verdict r12 #3).
-    for path in (
-        os.path.join(repo_dir, "BENCH_FULL.json"),
-        full_bench_path(repo_dir, round_no),
-    ):
-        with open(path, "w") as f:
-            json.dump(full_payload, f, indent=1)
+    with open(os.path.join(repo_dir, "BENCH_FULL.json"), "w") as f:
+        json.dump(full_payload, f, indent=1)
 
     # Printed line: driver-registered queries only, 2 dp, compact separators,
     # hard length cap (trim loop drops trailing entries if a future round

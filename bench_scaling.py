@@ -46,13 +46,13 @@ JVM state (shuffle-file GC, heap pressure after thousands of stages), not
 the query (a fresh session reproduces the honest number). Per-process
 isolation removes that confound the same way min-of-N removes host stalls.
 
-Run: python bench_scaling.py  -> writes BENCH_SCALING_r{NN}.json and prints
-one JSON line. Min-of-N runs per point to cut scheduler noise.
+Run: python bench_scaling.py  -> writes BENCH_SCALING.json (one fixed,
+gitignored file, overwritten each run) and prints one JSON line. Min-of-N
+runs per point to cut scheduler noise.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import math
 import os
@@ -807,22 +807,7 @@ def main() -> None:
     results: dict[str, dict] = {}
     large: dict[str, dict] = {}
     errors: dict[str, str] = {}
-    skipped: dict[str, str] = {}
-    # SPARK_GRAFT_SWEEP_ONLY: comma list restricting the per-query sweep to
-    # the named pipelines — used when a round's sweep budget must go to NEW
-    # evidence (changed operators, new deep decades) rather than
-    # re-confirming unchanged code; every skipped pipeline is recorded with
-    # a reason so the artifact says what was NOT measured this round.
-    only = set(
-        s for s in os.environ.get("SPARK_GRAFT_SWEEP_ONLY", "").split(",") if s
-    )
     for name in HEAVY:
-        if only and name not in only:
-            skipped[name] = (
-                "unchanged code this round (SPARK_GRAFT_SWEEP_ONLY); the "
-                "previous round's artifact carries the standing measurement"
-            )
-            continue
         # one transient child failure (OOM pressure from a prior JVM's
         # teardown, a host stall) must not void an hour of completed
         # measurements: retry once in a fresh process; record a double
@@ -844,17 +829,7 @@ def main() -> None:
         results[name] = out["small_sf"]
         large[name] = out["large_scale"]
 
-    skip = set(
-        s for s in os.environ.get("SPARK_GRAFT_SWEEP_SKIP", "").split(",") if s
-    )
-
-    def _oc_block(flag: str, key: str) -> dict:
-        if key in skip:
-            return {
-                "skipped": True,
-                "reason": "unchanged code this round; see the previous "
-                "round's artifact for the standing measurement",
-            }
+    def _oc_block(flag: str) -> dict:
         proc = subprocess.run(
             [sys.executable, os.path.abspath(__file__), flag],
             capture_output=True,
@@ -863,18 +838,11 @@ def main() -> None:
         )
         return json.loads(proc.stdout.strip().splitlines()[-1])
 
-    index_refresh = _oc_block("--index-refresh", "index_refresh")
-    decontam_incremental = _oc_block(
-        "--decontam-increment", "decontam_incremental"
-    )
+    index_refresh = _oc_block("--index-refresh")
+    decontam_incremental = _oc_block("--decontam-increment")
 
     # verdict-r10 #2/#8: per-stage dedup breakdown + the x2000 point — own
     # child JVMs like every other measurement; a failure records, not voids.
-    # The stage breakdown and hash-family comparison re-measure CODE THAT
-    # DID NOT CHANGE in a round (their r12 evidence stands verbatim) — they
-    # are skippable via SPARK_GRAFT_SWEEP_SKIP to keep a round's sweep
-    # budget on the NEW evidence; the artifact records what was skipped
-    # and why rather than silently omitting the keys.
     extras: dict[str, dict] = {}
     for flag, key in (
         ("--dedup-stages", "dedup_stage_breakdown"),
@@ -886,13 +854,6 @@ def main() -> None:
         ("--semdedup-xxlarge", "semdedup_xxlarge"),
         ("--family-heavy-df", "family_agreement_heavy_df"),
     ):
-        if key in skip:
-            extras[key] = {
-                "skipped": True,
-                "reason": "unchanged code this round; see the previous "
-                "round's artifact for the standing measurement",
-            }
-            continue
         proc = subprocess.run(
             [sys.executable, os.path.abspath(__file__), flag],
             capture_output=True,
@@ -908,9 +869,6 @@ def main() -> None:
             )
 
     repo_dir = os.path.dirname(os.path.abspath(__file__))
-    from aws_flight_data_pipeline_spark.functions.rounds import infer_round
-
-    round_no = infer_round(repo_dir)
     payload = {
         "metric": "heavy_pipeline_scaling",
         "sfs": list(SFS),
@@ -926,11 +884,8 @@ def main() -> None:
         **extras,
         "bar": "exponent_last_decade <= 1.2 (linear-ish); raw is a conservative bound",
         "child_errors": errors,
-        "skipped_queries": skipped,
     }
-    with open(
-        os.path.join(repo_dir, f"BENCH_SCALING_r{round_no:02d}.json"), "w"
-    ) as f:
+    with open(os.path.join(repo_dir, "BENCH_SCALING.json"), "w") as f:
         json.dump(payload, f, indent=1)
     print(json.dumps(payload, separators=(",", ":")))
 

@@ -47,3 +47,10 @@ def drain(q, timeout_s: int) -> None:
         err = q.exception()
         q.stop()
         pytest.fail(f"query did not drain in {timeout_s} s (exception: {err})")
+
+
+def persisted_rdd_ids(spark) -> set[int]:
+    """Ids of the session's persisted RDDs. A leak check compares id sets
+    (nothing new after the call), not counts: the context cleaner may
+    unpersist an earlier test's garbage-collected RDD in between."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from aws_flight_data_pipeline_spark.functions import caching
 from aws_flight_data_pipeline_spark.plans.registry import all_queries
+from tests.conftest import persisted_rdd_ids
 
 # two cache-using REGISTERED queries: the fuzzy-dedup pipeline tracks
 # bands/cands/cand_docs; the wide pHash near-dup tracks its hash and
@@ -55,8 +56,8 @@ def test_build_ahead_reverse_evaluation(spark, sf_dir):
 
 
 def test_tracked_localcheckpoint_releases_persistent_rdds(spark):
-    """tracked_localcheckpoint (round 13): the checkpoint's internal
-    persisted RDD is registered by id and release_tracked() unpersists it —
+    """tracked_localcheckpoint: the checkpoint's internal persisted RDD
+    (eager or deferred) is registered and release_tracked() unpersists it —
     bench.py's leaked_caches == 0 contract must hold for checkpoint-based
     plans exactly as for cache-based ones. Also pins the semantic point:
     the checkpointed frame's plan is a truncated leaf (no lineage back to
@@ -68,20 +69,20 @@ def test_tracked_localcheckpoint_releases_persistent_rdds(spark):
         tracked_localcheckpoint,
     )
 
-    sc = spark.sparkContext
     release_tracked()
-    before = sc._jsc.getPersistentRDDs().size()
+    before = persisted_rdd_ids(spark)
 
     src = spark.range(0, 1000).select(
         "id", F.pmod(F.col("id"), F.lit(7)).alias("k")
     )
-    ck = tracked_localcheckpoint(src.groupBy("k").count())
-    assert sc._jsc.getPersistentRDDs().size() > before  # checkpoint persisted
-    rows = {(r["k"], r["count"]) for r in ck.collect()}
-    assert rows == {(i, 143 if i < 6 else 142) for i in range(7)}
-    # lineage truncated: the analyzed plan is a scan over an existing RDD
-    plan = ck._jdf.queryExecution().analyzed().toString()
-    assert "LogicalRDD" in plan or "ExistingRDD" in plan
+    for eager in (True, False):
+        ck = tracked_localcheckpoint(src.groupBy("k").count(), eager=eager)
+        assert persisted_rdd_ids(spark) - before  # checkpoint persisted
+        rows = {(r["k"], r["count"]) for r in ck.collect()}
+        assert rows == {(i, 143 if i < 6 else 142) for i in range(7)}
+        # lineage truncated: the analyzed plan is a scan over an existing RDD
+        plan = ck._jdf.queryExecution().analyzed().toString()
+        assert "LogicalRDD" in plan or "ExistingRDD" in plan
 
-    release_tracked()
-    assert sc._jsc.getPersistentRDDs().size() == before
+        release_tracked()
+        assert not persisted_rdd_ids(spark) - before

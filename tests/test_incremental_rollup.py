@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from aws_flight_data_pipeline_spark.sources.sinks import merge_rollup_increment
 from aws_flight_data_pipeline_spark.sources.testdata import load_table
+from tests.conftest import persisted_rdd_ids
 
 GROUP = ("event_day", "event_type")
 PART = ("event_day",)
@@ -42,11 +43,13 @@ def _events(spark):
 def test_incremental_rollup_equals_batch_aggregation(spark, tmp_path):
     e = _events(spark)
     path = str(tmp_path / "rollup")
+    persisted = persisted_rdd_ids(spark)
     for i in range(3):
         acct = merge_rollup_increment(
             e.filter(F.col("event_id") % 3 == i), path, GROUP, PART, _partials(), _mergers()
         ).first()
         assert acct["partitions_touched"] > 0
+        assert not persisted_rdd_ids(spark) - persisted  # merged checkpoint released
 
     rolled = spark.read.parquet(path)
     batch = e.groupBy(*GROUP).agg(*[c.alias(n) for n, c in _partials().items()])

@@ -16,6 +16,7 @@ from aws_flight_data_pipeline_spark.sources.sinks import (
     with_time_partitions,
     write_processed,
 )
+from tests.conftest import persisted_rdd_ids
 from tests.flight_fixtures import PROCESSED_DDL, processed_rows
 
 
@@ -112,7 +113,9 @@ def test_upsert_partitions_touches_only_affected(spark, tmp_path):
             for f in glob.glob(os.path.join(untouched_glob, "*.parquet"))
         }
 
+    persisted = persisted_rdd_ids(spark)
     report = upsert_partitions(increment, path).collect()[0]
+    assert not persisted_rdd_ids(spark) - persisted  # survivor checkpoint released
     after = spark.read.parquet(path)
 
     amended_key = increment.filter(F.col("origin_country") == "AMENDED").first()

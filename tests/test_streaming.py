@@ -270,19 +270,32 @@ def test_micro_batch_pipeline_resumes_json_source_checkpoint(spark, landing, tmp
 
 
 @pytest.mark.slow
-def test_stateful_stuck_detector_across_batches(spark, landing):
+def test_stateful_stuck_detector_across_batches(spark, landing, tmp_path):
     # same position fixes spanning > 30 min arriving over TWO micro-batches —
-    # only cross-batch state can see the full span
+    # only cross-batch state can see the full span. b2 lands after the first
+    # run drained, so the restart from the checkpoint reads it as its own
+    # batch; the parquet sink keeps both runs' rows (a memory sink does not)
     fixes1 = [_state("abc123", "UAL123", NOW + i * 600, -74.0, 40.7, vel=2.0) for i in range(3)]
     fixes2 = [_state("abc123", "UAL123", NOW + (3 + i) * 600, -74.0001, 40.7001, vel=2.0) for i in range(2)]
-    _write_batch(landing, "b1.json", NOW, fixes1)
-    _write_batch(landing, "b2.json", NOW + 1800, fixes2)
-    records = stream_raw_states(spark, landing).withColumn(
-        "velocity_knots", F.col("velocity") * 1.94384
-    )
-    out = stateful_stuck_detector(records, AnomalyConfig())
-    _run_to_memory(out, "stuck_out")
-    rows = spark.sql("SELECT * FROM stuck_out ORDER BY last_contact").collect()
+    out_path, ckpt = str(tmp_path / "stuck_out"), str(tmp_path / "ckpt")
+    input_rows = []
+    for name, time, fixes in (("b1.json", NOW, fixes1), ("b2.json", NOW + 1800, fixes2)):
+        _write_batch(landing, name, time, fixes)
+        records = stream_raw_states(spark, landing).withColumn(
+            "velocity_knots", F.col("velocity") * 1.94384
+        )
+        q = (
+            stateful_stuck_detector(records, AnomalyConfig())
+            .writeStream.format("parquet")
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start(out_path)
+        )
+        drain(q, 120)
+        input_rows += [p.numInputRows for p in q.recentProgress if p.numInputRows > 0]
+    assert input_rows == [1, 1]  # one landed poll per batch, two batches
+    rows = spark.read.parquet(out_path).orderBy("last_contact").collect()
     assert len(rows) == 5
     assert any(r.is_stuck for r in rows)  # span >1800 s within 0.05 mi at <5 kts
     assert not rows[0].is_stuck  # needs history before it can fire
