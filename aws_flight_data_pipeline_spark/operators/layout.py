@@ -20,8 +20,8 @@ At 100 TB: the grid normalization needs global min/max per dimension — a
 1-row broadcast aggregate (bytes to the driver, never rows). For an append
 pipeline, freeze the bounds in table metadata instead of re-deriving them
 per batch so file ranges stay comparable across writes; re-cluster
-(compact + re-sort) only when drift accumulates, exactly like the
-compaction cycle in ``sources/maintenance.py``.
+(compact + re-sort) only when drift accumulates, exactly like
+``versioned.optimize(cluster_by=(a, b))``.
 """
 
 from __future__ import annotations

@@ -11,7 +11,8 @@ Scale notes: lookback filters hit the string y/m/d/h partition columns when
 present → Catalyst prunes partitions; the airport-proximity theta join keeps
 the reference's ±1° band prefilter and broadcasts the airports dim; every
 "view" is a plain groupBy aggregate suitable for materialization via
-sinks.write_summary (the views-as-cache pattern, 07:486-571).
+versioned.commit, or incremental upkeep via ivm.refresh_view (the
+views-as-cache pattern, 07:486-571).
 
 NOTE on category labels: the reference's ETL emits LOW/MEDIUM/… while its SQL
 corpus matches 'Low'/'Normal'/… — labels no component ever produces. This
@@ -469,7 +470,8 @@ def q10_quality_assessment(quality_metrics: DataFrame, now_unix: int) -> DataFra
 
 
 # ---------------------------------------------------------------------------
-# Summary views (06_analytics_views.sql; materialize via sinks.write_summary)
+# Summary views (06_analytics_views.sql; materialize via versioned.commit /
+# ivm.refresh_view)
 # ---------------------------------------------------------------------------
 
 

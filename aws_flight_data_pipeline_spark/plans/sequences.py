@@ -40,12 +40,6 @@ def seq_delta_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@builder("seq_rate_of_change")
-def seq_rate_of_change(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone Δv/Δt (round-1 bench name) — see seq_kinematics."""
-    return _kinematics_frame(spark, sf_dir).select("event_id", "user_id", "rate_per_min")
-
-
 @builder("seq_trajectory_distance")
 def seq_trajectory_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Standalone trajectory distance (round-1 bench name) — see seq_kinematics."""
@@ -147,12 +141,6 @@ def _kinematics_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def seq_kinematics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _kinematics_frame(spark, sf_dir)
-
-
-@builder("seq_forward_fill")
-def seq_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone forward-fill (round-1 bench name) — see seq_imputation_fill."""
-    return _fill_frame(spark, sf_dir).select("event_id", "user_id", "value_ffill")
 
 
 @builder("seq_linear_interpolation")

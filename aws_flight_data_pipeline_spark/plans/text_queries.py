@@ -305,46 +305,6 @@ def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@builder("dedup_ngram_jaccard")
-def dedup_ngram_jaccard_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone Jaccard verifier over consecutive-doc_id candidates (round-1
-    name) — the registered surface is dedup_pipeline_end_to_end, where the
-    same exploded-token equi-join verifies LSH candidates."""
-    return _ngram_jaccard_frame(spark, sf_dir)
-
-
-
-
-
-def _ngram_jaccard_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(F.array_distinct(tokens(F.col("text")))).alias("tok"))
-    sizes = toks.groupBy("doc_id").agg(F.count("*").alias("n_tok"))
-    a, b = toks.alias("a"), toks.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("b.doc_id") == F.col("a.doc_id") + 1) & (F.col("a.tok") == F.col("b.tok")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    joined = (
-        sa.join(sb, F.col("sb.doc_id") == F.col("sa.doc_id") + 1)
-        .join(inter, F.col("doc_a") == F.col("sa.doc_id"), "left")
-    )
-    n_inter = F.coalesce(F.col("n_inter"), F.lit(0))
-    union_size = F.col("sa.n_tok") + F.col("sb.n_tok") - n_inter
-    return joined.select(
-        F.col("sa.doc_id").alias("doc_a"),
-        F.col("sb.doc_id").alias("doc_b"),
-        n_inter.alias("intersection_size"),
-        union_size.alias("union_size"),
-        _r4(n_inter.cast("double") / union_size).alias("jaccard"),
-    ).orderBy("doc_a")
-
-
 @builder(
     "text_rolling_fingerprint",
     tags=("text", "fingerprint", "shingle"),

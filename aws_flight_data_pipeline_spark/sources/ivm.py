@@ -2,11 +2,10 @@
 
 The reference refreshes its summary views by re-running the full query
 (``sql/athena/06_create_summary_views.sql`` via the optimization guide's
-views-as-cache pattern, ``07:529-571``); ``sources/sinks.py``'s
-``incremental_rollup`` already upgrades that to partial-aggregate
-maintenance for APPEND-ONLY facts. This module closes the remaining gap:
-maintenance under UPDATES and DELETES, driven by the versioned table's
-change feed — classic incremental view maintenance with retractions.
+views-as-cache pattern, ``07:529-571``). This module maintains such a
+rollup incrementally under APPENDS, UPDATES and DELETES, driven by the
+versioned table's change feed — classic incremental view maintenance with
+retractions.
 
 The refresh pipeline, per cycle:
 
@@ -15,7 +14,7 @@ The refresh pipeline, per cycle:
 2. The diff folds to signed per-group deltas (insert = +1, delete = −1
    multiplicity; SUM/COUNT are the retractable aggregates — MIN/MAX are
    deliberately excluded because a retracted extremum forces a group
-   rescan; use ``incremental_rollup``'s partition recompute for those).
+   rescan, so a MIN/MAX view is recomputed, not maintained).
 3. Deltas join the current rollup's AFFECTED groups only and the new
    absolute rows merge in via :func:`~.versioned.merge_into` — manifest
    stats prune the rewrite to files that can contain affected groups.

@@ -21,6 +21,9 @@ recommendation class); here it is a first-class operator triple:
    idempotent, retry-safe, and parallelizable across partitions by the
    caller, which is how table services (Delta OPTIMIZE, Iceberg rewrite)
    schedule the same work.
+
+Clustered rewrites and schema enforcement belong to the versioned table:
+``versioned.optimize`` and the schema check at commit.
 """
 
 from __future__ import annotations
@@ -114,7 +117,6 @@ def compact(
     src_path: str,
     dst_path: str,
     target_bytes: int = 128 * 1024 * 1024,
-    cluster_by: tuple[str, str] | None = None,
 ) -> int:
     """Rewrite one partition directory's parquet to ~target-sized files.
 
@@ -122,78 +124,14 @@ def compact(
     parquet), so output files land near ``target_bytes`` — the round-number
     heuristic every table service uses; exactness is not the point, escaping
     the many-small-files regime is.
-
-    ``cluster_by=(col_a, col_b)`` Z-orders the rewrite (the OPTIMIZE
-    ZORDER composition): the compaction shuffle you were paying anyway
-    becomes a range exchange on the Morton key, so the rewritten files get
-    tight min/max stats on BOTH clustering columns for free — same job
-    cost, strictly better layout for 2-D box queries
-    (:mod:`..operators.layout`).
     """
     total = sum(b for _, b in _list_files(spark, src_path))
     n = max(1, math.ceil(total / target_bytes))
-    df = spark.read.parquet(src_path)
-    if cluster_by is not None:
-        from aws_flight_data_pipeline_spark.operators.layout import zorder_key
-
-        df = (
-            zorder_key(df, *cluster_by)
-            .repartitionByRange(n, F.col("_z"))
-            .sortWithinPartitions("_z")
-            .drop("_z")
-        )
-    else:
-        df = df.repartition(n)
     (
-        df.write.mode("overwrite")
+        spark.read.parquet(src_path)
+        .repartition(n)
+        .write.mode("overwrite")
         .option("compression", "snappy")
         .parquet(dst_path)
     )
     return n
-
-
-def schema_drift_audit(spark: SparkSession, path: str) -> DataFrame:
-    """Per-file schema drift report for a parquet lake written over time.
-
-    Schema evolution (a writer adding/dropping/retyping columns) is invisible
-    to a plain scan until ``mergeSchema`` blows up a query or silently nulls
-    a column; the audit makes it explicit: one row per (file, field) with the
-    field's parquet type, so drift shows up as fields whose file-count
-    differs from the lake's file total (added/dropped) or whose type set has
-    more than one member (retyped).
-
-    Scale shape: footers are read on EXECUTORS — the driver only lists file
-    paths (catalog-sized); ``mapInPandas`` fans the footer reads out in Arrow
-    batches, so a million-file lake costs a million footer reads spread
-    across the cluster, never a driver loop. The summary is one hash
-    aggregate over (field, type).
-    """
-    from pyspark.sql.types import StructType
-
-    files = [f for f, _ in _list_files(spark, path) if f.endswith(".parquet")]
-    n_files = len(files)
-    fdf = spark.createDataFrame([(f,) for f in files], "file string").repartition(
-        min(max(n_files // 64, 1), 256)
-    )
-
-    def _read_footers(batches):
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            rows = []
-            for f in pdf["file"]:
-                schema = pq.read_schema(f)
-                for name, typ in zip(schema.names, schema.types):
-                    rows.append((f, name, str(typ)))
-            yield pd.DataFrame(rows, columns=["file", "field", "ptype"])
-
-    out_schema = StructType.fromDDL("file string, field string, ptype string")
-    per_file = fdf.mapInPandas(_read_footers, out_schema)
-    return (
-        per_file.groupBy("field", "ptype")
-        .agg(F.countDistinct("file").cast("bigint").alias("files_with_field"))
-        .withColumn("lake_files", F.lit(n_files).cast("bigint"))
-        .withColumn("drift", F.col("files_with_field") != F.col("lake_files"))
-        .orderBy("field", "ptype")
-    )

@@ -493,6 +493,10 @@ def main() -> None:
     def run(name: str) -> None:
         resolve(name)(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
+    def persisted_ids() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    persisted_before = persisted_ids()
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
     for name in HEADLINE:
@@ -512,10 +516,11 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
 
     # Cache-discipline accounting: after the release_tracked() sweep, the
-    # suite must leave ZERO persistent blocks behind — a non-zero value here
-    # means some builder cached outside tracked_cache (a storage leak that
-    # would compound over a long-lived session).
-    leaked_caches = spark.sparkContext._jsc.getPersistentRDDs().size()
+    # suite must leave ZERO of its own persistent blocks behind — a non-zero
+    # value here means some builder cached outside tracked_cache (a storage
+    # leak that would compound over a long-lived session). Ids, not counts:
+    # the context cleaner may unpersist an RDD from before the suite.
+    leaked_caches = len(persisted_ids() - persisted_before)
 
     # Full table (all headline entries, 3 dp), never truncated. Each query
     # records BOTH the min (the headline statistic; filters episodic host

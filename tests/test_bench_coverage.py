@@ -60,6 +60,31 @@ def test_committed_bench_covers_every_headline_entry():
     )
 
 
+def test_every_builder_is_reached():
+    """A builder nothing runs is dead weight: each one must have an oracle
+    (so ``test_oracle_parity`` runs it), sit in ``bench.HEADLINE``, or be
+    named as a whole word by a test module or ``bench_scaling.py``."""
+    import bench
+    from aws_flight_data_pipeline_spark.plans.registry import BUILDER_SPECS, _ensure_loaded
+
+    _ensure_loaded()
+    callers = glob.glob(os.path.join(REPO, "tests", "*.py")) + [
+        os.path.join(REPO, "bench_scaling.py")
+    ]
+    text = ""
+    for p in callers:
+        with open(p) as f:
+            text += f.read() + "\n"
+    unreached = sorted(
+        name
+        for name, spec in BUILDER_SPECS.items()
+        if spec.oracle is None
+        and name not in bench.HEADLINE
+        and not re.search(rf"\b{re.escape(name)}\b", text)
+    )
+    assert not unreached, f"builders that no oracle, headline entry or caller reaches: {unreached}"
+
+
 def test_bench_records_host_environment():
     # drift attribution (round-6 lesson): the sidecar must carry when it
     # ran and the host load, or cross-round comparisons are guesswork

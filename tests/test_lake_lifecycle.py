@@ -16,7 +16,6 @@ from aws_flight_data_pipeline_spark.sources.sinks import (
     with_time_partitions,
     write_processed,
 )
-from tests.conftest import persisted_rdd_ids
 from tests.flight_fixtures import PROCESSED_DDL, processed_rows
 
 
@@ -72,66 +71,3 @@ def test_partition_filter_prunes_scan(spark, lake):
     ).count()
     assert pruned.count() == expected > 0
 
-
-def test_upsert_partitions_touches_only_affected(spark, tmp_path):
-    """MERGE semantics on plain parquet: replaced keys disappear, inserts
-    land, and files in untouched partitions are byte-identical (dynamic
-    overwrite rewrites only the affected partitions)."""
-    import glob
-
-    from aws_flight_data_pipeline_spark.sources.sinks import upsert_partitions
-
-    path = str(tmp_path / "processed")
-    df = with_time_partitions(
-        spark.createDataFrame(processed_rows(), schema=PROCESSED_DDL)
-    )
-    write_processed(df, path)
-    before = spark.read.parquet(path)
-    n_before = before.count()
-
-    # the increment: one existing key amended + one brand-new aircraft,
-    # both landing in ONE existing partition
-    target = before.orderBy("icao24").first()
-    part_vals = {c: target[c] for c in PARTITION_COLS}
-    amended = before.filter(F.col("icao24") == target["icao24"]).filter(
-        *[F.col(c) == part_vals[c] for c in PARTITION_COLS[:1]]
-    ).limit(1).withColumn("origin_country", F.lit("AMENDED"))
-    inserted = amended.withColumn("icao24", F.lit("zzznew")).withColumn(
-        "origin_country", F.lit("INSERTED")
-    )
-    increment = amended.unionByName(inserted).localCheckpoint()
-
-    untouched_glob = None
-    for d in glob.glob(os.path.join(path, "year=*/month=*/day=*/hour=*")):
-        if f"hour={part_vals['hour']}" not in d or f"day={part_vals['day']}" not in d:
-            untouched_glob = d
-            break
-    snap = None
-    if untouched_glob:
-        snap = {
-            f: os.path.getmtime(f)
-            for f in glob.glob(os.path.join(untouched_glob, "*.parquet"))
-        }
-
-    persisted = persisted_rdd_ids(spark)
-    report = upsert_partitions(increment, path).collect()[0]
-    assert not persisted_rdd_ids(spark) - persisted  # survivor checkpoint released
-    after = spark.read.parquet(path)
-
-    amended_key = increment.filter(F.col("origin_country") == "AMENDED").first()
-    got = after.filter(
-        (F.col("icao24") == amended_key["icao24"])
-        & (F.col("collection_time") == amended_key["collection_time"])
-    ).collect()
-    assert len(got) == 1 and got[0]["origin_country"] == "AMENDED"  # replaced, not duplicated
-    assert after.filter(F.col("icao24") == "zzznew").count() == 1    # inserted
-    assert after.count() == n_before + 1                              # net one new row
-    assert report["rows_inserted"] == 2 and report["rows_replaced"] >= 1
-    assert report["partitions_touched"] >= 1
-
-    if snap:  # untouched partition files were never rewritten
-        now = {
-            f: os.path.getmtime(f)
-            for f in glob.glob(os.path.join(untouched_glob, "*.parquet"))
-        }
-        assert now == snap

@@ -85,61 +85,3 @@ def test_compact_preserves_rows_and_collapses_files(spark, small_file_lake, tmp_
     src_df = spark.read.parquet(src)
     assert spark.read.parquet(dst).exceptAll(src_df).count() == 0
 
-
-def test_schema_drift_audit_flags_added_column(spark, tmp_path):
-    from aws_flight_data_pipeline_spark.sources.maintenance import schema_drift_audit
-
-    lake = str(tmp_path / "lake")
-    spark.range(10).selectExpr("id", "id * 2 AS v").write.parquet(lake)
-    # a later writer adds a column (classic drift)
-    spark.range(5).selectExpr(
-        "id + 100 AS id", "id * 2 AS v", "'x' AS added"
-    ).write.mode("append").parquet(lake)
-
-    rows = {(r["field"], r["ptype"]): r for r in schema_drift_audit(spark, lake).collect()}
-    stable = [r for (f, _), r in rows.items() if f in ("id", "v")]
-    assert stable and all(not r["drift"] for r in stable)
-    drifted = [r for (f, _), r in rows.items() if f == "added"]
-    assert len(drifted) == 1 and drifted[0]["drift"]
-    assert drifted[0]["files_with_field"] < drifted[0]["lake_files"]
-
-
-def test_compact_with_cluster_by_zorders_the_rewrite(spark, tmp_path):
-    """OPTIMIZE ZORDER composition: the compaction rewrite clusters along the
-    (user, time) Z curve — lossless, target file count, and each rewritten
-    file covers a tight 2-D box (file-level min/max spans strictly tighter
-    than the fragmented source's on at least one dimension)."""
-    from aws_flight_data_pipeline_spark.sources.maintenance import compact, lake_file_audit
-
-    src = str(tmp_path / "events_fragmented")
-    dst = str(tmp_path / "events_zordered")
-    e = spark.read.parquet("/root/testdata/sf0.01/events.parquet").select(
-        "event_id",
-        "user_id",
-        F.col("ts").cast("timestamp").cast("long").alias("t_sec"),
-        "value",
-    )
-    e.repartition(24).write.parquet(src)  # fragmented, randomly laid out
-
-    total_bytes = sum(r["bytes"] for r in lake_file_audit(spark, src).collect())
-    per_file_bytes = -(-total_bytes // 8)  # ceil: 8 target files exactly
-    n = compact(spark, src, dst, target_bytes=per_file_bytes, cluster_by=("user_id", "t_sec"))
-    assert n == 8
-
-    out = spark.read.parquet(dst)
-    assert out.exceptAll(e).count() == 0 and out.count() == e.count()
-
-    def mean_file_span(path, col):
-        df = spark.read.parquet(path)
-        spans = (
-            df.groupBy(F.input_file_name().alias("f"))
-            .agg((F.max(col) - F.min(col)).alias("span"))
-            .agg(F.avg("span"))
-            .first()[0]
-        )
-        return spans
-
-    # random fragmentation gives every file ~the full range on both dims;
-    # the Z-ordered rewrite tightens per-file coverage
-    assert mean_file_span(dst, "user_id") < mean_file_span(src, "user_id")
-    assert mean_file_span(dst, "t_sec") < mean_file_span(src, "t_sec")

@@ -29,7 +29,7 @@ from aws_flight_data_pipeline_spark.streaming.streams import (
     streaming_dedup,
     windowed_traffic_summary,
 )
-from tests.conftest import drain
+from tests.conftest import drain, persisted_rdd_ids
 
 NOW = 1693401600
 
@@ -204,7 +204,7 @@ def test_micro_batch_pipeline_jobs_and_files_per_batch(spark, landing, tmp_path)
         _state("%06x" % i, "UAL123", NOW - i, -74.0 + i * 0.01, 40.7) for i in range(20)
     ] + [_state("BADICAO", None, NOW, 2.0, 48.0)])
     clean, quar, ckpt = (str(tmp_path / p) for p in ("clean", "quar", "ckpt"))
-    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    persisted = persisted_rdd_ids(spark)
     q = micro_batch_pipeline(
         stream_raw_states(spark, landing), clean, quar, ckpt, now_provider=lambda: NOW
     )
@@ -218,7 +218,7 @@ def test_micro_batch_pipeline_jobs_and_files_per_batch(spark, landing, tmp_path)
     for path in (clean, quar):
         assert len(glob.glob(os.path.join(path, "*.parquet"))) == 1
     # the batch's checkpoints are released with the batch
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    assert persisted_rdd_ids(spark) - persisted == set()
 
 
 def test_micro_batch_pipeline_batch_without_records(spark, landing, tmp_path):
@@ -229,7 +229,7 @@ def test_micro_batch_pipeline_batch_without_records(spark, landing, tmp_path):
         f.write('{"time": 169340, "states": [[[')
     open(os.path.join(landing, "b2.json"), "w").close()
     clean, quar, ckpt = (str(tmp_path / p) for p in ("clean", "quar", "ckpt"))
-    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    persisted = persisted_rdd_ids(spark)
     q = micro_batch_pipeline(stream_raw_states(spark, landing), clean, quar, ckpt)
     finished = q.awaitTermination(120)
     q.stop()
@@ -237,7 +237,7 @@ def test_micro_batch_pipeline_batch_without_records(spark, landing, tmp_path):
     # one batch, one row: the empty file holds no document
     assert [(p.batchId, p.numInputRows) for p in q.recentProgress] == [(0, 1)]
     assert not glob.glob(os.path.join(str(tmp_path), "*", "**", "*.parquet"), recursive=True)
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    assert persisted_rdd_ids(spark) - persisted == set()
 
 
 def test_micro_batch_pipeline_resumes_json_source_checkpoint(spark, landing, tmp_path):

@@ -27,7 +27,7 @@ from aws_flight_data_pipeline_spark.streaming.streams import (
     streaming_unified_admission_gate,
     unified_admission_batch,
 )
-from tests.conftest import drain
+from tests.conftest import drain, persisted_rdd_ids
 
 SCHEMA = "doc_id long, text string, source string, lang string"
 
@@ -319,6 +319,7 @@ def test_unified_gate_soak_bounded_state_flat_latency(spark, tmp_path):
         shutil.rmtree(f"{src}/b{b:03d}.parquet.tmp", ignore_errors=True)
 
     views_before = len(spark.catalog.listTables())
+    persisted = persisted_rdd_ids(spark)
     # tiny per-batch data, 50 batches: 32-way shuffles would be pure
     # scheduling overhead x thousands of stages — 4 is still plural
     spark.conf.set("spark.sql.shuffle.partitions", "4")
@@ -356,7 +357,7 @@ def test_unified_gate_soak_bounded_state_flat_latency(spark, tmp_path):
     assert len(replicas) == 11 and sum(r["admitted"] for r in replicas) == 1
 
     # bounded state: zero leaked cached blocks, no temp-view growth
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+    assert persisted_rdd_ids(spark) - persisted == set()
     assert len(spark.catalog.listTables()) <= views_before
 
     # flat latency: steady-state batches must not pay for batch count.
