@@ -39,24 +39,6 @@ _MODALITY_SQL = "(['image','audio','video'])[doc_id % 3 + 1]"
 _BYTES_SQL = "list_transform(string_split(text, ''), c -> ord(c))"
 
 
-@builder("multimodal_decode_stats")
-def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone decode-stats (round-1 bench name) — the registered surface
-    is multimodal_asset_profile; this keeps the bench workload identical."""
-    decoded = decode_assets(attach_payloads(load_table(spark, sf_dir, "documents")))
-    return (
-        decoded.groupBy("modality")
-        .agg(
-            F.count("*").alias("decoded_count"),
-            F.sum("n_bytes").alias("total_bytes"),
-            _r4(F.avg("byte_mean")).alias("avg_byte_mean"),
-            F.min("byte_min").alias("min_byte"),
-            F.max("byte_max").alias("max_byte"),
-        )
-        .orderBy("modality")
-    )
-
-
 @query(
     "multimodal_asset_profile",
     tags=("multimodal", "agg", "mapinpandas"),

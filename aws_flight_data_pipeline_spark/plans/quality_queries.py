@@ -628,12 +628,6 @@ def _iqr_frame(spark: SparkSession, sf_dir: str, exact: bool) -> DataFrame:
     )
 
 
-@builder("anomaly_iqr_outliers")
-def anomaly_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-percentile IQR fences (round-1 bench name, oracle-parity form)."""
-    return _iqr_frame(spark, sf_dir, exact=True)
-
-
 @builder("anomaly_iqr_outliers_approx")
 def anomaly_iqr_outliers_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production IQR path: approx_percentile sketch — bounded memory at any

@@ -7,9 +7,7 @@ over the driver's TPC-H-ish tables, paired with a DuckDB oracle.
 Round-2 consolidation: the driver's correctness gate verifies at most the
 first 50 registered queries, so single-operator demos that share a table and
 grain are merged into profile/suite queries (every operator keeps its own
-column or section — nothing was dropped, see each query's doc). The standalone
-builders that back the round-1 bench names stay callable via
-``registry.resolve`` (@builder) so BENCH_rN stays per-query comparable.
+column or section — nothing was dropped, see each query's doc).
 
 Cross-engine value discipline (the round-1 driver lessons, see
 tests/test_oracle_parity.py):
@@ -576,10 +574,9 @@ def zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@builder("nation_order_rank")
-def nation_order_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RANK/DENSE_RANK over a global aggregate order (04:251, 05:68-72).
-    Driver-verified through window_rank_suite; kept for the stable bench name."""
+def _nation_order_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RANK/DENSE_RANK over a global aggregate order (04:251, 05:68-72):
+    window_rank_suite's ``nation_rank`` section."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
@@ -596,10 +593,9 @@ def nation_order_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@builder("window_distribution_functions")
-def window_distribution_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ntile/percent_rank/cume_dist distribution windows (§2.5 completion).
-    Driver-verified through window_rank_suite; kept for the stable bench name."""
+def _window_distribution_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ntile/percent_rank/cume_dist distribution windows (§2.5 completion):
+    window_rank_suite's ``price_quartile`` section."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     joined = o.join(c, o.o_custkey == c.c_custkey)
@@ -689,8 +685,8 @@ def window_rank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(section).alias("section"), grp_col.alias("grp"), F.explode(entries).alias("e")
         ).select("section", "grp", "e.metric", "e.value")
 
-    nranks = nation_order_rank(spark, sf_dir)
-    quart = window_distribution_functions(spark, sf_dir)
+    nranks = _nation_order_rank(spark, sf_dir)
+    quart = _window_distribution_functions(spark, sf_dir)
     return (
         _melt(nranks, "nation_rank", F.col("nation_name"),
               ["order_count", "total_revenue", "volume_rank", "revenue_rank"])
@@ -706,20 +702,6 @@ def window_rank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .orderBy("section", "grp", "metric")
-    )
-
-
-@builder("moving_average_daily")
-def moving_average_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Centered moving average over an explicit ROWS frame (04:253-256).
-    Driver-verified through daily_window_metrics; kept for the stable bench name."""
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_day")).agg(
-        F.count("*").alias("order_count"), _r4(F.sum("o_totalprice")).alias("daily_revenue")
-    )
-    w = Window.orderBy("order_day").rowsBetween(-2, 2)
-    return daily.withColumn("moving_avg_orders", _r4(F.avg("order_count").over(w))).orderBy(
-        "order_day"
     )
 
 

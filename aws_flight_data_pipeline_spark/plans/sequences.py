@@ -32,22 +32,6 @@ def _w():
     return Window.partitionBy("user_id").orderBy("ts", "event_id")
 
 
-@builder("seq_delta_cumulative")
-def seq_delta_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone delta+cumsum (round-1 bench name) — see seq_kinematics."""
-    return _kinematics_frame(spark, sf_dir).select(
-        "event_id", "user_id", "value", "value_delta", "running_total"
-    )
-
-
-@builder("seq_trajectory_distance")
-def seq_trajectory_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone trajectory distance (round-1 bench name) — see seq_kinematics."""
-    return _kinematics_frame(spark, sf_dir).select(
-        "event_id", "user_id", "leg_distance_m", "cumulative_m"
-    )
-
-
 def _kinematics_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All per-event kinematics from ONE window shuffle.
 
@@ -141,12 +125,6 @@ def _kinematics_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def seq_kinematics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _kinematics_frame(spark, sf_dir)
-
-
-@builder("seq_linear_interpolation")
-def seq_linear_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone window-lerp (round-1 bench name) — see seq_imputation_fill."""
-    return _fill_frame(spark, sf_dir).select("event_id", "user_id", "value_interp")
 
 
 def _fill_frame(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -50,26 +50,6 @@ _WORD_COUNT_SQL = (
 )
 
 
-@builder("text_stats_by_lang")
-def text_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone token statistics (round-1 bench name) — the registered
-    surface is text_signal_suite; this keeps the bench workload identical."""
-    d = load_table(spark, sf_dir, "documents")
-    wc = word_count(F.col("text"))
-    return (
-        d.groupBy("lang")
-        .agg(
-            F.count("*").alias("doc_count"),
-            F.sum("n_chars").alias("total_chars"),
-            F.sum(wc).alias("total_words"),
-            _r4(F.avg(wc)).alias("avg_words_per_doc"),
-            _r4(F.avg(F.length("text").cast("double") / wc)).alias("avg_chars_per_word"),
-            F.sum(bpe_ish_token_estimate(F.col("text"))).alias("est_bpe_tokens"),
-        )
-        .orderBy("lang")
-    )
-
-
 @query(
     "text_signal_suite",
     tags=("text", "agg", "quality", "langid", "entropy"),

@@ -111,15 +111,14 @@ _KMEANS_REPORT_SQL = "\n            UNION ALL\n".join(
 )
 
 
-@builder("cosine_topk_bruteforce")
-def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k against a query vector (vec_id 0) — the ANN
-    correctness baseline (round-1 bench name; registered surface is
-    ann_topk_compare). Broadcast the 1-row query, per-row zip_with dot
-    product, TakeOrderedAndProject top-k: a narrow map + bounded sort at any
-    scale. Direct per-row cosine: with exactly one pair per row there is
-    nothing to amortize, so pre-normalization (unit_dot path) only adds
-    projections — measured slower here; it pays off in the pair joins."""
+    correctness baseline, ann_topk_compare's ``brute`` rows. Broadcast the
+    1-row query, per-row zip_with dot product, TakeOrderedAndProject top-k:
+    a narrow map + bounded sort at any scale. Direct per-row cosine: with
+    exactly one pair per row there is nothing to amortize, so
+    pre-normalization (unit_dot path) only adds projections — measured
+    slower here; it pays off in the pair joins."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
     return (
@@ -293,15 +292,14 @@ def vector_lsh_sign_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@builder("ann_ivf_topk")
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate-nearest-neighbor search (round-1 bench name; the
-    registered surface is ann_topk_compare): label cells act as the coarse
-    quantizer (centroid per cell), the query probes its nProbe=3 nearest
-    cells, and exact cosine top-k runs only inside probed cells. The scale
-    path: centroids are a tiny broadcast table, the probe filter is a
-    partition-pruning predicate when the lake is partitioned by cell, and
-    the O(n) scan shrinks to nProbe/nCells of the data."""
+def _ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF approximate-nearest-neighbor search, ann_topk_compare's ``ivf``
+    rows: label cells act as the coarse quantizer (centroid per cell), the
+    query probes its nProbe=3 nearest cells, and exact cosine top-k runs only
+    inside probed cells. The scale path: centroids are a tiny broadcast
+    table, the probe filter is a partition-pruning predicate when the lake is
+    partitioned by cell, and the O(n) scan shrinks to nProbe/nCells of the
+    data."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
 
@@ -400,10 +398,10 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_topk_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
-    brute = cosine_topk_bruteforce(spark, sf_dir).select(
+    brute = _cosine_topk_bruteforce(spark, sf_dir).select(
         F.lit("brute").alias("method"), "vec_id", "label", "cosine_sim"
     )
-    ivf = ann_ivf_topk(spark, sf_dir).select(
+    ivf = _ann_ivf_topk(spark, sf_dir).select(
         F.lit("ivf").alias("method"), "vec_id", "label", "cosine_sim"
     )
     return brute.unionAll(ivf).orderBy("method", F.desc("cosine_sim"), "vec_id")
@@ -553,22 +551,6 @@ def _quantize_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return e.withColumn("recon_err", F.sqrt(sq_err)).withColumn(
         "vnorm", norm(F.col("embedding"))
-    )
-
-
-@builder("vector_quantize_int8")
-def vector_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-1 bench name — the registered surface is vector_storage_profile."""
-    e = _quantize_frame(spark, sf_dir)
-    return (
-        e.groupBy("label")
-        .agg(
-            F.count("*").alias("vec_count"),
-            _r4(F.avg("recon_err")).alias("avg_recon_err"),
-            _r4(F.max("recon_err")).alias("max_recon_err"),
-            _r4(F.avg(F.col("recon_err") / F.col("vnorm"))).alias("avg_relative_err"),
-        )
-        .orderBy("label")
     )
 
 

@@ -701,12 +701,20 @@ def vacuum(path: str, keep_last: int = 2, min_age_seconds: float = 600.0) -> dic
     deletion is the only byte-destructive operation in the module and it can
     never touch a retained version's data.
 
-    ``min_age_seconds`` is the concurrent-writer grace period (Delta's
-    retention-hours idea): a writer that has finished its data write but not
-    yet published its manifest owns files referenced by NO manifest — an
-    ungated vacuum would delete them out from under the publish. Files
-    younger than the grace are kept; only set 0 when no writer can be
-    in flight (tests, single-process maintenance windows).
+    ``min_age_seconds`` is the grace period (Delta's retention-hours idea)
+    for the two owners of files no retained manifest references:
+
+    - a writer that has finished its data write but not yet published its
+      manifest — files younger than the grace are kept;
+    - a reader that pinned an older version's file list — the grace counts
+      from when a file left the table, i.e. the ``committed_at`` of the
+      dropped version's successor. The dropped manifest still goes, but
+      its ``files`` and ``tombstones`` get that commit time as their mtime
+      (never moved back), so this sweep and any later one keep them until
+      the grace has passed since they left the table.
+
+    Only set 0 when no writer or reader can be in flight (tests,
+    single-process maintenance windows).
 
     Cursors survive any retention: the head manifest carries them
     (``batch_id``, ``source_version``, ``index_*`` are inherited by every
@@ -723,15 +731,33 @@ def vacuum(path: str, keep_last: int = 2, min_age_seconds: float = 600.0) -> dic
     keep = versions[-keep_last:]
     drop = [v for v in versions if v not in keep]
 
+    kept = [_read_manifest(path, v) for v in keep]
     referenced: set[str] = set()
-    for v in keep:
-        mv = _read_manifest(path, v)
+    for mv in kept:
         referenced.update(mv["files"])
         # side-files a manifest references outside its data file list
         # (e.g. the inverted index's tombstone parquets) are live too
         referenced.update(mv.get("tombstones", []))
 
     now = time.time()
+    # newest-first: committed_at rises with the version, so the first
+    # successor past the grace means every older dropped file left earlier
+    successor = kept[0]
+    for v in reversed(drop):
+        left_at = float(successor["committed_at"])
+        if now - left_at >= min_age_seconds:
+            break
+        dropped = _read_manifest(path, v)
+        for rel in dropped["files"] + dropped.get("tombstones", []):
+            full = os.path.join(path, rel)
+            if (
+                rel not in referenced
+                and os.path.exists(full)
+                and os.path.getmtime(full) < left_at
+            ):
+                os.utime(full, (left_at, left_at))
+        successor = dropped
+
     files_deleted = 0
     data_root = _data_dir(path)
     for txn in sorted(os.listdir(data_root)) if os.path.isdir(data_root) else []:

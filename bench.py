@@ -130,40 +130,26 @@ HEADLINE = (
     "band_proximity_join",
     "zscore_anomalies",
     "latest_order_per_customer",
-    "nation_order_rank",
-    "moving_average_daily",
     "multilevel_rollup",
     "topk_line_items",
-    "seq_delta_cumulative",
-    "seq_linear_interpolation",
     "seq_sessionization",
-    "seq_trajectory_distance",
     "quality_grade_distribution",
     "quality_quarantine_split",
-    "anomaly_iqr_outliers",
-    "text_stats_by_lang",
     "dedup_exact_fingerprint",
     "dedup_minhash_signatures",
-    "cosine_topk_bruteforce",
     "embedding_near_dup_pairs",
     "vector_lsh_sign_buckets",
-    "ann_ivf_topk",
     "text_rolling_fingerprint",
     "quality_check_suite",
     "serving_snapshot_stats",
-    "multimodal_decode_stats",
     "multimodal_frame_sample",
     "doc_pack_sequences",
-    "vector_quantize_int8",
-    "window_distribution_functions",
-    # round 2 appends (the list is append-only so BENCH_rN stays per-query
-    # comparable): production-path variants + the composed dedup pipeline
+    # round 2: production-path variants + the composed dedup pipeline
     "anomaly_iqr_outliers_approx",
     "text_rolling_fingerprint_xx",
     "embedding_near_dup_lsh",
     "dedup_pipeline_end_to_end",
-    # the merged registered suites (their standalone parts remain above as
-    # builders; these rows track the one-pass merged plans round-over-round)
+    # round 2: the merged registered suites (one-pass merged plans)
     "order_status_profile",
     "distribution_stats",
     "window_rank_suite",
@@ -379,8 +365,10 @@ EPISODES = ("ivm_incremental_view",)
 #: r12): v1 = rounds <= 11 (ivm_incremental_view counted in the headline
 #: total); v2 = round 12+ (lifecycle episodes unbundled into "episodes";
 #: the headline list itself stays append-only within a version); v3 =
-#: round 14+ (semantic_dedup_semdedup_scale appended — verdict r13 #3).
-HEADLINE_SET_VERSION = 3
+#: round 14+ (semantic_dedup_semdedup_scale appended — verdict r13 #3); v4 =
+#: the twelve round-1 standalone builders dropped — each only re-projected a
+#: frame that its registered suite's entry already times.
+HEADLINE_SET_VERSION = 4
 
 #: Timed value = MIN of up to two timed runs, caches released between EVERY
 #: run (warm-up included), so each timed run pays the full recompute — the

@@ -53,7 +53,7 @@ def test_dim_join_broadcasts(spark, sf_dir):
 
 
 def test_stats_frames_broadcast(spark, sf_dir):
-    for name in ("anomaly_iqr_outliers", "zscore_anomalies"):
+    for name in ("anomaly_scan_suite", "zscore_anomalies"):
         plan = _plan(spark, sf_dir, name)
         assert "Broadcast" in plan, f"{name}: stats frame not broadcast"
         assert "SortMergeJoin" not in plan, f"{name}: unexpected sort-merge join"
@@ -76,7 +76,7 @@ def test_text_vector_paths_stay_jvm_side(spark, sf_dir):
     for name in (
         "dedup_minhash_signatures",
         "text_rolling_fingerprint",
-        "cosine_topk_bruteforce",
+        "ann_topk_compare",
         "dedup_simhash",
         "embedding_near_dup_pairs",
     ):
@@ -86,15 +86,9 @@ def test_text_vector_paths_stay_jvm_side(spark, sf_dir):
 
 
 def test_multimodal_uses_declared_arrow_boundary(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "multimodal_decode_stats")
+    plan = _plan(spark, sf_dir, "multimodal_asset_profile")
     assert "MapInPandas" in plan  # the one sanctioned Python boundary
     assert "BatchEvalPython" not in plan  # and never row-at-a-time
-
-
-def test_window_specs_share_one_shuffle(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "seq_delta_cumulative")
-    # both window columns (lag + running sum) ride ONE user_id shuffle
-    assert len(re.findall(r"hashpartitioning\(user_id", plan)) == 1
 
 
 def test_salted_aggregate_two_phase(spark, sf_dir):
@@ -105,14 +99,14 @@ def test_salted_aggregate_two_phase(spark, sf_dir):
 
 
 def test_ivf_probe_prunes_before_scoring(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "ann_ivf_topk")
+    plan = _plan(spark, sf_dir, "ann_topk_compare")
     assert "BroadcastHashJoin [label" in plan or "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
 
 @pytest.mark.parametrize(
     "name",
-    ["pricing_summary", "seq_delta_cumulative", "quality_grade_distribution"],
+    ["pricing_summary", "seq_kinematics", "quality_grade_distribution"],
 )
 def test_hot_paths_whole_stage_codegen(spark, sf_dir, name):
     # codegen spans (the *(n) markers) only appear in the AQE FINAL plan, so

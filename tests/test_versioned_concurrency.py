@@ -280,3 +280,27 @@ def test_vacuum_grace_spares_young_leftovers(spark, table):
     vt.vacuum(table, keep_last=1, min_age_seconds=600)
     # fresh in-flight write: must survive the sweep
     assert os.path.exists(crashed)
+
+
+def test_vacuum_grace_spares_files_a_live_reader_still_holds(spark, table):
+    # v0's files were written long ago, but they left the table only when
+    # v1 committed just now: a reader that pinned v0 a moment earlier must
+    # still be able to scan them after a default-grace vacuum
+    vt.commit(_df(spark, 0, 10, "a"), table)
+    v0_files = [os.path.join(table, f) for f in vt._read_manifest(table, 0)["files"]]
+    for f in v0_files:
+        os.utime(f, (978307200, 978307200))  # 2001-01-01
+    vt.commit(_df(spark, 10, 15, "b"), table, mode="overwrite")
+    reader = vt.read(spark, table, version=0)
+
+    stats = vt.vacuum(table, keep_last=1)  # default grace: 600 s
+    assert stats == {"versions_dropped": 1, "files_deleted": 0}
+    assert reader.count() == 10
+    # v0's manifest is gone, yet a second sweep inside the grace still
+    # spares the files it listed
+    assert vt.vacuum(table, keep_last=1)["files_deleted"] == 0
+    assert reader.count() == 10
+    # past the grace they go, and the head is untouched
+    assert vt.vacuum(table, keep_last=1, min_age_seconds=0)["files_deleted"] == len(v0_files)
+    assert not any(os.path.exists(f) for f in v0_files)
+    assert vt.read(spark, table).count() == 5
