@@ -1,8 +1,8 @@
 """Owner of every plans-module state root and of its lifetime.
 
 A query's on-disk state (ivm rollups, planner tables, inverted and IVF
-indexes, decontamination and admission indexes) lives in a root made
-here, under one of two lifetimes:
+indexes, decontamination and admission indexes, dedup pair tables) lives
+in a root made here, under one of two lifetimes:
 
 * :func:`standing` — built once per session and reused. The root is
   recorded only after its ``build`` returns, so a build that raises
@@ -77,6 +77,14 @@ def fresh(name: str, key: str, like: str | None = None) -> str:
     if like is not None:
         clone_tree(like, root)
     return root
+
+
+def forget(name: str) -> None:
+    """Remove every recorded root of ``name``, whatever its key, so the
+    next :func:`standing` call rebuilds it — how a cold timing drops a
+    standing materialization."""
+    for key in [k for k in _RECORDED if k[0] == name]:
+        shutil.rmtree(_RECORDED.pop(key), ignore_errors=True)
 
 
 def _link_or_copy(src: str, dst: str) -> None:

@@ -404,9 +404,9 @@ _DOC_NODES_SQL = "SELECT doc_id AS node FROM documents"
 )
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Clustering is a SECONDARY consumer of the dedup state: it reads the
-    # materialized scored-pair table for this corpus snapshot (built once,
-    # shared with every other consumer — sources/snapshots.py) instead of
-    # rebuilding signatures/candidates from the raw corpus. The oracle
+    # materialized scored-pair table for this corpus (built once per
+    # session, shared with every other consumer — scored_pairs_table)
+    # instead of rebuilding signatures/candidates from the raw corpus. The oracle
     # recomputes the identical pairs from scratch, so parity also verifies
     # the materialization is faithful.
     scored = scored_pairs_table(spark, sf_dir)
@@ -1314,11 +1314,9 @@ def shingle_tokenizer(text: Column) -> Column:
     return F.filter(shingles(text, 3), lambda x: x != "")
 
 
-#: Broadcast bound for the pairs-derived build sides in
-#: ``decontam_increment`` — shared by the measured (pair-count) gate and
-#: the frozen path's eval-doc guard (ADVICE r13 #2: both broadcast frames
-#: on the frozen path are bounded by the number of DISTINCT eval docs in
-#: the postings snapshot, so that is the quantity the guard checks).
+#: Broadcast bound for the pairs-derived build sides on
+#: ``decontam_increment``'s manifest path, checked against the measured
+#: pair count; over it those joins fall back to sort-merge.
 _PAIR_BROADCAST_MAX = 1_000_000
 
 
@@ -1327,7 +1325,6 @@ def decontam_increment(
     eval_index_path: str,
     increment: DataFrame,
     postings: DataFrame | None = None,
-    postings_eval_docs: int | None = None,
 ) -> DataFrame:
     """Decontaminate a NEW training increment against a FIXED eval split
     SERVED FROM the incrementally-maintained inverted index — O(increment
@@ -1355,41 +1352,28 @@ def decontam_increment(
     ``decontam_fuzzy_pairs``: best-matching eval doc per contaminated
     training doc with exact-ppm Jaccard.
 
-    ``postings`` (optional): a pre-materialized ``(eval_id, tok)`` snapshot
-    of the index's live postings. The default path reads the versioned
-    index and masks tombstones per probe — the honest steady-state cost
-    when the eval suite churns; a caller whose eval index is FROZEN for
-    the session (the unified admission gate) passes the snapshot instead
-    and skips the per-probe manifest read + mask + cache materialization.
+    Two shapes, chosen by ``postings``:
 
-    ``postings_eval_docs`` (optional, frozen path only): the number of
-    distinct eval docs in ``postings``, when the caller already knows it
-    (the admission gate counts once at snapshot-build time). Both
-    broadcast build sides on the frozen path are bounded by this count;
-    when it is within ``_PAIR_BROADCAST_MAX`` the path stays fully lazy
-    (zero extra jobs). An unhinted caller pays ONE cheap bounded probe
-    (distinct eval ids, short-circuited just past the bound) — this is a
-    public API and a large caller-supplied snapshot must not become an
-    unbounded broadcast build side (ADVICE r13 #2); over the bound the
-    pair-derived joins fall back to sort-merge exactly like the measured
-    path.
+    - ``None`` (the manifest path): read the versioned index and mask
+      tombstones per probe — the honest steady-state cost when the eval
+      suite churns. Set sizes come from a second streamed pass over the
+      eval docs that shared a shingle, broadcast while the measured pair
+      count is within ``_PAIR_BROADCAST_MAX``.
+    - a frozen ``(eval_id, tok, sz_eval)`` snapshot of the index's live
+      postings (:func:`_live_postings`), for a caller whose eval index is
+      FROZEN for the session (the unified admission decision table): no
+      per-probe manifest read, mask or cache, and ``sz_eval`` rides the
+      pairs aggregation, so the probe is ONE lazy streamed pass.
     """
     from pyspark.sql.window import Window
 
     from aws_flight_data_pipeline_spark.sources import invindex as ix
     from aws_flight_data_pipeline_spark.sources import versioned as vt
 
-    if postings is not None:
-        # a snapshot that carries per-doc set sizes (sz_eval — stamped at
-        # snapshot-build time by _ensure_eval_index since r15) lets the
-        # whole probe run as ONE streamed pass: set sizes ride the pairs
-        # aggregation instead of a second epost pass + re-attach join
-        has_sz_eval = "sz_eval" in postings.columns
-        epost = postings.select(
-            "eval_id", "tok", *(["sz_eval"] if has_sz_eval else [])
-        )
+    frozen = postings is not None
+    if frozen:
+        epost = postings.select("eval_id", "tok", "sz_eval")
     else:
-        has_sz_eval = False
         v = vt.latest_version(eval_index_path)
         if v is None:
             raise FileNotFoundError(f"{eval_index_path} has no committed versions")
@@ -1401,7 +1385,6 @@ def decontam_increment(
             tracked_cache
         )
 
-    frozen = postings is not None
     # tokenize each increment doc ONCE: the shingle array materializes in
     # the child projection, its size (= the doc's distinct-shingle count,
     # the tokenizer emits distinct shingles) rides every exploded row, and
@@ -1437,38 +1420,19 @@ def decontam_increment(
             F.count("*").cast("bigint").alias("n_common"),
             # constant within the group (one sz per doc); min() = that value
             F.min("sz_train").alias("sz_train"),
-            *([F.min("sz_eval").alias("sz_eval")] if has_sz_eval else []),
+            *([F.min("sz_eval").alias("sz_eval")] if frozen else []),
         )
     )
-    if has_sz_eval:
+    if frozen:
         # sizes already ride the pairs rows: the probe is ONE streamed
-        # pass, fully lazy — no pair-derived build side exists, so the
-        # ADVICE-r13-#2 broadcast guard has nothing to bound here
+        # pass, fully lazy — no pair-derived build side exists
         inter = pairs
     else:
         # set sizes only for the eval docs that share at least one shingle
         # — a second streamed pass, semi-joined by the (candidate-bounded)
-        # pair set; only needed when the postings carry no per-doc sizes
-        if frozen:
-            # frozen-index path: LAZY when the caller vouches for the
-            # snapshot's size — no cache barrier, no eager count, no
-            # separate jobs. Both pair-derived build sides are bounded by
-            # the distinct eval docs in the snapshot; the hinted count
-            # (or, unhinted, one bounded distinct-limit probe) keeps the
-            # forced broadcast safe for arbitrary public-API callers
-            # (ADVICE r13 #2).
-            n_bound = postings_eval_docs
-            if n_bound is None:
-                n_bound = (
-                    epost.select("eval_id")
-                    .distinct()
-                    .limit(_PAIR_BROADCAST_MAX + 1)
-                    .count()
-                )
-        else:
-            # manifest path: the build side is measured, shuffle fallback
-            pairs = pairs.transform(tracked_cache)
-            n_bound = pairs.count()
+        # pair set; the build side is measured, with a shuffle fallback
+        pairs = pairs.transform(tracked_cache)
+        n_bound = pairs.count()
 
         def _pair_side(df: DataFrame) -> DataFrame:
             return (
@@ -1562,14 +1526,35 @@ def _ensure_admission_index(spark: SparkSession, sf_dir: str):
     )
 
 
+def _live_postings(spark: SparkSession, index_path: str) -> DataFrame:
+    """The index head's tombstone-masked postings as ``(eval_id, tok,
+    sz_eval)`` — the frozen snapshot :func:`decontam_increment` probes
+    without a per-probe manifest read + mask. ``sz_eval`` (the doc's
+    distinct-shingle count) is stamped per row, so the probe's Jaccard
+    denominators ride its single pairs aggregation."""
+    from aws_flight_data_pipeline_spark.sources import invindex as ix
+    from aws_flight_data_pipeline_spark.sources import versioned as vt
+
+    v = vt.latest_version(index_path)
+    m = vt._read_manifest(index_path, v)
+    return (
+        ix._mask_tombstones(spark, index_path, m, vt.read(spark, index_path, version=v))
+        .select(F.col("doc_id").alias("eval_id"), "tok")
+        .withColumn(
+            "sz_eval",
+            F.count("*").over(Window.partitionBy("eval_id")).cast("bigint"),
+        )
+    )
+
+
 def _ensure_eval_index(spark: SparkSession, sf_dir: str) -> str:
     """The standing root (:func:`tmproots.standing`) holding the eval
-    split's (doc_id % 7 == 0) shingle inverted index (``eval_index``), its
-    live-postings snapshot and the snapshot's doc count. A frozen
+    split's (doc_id % 7 == 0) shingle inverted index (``eval_index``) and
+    its live-postings snapshot (:func:`_live_postings`). A frozen
     benchmark index is durable lake state a user pays for when the eval
     suite lands; ``decontam_incremental_probe`` keeps the fresh-build
     episode (the honest first-build cost), and consumers of the steady
-    state (the unified admission twin) reuse this one."""
+    state (the unified admission decision tables) reuse this one."""
     from aws_flight_data_pipeline_spark.sources import invindex as ix
     from aws_flight_data_pipeline_spark.sources import versioned as vt
 
@@ -1586,54 +1571,21 @@ def _ensure_eval_index(spark: SparkSession, sf_dir: str) -> str:
             spark, f"{root}/eval_docs", f"{root}/eval_index",
             tokenizer=shingle_tokenizer, bloom_cols=(),
         )
-        # live-postings snapshot: the frozen index's tombstone-masked
-        # (eval_id, tok) rows as plain parquet, so session consumers of the
-        # FROZEN index (the unified admission gate) probe without paying
-        # the per-probe manifest read + mask (see decontam_increment's
-        # ``postings`` parameter). sz_eval — the doc's distinct-shingle
-        # count — is stamped per row at build time, so the probe's
-        # Jaccard denominators ride the single pairs aggregation instead
-        # of a second snapshot pass + re-attach join per probe.
-        from pyspark.sql.window import Window as _W
-
-        v = vt.latest_version(f"{root}/eval_index")
-        m = vt._read_manifest(f"{root}/eval_index", v)
-        ix._mask_tombstones(
-            spark, f"{root}/eval_index", m,
-            vt.read(spark, f"{root}/eval_index", version=v),
-        ).select(F.col("doc_id").alias("eval_id"), "tok").withColumn(
-            "sz_eval",
-            F.count("*").over(_W.partitionBy("eval_id")).cast("bigint"),
-        ).write.mode(
-            "overwrite"
-        ).parquet(f"{root}/postings_snapshot")
-        # count the snapshot's distinct eval docs ONCE at build time, so
-        # frozen-path consumers can vouch for the broadcast bound without
-        # any per-probe job (decontam_increment's postings_eval_docs hint)
-        n_eval = (
-            spark.read.parquet(f"{root}/postings_snapshot")
-            .select("eval_id")
-            .distinct()
-            .count()
+        # live-postings snapshot as plain parquet, so session consumers of
+        # the FROZEN index (the unified admission decision table) probe
+        # without the per-probe manifest read + mask
+        _live_postings(spark, f"{root}/eval_index").write.mode("overwrite").parquet(
+            f"{root}/postings_snapshot"
         )
-        with open(f"{root}/n_eval_docs", "w") as fh:
-            fh.write(str(n_eval))
 
     return tmproots.standing("evalidx", sf_dir, build)
 
 
 def _ensure_eval_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The frozen eval index's live-postings snapshot (``eval_id, tok``) —
+    """The frozen eval index's live-postings snapshot
+    (``eval_id, tok, sz_eval``) —
     built alongside :func:`_ensure_eval_index`, read back as plain parquet."""
     return spark.read.parquet(f"{_ensure_eval_index(spark, sf_dir)}/postings_snapshot")
-
-
-def _eval_postings_doc_count(spark: SparkSession, sf_dir: str) -> int:
-    """The snapshot's distinct eval-doc count, stamped at build time —
-    the ``postings_eval_docs`` hint that keeps the frozen probe path
-    job-free."""
-    with open(f"{_ensure_eval_index(spark, sf_dir)}/n_eval_docs") as fh:
-        return int(fh.read().strip())
 
 
 @query(
@@ -2106,15 +2058,14 @@ def _admission_decision_table(
     cadence; re-deriving them inside every decision batch was cost, not
     semantics) and shape the per-document decision table."""
     from aws_flight_data_pipeline_spark.streaming.streams import (
-        unified_admission_batch,
+        unified_admission_decisions,
     )
 
     eval_index_path = f"{_ensure_eval_index(spark, sf_dir)}/eval_index"
     fp_index, band_buckets = _ensure_admission_index(spark, sf_dir)
-    out = unified_admission_batch(
+    out = unified_admission_decisions(
         spark, batch, eval_index_path, fp_index, band_buckets,
         eval_postings=_ensure_eval_postings(spark, sf_dir),
-        eval_postings_docs=_eval_postings_doc_count(spark, sf_dir),
     )
     return out.select(
         "doc_id",

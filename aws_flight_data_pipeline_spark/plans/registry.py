@@ -3,9 +3,10 @@
 Each entry pairs a Spark DataFrame plan builder with an equivalent ANSI-SQL
 oracle string (runnable by DuckDB over the same parquet tables). The driver —
 and our own parity tests — run both sides and compare row count, schema, and
-order-insensitive value hashes. Queries whose semantics are not expressible in
-portable SQL (stateful streaming, iterative algorithms) register with
-``oracle=None`` and get a rows-only check.
+order-insensitive value hashes. Every registered query carries an oracle
+(``tests/test_driver_contract.py`` asserts it); a plan whose semantics are not
+expressible in portable SQL stays a builder with ``oracle=None``, timed by the
+bench but outside the parity harness.
 
 Column-name discipline: every computed column is aliased identically in the
 Spark plan and in the oracle SQL — the comparison sorts columns by name.

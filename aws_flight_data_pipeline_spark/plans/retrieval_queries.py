@@ -31,7 +31,7 @@ of exact BIGINT sums.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_flight_data_pipeline_spark.functions import tmproots

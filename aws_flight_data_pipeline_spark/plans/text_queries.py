@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_flight_data_pipeline_spark.functions import tmproots
 from aws_flight_data_pipeline_spark.functions.text import (
     bpe_ish_token_estimate,
     fingerprint,
@@ -930,29 +931,23 @@ def scored_pair_frame(
 
 
 def scored_pairs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MATERIALIZED scored-pair table for the corpus snapshot at
-    ``sf_dir`` — ``(doc_a, doc_b, j)``, built once per snapshot and read by
-    every downstream consumer (views-as-cache; see sources/snapshots.py).
+    """The MATERIALIZED scored-pair table for the corpus at ``sf_dir`` —
+    ``(doc_a, doc_b, j)``, built once per session into a standing root
+    (:func:`tmproots.standing`) and read by every downstream consumer
+    (views-as-cache).
 
     ``dedup_pipeline_end_to_end`` deliberately keeps the full recompute so
     the end-to-end cost of the pipeline stays measured; clustering and other
     secondary consumers read this table instead of rebuilding signatures —
     at 100 TB the signature/pair build is a once-per-snapshot batch job, not
     a per-query cost."""
-    import os
 
-    from aws_flight_data_pipeline_spark.sources.snapshots import (
-        materialized_snapshot,
-    )
-
-    return materialized_snapshot(
-        spark,
-        "scored_pairs",
-        [os.path.join(sf_dir, "documents.parquet")],
-        lambda: scored_pair_frame(
+    def build(root: str) -> None:
+        scored_pair_frame(
             load_table(spark, sf_dir, "documents", fan_out=True)
-        ),
-    )
+        ).write.parquet(f"{root}/pairs")
+
+    return spark.read.parquet(f"{tmproots.standing('scored-pairs', sf_dir, build)}/pairs")
 
 
 @query(

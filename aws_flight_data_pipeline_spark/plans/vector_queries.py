@@ -16,8 +16,6 @@ results rounded to 4 dp to absorb summation-order noise.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1056,24 +1054,17 @@ def vec_near_dup_pair_frame(e: DataFrame) -> DataFrame:
 
 def vec_near_dup_pairs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized verified near-dup pair table for the embedding corpus
-    snapshot at ``sf_dir`` — same views-as-cache discipline as
-    text_queries.scored_pairs_table (sources/snapshots.py): the bucket/
-    verify state is built once per snapshot; clustering and any other
-    secondary consumer read the materialization."""
-    import os
+    at ``sf_dir`` — same standing-root discipline as
+    text_queries.scored_pairs_table: the bucket/verify state is built once
+    per session; clustering and any other secondary consumer read the
+    materialization."""
 
-    from aws_flight_data_pipeline_spark.sources.snapshots import (
-        materialized_snapshot,
-    )
-
-    return materialized_snapshot(
-        spark,
-        "vec_near_dup_pairs",
-        [os.path.join(sf_dir, "embeddings.parquet")],
-        lambda: vec_near_dup_pair_frame(
+    def build(root: str) -> None:
+        vec_near_dup_pair_frame(
             load_table(spark, sf_dir, "embeddings", fan_out=True)
-        ),
-    )
+        ).write.parquet(f"{root}/pairs")
+
+    return spark.read.parquet(f"{tmproots.standing('vec-pairs', sf_dir, build)}/pairs")
 
 
 @builder(

@@ -477,7 +477,8 @@ def streaming_sessionization(
 
 
 def corpus_admission_index(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Static admission index for :func:`streaming_corpus_admission`:
+    """Static admission index for :func:`streaming_corpus_admission` and
+    the base index of :func:`streaming_unified_admission_gate`:
     ``(fp_index, band_buckets)``.
 
     - ``fp_index`` — the corpus's distinct exact-dedup fingerprints
@@ -640,8 +641,9 @@ def streaming_corpus_admission(
     is_near, admitted, near_matches (verified corpus doc_ids), best_jaccard.
     The zero-state property is pinned in tests (empty ``stateOperators`` in
     the final stream progress). The index is FROZEN here — two near-identical
-    docs arriving in different micro-batches are both admitted; the stateful
-    tier that closes that gap is :func:`streaming_corpus_admission_incremental`.
+    docs arriving in different micro-batches are both admitted; the gate that
+    closes that gap by learning from its admissions is
+    :func:`streaming_unified_admission_gate`.
     """
     return _admission_decide(
         _admission_enrich(docs), fp_index, band_buckets
@@ -667,8 +669,8 @@ def _fold_admission_state(
     """Fold every prior batch's admitted-doc index DELTA (the head of the
     append-mode state table) into the base index: fingerprints union
     into ``fp_index``; band entries regroup into ``band_buckets``
-    (flatten-merge of bucket arrays on the band key). Shared by the
-    incremental admission tier and the unified gate."""
+    (flatten-merge of bucket arrays on the band key). Run by the unified
+    gate at the start of every micro-batch."""
     state = _state_head(spark, state_path)
     if state is None:
         return fp_index, band_buckets
@@ -734,90 +736,6 @@ def _intra_batch_reject_ids(survivors: DataFrame) -> DataFrame:
         .unionByName(earlier_near.select(F.col("b.doc_id").alias("doc_id")))
         .distinct()
     )
-
-
-def streaming_corpus_admission_incremental(
-    docs: DataFrame,
-    fp_index: DataFrame,
-    band_buckets: DataFrame,
-    state_path: str,
-    checkpoint_path: str,
-    decisions_path: str,
-    trigger: dict | None = None,
-):
-    """Stateful streaming admission — the index LEARNS: a document admitted
-    in micro-batch N rejects its near-dups in batch N+1 (and later in the
-    SAME batch), closing the frozen-index gap of the stateless tier.
-
-    Per micro-batch (foreachBatch — the decision logic itself is the same
-    pure DataFrame plan as the stateless tier):
-
-    1. read the admitted-doc index DELTAS of every prior batch (the head
-       of the append-mode state table) and fold them into the base index:
-       fingerprints union into ``fp_index``; band entries regroup into
-       ``band_buckets`` (flatten-merge of bucket arrays on the band key);
-    2. decide each batch doc against the COMBINED index
-       (:func:`_admission_decide`);
-    3. intra-batch keep-first election among the survivors: a survivor is
-       rejected if an EARLIER doc of the same batch (doc_id ascending — the
-       arrival-order stand-in, same convention as the batch
-       ``dedup_pipeline_end_to_end`` keep-first) shares its fingerprint or
-       verifies as a near-dup through a shared LSH band. Banded self-join on
-       the batch's survivors only — O(batch), never O(corpus);
-    4. commit the batch's decisions to the ``decisions_path`` table, then
-       the FINALLY-admitted docs' index rows (doc_id, fp, toks, b0, b1) as
-       a state DELTA to the ``state_path`` table — both batch-stamped
-       appends (``versioned.commit_stream_batch``). The state commits last and a batch whose state stamp is committed
-       is skipped, so an at-least-once replay is a no-op; a replay after a
-       crash between the two commits recomputes the same decisions from
-       the same head, skips the decisions commit and lands the delta.
-
-    Both tables read back with ``versioned.read``. State size: O(admitted
-    docs) index rows, written incrementally (each commit appends only its
-    batch's delta). At 100 TB the deltas are exactly the rows a compaction
-    job folds into the materialized corpus index (``corpus_admission_index``)
-    on its own cadence — the streaming tier stays append-only and never
-    rewrites the base index.
-    """
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if vt._batch_committed(state_path, batch_id) or batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        fp_comb, buckets_comb = _fold_admission_state(
-            spark, fp_index, band_buckets, state_path
-        )
-        decided = _admission_decide(
-            _admission_enrich(batch_df), fp_comb, buckets_comb
-        )
-        survivors = decided.where("admitted").select(
-            "doc_id", "fp", "toks", "b0", "b1"
-        )
-        rejected_ids = _intra_batch_reject_ids(survivors)
-        final = decided.join(
-            rejected_ids.withColumn("intra_batch_dup", F.lit(True)),
-            "doc_id",
-            "left",
-        ).withColumn(
-            "admitted",
-            F.col("admitted") & ~F.coalesce("intra_batch_dup", F.lit(False)),
-        )
-        vt.commit_stream_batch(
-            final.select(
-                *_ADMISSION_PUBLIC_COLS, F.lit(batch_id).alias("batch_id")
-            ).coalesce(1),
-            batch_id,
-            decisions_path,
-        )
-        vt.commit_stream_batch(
-            final.where("admitted")
-            .select("doc_id", "fp", "toks", "b0", "b1")
-            .coalesce(1),
-            batch_id,
-            state_path,
-        )
-
-    return vt._start_foreach_batch(docs, process_batch, checkpoint_path, trigger)
 
 
 def streaming_sketch_rollup(
@@ -1225,77 +1143,6 @@ def streaming_scd2_ooo(events: DataFrame, delay: str = "10 minutes") -> DataFram
     )
 
 
-def streaming_decontam_gate(
-    docs: DataFrame,
-    eval_index_path: str,
-    corpus_path: str,
-    decisions_path: str,
-    checkpoint_path: str,
-    trigger: dict | None = None,
-):
-    """Streaming DECONTAMINATION gate: every micro-batch of candidate
-    training documents is probed against the eval split's shingle-
-    tokenized inverted index (``plans.curation_queries.decontam_increment``
-    — O(batch + eval), the accumulated corpus is never read); clean docs
-    append to the versioned corpus table, contaminated docs are rejected
-    with ATTRIBUTION (which eval doc leaked, at what exact-ppm Jaccard)
-    in a decisions table. The gate composes three existing tiers — the
-    pluggable-tokenizer inverted index, the lossless one-sided prefix
-    probe, and the batch-stamped exactly-once sink — into the admission
-    flow a training pipeline actually runs at ingest time.
-
-    Statelessness contract: the eval index is FROZEN for the stream's
-    lifetime (benchmark sets change by out-of-band ``refresh_index``
-    calls, including tombstoned retirements), so each document's decision
-    is independent of micro-batch boundaries — stream == batch exactly,
-    pinned in tests. Exactly-once: both tables take batch-stamped commits
-    (``commit_stream_batch``); a crash between the two replays the batch,
-    the decisions commit is skipped as a duplicate, and the corpus commit
-    lands — decisions are deterministic, so the replay writes the same
-    admitted set.
-    """
-    from aws_flight_data_pipeline_spark.functions.caching import release_tracked
-    from aws_flight_data_pipeline_spark.plans.curation_queries import (
-        decontam_increment,
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        hits = decontam_increment(
-            spark, eval_index_path, batch_df.select("doc_id", "text")
-        ).select(
-            F.col("train_id").alias("doc_id"),
-            F.col("eval_id").alias("contaminating_eval_id"),
-            "jac_ppm",
-        )
-        decisions = (
-            batch_df.select("doc_id")
-            .join(hits, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.col("contaminating_eval_id").isNull().alias("admitted"),
-                "contaminating_eval_id",
-                "jac_ppm",
-            )
-        )
-        vt.commit_stream_batch(decisions, batch_id, decisions_path)
-        clean = batch_df.join(
-            hits.select("doc_id"), "doc_id", "left_anti"
-        )
-        vt.commit_stream_batch(clean, batch_id, corpus_path)
-        # decontam_increment tracked_cache's its eval-postings and batch
-        # token frames; the batch registry's _self_cleaning release never
-        # runs on the streaming path, so without this a long-lived stream
-        # accumulates cached blocks per micro-batch without bound. Both
-        # commits above have materialized everything derived from the
-        # caches, so releasing here is safe.
-        release_tracked()
-
-    return vt._start_foreach_batch(docs, process_batch, checkpoint_path, trigger)
-
-
 def unified_admission_decisions(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -1303,14 +1150,16 @@ def unified_admission_decisions(
     fp_comb: DataFrame,
     buckets_comb: DataFrame,
     eval_postings: DataFrame | None = None,
-    eval_postings_docs: int | None = None,
 ) -> DataFrame:
     """ONE batch's decisions through the composed admission pipeline —
     quality funnel, then decontamination, then near-dup election — as a
     single DataFrame plan. Shared verbatim by the streaming gate (per
-    micro-batch, against the state-folded index) and the batch twin
-    (:func:`unified_admission_batch`), so stream == batch is one code
-    path, not two implementations that happen to agree.
+    micro-batch, against the state-folded index) and batch callers (the
+    whole input as one batch against the base index, where the intra-batch
+    keep-first election stands in for the learned state), so stream ==
+    batch is one code path, not two implementations that happen to agree.
+    ``eval_postings`` is :func:`decontam_increment`'s optional frozen
+    ``(eval_id, tok, sz_eval)`` snapshot of the eval index.
 
     Stage order is cheapest-first and makes decisions micro-batch-
     boundary-invariant: quality is stateless per-row expressions over the
@@ -1370,7 +1219,6 @@ def unified_admission_decisions(
             eval_index_path,
             qpass.select("doc_id", "text"),
             postings=eval_postings,
-            postings_eval_docs=eval_postings_docs,
         )
         .select(
             F.col("train_id").alias("doc_id"),
@@ -1442,9 +1290,8 @@ def streaming_unified_admission_gate(
     """The COMPOSED streaming admission gate: quality funnel +
     decontamination + learning near-dup election on the SAME micro-batch,
     one pass per batch, ONE batch-stamped commit per output table — the
-    admission flow a training pipeline actually runs at ingest, previously
-    three separate foreachBatch recipes (quality gate, incremental
-    admission, decontam gate).
+    admission flow a training pipeline actually runs at ingest, and the
+    one foreachBatch admission path.
 
     Per micro-batch: fold the admitted-doc index deltas of prior batches
     into the base near-dup index (:func:`_fold_admission_state`), run
@@ -1458,11 +1305,16 @@ def streaming_unified_admission_gate(
     skips the commits that landed and lands the rest — at-least-once
     delivery is exactly-once on all three tables.
 
+    State size: O(admitted docs) index rows, each commit appending only
+    its batch's delta. At lake scale the deltas are exactly the rows a
+    compaction job folds into the base index (:func:`corpus_admission_index`)
+    on its own cadence; the gate never rewrites the base index.
+
     Stream == batch is pinned in tests over a mixed fixture (duplicate +
     contaminated + low-quality + clean docs): the decisions from N
-    micro-batches equal :func:`unified_admission_batch` over the same
-    documents in one pass, and each table takes exactly one commit per
-    non-empty batch.
+    micro-batches equal :func:`unified_admission_decisions` over the same
+    documents in one pass against the base index, and each table takes
+    exactly one commit per non-empty batch.
     """
     from aws_flight_data_pipeline_spark.functions.caching import (
         release_tracked,
@@ -1500,28 +1352,11 @@ def streaming_unified_admission_gate(
             batch_id,
             state_path,
         )
-        # same cache discipline as streaming_decontam_gate: the probe
-        # tracked_cache's frames with no batch-registry release point
+        # the decision plan tracked-caches and checkpoints its frames, and
+        # the batch registry's self-cleaning release never runs on the
+        # streaming path; all three commits have materialized everything
+        # derived from them, so release here or a long-lived stream
+        # accumulates cached blocks per micro-batch without bound
         release_tracked()
 
     return vt._start_foreach_batch(docs, process_batch, checkpoint_path, trigger)
-
-
-def unified_admission_batch(
-    spark: SparkSession,
-    docs: DataFrame,
-    eval_index_path: str,
-    fp_index: DataFrame,
-    band_buckets: DataFrame,
-    eval_postings: DataFrame | None = None,
-    eval_postings_docs: int | None = None,
-) -> DataFrame:
-    """The unified gate's BATCH twin: the whole input as one batch against
-    the base index only (no accumulated state — the intra-batch keep-first
-    election subsumes it when every document is in the same batch). Used by
-    the stream==batch equivalence tests and as the backfill entry point."""
-    return unified_admission_decisions(
-        spark, docs, eval_index_path, fp_index, band_buckets,
-        eval_postings=eval_postings,
-        eval_postings_docs=eval_postings_docs,
-    )

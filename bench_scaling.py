@@ -7,8 +7,9 @@ all-pairs joins. This sidecar turns that claim into a measured number.
 
 Two timings per (query, sf):
 
-- ``cold``: the corpus-snapshot materialization cache (sources/snapshots.py)
-  is cleared before every run, so the timing covers the FULL pipeline
+- ``cold``: the standing pair-table materializations
+  (``text_queries.scored_pairs_table``, ``vector_queries.vec_near_dup_pairs_table``)
+  are dropped before every run, so the timing covers the FULL pipeline
   compute — signatures, LSH banding, candidate verification — which is what
   the linear-in-corpus claim is about. The fitted exponents use cold.
 - ``warm``: the snapshot is in place (bench.py's steady state) — the
@@ -69,10 +70,10 @@ import time
 # inherit the env) a deep-sweep heap unless the caller pinned one.
 os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
 
+from aws_flight_data_pipeline_spark.functions import tmproots
 from aws_flight_data_pipeline_spark.functions.caching import release_tracked
 from aws_flight_data_pipeline_spark.plans.registry import _ensure_loaded, resolve
 from aws_flight_data_pipeline_spark.session import get_spark
-from aws_flight_data_pipeline_spark.sources.snapshots import _SNAPSHOT_ROOT
 
 HEAVY = (
     "dedup_pipeline_end_to_end",
@@ -245,6 +246,12 @@ def _ensure_scaled_embeddings(spark, mult: int, out: str) -> None:
     ).repartition(32).write.mode("overwrite").parquet(f"{out}/embeddings.parquet")
 
 
+def _drop_pair_tables() -> None:
+    """Drop the standing pair tables, so the next run rebuilds them."""
+    tmproots.forget("scored-pairs")
+    tmproots.forget("vec-pairs")
+
+
 def _fit_slope(points: list[tuple[float, float]]) -> float:
     xs = [math.log(sf) for sf, _ in points]
     ys = [math.log(max(t, 1e-6)) for _, t in points]
@@ -265,9 +272,6 @@ def measure_query(name: str) -> dict:
     def run(sf_dir: str) -> None:
         resolve(name)(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    def clear_snapshots() -> None:
-        shutil.rmtree(_SNAPSHOT_ROOT, ignore_errors=True)
-
     cold: dict[str, float] = {}
     warm: dict[str, float] = {}
     for sf in SFS:
@@ -276,7 +280,7 @@ def measure_query(name: str) -> dict:
         release_tracked()
         best_cold = math.inf
         for _ in range(RUNS):
-            clear_snapshots()
+            _drop_pair_tables()
             t0 = time.perf_counter()
             run(sf_dir)
             best_cold = min(best_cold, time.perf_counter() - t0)
@@ -316,7 +320,7 @@ def measure_query(name: str) -> dict:
             release_tracked()  # from the smaller mults, and minutes-costly)
         best = math.inf
         for _ in range(LARGE_RUNS):
-            clear_snapshots()
+            _drop_pair_tables()
             t0 = time.perf_counter()
             run(sf_dir)
             best = min(best, time.perf_counter() - t0)
@@ -514,7 +518,7 @@ def measure_dedup_stages() -> dict:
     out: dict[str, dict] = {}
     for mult in (100, XLARGE_MULT):
         sf_dir = _ensure_scaled_corpus(spark, mult)
-        shutil.rmtree(_SNAPSHOT_ROOT, ignore_errors=True)
+        _drop_pair_tables()
         d = load_table(spark, sf_dir, "documents", fan_out=True)
         sink: dict = {}
         scored = scored_pair_frame(d, sink)
@@ -593,7 +597,7 @@ def measure_hash_family() -> dict:
     spark.sparkContext.setLogLevel("ERROR")
 
     def run_once(sf_dir: str, family: str) -> dict:
-        shutil.rmtree(_SNAPSHOT_ROOT, ignore_errors=True)
+        _drop_pair_tables()
         d = load_table(spark, sf_dir, "documents", fan_out=True)
         sink: dict = {}
         scored = scored_pair_frame(d, sink, hash_family=family)
@@ -659,7 +663,7 @@ def measure_dedup_xxlarge() -> dict:
     best = math.inf
     runs = []
     for _ in range(2):
-        shutil.rmtree(_SNAPSHOT_ROOT, ignore_errors=True)
+        _drop_pair_tables()
         t0 = time.perf_counter()
         resolve("dedup_pipeline_end_to_end_xx")(spark, sf_dir).write.format(
             "noop"
@@ -689,7 +693,7 @@ def measure_semdedup_xxlarge() -> dict:
     sf_dir = _ensure_scaled_corpus(spark, 2000)
     runs = []
     for _ in range(2):
-        shutil.rmtree(_SNAPSHOT_ROOT, ignore_errors=True)
+        _drop_pair_tables()
         t0 = time.perf_counter()
         resolve("semantic_dedup_semdedup_scale")(spark, sf_dir).write.format(
             "noop"

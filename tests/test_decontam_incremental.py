@@ -126,3 +126,28 @@ def test_probe_matches_brute_force_on_real_corpus(spark, tmp_path, sf_dir):
         .select("train_id", "eval_id", "n_common", "sz_train", "sz_eval", "jac_ppm")
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, hit.collect()))
+
+
+def test_frozen_postings_fast_path_matches_manifest_path(spark, eval_index):
+    """The frozen shape (a caller-supplied ``(eval_id, tok, sz_eval)``
+    snapshot, one lazy pass) and the manifest shape (per-probe versioned
+    read + tombstone mask) return IDENTICAL decision tables on a planted
+    increment."""
+    from aws_flight_data_pipeline_spark.plans.curation_queries import _live_postings
+
+    _, ipath = eval_index
+    w = _WORDS.split()
+    inc = spark.createDataFrame(
+        [
+            (1, " ".join(w[:9]) + " xx"),  # J = 7/10, exactly at threshold
+            (2, " ".join(w[:8]) + " xx yy"),  # J = 6/11, below
+            (3, _WORDS),  # exact leak, J = 1
+        ],
+        "doc_id long, text string",
+    )
+    manifest = sorted(map(tuple, decontam_increment(spark, ipath, inc).collect()))
+    assert {r[0] for r in manifest} == {1, 3}  # planted outcome fires
+    frozen = decontam_increment(
+        spark, ipath, inc, postings=_live_postings(spark, ipath)
+    )
+    assert sorted(map(tuple, frozen.collect())) == manifest

@@ -50,7 +50,6 @@ _ensure_loaded()
 _SPECS = {**{n: s for n, s in BUILDER_SPECS.items() if s.oracle is not None}, **REGISTRY}
 
 WITH_ORACLE = sorted(n for n, s in _SPECS.items() if s.oracle is not None)
-ROWS_ONLY = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
 
 SF_DIRS = ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
 
@@ -147,11 +146,3 @@ def test_oracle_parity(spark, name, sf):
                 break
     assert not mismatches, f"{name}@{sf}: value mismatches (cols={s_cols}): {mismatches}"
 
-
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_queries_run(spark, sf_dir, name):
-    spec = REGISTRY[name]
-    df = spec.fn(spark, sf_dir)
-    n = df.count()
-    assert n >= 0
-    assert len(df.schema.fields) > 0

@@ -564,6 +564,65 @@ def test_streaming_corpus_admission_matches_batch_and_is_stateless(spark, tmp_pa
         assert len(r["near_matches"]) > 0 and r["best_jaccard"] >= 0.5
 
 
+
+@pytest.mark.slow
+def test_stateless_tier_admits_cross_batch_near_dups(spark, tmp_path):
+    """The frozen-index gap: with a static index, X (batch 1) and its near
+    and exact copies (batch 2) are ALL admitted — nothing rejects a doc
+    against an earlier micro-batch. The learning gate that closes it is
+    pinned in tests/test_unified_admission.py."""
+    import time
+
+    from aws_flight_data_pipeline_spark.streaming.streams import (
+        corpus_admission_index,
+        stream_documents,
+        streaming_corpus_admission,
+    )
+
+    # X_NEAR changes the last of 40 distinct tokens (shingle Jaccard 35/41,
+    # both LSH bands collide); batch 2 also repeats X byte for byte
+    x = " ".join(f"novel{i:02d}" for i in range(40))
+    x_near = " ".join(("changed" if i == 39 else f"novel{i:02d}") for i in range(40))
+    t_corp = " ".join(f"corpus{i:02d}" for i in range(40))
+    rows = [(i, f"background text block {i} " * 5, "base") for i in range(1, 6)]
+    corpus = spark.createDataFrame(
+        rows + [(6, t_corp, "base")], "doc_id long, text string, source string"
+    )
+    fp_index, band_buckets = corpus_admission_index(corpus)
+
+    # two parquet files = two micro-batches, mtimes forced into order
+    src = str(tmp_path / "incoming")
+    for b, batch in enumerate(
+        ([(101, x, "inc"), (102, t_corp, "inc")], [(201, x_near, "inc"), (202, x, "inc")])
+    ):
+        spark.createDataFrame(
+            batch, "doc_id long, text string, source string"
+        ).coalesce(1).write.mode("append").parquet(src)
+        time.sleep(0.05)
+    files = sorted(
+        (os.path.getmtime(f"{src}/{f}"), f"{src}/{f}")
+        for f in os.listdir(src)
+        if f.endswith(".parquet")
+    )
+    now = time.time()
+    for i, (_, path) in enumerate(files):
+        os.utime(path, (now + i * 30, now + i * 30))
+
+    out = streaming_corpus_admission(
+        stream_documents(spark, src, max_files_per_trigger=1),
+        fp_index,
+        band_buckets,
+    )
+    _run_to_memory(out, "stateless_adm")
+    got = {
+        r["doc_id"]: (r["is_exact"], r["is_near"], r["admitted"], r["near_matches"])
+        for r in spark.sql("SELECT * FROM stateless_adm").collect()
+    }
+    assert got[101][2] and got[201][2] and got[202][2]  # all admitted (the gap)
+    # vs-corpus rejection still works (identical text is exact AND — with
+    # J=1 the bands always collide — a verified near-dup of corpus doc 6)
+    assert got[102] == (True, True, False, [6])
+
 def test_streaming_sketch_rollup_matches_batch_sketch(spark, tmp_path):
     """HLL register-max merge is order-independent, so the stream's running
     state after N micro-batches must estimate BIT-identically to one batch

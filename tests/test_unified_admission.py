@@ -5,11 +5,15 @@ ONE pass per micro-batch, one batch-stamped commit per output table.
 Pinned over a mixed fixture (clean + low-quality + contaminated + intra- and
 cross-batch duplicates): the DECISION columns (passed_quality, contamination
 attribution, admitted, reject_stage) are micro-batch-boundary invariant —
-stream over N batches equals unified_admission_batch over the same docs in
-one pass. The dedup MECHANISM flags legitimately differ by boundary (a
+stream over N batches equals unified_admission_decisions over the same docs
+in one pass against the base index. The dedup MECHANISM flags legitimately differ by boundary (a
 cross-batch dup shows is_exact=true vs the learned state; the same pair in
 one batch shows intra_batch_dup=true), which is why they are separate
-columns from the decision."""
+columns from the decision.
+
+Also pinned: the learned state rejects a cross-batch near-duplicate, a
+crash after any of the three commits replays to the uninterrupted tables,
+and vacuum keeps the state's per-batch deltas."""
 
 from __future__ import annotations
 
@@ -25,7 +29,7 @@ from aws_flight_data_pipeline_spark.streaming.streams import (
     corpus_admission_index,
     stream_documents,
     streaming_unified_admission_gate,
-    unified_admission_batch,
+    unified_admission_decisions,
 )
 from tests.conftest import drain, persisted_rdd_ids
 
@@ -41,10 +45,13 @@ def _qdoc(seed: str) -> str:
 
 EVAL_TEXT = _qdoc("evl")
 C1, C2 = _qdoc("cl1"), _qdoc("cl2")
+# C1 with its last word changed: shingle Jaccard 27/29, and both LSH bands
+# collide with C1's (checked once out-of-band; the hash family is fixed)
+C1_NEAR = C1.rsplit(" ", 1)[0] + " cl1zz"
 
 # batch 1: clean, contaminated (quality-passing eval copy), low-quality,
 # intra-batch exact dup of doc 1.  batch 2: cross-batch exact dup of doc 1,
-# a second clean doc, contaminated again.
+# a second clean doc, contaminated again, cross-batch near-dup of doc 1.
 B1 = [
     (1, C1, "inc", "en"),
     (2, EVAL_TEXT, "inc", "en"),
@@ -55,6 +62,7 @@ B2 = [
     (5, C1, "inc", "en"),
     (6, C2, "inc", "en"),
     (7, EVAL_TEXT, "inc", "en"),
+    (8, C1_NEAR, "inc", "en"),
 ]
 
 EXPECT = {
@@ -65,6 +73,7 @@ EXPECT = {
     5: (True, None, False, "duplicate"),
     6: (True, None, True, None),
     7: (True, 900, False, "contaminated"),
+    8: (True, None, False, "duplicate"),
 }
 
 
@@ -142,13 +151,18 @@ def test_unified_gate_stream_equals_batch_one_commit_per_table(spark, tmp_path):
         assert _decision_key(dec[doc_id]) == want, (doc_id, dec[doc_id])
     # contamination carries attribution at full exact-ppm Jaccard
     assert dec[2]["jac_ppm"] == 1_000_000 and dec[7]["jac_ppm"] == 1_000_000
-    # the cross-batch dup was caught by the LEARNED state (exact match),
-    # the intra-batch dup by the same-batch election
+    # the cross-batch dups were caught by the LEARNED state (an exact
+    # match, and a near match through a shared band), the intra-batch dup
+    # by the same-batch election
     assert dec[5]["is_exact"] and not dec[5]["intra_batch_dup"]
+    assert dec[8]["is_near"] and not dec[8]["is_exact"]
+    assert not dec[8]["intra_batch_dup"]
     assert dec[4]["intra_batch_dup"] and not dec[4]["is_exact"]
 
     got_corpus = {r["doc_id"] for r in vt.read(spark, corpus).collect()}
     assert got_corpus == {1, 6}
+    # the state deltas hold exactly the admitted docs' index rows
+    assert {r["doc_id"] for r in vt.read(spark, state).collect()} == {1, 6}
 
     # exactly ONE batch-stamped commit per table per non-empty micro-batch
     assert _stamps(corpus) == [0, 1]
@@ -161,16 +175,18 @@ def test_unified_gate_stream_equals_batch_one_commit_per_table(spark, tmp_path):
     assert vt.latest_version(corpus) == head_c
     assert vt.latest_version(decisions) == head_d
 
-    # stream == batch: the whole fixture through the batch twin in ONE pass
-    # produces identical decision columns for every document
+    # stream == batch: the whole fixture as ONE batch against the base
+    # index produces identical decision columns for every document
     all_docs = spark.createDataFrame(B1 + B2, SCHEMA)
-    batch_dec = {
-        r["doc_id"]: _decision_key(r)
-        for r in unified_admission_batch(
-            spark, all_docs, ipath, fp_index, band_buckets
-        ).collect()
-    }
+    batch_rows = unified_admission_decisions(
+        spark, all_docs, ipath, fp_index, band_buckets
+    ).collect()
+    batch_dec = {r["doc_id"]: _decision_key(r) for r in batch_rows}
     assert batch_dec == {d: _decision_key(dec[d]) for d in dec}
+    # in one batch every later copy of C1, exact or near, loses the
+    # keep-first election to doc 1
+    elected = {r["doc_id"] for r in batch_rows if r["intra_batch_dup"]}
+    assert elected == {4, 5, 8}
 
 
 def _table_rows(spark, path) -> list[tuple]:
@@ -207,14 +223,16 @@ def uninterrupted_gate(spark, tmp_path_factory) -> tuple[str, dict]:
     return ipath, {t: _table_rows(spark, p) for t, p in paths.items()}
 
 
-@pytest.mark.parametrize("crash_after", ["decisions", "corpus"])
+@pytest.mark.parametrize("crash_after", ["decisions", "corpus", "state"])
 def test_unified_gate_restart_after_crash_between_commits(
     spark, tmp_path, monkeypatch, uninterrupted_gate, crash_after
 ):
     """Batch 1 crashes right after its ``crash_after`` commit, before the
-    state delta and the offset commit. The restart replays batch 1 against
-    the same state head, skips the commits that landed and lands the
-    rest: decisions, corpus and state equal the uninterrupted run."""
+    offset commit (and, unless ``crash_after`` is the state, before the
+    state delta). The restart replays batch 1: a batch whose state landed
+    is skipped whole, otherwise it reruns against the same state head,
+    skips the commits that landed and lands the rest. Either way
+    decisions, corpus and state equal the uninterrupted run."""
     ipath, want = uninterrupted_gate
     _write_batches(spark, str(tmp_path / "incoming"))
     crash_path = str(tmp_path / crash_after)
@@ -231,12 +249,33 @@ def test_unified_gate_restart_after_crash_between_commits(
         _run_gate(spark, tmp_path, ipath)
     monkeypatch.undo()
     assert _stamps(crash_path) == [0, 1]
-    assert _stamps(str(tmp_path / "state")) == [0]
+    state_landed = crash_after == "state"
+    assert _stamps(str(tmp_path / "state")) == ([0, 1] if state_landed else [0])
+    assert not os.path.exists(tmp_path / "ckpt" / "commits" / "1")
 
     paths = _run_gate(spark, tmp_path, ipath)
+    assert os.path.exists(tmp_path / "ckpt" / "commits" / "1")
     for t, p in paths.items():
         assert _stamps(p) == [0, 1], t
         assert _table_rows(spark, p) == want[t], t
+
+
+def test_vacuum_keeps_admission_delta_state_reads_identical(
+    spark, tmp_path, uninterrupted_gate
+):
+    """The gate's state is an append table of per-batch DELTAS. Vacuum
+    retention drops old manifests, but the head manifest lists every live
+    delta file, so no delta is deleted and the folded state reads the
+    same."""
+    ipath, want = uninterrupted_gate
+    _write_batches(spark, str(tmp_path / "incoming"))
+    state = _run_gate(spark, tmp_path, ipath)["state"]
+
+    stats = vt.vacuum(state, keep_last=1, min_age_seconds=0)
+    assert stats == {"versions_dropped": 1, "files_deleted": 0}
+    assert _table_rows(spark, state) == want["state"]
+    assert _stamps(state) == [1]
+    assert vt._batch_committed(state, 0)
 
 
 @pytest.mark.slow
