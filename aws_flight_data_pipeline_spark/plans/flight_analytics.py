@@ -12,7 +12,8 @@ present → Catalyst prunes partitions; the airport-proximity theta join keeps
 the reference's ±1° band prefilter and broadcasts the airports dim; every
 "view" is a plain groupBy aggregate suitable for materialization via
 versioned.commit, or incremental upkeep via ivm.refresh_view (the
-views-as-cache pattern, 07:486-571).
+views-as-cache pattern, 07:486-571); exact distinct counts go through
+_n_distinct (size(collect_set)), one aggregation round with no Expand.
 
 NOTE on category labels: the reference's ETL emits LOW/MEDIUM/… while its SQL
 corpus matches 'Low'/'Normal'/… — labels no component ever produces. This
@@ -88,6 +89,13 @@ def _count_when(cond: Column, name: str) -> Column:
     return F.sum(F.when(cond, 1).otherwise(0)).alias(name)
 
 
+def _n_distinct(col: str) -> Column:
+    """Exact COUNT(DISTINCT col): collect_set skips NULLs and yields 0 on an
+    empty group, and any number of them share one ObjectHashAggregate pair,
+    where countDistinct plans an Expand plus extra aggregation rounds."""
+    return F.size(F.collect_set(col)).cast("long")
+
+
 # ---------------------------------------------------------------------------
 # The 10 analytical queries
 # ---------------------------------------------------------------------------
@@ -109,7 +117,7 @@ def q1_flight_status_overview(processed: DataFrame, now_unix: int) -> DataFrame:
     ac, sc, fp = F.col("altitude_category"), F.col("speed_category"), F.col("flight_phase")
     return df.agg(
         F.count("*").alias("total_active_flights"),
-        F.countDistinct("origin_country").alias("countries_active"),
+        _n_distinct("origin_country").alias("countries_active"),
         _count_when(ac == "Low", "low_altitude_flights"),
         _count_when(ac == "Medium", "medium_altitude_flights"),
         _count_when(ac == "High", "high_altitude_flights"),
@@ -166,7 +174,7 @@ def q2_altitude_band_distribution(processed: DataFrame, now_unix: int) -> DataFr
         df.groupBy(altitude_band(F.col("baro_altitude_ft")).alias("altitude_band"))
         .agg(
             F.count("*").alias("flight_count"),
-            F.countDistinct("icao24").alias("unique_aircraft"),
+            _n_distinct("icao24").alias("unique_aircraft"),
             F.avg("velocity_knots").alias("avg_speed_knots"),
             F.stddev("velocity_knots").alias("speed_stddev"),
             _count_when(fp == "Cruise", "cruise_count"),
@@ -215,7 +223,7 @@ def q4_peak_traffic(processed: DataFrame, now_unix: int) -> DataFrame:
     )
     hourly = df.groupBy("year", "month", "day", "hour").agg(
         F.count("*").alias("flight_count"),
-        F.countDistinct("icao24").alias("unique_aircraft"),
+        _n_distinct("icao24").alias("unique_aircraft"),
         F.avg("velocity_knots").alias("avg_speed"),
         F.avg("baro_altitude_ft").alias("avg_altitude"),
     )
@@ -256,8 +264,8 @@ def q5_route_corridors(processed: DataFrame, now_unix: int, min_flights: int = 5
         grid.groupBy("lat_grid", "lon_grid")
         .agg(
             F.count("*").alias("total_flights"),
-            F.countDistinct("icao24").alias("unique_aircraft"),
-            F.countDistinct("callsign").alias("unique_flights"),
+            _n_distinct("icao24").alias("unique_aircraft"),
+            _n_distinct("callsign").alias("unique_flights"),
             F.avg("true_track").alias("avg_heading_degrees"),
             F.stddev("true_track").alias("heading_variance"),
             F.avg("baro_altitude_ft").alias("avg_cruise_altitude"),
@@ -345,7 +353,7 @@ def q7_aircraft_performance(
         )
         .agg(
             F.count("*").alias("observations"),
-            F.countDistinct("icao24").alias("unique_aircraft"),
+            _n_distinct("icao24").alias("unique_aircraft"),
             F.avg("velocity_knots").alias("avg_speed_knots"),
             F.avg("baro_altitude_ft").alias("avg_altitude_ft"),
             F.stddev("velocity_knots").alias("speed_consistency"),
@@ -403,7 +411,7 @@ def q8_airport_proximity(
         nearest.groupBy("icao_code", "airport_name")
         .agg(
             F.count("*").alias("nearby_flights"),
-            F.countDistinct("icao24").alias("unique_aircraft"),
+            _n_distinct("icao24").alias("unique_aircraft"),
             F.avg("distance_miles").alias("avg_distance_miles"),
             F.min("distance_miles").alias("closest_approach_miles"),
             _count_when(F.col("on_ground"), "ground_operations"),
@@ -426,7 +434,7 @@ def q9_temporal_patterns(processed: DataFrame, now_unix: int) -> DataFrame:
         df.groupBy(dow.alias("approx_day_of_week"), F.col("hour"))
         .agg(
             F.count("*").alias("flight_count"),
-            F.countDistinct("icao24").alias("unique_aircraft"),
+            _n_distinct("icao24").alias("unique_aircraft"),
             F.avg("velocity_knots").alias("avg_speed"),
         )
         .withColumn(
@@ -483,9 +491,9 @@ def hourly_flight_summary(processed: DataFrame) -> DataFrame:
     lat, lon = F.col("latitude"), F.col("longitude")
     return df.groupBy("year", "month", "day", "hour").agg(
         F.count("*").alias("total_flights"),
-        F.countDistinct("icao24").alias("unique_aircraft"),
-        F.countDistinct("callsign").alias("unique_callsigns"),
-        F.countDistinct("origin_country").alias("countries_active"),
+        _n_distinct("icao24").alias("unique_aircraft"),
+        _n_distinct("callsign").alias("unique_callsigns"),
+        _n_distinct("origin_country").alias("countries_active"),
         _count_when(F.col("on_ground"), "grounded_aircraft"),
         _count_when(~F.col("on_ground"), "airborne_aircraft"),
         F.avg("baro_altitude_ft").alias("avg_altitude_ft"),
@@ -550,7 +558,7 @@ def realtime_flight_metrics(processed: DataFrame, now_unix: int, window_hours: i
     df = processed.filter(F.col("collection_time") >= cutoff)
     return df.agg(
         F.count("*").alias("total_observations"),
-        F.countDistinct("icao24").alias("active_aircraft"),
+        _n_distinct("icao24").alias("active_aircraft"),
         _count_when(~F.col("on_ground"), "airborne_count"),
         _count_when(F.col("on_ground"), "ground_count"),
         F.avg("baro_altitude_ft").alias("avg_altitude_ft"),

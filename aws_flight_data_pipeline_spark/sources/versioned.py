@@ -113,7 +113,10 @@ def _read_manifest(path: str, version: int) -> dict:
             f"(available: {have[:3]}..{have[-3:] if have else []})"
         )
     with open(mp) as fh:
-        return json.load(fh)
+        try:
+            return json.load(fh)
+        except json.JSONDecodeError as e:
+            raise ValueError(f"manifest {mp} (version {version} of {path}) is corrupt: {e}") from e
 
 
 def _head_path(path: str) -> str:

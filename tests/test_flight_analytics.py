@@ -175,3 +175,90 @@ def test_latest_flight_activity_view(spark, tmp_path):
         (1693401600, 3),
     ]
     assert rows[0]["batch_timestamp"].year == 2023
+
+
+def test_distinct_counts_plan_no_expand(processed, aircraft_ref, airport_ref):
+    """Every exact distinct count stays one aggregation round: no Expand
+    (the RewriteDistinctAggregates plan of several COUNT(DISTINCT)s)."""
+    built = {
+        "q1": fa.q1_flight_status_overview(processed, NOW),
+        "q2": fa.q2_altitude_band_distribution(processed, NOW),
+        "q4": fa.q4_peak_traffic(processed, NOW),
+        "q5": fa.q5_route_corridors(processed, NOW),
+        "q7": fa.q7_aircraft_performance(processed, aircraft_ref, NOW),
+        "q8": fa.q8_airport_proximity(processed, airport_ref, NOW),
+        "q9": fa.q9_temporal_patterns(processed, NOW),
+        "hourly_flight_summary": fa.hourly_flight_summary(processed),
+        "daily_flight_summary": fa.daily_flight_summary(processed),
+        "realtime_flight_metrics": fa.realtime_flight_metrics(processed, NOW),
+    }
+    for name, df in built.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Expand" not in plan, f"{name}: distinct count plans an Expand"
+
+
+def test_exact_distinct_counts_skip_nulls(spark):
+    """Distinct counts are exact: NULLs are skipped, a repeated icao24 counts
+    once per group, an empty input counts 0 (not NULL), and the columns
+    stay bigint."""
+    t11, t13 = NOW - 7200, NOW - 600  # hours 11 and 13 of NOW's day
+    # (collection_time, icao24, callsign, origin_country, baro_altitude_ft)
+    fixes = [
+        (t11, "a1", "UAL1", "US", 3000.0),
+        (t11 + 10, "a1", "UAL1", "US", 35000.0),
+        (t11 + 20, "a2", None, "DE", 3000.0),
+        (t11 + 30, "a3", "BAW2", None, 35000.0),
+        (t13, "a1", "UAL1", "US", 35000.0),
+        (t13 + 10, "a4", "UAL1", None, 3000.0),
+        (t13 + 20, "a4", None, None, 3000.0),
+        (t13 + 30, "a5", "DLH3", "FR", 35000.0),
+        (t13 + 40, None, "DLH3", "FR", 3000.0),
+    ]
+    rows = [
+        dict(
+            icao24=icao, callsign=cs, origin_country=oc, collection_time=t,
+            last_contact=t - 2, longitude=-73.0, latitude=40.0, baro_altitude_ft=alt,
+            velocity_knots=400.0, vertical_rate_fpm=0.0, true_track=90.0,
+            on_ground=False, flight_phase="cruise", data_quality_score=0.9,
+            completeness_score=0.9, validity_score=0.9, consistency_score=0.9,
+        )
+        for t, icao, cs, oc, alt in fixes
+    ]
+    df = fa.with_analytics_categories(
+        with_time_partitions(spark.createDataFrame(rows, PROCESSED_DDL))
+    )
+
+    def n_distinct(fs, i):
+        return len({f[i] for f in fs} - {None})
+
+    by_hour = {"11": fixes[:4], "13": fixes[4:]}
+    hourly = fa.hourly_flight_summary(df)
+    got = {
+        r.hour: (r.unique_aircraft, r.unique_callsigns, r.countries_active)
+        for r in hourly.collect()
+    }
+    assert got == {h: tuple(n_distinct(fs, i) for i in (1, 2, 3)) for h, fs in by_hour.items()}
+
+    def band(alt):
+        return next(label for bound, label in fa.ALTITUDE_BANDS if alt < bound)
+
+    q2 = fa.q2_altitude_band_distribution(df, NOW)
+    assert {r.altitude_band: r.unique_aircraft for r in q2.collect()} == {
+        b: n_distinct([f for f in fixes if band(f[4]) == b], 1) for b in {band(f[4]) for f in fixes}
+    }
+
+    rt = fa.realtime_flight_metrics(df, NOW)
+    assert rt.collect()[0].active_aircraft == n_distinct(fixes, 1)
+
+    q1_empty = fa.q1_flight_status_overview(df, NOW + 10 * 86400)
+    out = q1_empty.collect()[0]
+    assert out.total_active_flights == 0 and out.countries_active == 0
+
+    for frame, cols in (
+        (hourly, ("unique_aircraft", "unique_callsigns", "countries_active")),
+        (q2, ("unique_aircraft",)),
+        (rt, ("active_aircraft",)),
+        (q1_empty, ("countries_active",)),
+    ):
+        types = dict(frame.dtypes)
+        assert all(types[c] == "bigint" for c in cols), types

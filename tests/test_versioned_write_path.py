@@ -346,3 +346,23 @@ def test_compaction_of_a_bloomless_index_stays_bloomless(spark, tmp_path):
     m = _head(idx)
     assert m["blooms"] == {}
     assert set(m["stats"]) == set(m["files"])
+
+
+def test_corrupt_head_manifest_is_named_and_older_versions_stay_readable(spark, tmp_path):
+    t = str(tmp_path / "t")
+    _base(spark, t)
+    older = _rows(spark, t)
+    _base(spark, t, 10, 15)
+    head = vt.latest_version(t)
+    mp = vt._manifest_path(t, head)
+    with open(mp, "w") as fh:
+        fh.write('{"version": 1, "files": [')
+    commits = sorted(os.listdir(os.path.join(t, "_commits")))
+
+    with pytest.raises(ValueError, match=re.escape(mp)):
+        vt.read(spark, t)
+    with pytest.raises(ValueError, match=re.escape(mp)):
+        _base(spark, t, 15, 20)
+
+    assert sorted(tuple(r) for r in vt.read(spark, t, version=head - 1).collect()) == older
+    assert sorted(os.listdir(os.path.join(t, "_commits"))) == commits
