@@ -1,12 +1,10 @@
-"""DDSketch log-bucket Column builders shared by the batch quantile profile
-(plans/sketch_queries.py) and the streaming quantile rollup
-(streaming/streams.py).
+"""DDSketch log-bucket Column builders of the batch quantile profile
+(plans/sketch_queries.py).
 
 Geometry (Masson/Rim/Lee, VLDB 2019): gamma = (1+alpha)/(1-alpha); bucket
 j = ceil(ln(x)/ln(gamma)); the midpoint estimate 2*gamma^j/(gamma+1) is
 within alpha relative error of any value in bucket j. Buckets are INTEGER
-counts: deterministic, exactly mergeable by addition (the property the
-streaming tier's stream==batch equality rests on), and cross-engine
+counts: deterministic, exactly mergeable by addition, and cross-engine
 verifiable.
 """
 
@@ -36,16 +34,6 @@ def dd_histogram(df: DataFrame, scope_col: str, value_col: str, alpha: float = D
         .groupBy("scope", "j")
         .agg(F.count("*").cast("bigint").alias("c"))
     )
-
-
-def dd_merge(*histograms: DataFrame) -> DataFrame:
-    """Merge sketches by bucket-wise integer addition (associative,
-    commutative — micro-batch/partition boundaries cannot change the
-    result)."""
-    out = histograms[0]
-    for h in histograms[1:]:
-        out = out.unionByName(h)
-    return out.groupBy("scope", "j").agg(F.sum("c").cast("bigint").alias("c"))
 
 
 def dd_profile(

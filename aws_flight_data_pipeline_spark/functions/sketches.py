@@ -81,19 +81,12 @@ def murmur3_x86_32(data: bytes, seed: int) -> int:
 
 
 class CountMinSketchReader:
-    """Parsed view of a serialized Spark CountMinSketch.
-
-    Beyond probing, the parsed form MERGES: two sketches with identical
-    geometry and hash family combine by element-wise table addition (CMS
-    cells count hash arrivals, so addition is exact, associative and
-    commutative — the property that makes per-batch/per-partition sketches
-    re-aggregatable), and :meth:`to_bytes` re-serializes to the exact JVM
-    V1 layout, so a Python-merged sketch is byte-compatible with — and for
-    same-family inputs byte-IDENTICAL to — one the JVM would have built
-    over the concatenated input.
+    """Parsed view of a serialized Spark CountMinSketch (the JVM V1
+    layout): :meth:`estimate_count` answers the JVM's ``estimateCount``
+    from the parsed counter table, in plain Python.
     """
 
-    __slots__ = ("total_count", "depth", "width", "_hash_a", "_table")
+    __slots__ = ("total_count", "depth", "width", "_table")
 
     def __init__(self, data: bytes) -> None:
         version, self.total_count, self.depth, self.width = struct.unpack_from(
@@ -103,36 +96,8 @@ class CountMinSketchReader:
             raise ValueError(f"unsupported CountMinSketch version: {version}")
         # the counter table starts AFTER the hashA array (depth longs) that
         # CountMinSketchImpl.writeTo emits between the header and the table
-        self._hash_a = struct.unpack_from(f">{self.depth}q", data, 20)
         self._table = struct.unpack_from(
             f">{self.depth * self.width}q", data, 20 + 8 * self.depth
-        )
-
-    def merge(self, other: "CountMinSketchReader") -> "CountMinSketchReader":
-        """Element-wise table addition — the JVM's CountMinSketch.mergeInPlace.
-
-        Requires identical (depth, width, hashA): same eps/confidence/seed,
-        which ``F.count_min_sketch`` guarantees for a fixed configuration.
-        """
-        if (self.depth, self.width) != (other.depth, other.width):
-            raise ValueError("cannot merge sketches of different geometry")
-        if self._hash_a != other._hash_a:
-            raise ValueError("cannot merge sketches of different hash families")
-        merged = object.__new__(CountMinSketchReader)
-        merged.total_count = self.total_count + other.total_count
-        merged.depth, merged.width = self.depth, self.width
-        merged._hash_a = self._hash_a
-        merged._table = tuple(
-            a + b for a, b in zip(self._table, other._table)
-        )
-        return merged
-
-    def to_bytes(self) -> bytes:
-        """Serialize back to the JVM V1 format (round-trip exact)."""
-        return (
-            struct.pack(">iqii", 1, self.total_count, self.depth, self.width)
-            + struct.pack(f">{self.depth}q", *self._hash_a)
-            + struct.pack(f">{self.depth * self.width}q", *self._table)
         )
 
     def _buckets(self, item: bytes) -> list[int]:

@@ -48,29 +48,3 @@ def salted_sum_count(
         .agg(F.sum("_psum").alias("sum_value"), F.sum("_pcnt").alias("cnt"))
         .withColumn("avg_value", F.col("sum_value") / F.col("cnt"))
     )
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str | list[str],
-    n_salts: int = 16,
-) -> DataFrame:
-    """Skew-proof fact×dim equi-join via salt-and-replicate.
-
-    AQE splits skewed SORT-MERGE join partitions, but cannot help when the
-    join must stay hash-partitioned for a downstream co-partitioned aggregate
-    or when runtime stats are unavailable (first run, streaming micro-batch).
-    The classic manual rewrite: salt the fact side uniformly, replicate every
-    dim row once per salt (explode of a ``sequence`` — dim×n_salts rows, fine
-    for dimension-sized tables), and join on (key…, salt). Each hot key's
-    rows spread over ``n_salts`` reducers instead of one.
-
-    Result equals ``fact.join(dim, on)`` row-for-row (asserted in
-    tests/test_skew_join.py). Column sets must be disjoint apart from the
-    join key(s).
-    """
-    keys = [on] if isinstance(on, str) else list(on)
-    f = fact.withColumn("_salt", F.pmod(F.hash(*fact.columns), F.lit(n_salts)))
-    d = dim.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
-    return f.join(d, [*keys, "_salt"]).drop("_salt")

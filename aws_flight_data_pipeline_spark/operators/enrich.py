@@ -45,11 +45,6 @@ def unit_conversion_columns() -> dict[str, Column]:
     }
 
 
-def with_unit_conversions(df: DataFrame) -> DataFrame:
-    """:func:`unit_conversion_columns` applied to ``df``."""
-    return df.withColumns(unit_conversion_columns())
-
-
 def altitude_category(altitude_ft: Column) -> Column:
     """LOW <1000 / MEDIUM <18000 / HIGH <35000 / VERY_HIGH, UNKNOWN on null
     (flight_data_processor.py:89-101)."""
@@ -203,11 +198,6 @@ def business_rule_columns(config: TransformationConfig | None = None) -> dict[st
         "airline_code": F.when(F.length(cs) >= 3, F.substring(cs, 1, 3)),
         "region": region_code(F.col("latitude"), F.col("longitude")),
     }
-
-
-def apply_business_rules(df: DataFrame, config: TransformationConfig | None = None) -> DataFrame:
-    """:func:`business_rule_columns` applied to ``df``."""
-    return df.withColumns(business_rule_columns(config))
 
 
 def enrich_builder(

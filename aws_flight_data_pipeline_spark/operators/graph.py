@@ -100,31 +100,6 @@ def propagate_min_labels(
             return labels
 
 
-def propagate_min_labels_active(
-    nodes: DataFrame, edges: DataFrame, iterations: int | None = None
-) -> DataFrame:
-    """Min-label propagation restricted to the ACTIVE subgraph.
-
-    An isolated node (no incident edge) can never change its label, so the
-    per-round state only needs the edge-endpoint nodes; every other node
-    keeps ``label = node`` by construction and is unioned back once at the
-    end with zero iteration cost. At 100 TB this is the difference between
-    iterating over the whole corpus and iterating over the (tiny) set of
-    documents that belong to some duplicate cluster — per-round state is
-    O(cluster membership), not O(corpus). Results are identical to
-    :func:`propagate_min_labels` over the full node set.
-
-    ``edges`` must already be symmetric (see :func:`symmetrize`), so the
-    distinct ``u`` column covers every endpoint.
-    """
-    active = edges.select(F.col("u").alias("node")).distinct()
-    active_labels = propagate_min_labels(active, edges, iterations)
-    untouched = nodes.join(active, "node", "left_anti").select(
-        "node", F.col("node").alias("label")
-    )
-    return active_labels.unionByName(untouched)
-
-
 def exact_labels_ctes(nodes_select: str) -> str:
     """DuckDB oracle mirror of the EXACT component labeling: CTE snippet
     defining ``reach(node, r)`` (recursive reachability closure — ``UNION``

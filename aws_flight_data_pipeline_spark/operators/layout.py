@@ -13,8 +13,9 @@ the technique behind Delta/Iceberg ``OPTIMIZE ZORDER BY``, here as plain
 Column arithmetic over plain parquet.
 
 Everything is shift/mask/multiply Column math — JVM whole-stage codegen, no
-UDFs, and the write path is one range exchange (the same shuffle a plain
-``ORDER BY`` write would pay; only the sort KEY changes).
+UDFs; ``versioned.optimize(cluster_by=(a, b))`` writes along the key with one
+range exchange (the same shuffle a plain ``ORDER BY`` write would pay; only
+the sort KEY changes).
 
 At 100 TB: the grid normalization needs global min/max per dimension — a
 1-row broadcast aggregate (bytes to the driver, never rows). For an append
@@ -94,43 +95,3 @@ def zorder_key(
     return with_bounds.withColumn(
         "_z", morton_interleave(ga, gb, bits)
     ).drop("_lo_a", "_hi_a", "_lo_b", "_hi_b")
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    bits: int = 8,
-    n_files: int = 16,
-) -> None:
-    """Write ``df`` as parquet clustered along the (col_a, col_b) Z curve.
-
-    ``repartitionByRange`` on the key assigns each output file a contiguous
-    Z range (range exchange = sampled range partitioner — one shuffle);
-    ``sortWithinPartitions`` tightens row-group stats inside each file. The
-    key column itself is dropped before writing: the layout, not the key, is
-    the product — readers prune via ordinary min/max stats on the original
-    columns.
-    """
-    keyed = zorder_key(df, col_a, col_b, bits)
-    (
-        keyed.repartitionByRange(n_files, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def files_contributing(df: DataFrame) -> int:
-    """How many distinct files produced at least one row of ``df``.
-
-    The locality measure a clustered layout optimizes: a box predicate whose
-    matches concentrate in few files is exactly the case row-group/file
-    min/max pruning rewards. (Counts files contributing ROWS — a stricter,
-    engine-independent proxy for "files a stats-pruning reader must open".)
-    """
-    return (
-        df.select(F.input_file_name().alias("f")).distinct().count()
-    )

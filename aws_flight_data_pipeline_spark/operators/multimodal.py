@@ -3,7 +3,7 @@
 The reference pipeline is text/telemetry-only; this module is the
 training-data-pipeline extension surface (SURVEY.md §7.3 scale-out posture):
 treat media as opaque ``binary`` payload columns with a typed metadata struct,
-and run decode / feature-extraction / resize / frame-sampling as Arrow-batched
+and run decode / feature-extraction / frame-sampling as Arrow-batched
 ``mapInPandas`` operators.
 
 Codec reality: this container has no image/audio libraries, so the actual
@@ -208,99 +208,6 @@ def extract_features(assets: DataFrame) -> DataFrame:
             yield pd.DataFrame(out, columns=[f.name for f in FEATURES_SCHEMA.fields])
 
     return assets.mapInPandas(batches, schema=FEATURES_SCHEMA)
-
-
-DECODE_FEATURES_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("modality", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("byte_mean", DoubleType()),
-        StructField("features", ArrayType(DoubleType())),
-    ]
-)
-
-
-def decode_and_featurize(assets: DataFrame, use_real_codecs: bool = False) -> DataFrame:
-    """Fused decode + featurize in ONE Arrow pass.
-
-    Chaining ``decode_assets`` and ``extract_features`` moves every payload
-    across the Python boundary twice; the fused stage reads each byte buffer
-    once and emits both the signal stats and the feature vector — the
-    operator-fusion rule for hot multimodal paths (each mapInPandas stage is
-    a full Arrow round trip of the payload column).
-    """
-    if use_real_codecs:
-        _require_real_codecs()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if pdf.empty:
-                continue
-            rows = []
-            for asset_id, modality, payload in zip(
-                pdf["asset_id"], pdf["modality"], pdf["payload"]
-            ):
-                arr = np.frombuffer(payload, dtype=np.uint8)  # <- one stub decode
-                hist = np.bincount(arr >> 4, minlength=FEATURE_DIM).astype(np.float64)
-                total = hist.sum()
-                feats = (hist / total) if total else hist
-                rows.append(
-                    (
-                        int(asset_id),
-                        modality,
-                        int(arr.size),
-                        float(arr.mean()) if arr.size else 0.0,
-                        feats.tolist(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in DECODE_FEATURES_SCHEMA.fields])
-
-    return assets.mapInPandas(batches, schema=DECODE_FEATURES_SCHEMA)
-
-
-RESIZE_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("payload", BinaryType()),
-        StructField("meta", ASSET_META_TYPE),
-    ]
-)
-
-
-def resize_images(assets: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Resize every image/video asset to ``target_w × target_h``.
-
-    Stub transform: nearest-neighbor subsampling of the payload byte stream to
-    ``target_w*target_h`` bytes (a real build calls ``Image.resize`` at the
-    marked line). Non-visual modalities pass through untouched — the filter is
-    a Catalyst predicate on meta, evaluated before any bytes reach Python.
-    """
-    visual = assets.filter(F.col("modality").isin("image", "video"))
-    passthrough = assets.filter(~F.col("modality").isin("image", "video")).select(
-        "asset_id", "payload", "meta"
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n_out = target_w * target_h
-        for pdf in it:
-            if pdf.empty:
-                continue
-            rows = []
-            for asset_id, payload, meta in zip(pdf["asset_id"], pdf["payload"], pdf["meta"]):
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                idx = np.linspace(0, max(arr.size - 1, 0), num=n_out).astype(np.int64)
-                resized = arr[idx] if arr.size else np.zeros(n_out, dtype=np.uint8)  # <- stub resize
-                new_meta = dict(meta)
-                new_meta.update(
-                    n_bytes=int(resized.size), width=target_w, height=target_h
-                )
-                rows.append((int(asset_id), resized.tobytes(), new_meta))
-            yield pd.DataFrame(rows, columns=["asset_id", "payload", "meta"])
-
-    return visual.select("asset_id", "payload", "meta").mapInPandas(
-        batches, schema=RESIZE_SCHEMA
-    ).unionByName(passthrough)
 
 
 FRAME_SCHEMA = StructType(

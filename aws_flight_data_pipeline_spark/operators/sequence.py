@@ -216,10 +216,9 @@ def state_runs(events: DataFrame) -> DataFrame:
     """Gaps-and-islands state runs over a change stream: ``(user_id, ver,
     state, from_us, run_events)`` — consecutive events with the same
     ``event_type`` (ordered by ``ts`` then ``event_id``) collapse into one
-    run. Shared by the batch SCD2 history query
-    (plans/sequences.py:scd2_state_history) and the streaming dimension
-    maintainer (streaming/streams.py:streaming_scd2_dimension); one
-    ``user_id`` shuffle, every later stage partition-local."""
+    run. The run constructor of the batch SCD2 history query
+    (plans/sequences.py:scd2_state_history); one ``user_id`` shuffle, every
+    later stage partition-local."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     chg = F.when(
         F.col("prev").isNull() | (F.col("prev") != F.col("event_type")), 1
@@ -243,14 +242,4 @@ def state_runs(events: DataFrame) -> DataFrame:
         F.max("event_type").alias("state"),  # constant within a run
         F.unix_micros(F.min("ts")).alias("from_us"),
         F.count("*").alias("run_events"),
-    )
-
-
-def runs_to_intervals(runs: DataFrame) -> DataFrame:
-    """SCD2 validity intervals from state runs: ``(user_id, state, from_us,
-    to_us)`` where ``to_us`` is the next run's start (NULL = current/open
-    row). One window over the tiny per-user run frame."""
-    w = Window.partitionBy("user_id").orderBy("ver")
-    return runs.select(
-        "user_id", "state", "from_us", F.lead("from_us").over(w).alias("to_us")
     )

@@ -641,60 +641,6 @@ def bpe_merge_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("round")
 
 
-def train_bpe(
-    spark: SparkSession,
-    docs: DataFrame,
-    max_rounds: int,
-    min_pair_count: int = 2,
-) -> tuple[list[tuple[int, str, int]], DataFrame]:
-    """Production-parameterized BPE merge training: up to ``max_rounds``
-    merges with EARLY EXIT once the best remaining pair occurs fewer than
-    ``min_pair_count`` times — a real vocabulary build runs to thousands
-    of merges and must stop when the signal is gone, not at a fixed
-    unroll. Returns ``(merges, encoded_corpus)`` where ``merges`` is
-    ``[(round, pair, count), ...]`` in application order.
-
-    Per round: one linear bigram count with a 1-ROW driver argmax (the
-    bounded-driver-work exception, like the union-find edge cap — one row
-    per round, never data), then a per-row literal rewrite (the argmax
-    value lands in the plan as a literal, cheaper than the oracled
-    builder's crossJoin-broadcast form which exists only so the whole
-    episode stays collect-free for the SQL twin). ``docs`` needs columns
-    ``(doc_id, text)``.
-    """
-    from aws_flight_data_pipeline_spark.functions.text import word_ngrams
-
-    cur = docs.select("doc_id", F.col("text").alias("t"))
-    merges: list[tuple[int, str, int]] = []
-    for rnd in range(1, max_rounds + 1):
-        cur = tracked_cache(cur)
-        top = (
-            cur.select(F.explode(word_ngrams(F.col("t"), 2)).alias("gram"))
-            .filter(F.col("gram").contains(" "))
-            .groupBy("gram")
-            .agg(F.count("*").cast("bigint").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), "gram")
-            .limit(1)
-            .first()
-        )
-        if top is None or int(top["cnt"]) < min_pair_count:
-            break
-        gram = top["gram"]
-        pat = F.lit(" " + gram.replace(" ", "  ") + " ")
-        rep = F.lit(" " + gram.replace(" ", "_") + " ")
-        wrapped = F.concat(
-            F.lit(" "), F.replace(F.col("t"), F.lit(" "), F.lit("  ")), F.lit(" ")
-        )
-        cur = cur.select(
-            "doc_id",
-            F.trim(
-                F.replace(F.replace(wrapped, pat, rep), F.lit("  "), F.lit(" "))
-            ).alias("t"),
-        )
-        merges.append((rnd, gram, int(top["cnt"])))
-    return merges, cur
-
-
 @builder(
     "text_normalization_sweep",
     tags=("curation", "normalize", "text"),

@@ -217,7 +217,8 @@ def q3_quality_metrics_hourly(quality_metrics: DataFrame, now_unix: int) -> Data
 
 def q4_peak_traffic(processed: DataFrame, now_unix: int) -> DataFrame:
     """QUERY 4 (04:220-322): hourly traffic with rank, centered moving
-    average, time-of-day classification; top 20 peak hours."""
+    average, time-of-day classification; top 20 peak hours, ties broken by
+    the hour key so the kept rows do not depend on partitioning."""
     df = _partition_lookback(processed, now_unix, 7).filter(
         (F.col("data_quality_score") > 0.7) & ~F.col("on_ground")
     )
@@ -240,7 +241,7 @@ def q4_peak_traffic(processed: DataFrame, now_unix: int) -> DataFrame:
             .when((hod >= 18) & (hod < 22), "Evening")
             .otherwise("Night"),
         )
-        .orderBy("traffic_rank")
+        .orderBy("traffic_rank", "year", "month", "day", "hour")
         .limit(20)
     )
 
@@ -248,7 +249,8 @@ def q4_peak_traffic(processed: DataFrame, now_unix: int) -> DataFrame:
 def q5_route_corridors(processed: DataFrame, now_unix: int, min_flights: int = 50) -> DataFrame:
     """QUERY 5 (04:325-475): 2°-grid route-corridor identification — grid
     group, heading/altitude/speed stats, HAVING floor, consistency score,
-    rank + region/type classification; top 25."""
+    rank + region/type classification; top 25, ties broken by the grid
+    cell so the kept rows do not depend on partitioning."""
     df = _partition_lookback(processed, now_unix, 3).filter(
         ~F.col("on_ground")
         & F.col("latitude").isNotNull()
@@ -298,7 +300,7 @@ def q5_route_corridors(processed: DataFrame, now_unix: int, min_flights: int = 5
         corr.withColumn("corridor_rank", F.rank().over(Window.orderBy(F.desc("total_flights"))))
         .withColumn("geographic_region", region)
         .withColumn("corridor_type", ctype)
-        .orderBy("corridor_rank")
+        .orderBy("corridor_rank", "lat_grid", "lon_grid")
         .limit(25)
     )
 

@@ -1190,7 +1190,7 @@ def subquery_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     "customer dim broadcast (all KB–MB frames), ONE shuffle join between "
     "the two fact tables (lineitem ⋈ orders on orderkey — the join that "
     "must stay a shuffled equi-join at 100 TB, co-locatable by bucketing "
-    "both facts on orderkey per tests/test_bucketed_join.py), and the "
+    "both facts on orderkey), and the "
     "local-supplier predicate c_nationkey = s_nationkey applied as a "
     "post-broadcast filter. Revenue follows the cents-exact discipline: "
     "price cents × (100 − discount%) summed as exact BIGINT, divided once "

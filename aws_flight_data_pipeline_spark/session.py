@@ -49,14 +49,3 @@ def get_spark(app_name: str = "aws-flight-data-pipeline-spark") -> SparkSession:
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )
     return builder.getOrCreate()
-
-
-def tune_for_engine(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine defaults to an externally provided session.
-
-    The driver hands us its own SparkSession for the declared queries; only
-    runtime-mutable confs are touched here (timezone determinism + AQE).
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    return spark

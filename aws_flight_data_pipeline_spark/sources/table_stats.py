@@ -602,41 +602,3 @@ def plan_join_tree(
         "row_counts": n,
     }
     return df, facts
-
-
-def stats_hinted_join(
-    spark: SparkSession,
-    left_path: str,
-    right_path: str,
-    on: list[str] | str,
-    broadcast_threshold_rows: int = 1_000_000,
-    how: str = "inner",
-):
-    """Join two versioned tables with a STATISTICS-DRIVEN strategy hint —
-    the decision Catalyst cannot make for a file-list scan (its size
-    estimate sees bytes, not the manifest's knowledge):
-
-    - If either side's footer row count is under the threshold, that side
-      gets an explicit ``broadcast()`` hint (ties pick the smaller side)
-      — the hash table ships once, the big side never shuffles.
-    - Otherwise neither is hinted and the planner's sort-merge join
-      stands — broadcasting a huge build side is an OOM, not a win.
-
-    Row counts come from footers (exact, no scan). Returns the joined
-    DataFrame; the chosen strategy is observable in the plan (pinned in
-    tests/test_stats_planner.py).
-    """
-    left = versioned.read(spark, left_path)
-    right = versioned.read(spark, right_path)
-    n_left = row_count(left_path)
-    n_right = row_count(right_path)
-    if how == "inner" and min(n_left, n_right) <= broadcast_threshold_rows:
-        if n_left <= n_right:
-            return F.broadcast(left).join(right, on, how)
-        return left.join(F.broadcast(right), on, how)
-    # outer joins can only broadcast the non-preserved side
-    if how in ("left", "left_outer", "leftouter") and n_right <= broadcast_threshold_rows:
-        return left.join(F.broadcast(right), on, how)
-    if how in ("right", "right_outer", "rightouter") and n_left <= broadcast_threshold_rows:
-        return F.broadcast(left).join(right, on, how)
-    return left.join(right, on, how)

@@ -862,7 +862,6 @@ def commit_stream_batch(
     batch_df: DataFrame,
     batch_id: int,
     path: str,
-    stats_cols: tuple[str, ...] = (),
     mode: str = "append",
 ) -> int | None:
     """Idempotent per-micro-batch commit: the manifest is stamped with
@@ -874,13 +873,7 @@ def commit_stream_batch(
     only unreferenced files (vacuum garbage), never duplicate rows."""
     if _batch_committed(path, batch_id):
         return None
-    return commit(
-        batch_df,
-        path,
-        mode=mode,
-        stats_cols=stats_cols,
-        meta={"batch_id": int(batch_id)},
-    )
+    return commit(batch_df, path, mode=mode, meta={"batch_id": int(batch_id)})
 
 
 def _start_foreach_batch(
@@ -899,83 +892,6 @@ def _start_foreach_batch(
         .trigger(**(trigger or {"availableNow": True}))
         .start()
     )
-
-
-def streaming_versioned_sink(
-    values: DataFrame,
-    path: str,
-    checkpoint_path: str,
-    stats_cols: tuple[str, ...] = (),
-    trigger: dict | None = None,
-):
-    """Stream into a versioned table: one append commit per micro-batch,
-    manifest-stamped with the batch id so at-least-once replays are
-    skipped (exactly-once visibility on plain parquet). Each commit is a
-    consistent snapshot — downstream batch readers time-travel across
-    micro-batch boundaries, and vacuum retention bounds history growth."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        commit_stream_batch(batch_df, batch_id, path, stats_cols=stats_cols)
-
-    return _start_foreach_batch(values, process_batch, checkpoint_path, trigger)
-
-
-def streaming_upsert_sink(
-    values: DataFrame,
-    path: str,
-    checkpoint_path: str,
-    on: tuple[str, ...],
-    seq_col: str | None = None,
-    trigger: dict | None = None,
-):
-    """Stream-apply upserts into a versioned table: each micro-batch is
-    collapsed to one row per key and merged via :func:`merge_into`, so the
-    table converges to one row per key no matter how updates straddle
-    micro-batches — the foreachBatch+MERGE pattern Structured Streaming
-    uses for CDC apply onto lakehouse tables.
-
-    ``seq_col`` names the CDC ordering column (event timestamp / LSN):
-    within a batch the row with the GREATEST ``seq_col`` per key wins
-    (``max_by`` — one hash aggregate, no sort). Without it the per-key
-    pick is arbitrary (``dropDuplicates``) — only safe when a key cannot
-    repeat within one micro-batch.
-
-    Exactly-once: the merge manifest is stamped with the batch id
-    (inherited by later commits, vacuum-safe), so an at-least-once replay
-    of a committed batch is skipped; a no-op merge publishes nothing, and
-    replaying a no-op is itself a no-op.
-    """
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if _batch_committed(path, batch_id):
-            return
-        if seq_col is not None:
-            cols = batch_df.columns
-            latest = (
-                batch_df.groupBy(*on)
-                .agg(
-                    F.max_by(
-                        F.struct(*[c for c in cols if c not in on]), F.col(seq_col)
-                    ).alias("_row")
-                )
-                .select(*on, "_row.*")
-                .select(*cols)
-            )
-        else:
-            latest = batch_df.dropDuplicates(list(on))
-        merge_into(
-            batch_df.sparkSession,
-            path,
-            latest,
-            on=on,
-            meta={"batch_id": int(batch_id)},
-        )
-
-    return _start_foreach_batch(values, process_batch, checkpoint_path, trigger)
 
 
 #: Above this many distinct source keys, collecting them to probe per-file

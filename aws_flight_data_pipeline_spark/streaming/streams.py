@@ -303,82 +303,15 @@ def stateful_stuck_detector(
     )
 
 
-def stream_documents(
-    spark: SparkSession, corpus_path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Documents as an unbounded parquet file source — the LLM-corpus
-    ingestion stream (new parquet drops under ``corpus_path`` become
-    micro-batches, the same file-source pattern as stream_raw_states).
-    ``max_files_per_trigger`` caps each micro-batch's file intake (rate
-    limiting in production; deterministic batch boundaries in tests)."""
-    schema = spark.read.parquet(corpus_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(corpus_path)
-
-
-def streaming_corpus_dedup(docs: DataFrame, watermark: str = "30 minutes") -> DataFrame:
-    """Streaming exact dedup of a document corpus: content fingerprint
-    (md5 of normalized text — the batch dedup_exact_fingerprint key) deduped
-    across micro-batches with bounded state via
-    ``dropDuplicatesWithinWatermark``. The streaming twin of the batch
-    exact-dedup operator: at 100 TB/day the state store holds only one
-    watermark window of fingerprints, not the corpus."""
-    from aws_flight_data_pipeline_spark.functions.text import fingerprint
-
-    ts = F.coalesce(
-        (F.col("doc_id") % 3600).cast("double"), F.lit(0.0)
-    )  # deterministic synthetic event time derived from doc_id (testdata has
-    # no ingestion timestamp; production uses the ingest time column)
-    return (
-        docs.withColumn("fp", fingerprint(F.col("text")))
-        .withColumn("event_time", F.timestamp_seconds(F.lit(1704067200.0) + ts))
-        .withWatermark("event_time", watermark)
-        .dropDuplicatesWithinWatermark(["fp"])
-    )
-
-
-def stream_attribution_join(
-    purchases: DataFrame,
-    clicks: DataFrame,
-    max_lag: str = "1 hour",
-    purchase_watermark: str = "30 minutes",
-    click_watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked stream-stream interval join — the streaming twin of the
-    batch as-of join (operators/asof.py).
-
-    Each purchase joins every click by the same user within
-    ``[purchase_time - max_lag, purchase_time]``. Pure streams cannot compute
-    "the single latest click" incrementally without unbounded wait (a later
-    micro-batch may always carry a closer click), so the streaming relaxation
-    emits the qualifying interval and leaves top-1 selection to the consumer
-    — the standard stream-stream pattern. State is bounded by the watermarks:
-    clicks are droppable once older than ``click_watermark`` (which must
-    cover ``max_lag`` plus the purchase lateness bound), purchases once past
-    ``purchase_watermark``.
-
-    Inputs must carry ``user_id``, an event-time column named
-    ``purchase_time`` / ``click_time``, and side-specific payload columns.
-    """
-    p = purchases.withWatermark("purchase_time", purchase_watermark)
-    c = clicks.withWatermark("click_time", click_watermark)
-    cond = (
-        (p["user_id"] == c["user_id"])
-        & (c["click_time"] >= p["purchase_time"] - F.expr(f"INTERVAL {max_lag}"))
-        & (c["click_time"] <= p["purchase_time"])
-    )
-    return p.join(c, cond, "inner").drop(c["user_id"])
-
-
 def quality_gate_rules() -> dict:
-    """The streaming quality gate's five rules (plus word count and the
-    conjunctive ``passed``) as pure Column expressions over ``text`` — ONE
-    shared definition consumed by :func:`streaming_quality_gate` (which
-    emits every flag) and :func:`unified_admission_decisions` (which fuses
-    just ``passed`` into the batch checkpoint's projection instead of
-    joining a separately scored frame), so the two can never drift."""
+    """The admission gate's five quality rules (plus word count and the
+    conjunctive ``passed``) as pure Column expressions over ``text``: rules
+    1-4 (length bounds, word shape, stopword containment, lexical
+    diversity) are the batch ``quality_filter_funnel``'s expressions;
+    rule 5 (repetition) is its within-row occurrence form, duplicate
+    2-gram occurrences / total, which needs no per-(doc, gram) shuffle.
+    :func:`unified_admission_decisions` fuses ``passed`` into the batch
+    checkpoint's projection instead of joining a separately scored frame."""
     from aws_flight_data_pipeline_spark.functions.text import (
         distinct_token_count,
         word_count,
@@ -406,38 +339,6 @@ def quality_gate_rules() -> dict:
         "pass_repetition": p5,
         "passed": p1 & p2 & p3 & p4 & p5,
     }
-
-
-def streaming_quality_gate(docs: DataFrame) -> DataFrame:
-    """Per-document quality gate on the corpus ingestion stream — the
-    streaming twin of the batch ``quality_filter_funnel`` (stateless, append
-    mode: every rule is a per-row expression, so the gate streams with zero
-    state and zero shuffle, the same batch/streaming one-code-path discipline
-    as ``micro_batch_pipeline``).
-
-    Rules 1-4 (length bounds, word shape, stopword containment, lexical
-    diversity) are the batch funnel's expressions verbatim. Rule 5
-    (repetition) uses the within-row OCCURRENCE-fraction form — duplicate
-    2-gram occurrences / total, via ``size(grams) - size(array_distinct)``
-    — because the batch form's per-(doc, gram) combine shuffle has no
-    stateless streaming equivalent; linear per row, so a 100k-token document
-    costs O(tokens). Emits every document with its per-rule flags and the
-    conjunctive ``passed`` — the quarantine-split shape: the consumer routes
-    admit/reject without re-scoring.
-    """
-    r = quality_gate_rules()
-    return docs.select(
-        "doc_id",
-        "source",
-        "lang",
-        r["wc"].alias("wc"),
-        r["pass_length"].alias("pass_length"),
-        r["pass_word_shape"].alias("pass_word_shape"),
-        r["pass_stopword"].alias("pass_stopword"),
-        r["pass_diversity"].alias("pass_diversity"),
-        r["pass_repetition"].alias("pass_repetition"),
-        r["passed"].alias("passed"),
-    )
 
 
 def streaming_sessionization(
@@ -477,8 +378,8 @@ def streaming_sessionization(
 
 
 def corpus_admission_index(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Static admission index for :func:`streaming_corpus_admission` and
-    the base index of :func:`streaming_unified_admission_gate`:
+    """The base index of :func:`streaming_unified_admission_gate` and of
+    batch calls to :func:`unified_admission_decisions`:
     ``(fp_index, band_buckets)``.
 
     - ``fp_index`` — the corpus's distinct exact-dedup fingerprints
@@ -530,17 +431,6 @@ def corpus_admission_index(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
         ).alias("bucket")
     )
     return fp_index, band_buckets
-
-
-_ADMISSION_PUBLIC_COLS = (
-    "doc_id",
-    "source",
-    "is_exact",
-    "is_near",
-    "near_matches",
-    "best_jaccard",
-    "admitted",
-)
 
 
 def _admission_enrich(docs: DataFrame) -> DataFrame:
@@ -624,30 +514,6 @@ def _admission_decide(
         .withColumn("admitted", ~F.col("is_exact") & ~F.col("is_near"))
         .drop("bucket0", "bucket1")
     )
-
-
-def streaming_corpus_admission(
-    docs: DataFrame, fp_index: DataFrame, band_buckets: DataFrame
-) -> DataFrame:
-    """STATELESS streaming near-dup admission — the streaming twin of the
-    batch ``corpus_merge_increment`` (plans/text_queries.py): every incoming
-    document is admitted/rejected against a static corpus index with zero
-    streaming state, so decisions emit immediately in append mode.
-
-    Per-row stages (all narrow, no streaming aggregation, no watermark
-    needed): see :func:`_admission_enrich` + :func:`_admission_decide`.
-
-    Output grain = input grain (append mode): doc_id, source, is_exact,
-    is_near, admitted, near_matches (verified corpus doc_ids), best_jaccard.
-    The zero-state property is pinned in tests (empty ``stateOperators`` in
-    the final stream progress). The index is FROZEN here — two near-identical
-    docs arriving in different micro-batches are both admitted; the gate that
-    closes that gap by learning from its admissions is
-    :func:`streaming_unified_admission_gate`.
-    """
-    return _admission_decide(
-        _admission_enrich(docs), fp_index, band_buckets
-    ).select(*_ADMISSION_PUBLIC_COLS)
 
 
 def _state_head(spark: SparkSession, state_path: str) -> DataFrame | None:
@@ -735,411 +601,6 @@ def _intra_batch_reject_ids(survivors: DataFrame) -> DataFrame:
         earlier_fp.select(F.col("b.doc_id").alias("doc_id"))
         .unionByName(earlier_near.select(F.col("b.doc_id").alias("doc_id")))
         .distinct()
-    )
-
-
-def streaming_sketch_rollup(
-    docs: DataFrame,
-    state_path: str,
-    checkpoint_path: str,
-    lgk: int = 12,
-    trigger: dict | None = None,
-):
-    """Incremental distinct-document accounting over a stream: mergeable
-    HyperLogLog sketches maintained in a tiny versioned state table
-    (sources/versioned.py) — the streaming twin of the batch
-    ``sketch_distinct_rollup`` (plans/sketch_queries.py).
-
-    THE 100 TB streaming pattern: COUNT(DISTINCT) over an unbounded stream
-    either retains every key seen (state O(distinct keys) — the thing that
-    kills long-running streams) or it keeps a SKETCH. HLL registers merge by
-    element-wise max, which is associative, commutative and idempotent, so
-    per-batch sketches fold into running per-source sketches without ever
-    rescanning or retaining raw rows, and the stream's running estimate is
-    BIT-IDENTICAL to a batch sketch over the concatenated input regardless
-    of micro-batch boundaries (pinned in tests/test_streaming.py).
-
-    Each micro-batch: (1) aggregate the batch into one (source, sketch,
-    n_rows) row per source via ``hll_sketch_agg`` over the normalized-content
-    fingerprint; (2) union with the state table's head and re-aggregate
-    with ``hll_union_agg``; (3) commit the merged state as one batch-stamped
-    overwrite (``versioned.commit_stream_batch``). Data files are
-    immutable, so the lazy read of the head never races the commit, and
-    past versions give sketch time-travel (``versioned.read(...,
-    version=)``) for free. Exactly-once: a batch whose stamp is already in
-    the state table is skipped whole (HLL max-merge is idempotent, but
-    n_rows sums and CMS table addition are not), and any other batch reads
-    a head that is exactly the state before it — a crash mid-write leaves
-    only unreferenced files, never an unreadable state. State size: one
-    ~4 KB binary per source per version, never corpus rows.
-    """
-    from aws_flight_data_pipeline_spark.functions.text import fingerprint
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if vt._batch_committed(state_path, batch_id) or batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        batch_state = batch_df.groupBy("source").agg(
-            F.hll_sketch_agg(fingerprint(F.col("text")), F.lit(lgk)).alias("sk"),
-            F.count("*").alias("n_rows"),
-        )
-        prev = _state_head(spark, state_path)
-        if prev is not None:
-            batch_state = batch_state.unionByName(prev)
-        merged = batch_state.groupBy("source").agg(
-            F.hll_union_agg("sk", F.lit(False)).alias("sk"),
-            F.sum("n_rows").cast("bigint").alias("n_rows"),
-        )
-        vt.commit_stream_batch(
-            merged.coalesce(1), batch_id, state_path, mode="overwrite"
-        )
-
-    return vt._start_foreach_batch(docs, process_batch, checkpoint_path, trigger)
-
-
-def sketch_rollup_estimate(state: DataFrame) -> DataFrame:
-    """Distinct estimates from a sketch state table: one row per source plus
-    a GLOBAL row whose sketch union handles cross-source duplicates exactly
-    like an exact COUNT(DISTINCT) over the union would — without the state
-    table ever seeing a raw document."""
-    per_source = state.select(
-        F.col("source").alias("scope"),
-        "n_rows",
-        F.hll_sketch_estimate("sk").alias("distinct_est"),
-    )
-    global_row = state.agg(
-        F.lit("GLOBAL").alias("scope"),
-        F.sum("n_rows").cast("bigint").alias("n_rows"),
-        F.hll_sketch_estimate(F.hll_union_agg("sk", F.lit(False))).alias(
-            "distinct_est"
-        ),
-    )
-    return per_source.unionByName(global_row).orderBy("scope")
-
-
-def streaming_heavy_hitters(
-    docs: DataFrame,
-    state_path: str,
-    checkpoint_path: str,
-    eps: float = 0.001,
-    confidence: float = 0.99,
-    seed: int = 42,
-    candidates: int = 40,
-    trigger: dict | None = None,
-):
-    """Streaming heavy-hitter maintenance — the streaming twin of the batch
-    ``sketch_heavy_hitters`` (plans/sketch_queries.py): a Count-Min sketch
-    plus a bounded candidate set, folded per micro-batch.
-
-    CMS cells count hash arrivals, so per-batch tables merge by element-wise
-    ADDITION — exact, associative, commutative. The merged sketch after N
-    micro-batches is byte-IDENTICAL to the one ``F.count_min_sketch`` would
-    build over the concatenated stream (same eps/confidence/seed → same
-    hash family; pinned in tests). The candidate set handles what a sketch
-    alone cannot (CMS answers "how often did X occur", not "which X are
-    frequent"): each batch contributes its exact top-``candidates`` tokens,
-    the union is re-scored against the MERGED sketch, and only the top
-    ``candidates`` survive — state stays O(eps^-1 + candidates) forever.
-    A true heavy hitter is by definition frequent in some batch, so it
-    enters the candidate set and, once in, its merged-sketch estimate keeps
-    it there. Per-batch merging is driver-side pure Python
-    (functions/sketches.py) over a ~KB sketch — no ``spark._jvm``.
-
-    State: ONE row per version — (sketch bytes, total tokens, candidate
-    structs) — committed and replay-guarded like
-    :func:`streaming_sketch_rollup`; read it with ``versioned.read``.
-    """
-    from aws_flight_data_pipeline_spark.functions.sketches import (
-        CountMinSketchReader,
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if vt._batch_committed(state_path, batch_id) or batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        tok = batch_df.select(F.explode(F.split("text", " ")).alias("token"))
-        agg = tok.agg(
-            F.count_min_sketch(
-                "token", F.lit(eps), F.lit(confidence), F.lit(seed)
-            ).alias("cms"),
-            F.count("*").alias("n"),
-        ).first()
-        batch_cands = [
-            r["token"]
-            for r in tok.groupBy("token")
-            .agg(F.count("*").alias("c"))
-            .orderBy(F.desc("c"), "token")
-            .limit(candidates)
-            .collect()
-        ]
-        reader = CountMinSketchReader(bytes(agg["cms"]))
-
-        prev = _state_head(spark, state_path)
-        cand_set = set(batch_cands)
-        if prev is not None:
-            row = prev.first()
-            reader = reader.merge(CountMinSketchReader(bytes(row["cms"])))
-            cand_set.update(c["token"] for c in row["cands"])
-
-        scored = sorted(
-            ((reader.estimate_count(t), t) for t in cand_set),
-            key=lambda et: (-et[0], et[1]),
-        )[:candidates]
-        state_row = [
-            (
-                bytearray(reader.to_bytes()),
-                reader.total_count,
-                [(t, est) for est, t in scored],
-            )
-        ]
-        state = spark.createDataFrame(
-            state_row,
-            "cms binary, total_tokens long, "
-            "cands array<struct<token:string,cms_est:long>>",
-        )
-        vt.commit_stream_batch(
-            state.coalesce(1), batch_id, state_path, mode="overwrite"
-        )
-
-    return vt._start_foreach_batch(docs, process_batch, checkpoint_path, trigger)
-
-
-def heavy_hitter_snapshot(state: DataFrame, k: int = 20) -> DataFrame:
-    """Top-k view of a heavy-hitter state row: (rank, token, cms_est,
-    total_tokens) — candidates are already merged-sketch-scored."""
-    from pyspark.sql.window import Window as W
-
-    return (
-        state.select("total_tokens", F.explode("cands").alias("c"))
-        .select("total_tokens", "c.token", "c.cms_est")
-        .withColumn(
-            "rank",
-            F.row_number()
-            .over(W.orderBy(F.desc("cms_est"), "token"))
-            .cast("bigint"),
-        )
-        .filter(F.col("rank") <= k)
-        .select("rank", "token", "cms_est", "total_tokens")
-        .orderBy("rank")
-    )
-
-
-def streaming_quantile_rollup(
-    values: DataFrame,
-    state_path: str,
-    checkpoint_path: str,
-    alpha: float = 0.01,
-    trigger: dict | None = None,
-):
-    """Incremental quantile monitoring over a stream: DDSketch log-bucket
-    histograms maintained in a tiny versioned state table — the streaming
-    twin of the batch ``sketch_quantile_profile`` (plans/sketch_queries.py),
-    completing the mergeable-sketch state family (HLL distinct, Count-Min
-    heavy hitters, DDSketch quantiles).
-
-    ``values`` is a streaming frame with columns (scope string, x double).
-    Each micro-batch: (1) log-bin the batch into integer (scope, bucket,
-    count) rows (functions/quantiles.py — the IDENTICAL geometry the batch
-    profile uses); (2) union with the state table's head and merge by
-    bucket-wise integer addition; (3) commit the merged state as one
-    batch-stamped overwrite (exactly-once, same contract as
-    :func:`streaming_sketch_rollup`; read it with ``versioned.read``).
-
-    Integer addition is associative and commutative, so the stream's state
-    after N micro-batches is EXACTLY equal — not approximately, not
-    bit-identical-by-luck — to the batch histogram over the concatenated
-    input, regardless of batch boundaries (pinned in
-    tests/test_streaming_quantiles.py). State size: O(buckets spanned) per
-    scope (~115 buckets per decade at alpha=1%), never O(rows) — p99-style
-    latency/price monitoring over an unbounded stream with KB state.
-    """
-    from aws_flight_data_pipeline_spark.functions.quantiles import dd_histogram, dd_merge
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if vt._batch_committed(state_path, batch_id) or batch_df.isEmpty():
-            return
-        hist = dd_histogram(batch_df, "scope", "x", alpha)
-        prev = _state_head(batch_df.sparkSession, state_path)
-        merged = hist if prev is None else dd_merge(hist, prev)
-        vt.commit_stream_batch(
-            merged.coalesce(1), batch_id, state_path, mode="overwrite"
-        )
-
-    return vt._start_foreach_batch(values, process_batch, checkpoint_path, trigger)
-
-
-def quantile_rollup_snapshot(state: DataFrame, alpha: float = 0.01) -> DataFrame:
-    """Quantile estimates from a state table: one row per scope plus a
-    GLOBAL row re-aggregated from the per-scope sketches — p50/p95/p99
-    without the state ever retaining a raw value."""
-    from aws_flight_data_pipeline_spark.functions.quantiles import dd_profile
-
-    return dd_profile(state, alpha).orderBy("scope")
-
-
-def streaming_scd2_dimension(
-    events: DataFrame,
-    dim_path: str,
-    checkpoint_path: str,
-    trigger: dict | None = None,
-):
-    """Streaming SCD2 dimension maintenance: an in-order change stream is
-    folded into a versioned dimension table (sources/versioned.py) whose
-    rows are validity intervals ``(user_id, state, from_us, to_us)`` —
-    ``to_us`` NULL marks the current row. The streaming MERGE pattern the
-    reference's rewrite-affected-prefixes correction approximates, made
-    transactional.
-
-    Per micro-batch (foreachBatch, exactly-once via the versioned sink's
-    batch-id manifest stamp):
-
-    1. affected users = the batch's users; every other user's rows are
-       carried over untouched;
-    2. each affected user's OPEN row is replayed as a pseudo-event at its
-       ``from_us`` (event_id −1, so it sorts before any real event at the
-       same timestamp) and the shared run constructor
-       (operators/sequence.py:state_runs) rebuilds that user's runs over
-       pseudo + batch events — a same-state batch event EXTENDS the open
-       run (no new version), a different state closes it at the change
-       timestamp and opens a new row;
-    3. carried-over rows ∪ rebuilt intervals commit as one overwrite
-       version — every micro-batch boundary is a time-travelable dimension
-       snapshot, and a replayed batch is a no-op.
-
-    Cost per batch is O(dimension + batch) — the dimension rewrite is the
-    plain-parquet price of transactionality; at scale, partition the
-    dimension by user bucket and overwrite affected partitions only.
-    Semantics match the batch history EXACTLY for in-order delivery
-    (stream==batch pinned in tests/test_streaming_scd2.py); out-of-order
-    events need the watermarked stateful tier, not this sink.
-    """
-    from aws_flight_data_pipeline_spark.operators.sequence import (
-        runs_to_intervals,
-        state_runs,
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if vt._batch_committed(dim_path, batch_id):
-            return  # at-least-once replay of a committed batch: no-op
-        spark = batch_df.sparkSession
-        batch_df = batch_df.select(
-            "user_id", "event_id", F.col("ts").cast("timestamp").alias("ts"),
-            "event_type",
-        )
-        try:
-            dim = vt.read(spark, dim_path)
-        except FileNotFoundError:
-            dim = None
-
-        if dim is None:
-            new_dim = runs_to_intervals(state_runs(batch_df)).drop("run_events")
-        else:
-            affected = batch_df.select("user_id").distinct()
-            open_rows = dim.where(F.col("to_us").isNull()).join(affected, "user_id")
-            carried = dim.join(
-                affected.withColumn("_aff", F.lit(True)), "user_id", "left"
-            ).where(
-                ~(F.coalesce("_aff", F.lit(False)) & F.col("to_us").isNull())
-            ).drop("_aff")
-            pseudo = open_rows.select(
-                "user_id",
-                F.lit(-1).cast("long").alias("event_id"),
-                F.timestamp_micros("from_us").alias("ts"),
-                F.col("state").alias("event_type"),
-            )
-            rebuilt = runs_to_intervals(
-                state_runs(pseudo.unionByName(batch_df))
-            )
-            new_dim = carried.unionByName(rebuilt.select(*carried.columns))
-        vt.commit_stream_batch(new_dim, batch_id, dim_path, mode="overwrite")
-
-    return vt._start_foreach_batch(events, process_batch, checkpoint_path, trigger)
-
-
-_SCD2_OOO_OUTPUT_SCHEMA = "user_id long, state string, from_us long, to_us long"
-#: buffered pending events (serialized), plus the current open run head
-_SCD2_OOO_STATE_SCHEMA = "buf string, open_state string, open_from long"
-
-
-def _scd2_ooo_fn(
-    key: tuple, pdfs: "Iterator[pd.DataFrame]", state: GroupState
-) -> "Iterator[pd.DataFrame]":
-    """Per-user fold: buffer events until the watermark passes them, then
-    replay the ripe prefix in (ts, event_id) order through the run machine.
-    State = events inside the lateness window + the open run head — bounded
-    by the watermark delay, never by stream length."""
-    (user_id,) = key
-    import json as _json
-
-    buf: list[tuple[int, int, str]] = []
-    open_state, open_from = None, None
-    if state.exists:
-        buf_s, open_state, open_from = state.get
-        # JSON-encoded buffer: event_type may contain any character — a
-        # hand-rolled delimiter format would corrupt state on ';' or ':'
-        buf = [tuple(e) for e in _json.loads(buf_s)] if buf_s else []
-
-    for pdf in pdfs:
-        for r in pdf.itertuples():
-            buf.append((int(r.ts.value // 1000), int(r.event_id), str(r.event_type)))
-
-    wm_us = state.getCurrentWatermarkMs() * 1000
-    buf.sort()
-    ripe = [e for e in buf if e[0] <= wm_us]
-    buf = [e for e in buf if e[0] > wm_us]
-
-    closed = []
-    for us, _eid, typ in ripe:
-        if open_state is None:
-            open_state, open_from = typ, us
-        elif typ != open_state:
-            closed.append((user_id, open_state, open_from, us))
-            open_state, open_from = typ, us
-
-    state.update((
-        _json.dumps(buf),
-        open_state,
-        open_from,
-    ))
-    if buf:
-        # wake this key when the watermark passes its oldest pending event,
-        # even if no new rows arrive for it — otherwise a quiet user's
-        # buffered events would never finalize
-        state.setTimeoutTimestamp(max(buf[0][0] // 1000 + 1, wm_us // 1000 + 1))
-    yield pd.DataFrame(closed, columns=["user_id", "state", "from_us", "to_us"])
-
-
-def streaming_scd2_ooo(events: DataFrame, delay: str = "10 minutes") -> DataFrame:
-    """OUT-OF-ORDER-tolerant SCD2 run construction — the watermarked
-    stateful tier completing :func:`streaming_scd2_dimension` (which
-    requires in-order delivery): events are buffered per user inside the
-    lateness window and only folded into runs once the watermark passes
-    them, so a late event re-sorts into its true position before any run
-    boundary involving it is finalized. Emits CLOSED validity intervals in
-    append mode (the open head lives in state — append sinks cannot
-    retract, the same contract as every watermarked aggregation); closed
-    output equals the batch run construction over the time-ordered input
-    for any arrival order within ``delay`` (pinned in
-    tests/test_streaming_scd2.py). State per user is O(events inside the
-    lateness window) + one open-run head — watermark-bounded, not
-    stream-bounded.
-    """
-    return (
-        events.select(
-            "user_id", "event_id", F.col("ts").cast("timestamp").alias("ts"),
-            "event_type",
-        )
-        .withWatermark("ts", delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _scd2_ooo_fn,
-            outputStructType=_SCD2_OOO_OUTPUT_SCHEMA,
-            stateStructType=_SCD2_OOO_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
     )
 
 

@@ -49,6 +49,17 @@ def drain(q, timeout_s: int) -> None:
         pytest.fail(f"query did not drain in {timeout_s} s (exception: {err})")
 
 
+def stream_documents(spark, corpus_path: str, max_files_per_trigger: int | None = None):
+    """The parquet drops under ``corpus_path`` as an unbounded file source,
+    the input of the document streams under test. ``max_files_per_trigger``
+    caps each micro-batch's file intake, so each drop can be its own
+    micro-batch."""
+    reader = spark.readStream.schema(spark.read.parquet(corpus_path).schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(corpus_path)
+
+
 def persisted_rdd_ids(spark) -> set[int]:
     """Ids of the session's persisted RDDs. A leak check compares id sets
     (nothing new after the call), not counts: the context cleaner may

@@ -46,35 +46,6 @@ def test_bpe_train_rounds_shrink_corpus(spark, sf_dir):
         assert " " in r["merged_pair"] and r["pair_count"] >= 2
 
 
-def test_train_bpe_early_exit_and_prefix_consistency(spark, sf_dir):
-    from aws_flight_data_pipeline_spark.plans.curation_queries import train_bpe
-
-    # planted corpus: 'x y' occurs 3x, after merging it nothing repeats,
-    # so a min_pair_count=2 run must stop after exactly ONE merge even
-    # with max_rounds=10
-    docs = spark.createDataFrame(
-        [(1, "x y a"), (2, "x y b"), (3, "x y c")], "doc_id long, text string"
-    )
-    merges, encoded = train_bpe(spark, docs, max_rounds=10, min_pair_count=2)
-    assert [(r, g) for r, g, _ in merges] == [(1, "x y")]
-    assert merges[0][2] == 3
-    got = {r["doc_id"]: r["t"] for r in encoded.collect()}
-    assert got == {1: "x_y a", 2: "x_y b", 3: "x_y c"}
-
-    # prefix consistency on the real corpus: the parameterized trainer's
-    # first 3 merges equal the oracled 3-round builder's merged pairs
-    from aws_flight_data_pipeline_spark.plans.registry import resolve
-    from aws_flight_data_pipeline_spark.sources.testdata import load_table
-
-    want = [
-        (int(r["round"]), r["merged_pair"], int(r["pair_count"]))
-        for r in resolve("bpe_merge_train")(spark, sf_dir).collect()
-    ]
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    got3, _ = train_bpe(spark, d, max_rounds=3, min_pair_count=1)
-    assert got3 == want
-
-
 def test_deep64_apply_consistent_with_oracled_prefix(spark, sf_dir):
     # 64-merge apply can only merge MORE than the 6-merge oracled run:
     # same rank order, longer prefix — per-source tokens_after must be <=

@@ -262,3 +262,42 @@ def test_exact_distinct_counts_skip_nulls(spark):
     ):
         types = dict(frame.dtypes)
         assert all(types[c] == "bigint" for c in cols), types
+
+
+def test_top_k_ties_break_on_the_group_key(spark):
+    """q4 and q5 rank with ``rank()``, so equal counts share a rank; the
+    rows a top-k keeps out of a tie must not depend on partition order.
+    48 hours with one flight each compete for q4's 20 slots and 60
+    corridors with two fixes each for q5's 25: each keeps the earliest
+    hours and the lowest (lat_grid, lon_grid) cells."""
+    import datetime as dt
+
+    hours = [
+        dt.datetime.fromtimestamp(NOW - k * 3600, dt.timezone.utc) for k in range(48)
+    ]
+    keys = [(h.strftime("%Y"), h.strftime("%m"), h.strftime("%d"), h.strftime("%H")) for h in hours]
+    traffic = spark.createDataFrame(
+        [(*key, 0.9, False, f"a{i:03d}", 400.0, 30000.0) for i, key in enumerate(keys)],
+        "year string, month string, day string, hour string, data_quality_score double, "
+        "on_ground boolean, icao24 string, velocity_knots double, baro_altitude_ft double",
+    ).repartition(7)
+    q4 = fa.q4_peak_traffic(traffic, NOW).collect()
+    assert {r.traffic_rank for r in q4} == {1}
+    assert [(r.year, r.month, r.day, r.hour) for r in q4] == sorted(keys)[:20]
+
+    y, m, d, _ = keys[0]
+    cells = [(2.0 * i, 2.0 * j) for i in range(6) for j in range(10)]
+    corridors = spark.createDataFrame(
+        [
+            (y, m, d, False, lat, lon, 0.9, "Cruise", 35000.0, f"c{n}", f"CS{n}", 90.0, 450.0)
+            for n, (lat, lon) in enumerate(reversed(cells))
+            for _ in range(2)
+        ],
+        "year string, month string, day string, on_ground boolean, latitude double, "
+        "longitude double, data_quality_score double, flight_phase string, "
+        "baro_altitude_ft double, icao24 string, callsign string, true_track double, "
+        "velocity_knots double",
+    ).repartition(7)
+    q5 = fa.q5_route_corridors(corridors, NOW, min_flights=2).collect()
+    assert {r.corridor_rank for r in q5} == {1}
+    assert [(r.lat_grid, r.lon_grid) for r in q5] == sorted(cells)[:25]

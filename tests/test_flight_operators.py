@@ -22,6 +22,7 @@ from aws_flight_data_pipeline_spark.operators.enrich import (
 )
 from aws_flight_data_pipeline_spark.operators.quality import score_quality
 from aws_flight_data_pipeline_spark.operators.sequence import (
+    apply_missing_value_strategies,
     dedup,
     default_quality_score,
     fill_mean,
@@ -229,6 +230,32 @@ def test_forward_fill_and_mode_and_mean(spark):
     assert fm[1].squawk == "7700"  # modal value
     mean = fill_mean(df, "v").orderBy("timestamp").collect()
     assert mean[1].v == 2.0 and mean[3].v == 2.0
+
+
+_GAPPY = [("a", 0, 1.0), ("a", 10, None), ("a", 20, 3.0), ("a", 30, 3.0), ("a", 40, None)]
+
+
+@pytest.mark.parametrize(
+    "strategy, expected",
+    [
+        ("drop", [1.0, 3.0, 3.0]),
+        ("forward_fill", [1.0, 1.0, 3.0, 3.0, 3.0]),
+        ("backward_fill", [1.0, 3.0, 3.0, 3.0, None]),
+        ("interpolate", [1.0, 2.0, 3.0, 3.0, 3.0]),
+        ("mean", [1.0, 7 / 3, 3.0, 3.0, 7 / 3]),
+        ("mode", [1.0, 3.0, 3.0, 3.0, 3.0]),
+    ],
+)
+def test_missing_value_strategy_dispatch(spark, strategy, expected):
+    df = spark.createDataFrame(_GAPPY, "icao24 string, timestamp long, x double")
+    out = apply_missing_value_strategies(df, {"x": strategy}).orderBy("timestamp")
+    assert [r.x for r in out.collect()] == pytest.approx(expected)
+
+
+def test_missing_value_strategy_unknown_raises(spark):
+    df = spark.createDataFrame(_GAPPY, "icao24 string, timestamp long, x double")
+    with pytest.raises(ValueError, match="unknown missing-value strategy: median"):
+        apply_missing_value_strategies(df, {"x": "median"})
 
 
 def test_dedup_strategies(spark):

@@ -12,7 +12,6 @@ from aws_flight_data_pipeline_spark.operators.graph import (
     _union_find_min_labels,
     connected_components,
     propagate_min_labels,
-    propagate_min_labels_active,
     symmetrize,
 )
 from aws_flight_data_pipeline_spark.plans.text_queries import scored_pair_frame
@@ -72,23 +71,6 @@ def test_distributed_branch_exact_on_planted_diameter6_chain(spark):
 def test_symmetrize_doubles_edges(spark):
     e = symmetrize(spark.createDataFrame([(1, 2), (3, 4)], "u long, v long"))
     assert sorted((r["u"], r["v"]) for r in e.collect()) == [(1, 2), (2, 1), (3, 4), (4, 3)]
-
-
-def test_active_propagation_equals_full(spark):
-    # active-subgraph propagation must produce exactly the full result:
-    # edge-touched nodes get the component minimum, isolated nodes keep
-    # their own id (singletons 20, 21 never enter the iteration)
-    node_ids = [1, 2, 3, 10, 11, 12, 20, 21]
-    edge_pairs = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12)]
-    nodes = spark.createDataFrame([(n,) for n in node_ids], "node long")
-    edges = symmetrize(spark.createDataFrame(edge_pairs, "u long, v long"))
-    full = {r["node"]: r["label"] for r in propagate_min_labels(nodes, edges, 3).collect()}
-    active = {
-        r["node"]: r["label"]
-        for r in propagate_min_labels_active(nodes, edges, 3).collect()
-    }
-    assert active == full
-    assert active[20] == 20 and active[21] == 21
 
 
 def test_union_find_min_labels():

@@ -9,10 +9,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from aws_flight_data_pipeline_spark.operators.layout import (
-    files_contributing,
     morton_interleave,
     normalize_to_grid,
-    write_zordered,
     zorder_key,
 )
 from aws_flight_data_pipeline_spark.sources.testdata import load_table
@@ -68,55 +66,3 @@ def test_zorder_key_is_lazy_and_complete(spark):
     assert keyed.count() == n  # broadcast bounds join drops nothing
     zmin, zmax = keyed.agg(F.min("_z"), F.max("_z")).first()
     assert 0 <= zmin <= zmax <= (1 << 16) - 1
-
-
-def test_zordered_layout_prunes_2d_boxes_better_than_linear(spark, tmp_path):
-    # sf0.01 (10k events, 150 users): sf0.001's 15 distinct users make the
-    # user dimension too coarse for a meaningful 2-D locality comparison.
-    e = load_table(spark, "/root/testdata/sf0.01", "events").select(
-        "event_id", "user_id", F.col("ts").cast("long").alias("t_sec"), "value"
-    )
-    n_files = 32
-    z_path = str(tmp_path / "zordered")
-    lin_path = str(tmp_path / "time_sorted")
-    write_zordered(e, z_path, "user_id", "t_sec", bits=8, n_files=n_files)
-    (
-        e.repartitionByRange(n_files, "t_sec")
-        .sortWithinPartitions("t_sec")
-        .write.mode("overwrite")
-        .parquet(lin_path)
-    )
-
-    lo_u, hi_u, lo_t, hi_t = e.agg(
-        F.min("user_id"), F.max("user_id"), F.min("t_sec"), F.max("t_sec")
-    ).first()
-    z_read = spark.read.parquet(z_path)
-    lin_read = spark.read.parquet(lin_path)
-
-    # four quarter x quarter boxes along the (user, time) diagonal — covers
-    # both halves of each dimension, so the comparison isn't an artifact of
-    # one lucky box position relative to the Z curve's high-bit seams
-    z_total = lin_total = 0
-    for q in range(4):
-        u_a = lo_u + (hi_u - lo_u) * q // 4
-        u_b = lo_u + (hi_u - lo_u) * (q + 1) // 4
-        t_a = lo_t + (hi_t - lo_t) * q // 4
-        t_b = lo_t + (hi_t - lo_t) * (q + 1) // 4
-        box = (
-            (F.col("user_id") >= u_a)
-            & (F.col("user_id") < u_b)
-            & (F.col("t_sec") >= t_a)
-            & (F.col("t_sec") < t_b)
-        )
-        z_df = z_read.filter(box)
-        lin_df = lin_read.filter(box)
-        assert z_df.count() == lin_df.count() > 0  # same rows, new layout
-        z_files = files_contributing(z_df)
-        lin_files = files_contributing(lin_df)
-        # Linear time-sort confines each box to the ~quarter of files
-        # covering its time range but cannot prune on user_id; the Z layout
-        # confines it to files covering the 2-D box (~1/16 of key space).
-        assert z_files <= lin_files, (q, z_files, lin_files)
-        z_total += z_files
-        lin_total += lin_files
-    assert z_total < lin_total, (z_total, lin_total)

@@ -1,14 +1,11 @@
-"""MERGE INTO (stats-scoped copy-on-write upsert), the net change-data-feed
-reader, and the streaming CDC-apply sink on the versioned table."""
+"""MERGE INTO (stats-scoped copy-on-write upsert) and the net change-data-feed
+reader on the versioned table."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
 from aws_flight_data_pipeline_spark.sources import versioned as vt
-from tests.conftest import drain
 
 
 @pytest.fixture()
@@ -159,38 +156,3 @@ def test_table_changes_net_diff_across_span(spark, table):
     assert ch.count() == 0  # inserted then deleted: nets out
     same = vt.table_changes(spark, table, 0, 0)
     assert same.count() == 0 and "_change_type" in same.columns
-
-
-@pytest.mark.slow
-def test_streaming_upsert_sink_converges_with_seq_ordering(spark, tmp_path):
-    import datetime as dt
-
-    table = str(tmp_path / "tbl")
-    src = str(tmp_path / "incoming")
-    base = dt.datetime(2024, 1, 1)
-    # batch 1: key 1 v1, key 2 v1 — batch 2: key 1 v3 then v2 (same batch,
-    # out of order: max seq_col must win), key 3 v1
-    b1 = [(1, "k1-v1", base), (2, "k2-v1", base)]
-    b2 = [
-        (1, "k1-v3", base + dt.timedelta(seconds=30)),
-        (1, "k1-v2", base + dt.timedelta(seconds=20)),
-        (3, "k3-v1", base + dt.timedelta(seconds=5)),
-    ]
-    for ch in (b1, b2):
-        spark.createDataFrame(ch, "id long, payload string, ts timestamp").coalesce(
-            1
-        ).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema("id long, payload string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = vt.streaming_upsert_sink(
-        stream, table, str(tmp_path / "ckpt"), on=("id",), seq_col="ts"
-    )
-    drain(q, 180)
-    got = sorted((r["id"], r["payload"]) for r in vt.read(spark, table).collect())
-    assert got == [(1, "k1-v3"), (2, "k2-v1"), (3, "k3-v1")]
-    # replayed batch ids are skipped (the head's stamp survives vacuum)
-    vt.vacuum(table, keep_last=1, min_age_seconds=0)
-    assert vt._batch_committed(table, 0) and vt._batch_committed(table, 1)

@@ -19,7 +19,6 @@ from aws_flight_data_pipeline_spark.operators.multimodal import (
     attach_payloads,
     decode_assets,
     extract_features,
-    resize_images,
     sample_frames,
 )
 from aws_flight_data_pipeline_spark.sources.testdata import load_table
@@ -77,28 +76,6 @@ def test_features_normalized_and_exact(assets):
         assert f == pytest.approx(expected.tolist())
 
 
-def test_resize_rewrites_visual_assets_only(assets):
-    out = resize_images(assets, target_w=4, target_h=3).cache()
-    try:
-        assert out.count() == assets.count()  # passthrough preserved
-        joined = out.alias("o").join(
-            assets.select("asset_id", "modality").alias("a"), "asset_id"
-        )
-        visual = joined.filter(F.col("a.modality").isin("image", "video"))
-        assert (
-            visual.filter(
-                (F.col("o.meta.width") != 4)
-                | (F.col("o.meta.height") != 3)
-                | (F.octet_length("o.payload") != 12)
-            ).count()
-            == 0
-        )
-        audio = joined.filter(F.col("a.modality") == "audio")
-        assert audio.filter(F.col("o.meta.width").isNotNull()).count() == 0
-    finally:
-        out.unpersist()
-
-
 def test_frame_sampling_shape(assets):
     frames = sample_frames(assets, every_k=4)
     rows = frames.collect()
@@ -125,29 +102,3 @@ def test_frame_sampling_shape(assets):
         for idx in range(0, arr.size // FRAME_BYTES, 4):
             chunk = arr[idx * FRAME_BYTES : (idx + 1) * FRAME_BYTES]
             assert means[(row["asset_id"], idx)] == pytest.approx(float(chunk.mean()))
-
-
-def test_fused_decode_featurize_matches_separate_stages(assets):
-    from aws_flight_data_pipeline_spark.operators.multimodal import (
-        decode_and_featurize,
-        decode_assets,
-        extract_features,
-    )
-
-    sample = assets.orderBy("asset_id").limit(8)
-    fused = {r["asset_id"]: r for r in decode_and_featurize(sample).collect()}
-    decoded = {r["asset_id"]: r for r in decode_assets(sample).collect()}
-    feats = {r["asset_id"]: r for r in extract_features(sample).collect()}
-    assert set(fused) == set(decoded) == set(feats)
-    for aid, f in fused.items():
-        assert f["n_bytes"] == decoded[aid]["n_bytes"]
-        assert f["byte_mean"] == pytest.approx(decoded[aid]["byte_mean"])
-        assert f["features"] == pytest.approx(feats[aid]["features"])
-    # fused plan has exactly ONE Python boundary
-    spark = sample.sparkSession
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        decode_and_featurize(sample)._jdf.queryExecution(), "simple"
-    )
-    assert plan.count("MapInPandas") == 1
-    with pytest.raises(NotImplementedError):
-        decode_and_featurize(sample, use_real_codecs=True)

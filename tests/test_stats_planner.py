@@ -1,7 +1,7 @@
 """Statistics-driven join planning over versioned tables: footer row
-counts (exact, no scan) decide the broadcast side; a small side
-broadcasts, two big sides sort-merge, outer joins only broadcast the
-non-preserved side, and results always equal the unhinted join."""
+counts (exact, no scan) decide the broadcast side of a join tree: the
+fact table never broadcasts, the dimensions do, and results always equal
+the unhinted join."""
 
 from __future__ import annotations
 
@@ -34,46 +34,6 @@ def test_row_count_is_exact_without_scan(spark, tmp_path):
     op, cp, orders, cust = _mk(spark, tmp_path)
     assert ts.row_count(op) == orders.count()
     assert ts.row_count(cp) == cust.count()
-
-
-def test_small_side_broadcasts_and_matches_plain_join(spark, tmp_path):
-    op, cp, orders, cust = _mk(spark, tmp_path)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = ts.stats_hinted_join(spark, op, cp, "o_custkey")
-        plan = _plan(j)
-        assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
-        plain = orders.join(cust, "o_custkey")
-        assert sorted(map(tuple, j.collect())) == sorted(
-            map(tuple, plain.collect())
-        )
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def test_two_big_sides_stay_sort_merge(spark, tmp_path):
-    op, cp, *_ = _mk(spark, tmp_path)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = ts.stats_hinted_join(
-            spark, op, cp, "o_custkey", broadcast_threshold_rows=10
-        )
-        plan = _plan(j)
-        assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def test_left_join_broadcasts_only_build_side(spark, tmp_path):
-    op, cp, orders, cust = _mk(spark, tmp_path)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = ts.stats_hinted_join(spark, op, cp, "o_custkey", how="left")
-        plan = _plan(j)
-        assert "BroadcastHashJoin" in plan and "LeftOuter" in plan
-        assert j.count() == orders.count()  # preservation intact
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
 def _mk_q5(spark, tmp_path, sf=SF):

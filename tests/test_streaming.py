@@ -1,6 +1,7 @@
 """Structured Streaming tests: file-source micro-batches with availableNow
-triggers, watermark dedup, windowed aggregation, foreachBatch pipeline, and
-the stateful stuck-aircraft detector."""
+triggers, watermark dedup, windowed aggregation, foreachBatch pipeline, the
+stateful stuck-aircraft detector, the admission gate's quality rules and the
+stream commit path's replay guard."""
 
 from __future__ import annotations
 
@@ -29,7 +30,7 @@ from aws_flight_data_pipeline_spark.streaming.streams import (
     streaming_dedup,
     windowed_traffic_summary,
 )
-from tests.conftest import drain, persisted_rdd_ids
+from tests.conftest import drain, persisted_rdd_ids, stream_documents
 
 NOW = 1693401600
 
@@ -324,115 +325,34 @@ def test_sliding_realtime_metrics(spark, landing):
     assert peak["latest_contact"] == NOW + 3 * 1800
 
 
-def test_streaming_corpus_dedup_drops_exact_dups(spark, tmp_path):
-    from aws_flight_data_pipeline_spark.streaming.streams import (
-        stream_documents,
-        streaming_corpus_dedup,
-    )
+def test_quality_gate_rules_match_batch_funnel(spark, sf_dir):
+    """The admission gate's quality rules over a static corpus: rules 1-4
+    pass exactly the documents the batch ``quality_filter_funnel`` passes
+    (its progressive per-source counts), ``passed`` is the conjunction of
+    all five flags, and the gate splits the corpus non-trivially."""
+    from aws_flight_data_pipeline_spark.plans.registry import resolve
+    from aws_flight_data_pipeline_spark.streaming.streams import quality_gate_rules
 
-    src = str(tmp_path / "corpus")
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    docs.write.mode("overwrite").parquet(src)
-    n_total = docs.count()
-    n_unique = docs.select(F.md5(F.lower(F.trim("text")))).distinct().count()
-
-    deduped = streaming_corpus_dedup(stream_documents(spark, src))
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("corpus_dedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q, 120)
-    out = spark.sql("SELECT fp FROM corpus_dedup")
-    assert out.count() == n_unique <= n_total
-    assert out.distinct().count() == n_unique  # one survivor per fingerprint
-
-
-@pytest.mark.slow
-def test_stream_attribution_interval_join(spark, tmp_path):
-    """Stream-stream interval join: purchases match same-user clicks within
-    the lag window, across micro-batch boundaries, and never outside it."""
-    from aws_flight_data_pipeline_spark.streaming.streams import stream_attribution_join
-
-    base = 1704067200  # 2024-01-01T00:00Z
-    pdir, cdir = tmp_path / "purchases", tmp_path / "clicks"
-    pdir.mkdir(), cdir.mkdir()
-
-    def write(d, name, rows, cols):
-        spark.createDataFrame(rows, cols).coalesce(1).write.mode("append").parquet(
-            str(d / name)
-        )
-
-    # clicks arrive in batch files; one is inside the 1h window, one outside,
-    # one belongs to a different user
-    write(cdir, "c1", [
-        (1, base + 100, 0.5),      # inside window for both purchases of user 1
-        (1, base - 7200, 0.1),     # 2h before: outside max_lag
-        (2, base + 150, 0.9),      # other user
-    ], "user_id long, click_s long, click_value double")
-    write(pdir, "p1", [
-        (1, base + 600, 42.0),     # clicks at +100 qualify
-        (1, base + 4000, 17.0),    # +100 is beyond 1h lag -> no match... (3900s lag > 3600)
-    ], "user_id long, purchase_s long, purchase_value double")
-
-    purchases = (
-        spark.readStream.schema("user_id long, purchase_s long, purchase_value double")
-        .parquet(str(pdir / "*"))
-        .withColumn("purchase_time", F.timestamp_seconds(F.col("purchase_s")))
-    )
-    clicks = (
-        spark.readStream.schema("user_id long, click_s long, click_value double")
-        .parquet(str(cdir / "*"))
-        .withColumn("click_time", F.timestamp_seconds(F.col("click_s")))
-    )
-    joined = stream_attribution_join(purchases, clicks, max_lag="1 hour")
-    _run_to_memory(joined, "attr_out")
-    rows = spark.sql(
-        "SELECT purchase_s, click_s FROM attr_out ORDER BY purchase_s"
+    rules = ("pass_length", "pass_word_shape", "pass_stopword", "pass_diversity")
+    r = quality_gate_rules()
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    flags = docs.select(
+        "source", *(r[c].alias(c) for c in (*rules, "pass_repetition", "passed"))
     ).collect()
-    assert [(r.purchase_s, r.click_s) for r in rows] == [(base + 600, base + 100)]
 
-
-def test_streaming_quality_gate_matches_batch_rules(spark, tmp_path):
-    """The stateless gate must reproduce the batch rule outcomes row-for-row
-    (rules 1-4 identical; rule 5 in its within-row occurrence form)."""
-    from aws_flight_data_pipeline_spark.streaming.streams import (
-        stream_documents,
-        streaming_quality_gate,
-    )
-
-    src = str(tmp_path / "corpus")
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    docs.write.mode("overwrite").parquet(src)
-
-    q = (
-        streaming_quality_gate(stream_documents(spark, src))
-        .writeStream.format("memory")
-        .queryName("quality_gate")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q, 120)
-    out = spark.sql("SELECT * FROM quality_gate").collect()
-    assert len(out) == docs.count()
-
-    # batch recomputation of the same rules on the static frame
-    batch = {r["doc_id"]: r for r in streaming_quality_gate(docs).collect()}
-    n_passed = 0
-    for r in out:
-        b = batch[r["doc_id"]]
-        for c in ("pass_length", "pass_word_shape", "pass_stopword",
-                  "pass_diversity", "pass_repetition", "passed"):
-            assert r[c] == b[c], (r["doc_id"], c)
-        assert r["passed"] == all(
-            r[c] for c in ("pass_length", "pass_word_shape", "pass_stopword",
-                           "pass_diversity", "pass_repetition")
-        )
-        n_passed += r["passed"]
-    assert 0 < n_passed < len(out)  # the gate splits the corpus non-trivially
+    progressive: dict[str, list[int]] = {}
+    for row in flags:
+        counts = progressive.setdefault(row["source"], [0] * len(rules))
+        for i in range(len(rules)):
+            counts[i] += all(row[c] for c in rules[: i + 1])
+        assert row["passed"] == all(row[c] for c in (*rules, "pass_repetition"))
+    funnel = {
+        row["source"]: [row[c] for c in rules]
+        for row in resolve("quality_filter_funnel")(spark, sf_dir).collect()
+    }
+    assert progressive == funnel
+    n_passed = sum(row["passed"] for row in flags)
+    assert 0 < n_passed < len(flags)
 
 
 @pytest.mark.slow
@@ -493,204 +413,15 @@ def test_streaming_sessionization_matches_batch_session_windows(spark, tmp_path)
     assert required.count() > 0  # the assertion above actually bites
 
 
-@pytest.mark.slow
-def test_streaming_corpus_admission_matches_batch_and_is_stateless(spark, tmp_path):
-    """streaming_corpus_admission must (a) reproduce the batch
-    corpus_merge_increment rollup exactly across micro-batch boundaries and
-    (b) run with ZERO streaming state (pure stream-static joins + per-row
-    HOF verification — the property that makes admission latency independent
-    of corpus size)."""
-    from aws_flight_data_pipeline_spark.plans.registry import resolve
-    from aws_flight_data_pipeline_spark.streaming.streams import (
-        corpus_admission_index,
-        stream_documents,
-        streaming_corpus_admission,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    inc_sources = ("src18", "src19")
-    corpus = docs.where(~F.col("source").isin(*inc_sources))
-    fp_index, band_buckets = corpus_admission_index(corpus)
-
-    # each increment source lands as its own file => its own micro-batch
-    src = str(tmp_path / "incoming")
-    for s in inc_sources:
-        docs.where(F.col("source") == s).coalesce(1).write.mode("append").parquet(src)
-
-    admitted = streaming_corpus_admission(
-        stream_documents(spark, src), fp_index, band_buckets
-    )
-    q = _run_to_memory(admitted, "corpus_admission")
-    # zero-state pin: no stateful operators anywhere in the streaming plan
-    assert q.lastProgress["stateOperators"] == []
-
-    out = spark.sql("SELECT * FROM corpus_admission")
-    assert out.count() == docs.where(F.col("source").isin(*inc_sources)).count()
-
-    got = {
-        r["source"]: (
-            r["incoming_docs"],
-            r["exact_dup_docs"],
-            r["near_dup_docs"],
-            r["admitted_docs"],
-        )
-        for r in out.groupBy("source")
-        .agg(
-            F.count("*").alias("incoming_docs"),
-            F.sum(F.col("is_exact").cast("long")).alias("exact_dup_docs"),
-            # batch counts near-dups exclusive of exact dups
-            F.sum((F.col("is_near") & ~F.col("is_exact")).cast("long")).alias(
-                "near_dup_docs"
-            ),
-            F.sum(F.col("admitted").cast("long")).alias("admitted_docs"),
-        )
-        .collect()
-    }
-    want = {
-        r["source"]: (
-            r["incoming_docs"],
-            r["exact_dup_docs"],
-            r["near_dup_docs"],
-            r["admitted_docs"],
-        )
-        for r in resolve("corpus_merge_increment")(spark, sf_dir).collect()
-    }
-    assert got == want
-
-    # every flagged near-dup carries its verified corpus matches + a jaccard
-    flagged = out.where("is_near").collect()
-    for r in flagged:
-        assert len(r["near_matches"]) > 0 and r["best_jaccard"] >= 0.5
-
-
-
-@pytest.mark.slow
-def test_stateless_tier_admits_cross_batch_near_dups(spark, tmp_path):
-    """The frozen-index gap: with a static index, X (batch 1) and its near
-    and exact copies (batch 2) are ALL admitted — nothing rejects a doc
-    against an earlier micro-batch. The learning gate that closes it is
-    pinned in tests/test_unified_admission.py."""
-    import time
-
-    from aws_flight_data_pipeline_spark.streaming.streams import (
-        corpus_admission_index,
-        stream_documents,
-        streaming_corpus_admission,
-    )
-
-    # X_NEAR changes the last of 40 distinct tokens (shingle Jaccard 35/41,
-    # both LSH bands collide); batch 2 also repeats X byte for byte
-    x = " ".join(f"novel{i:02d}" for i in range(40))
-    x_near = " ".join(("changed" if i == 39 else f"novel{i:02d}") for i in range(40))
-    t_corp = " ".join(f"corpus{i:02d}" for i in range(40))
-    rows = [(i, f"background text block {i} " * 5, "base") for i in range(1, 6)]
-    corpus = spark.createDataFrame(
-        rows + [(6, t_corp, "base")], "doc_id long, text string, source string"
-    )
-    fp_index, band_buckets = corpus_admission_index(corpus)
-
-    # two parquet files = two micro-batches, mtimes forced into order
-    src = str(tmp_path / "incoming")
-    for b, batch in enumerate(
-        ([(101, x, "inc"), (102, t_corp, "inc")], [(201, x_near, "inc"), (202, x, "inc")])
-    ):
-        spark.createDataFrame(
-            batch, "doc_id long, text string, source string"
-        ).coalesce(1).write.mode("append").parquet(src)
-        time.sleep(0.05)
-    files = sorted(
-        (os.path.getmtime(f"{src}/{f}"), f"{src}/{f}")
-        for f in os.listdir(src)
-        if f.endswith(".parquet")
-    )
-    now = time.time()
-    for i, (_, path) in enumerate(files):
-        os.utime(path, (now + i * 30, now + i * 30))
-
-    out = streaming_corpus_admission(
-        stream_documents(spark, src, max_files_per_trigger=1),
-        fp_index,
-        band_buckets,
-    )
-    _run_to_memory(out, "stateless_adm")
-    got = {
-        r["doc_id"]: (r["is_exact"], r["is_near"], r["admitted"], r["near_matches"])
-        for r in spark.sql("SELECT * FROM stateless_adm").collect()
-    }
-    assert got[101][2] and got[201][2] and got[202][2]  # all admitted (the gap)
-    # vs-corpus rejection still works (identical text is exact AND — with
-    # J=1 the bands always collide — a verified near-dup of corpus doc 6)
-    assert got[102] == (True, True, False, [6])
-
-def test_streaming_sketch_rollup_matches_batch_sketch(spark, tmp_path):
-    """HLL register-max merge is order-independent, so the stream's running
-    state after N micro-batches must estimate BIT-identically to one batch
-    sketch over the concatenated input — and land within the 5% contract of
-    the exact distinct count."""
-    from aws_flight_data_pipeline_spark.functions.text import fingerprint
-    from aws_flight_data_pipeline_spark.sources import versioned as vt
-    from aws_flight_data_pipeline_spark.streaming.streams import (
-        sketch_rollup_estimate,
-        stream_documents,
-        streaming_sketch_rollup,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    src = str(tmp_path / "incoming")
-    # three arrival chunks -> three files; max_files_per_trigger=1 makes
-    # each one its own micro-batch
-    docs.filter(F.col("doc_id") % 3 == 0).coalesce(1).write.mode("append").parquet(src)
-    docs.filter(F.col("doc_id") % 3 == 1).coalesce(1).write.mode("append").parquet(src)
-    docs.filter(F.col("doc_id") % 3 == 2).coalesce(1).write.mode("append").parquet(src)
-
-    state = str(tmp_path / "sketch_state")
-    q = streaming_sketch_rollup(
-        stream_documents(spark, src, max_files_per_trigger=1),
-        state,
-        str(tmp_path / "ckpt"),
-    )
-    drain(q, 120)
-
-    final = vt.read(spark, state)
-    est = {
-        r["scope"]: (r["n_rows"], r["distinct_est"])
-        for r in sketch_rollup_estimate(final).collect()
-    }
-
-    batch = docs.groupBy("source").agg(
-        F.hll_sketch_estimate(
-            F.hll_sketch_agg(fingerprint(F.col("text")), F.lit(12))
-        ).alias("est"),
-        F.count("*").alias("n"),
-        F.countDistinct(fingerprint(F.col("text"))).alias("exact"),
-    )
-    for r in batch.collect():
-        n_rows, stream_est = est[r["source"]]
-        assert n_rows == r["n"]
-        assert stream_est == r["est"]  # bit-identical to the batch sketch
-        assert abs(stream_est - r["exact"]) <= 0.05 * r["exact"]
-
-    g_exact = docs.select(fingerprint(F.col("text"))).distinct().count()
-    g_rows, g_est = est["GLOBAL"]
-    assert g_rows == docs.count()
-    assert abs(g_est - g_exact) <= 0.05 * g_exact
-
-    # one state version per non-empty micro-batch, each a tiny file set
-    assert [vt._read_manifest(state, v)["batch_id"] for v in vt._list_versions(state)] == [0, 1, 2]
-
-
 def test_sketch_rollup_replay_of_committed_batch_is_skipped(spark, sf_dir, tmp_path):
     """A crash after the state commit but before the offset commit replays
-    the batch on restart; the replay must be skipped, so the state keeps
-    its bytes, ``n_rows`` is not doubled and the estimates stay the batch
-    sketch's, bit for bit."""
+    the batch on restart; the stream commit path's batch stamp must skip
+    the replay, so the state keeps its bytes, ``n_rows`` is not doubled and
+    the estimates stay the batch sketch's, bit for bit. The state is a
+    per-source HLL sketch rollup, committed by a foreachBatch local to this
+    test through ``versioned.commit_stream_batch``."""
     from aws_flight_data_pipeline_spark.functions.text import fingerprint
     from aws_flight_data_pipeline_spark.sources import versioned as vt
-    from aws_flight_data_pipeline_spark.streaming.streams import (
-        stream_documents,
-        streaming_sketch_rollup,
-    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     src, state, ckpt = (str(tmp_path / d) for d in ("incoming", "state", "ckpt"))
@@ -699,9 +430,24 @@ def test_sketch_rollup_replay_of_committed_batch_is_skipped(spark, sf_dir, tmp_p
             "append"
         ).parquet(src)
 
+    def rollup(batch_df, batch_id):
+        if vt._batch_committed(state, batch_id) or batch_df.isEmpty():
+            return
+        merged = batch_df.groupBy("source").agg(
+            F.hll_sketch_agg(fingerprint(F.col("text")), F.lit(12)).alias("sk"),
+            F.count("*").alias("n_rows"),
+        )
+        if vt.latest_version(state) is not None:
+            merged = merged.unionByName(vt.read(spark, state))
+        merged = merged.groupBy("source").agg(
+            F.hll_union_agg("sk", F.lit(False)).alias("sk"),
+            F.sum("n_rows").cast("bigint").alias("n_rows"),
+        )
+        vt.commit_stream_batch(merged.coalesce(1), batch_id, state, mode="overwrite")
+
     def run():
-        q = streaming_sketch_rollup(
-            stream_documents(spark, src, max_files_per_trigger=1), state, ckpt
+        q = vt._start_foreach_batch(
+            stream_documents(spark, src, max_files_per_trigger=1), rollup, ckpt, None
         )
         drain(q, 120)
         return q
@@ -740,56 +486,3 @@ def test_sketch_rollup_replay_of_committed_batch_is_skipped(spark, sf_dir, tmp_p
         .collect()
     }
     assert {s: (n, est) for s, (n, _, est) in after.items()} == batch
-
-
-@pytest.mark.slow
-def test_streaming_heavy_hitters_matches_batch_sketch(spark, tmp_path):
-    """CMS tables merge by addition, so the stream's merged sketch must be
-    BYTE-identical to one batch sketch over the concatenated input; the
-    maintained candidate set must surface the true heavy hitters with
-    estimates inside the eps bound."""
-    from aws_flight_data_pipeline_spark.streaming.streams import (
-        heavy_hitter_snapshot,
-        stream_documents,
-        streaming_heavy_hitters,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    src = str(tmp_path / "incoming")
-    for i in range(3):
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    state = str(tmp_path / "hh_state")
-    q = streaming_heavy_hitters(
-        stream_documents(spark, src, max_files_per_trigger=1),
-        state,
-        str(tmp_path / "ckpt"),
-    )
-    drain(q, 120)
-
-    from aws_flight_data_pipeline_spark.sources import versioned as vt
-
-    final = vt.read(spark, state)
-    row = final.first()
-
-    tok = docs.select(F.explode(F.split("text", " ")).alias("token"))
-    batch_cms, n_tok = tok.agg(
-        F.count_min_sketch("token", F.lit(0.001), F.lit(0.99), F.lit(42)),
-        F.count("*"),
-    ).first()
-    assert bytes(row["cms"]) == bytes(batch_cms)  # merge == batch, bitwise
-    assert row["total_tokens"] == n_tok
-
-    snap = {r["token"]: r["cms_est"] for r in heavy_hitter_snapshot(final, 20).collect()}
-    exact = {
-        r["token"]: r["c"]
-        for r in tok.groupBy("token").agg(F.count("*").alias("c")).collect()
-    }
-    bound = -(-n_tok // 1000)  # ceil(eps * n)
-    for t, est in snap.items():
-        assert exact[t] <= est <= exact[t] + bound
-    # the true top-10 tokens must all have been caught by the candidate flow
-    top10 = sorted(exact.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    assert {t for t, _ in top10} <= set(snap)

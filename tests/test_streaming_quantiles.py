@@ -1,11 +1,13 @@
-"""Streaming DDSketch quantile rollup: stream==batch EXACT equality.
+"""The versioned table's stream commit path under a mergeable state.
 
-Integer bucket counts merge by addition, so unlike the HLL/CMS tiers
-(bit-identical by register-max/table-add structure) the streamed state must
-EQUAL the batch histogram row-for-row — the strongest stream/batch
-invariance in the state family. Replay safety (each batch merges into the
-state committed before it) is pinned by time-traveling to an intermediate
-version, and by a crash injected into a state write.
+A DDSketch rollup (integer bucket counts, merged by addition) is folded
+per micro-batch by a foreachBatch local to these tests: each batch adds its
+histogram to the state table's head and commits the sum as one
+batch-stamped overwrite through ``versioned.commit_stream_batch``, and a
+batch whose stamp is already committed is skipped whole. The tests pin what
+the commit path owes such a stream: ``vacuum`` under the state keeps reads
+and replay stamps intact, and a crash inside a state write leaves the last
+committed state readable and is folded in exactly once on restart.
 """
 
 from __future__ import annotations
@@ -16,12 +18,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
-from aws_flight_data_pipeline_spark.functions.quantiles import dd_histogram, dd_profile
+from aws_flight_data_pipeline_spark.functions.quantiles import dd_histogram
 from aws_flight_data_pipeline_spark.sources import versioned as vt
-from aws_flight_data_pipeline_spark.streaming.streams import (
-    quantile_rollup_snapshot,
-    streaming_quantile_rollup,
-)
 from tests.conftest import drain
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -31,64 +29,28 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_streaming_quantile_state_equals_batch_histogram(spark, tmp_path):
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
-        F.col("o_orderstatus").alias("scope"),
-        F.col("o_totalprice").alias("x"),
-        F.col("o_orderkey").alias("k"),
-    )
-    src = str(tmp_path / "incoming")
-    for chunk in range(3):
-        orders.filter(F.col("k") % 3 == chunk).drop("k").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
+def _quantile_rollup(spark, src: str, state: str, ckpt: str):
+    """Start the rollup over ``src``'s parquet drops, one drop per
+    micro-batch."""
+
+    def fold(batch_df, batch_id):
+        if vt._batch_committed(state, batch_id) or batch_df.isEmpty():
+            return
+        hist = dd_histogram(batch_df, "scope", "x")
+        if vt.latest_version(state) is not None:
+            hist = (
+                hist.unionByName(vt.read(spark, state))
+                .groupBy("scope", "j")
+                .agg(F.sum("c").cast("bigint").alias("c"))
+            )
+        vt.commit_stream_batch(hist.coalesce(1), batch_id, state, mode="overwrite")
 
     stream = (
         spark.readStream.schema("scope string, x double")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    state = str(tmp_path / "q_state")
-    q = streaming_quantile_rollup(stream, state, str(tmp_path / "ckpt"))
-    drain(q, 120)
-
-    # one state version per micro-batch
-    assert [vt._read_manifest(state, v)["batch_id"] for v in vt._list_versions(state)] == [0, 1, 2]
-
-    batch_hist = dd_histogram(orders.drop("k"), "scope", "x")
-    final = vt.read(spark, state)
-    assert _rows(final) == _rows(batch_hist)  # EXACT, row-for-row
-
-    # the profile read off the streamed state == the batch profile
-    assert _rows(quantile_rollup_snapshot(final)) == _rows(dd_profile(batch_hist))
-
-
-def test_intermediate_state_is_strictly_before_batch(spark, tmp_path):
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
-        F.col("o_orderstatus").alias("scope"),
-        F.col("o_totalprice").alias("x"),
-        F.col("o_orderkey").alias("k"),
-    )
-    src = str(tmp_path / "incoming")
-    for chunk in range(2):
-        orders.filter(F.col("k") % 2 == chunk).drop("k").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    stream = (
-        spark.readStream.schema("scope string, x double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    state = str(tmp_path / "q_state")
-    q = streaming_quantile_rollup(stream, state, str(tmp_path / "ckpt"))
-    drain(q, 120)
-
-    # a replay of batch 1 must see EXACTLY v0 = chunk 0's histogram — the
-    # guard that makes the at-least-once merge idempotent
-    v0 = vt.read(spark, state, version=0)
-    chunk0 = dd_histogram(orders.filter(F.col("k") % 2 == 0).drop("k"), "scope", "x")
-    assert _rows(v0) == _rows(chunk0)
-    assert vt._read_manifest(state, 0)["batch_id"] == 0
+    return vt._start_foreach_batch(stream, fold, ckpt, None)
 
 
 def test_state_version_pruning_keeps_reads_intact(spark, tmp_path):
@@ -102,14 +64,8 @@ def test_state_version_pruning_keeps_reads_intact(spark, tmp_path):
         orders.filter(F.col("k") % 4 == chunk).drop("k").coalesce(1).write.mode(
             "append"
         ).parquet(src)
-    stream = (
-        spark.readStream.schema("scope string, x double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     state = str(tmp_path / "q_state")
-    q = streaming_quantile_rollup(stream, state, str(tmp_path / "ckpt"))
-    drain(q, 120)
+    drain(_quantile_rollup(spark, src, state, str(tmp_path / "ckpt")), 120)
 
     before = _rows(vt.read(spark, state))
     stats = vt.vacuum(state, keep_last=2, min_age_seconds=0)
@@ -141,12 +97,7 @@ def test_crash_during_state_write_keeps_last_committed_state(
     src, state, ckpt = (str(tmp_path / d) for d in ("incoming", "q_state", "ckpt"))
 
     def run():
-        stream = (
-            spark.readStream.schema("scope string, x double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        return streaming_quantile_rollup(stream, state, ckpt)
+        return _quantile_rollup(spark, src, state, ckpt)
 
     for chunk in chunks[:2]:
         chunk.coalesce(1).write.mode("append").parquet(src)

@@ -27,11 +27,10 @@ from aws_flight_data_pipeline_spark.sources import invindex as ix
 from aws_flight_data_pipeline_spark.sources import versioned as vt
 from aws_flight_data_pipeline_spark.streaming.streams import (
     corpus_admission_index,
-    stream_documents,
     streaming_unified_admission_gate,
     unified_admission_decisions,
 )
-from tests.conftest import drain, persisted_rdd_ids
+from tests.conftest import drain, persisted_rdd_ids, stream_documents
 
 SCHEMA = "doc_id long, text string, source string, lang string"
 

@@ -9,7 +9,6 @@ import os
 import pytest
 
 from aws_flight_data_pipeline_spark.sources import versioned as vt
-from tests.conftest import drain
 
 
 @pytest.fixture()
@@ -179,29 +178,6 @@ def test_optimize_zorder_two_columns(spark, table):
     m = vt._read_manifest(table, vt.latest_version(table))
     some = next(iter(m["stats"].values()))
     assert set(some) == {"a", "b"}
-
-
-def test_streaming_sink_is_exactly_once(spark, table, tmp_path):
-    src = str(tmp_path / "incoming")
-    for lo in (0, 100, 200):
-        spark.range(lo, lo + 100).selectExpr("id").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    stream = (
-        spark.readStream.schema("id long").option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = vt.streaming_versioned_sink(stream, table, str(tmp_path / "ckpt"))
-    drain(q, 120)
-
-    assert vt.read(spark, table).count() == 300
-    assert len(vt._list_versions(table)) == 3
-    # at-least-once replay of an already-committed batch is a no-op
-    replay = spark.range(0, 100).selectExpr("id")
-    assert vt.commit_stream_batch(replay, 1, table) is None
-    assert vt.read(spark, table).count() == 300
-    # a NEW batch id commits
-    assert vt.commit_stream_batch(spark.range(300, 310).selectExpr("id"), 77, table) == 3
-    assert vt.read(spark, table).count() == 310
 
 
 def test_delete_where_rewrites_only_overlapping_files(spark, table):
