@@ -58,16 +58,3 @@ def grid_cell(lat: Column, lon: Column, degrees: float = 2.0) -> Column:
     glon = F.round(lon / degrees) * degrees
     return F.concat_ws("_", glat.cast("string"), glon.cast("string"))
 
-
-def region_code(lat: Column, lon: Column) -> Column:
-    """Lat/lon box region classification (`04:399-408`,
-    `flight_data_processor.py:167-179`)."""
-    return (
-        F.when((lat >= 25) & (lat <= 49) & (lon >= -125) & (lon <= -66), "North America")
-        .when((lat >= 36) & (lat <= 71) & (lon >= -10) & (lon <= 40), "Europe")
-        .when((lat >= 18) & (lat <= 54) & (lon >= 73) & (lon <= 135), "East Asia")
-        .when((lat >= -47) & (lat <= -10) & (lon >= 110) & (lon <= 180), "Oceania")
-        .when((lat >= -35) & (lat <= 37) & (lon >= -20) & (lon <= 52), "Africa")
-        .when((lat >= -56) & (lat <= 13) & (lon >= -82) & (lon <= -34), "South America")
-        .otherwise("Other")
-    )

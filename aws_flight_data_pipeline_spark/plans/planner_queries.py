@@ -1,5 +1,5 @@
-"""Stats-driven multi-join planning: the ANALYZE tier (footer row counts +
-per-column HLL NDV) ordering and strategizing a TPC-H Q5-shaped six-table
+"""Stats-driven multi-join planning: table statistics (footer row counts +
+per-column NDV) ordering and strategizing a TPC-H Q5-shaped six-table
 join over versioned tables.
 
 The reference hand-tunes join order and broadcast choice per query in SQL
@@ -8,18 +8,18 @@ put the small table on the build side); Catalyst automates that for plain
 parquet scans but its size-in-bytes estimates are wrong for manifest-pinned
 file lists (a versioned table's scan relation reports whatever files the
 manifest listed, with no NDV knowledge at all). ``plan_join_tree``
-(:mod:`..sources.table_stats`) closes that gap from maintained statistics:
+(:mod:`..sources.table_stats`) closes that gap from table statistics:
 exact footer row counts pick the fact table and the per-edge build side,
-HLL NDV drives the System-R output-cardinality estimate that orders the
+NDV (one session-cached ``approx_count_distinct`` pass over each table's
+files) drives the System-R output-cardinality estimate that orders the
 remaining joins greedily, and a cycle-closing predicate (Q5's
 ``c_nationkey = s_nationkey``) is deferred to a post-join filter instead of
 ever driving a fan-out join through a 25-value key.
 
 The builder runs the full episode — commit six projected versioned tables,
-ANALYZE the join keys (O(uncovered files), incremental by contract), plan,
-execute — and the oracle recomputes the same aggregate from the raw tables
-wholesale, so parity proves the stats-planned tree computes exactly the
-un-hinted join.
+estimate the join keys' NDV, plan, execute — and the oracle recomputes the
+same aggregate from the raw tables wholesale, so parity proves the
+stats-planned tree computes exactly the un-hinted join.
 """
 
 from __future__ import annotations
@@ -83,10 +83,10 @@ def _ensure_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
 
 
 def build_planned_join(spark: SparkSession, sf_dir: str):
-    """Ensure the six projected versioned tables, ANALYZE the join keys
-    (a no-op top-up after the first call), and return ``(joined_df,
-    plan_facts)`` from :func:`ts.plan_join_tree`. The Q5 region filter
-    rides the planner's ``filters`` input — filter-before-join as a
+    """Ensure the six projected versioned tables and return ``(joined_df,
+    plan_facts)`` from :func:`ts.plan_join_tree` (the join keys' NDV is
+    computed on the first call and cached for the session). The Q5 region
+    filter rides the planner's ``filters`` input — filter-before-join as a
     planning decision, not a hand-placed ``.where``. Shared by the
     builder query and the plan-shape tests."""
     paths = _ensure_tables(spark, sf_dir)
@@ -104,9 +104,9 @@ def build_planned_join(spark: SparkSession, sf_dir: str):
     "stats_planned_join_tree",
     tags=("join", "planner", "stats", "versioned", "scale"),
     doc="TPC-H Q5-shaped six-table join over VERSIONED tables, ordered and "
-    "strategized by the ANALYZE tier instead of Catalyst's size guesses: "
+    "strategized by table statistics instead of Catalyst's size guesses: "
     "footer row counts pick lineitem as the fact (never broadcast) and "
-    "broadcast every true dimension; HLL NDV estimates order the edges "
+    "broadcast every true dimension; NDV estimates order the edges "
     "most-reducing-first; the cyclic c_nationkey = s_nationkey predicate "
     "lands as a post-join filter (greedy defers it — joining through a "
     "25-value key would fan out ~40x, and the estimator sees that). "

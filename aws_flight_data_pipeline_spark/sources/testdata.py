@@ -54,11 +54,6 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # (lineitem/orders/events) never fan out: +2.3 s over a 16-query slice.
 _FAN_OUT_TABLES = {"documents": "doc_id", "embeddings": "vec_id"}
 
-#: Module toggle: the plan-shape tests disable fan-out to pin the shapes a
-#: properly-laid-out (multi-split) lake produces — the single-split
-#: compensation exchange is not part of the at-scale plan contract.
-FAN_OUT_ENABLED = True
-
 #: (sf_dir, table) -> bool, computed once per process: probing the scan's
 #: split count costs a physical-plan round trip, which multi-stage pipelines
 #: that re-load the same table would otherwise pay on every plan build.
@@ -112,7 +107,7 @@ def load_table(
             # normalize to session-local TIMESTAMP (UTC pinned above) so epoch
             # arithmetic (cast to double/long) keeps working identically.
             df = df.withColumn(col, F.col(col).cast("timestamp"))
-    if FAN_OUT_ENABLED and fan_out and name in _FAN_OUT_TABLES:
+    if fan_out and name in _FAN_OUT_TABLES:
         df = _fan_out(df, sf_dir, name, _FAN_OUT_TABLES[name])
     return df
 

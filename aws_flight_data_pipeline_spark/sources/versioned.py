@@ -858,13 +858,8 @@ def _batch_committed(path: str, batch_id: int) -> bool:
     return m is not None and m.get("batch_id") is not None and batch_id <= m["batch_id"]
 
 
-def commit_stream_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    path: str,
-    mode: str = "append",
-) -> int | None:
-    """Idempotent per-micro-batch commit: the manifest is stamped with
+def commit_stream_batch(batch_df: DataFrame, batch_id: int, path: str) -> int | None:
+    """Idempotent per-micro-batch append: the manifest is stamped with
     ``batch_id``, atomically with the data, and every later commit
     inherits the stamp, so a replay of an already-committed batch is a
     no-op — foreachBatch's at-least-once delivery becomes an EXACTLY-ONCE
@@ -873,7 +868,7 @@ def commit_stream_batch(
     only unreferenced files (vacuum garbage), never duplicate rows."""
     if _batch_committed(path, batch_id):
         return None
-    return commit(batch_df, path, mode=mode, meta={"batch_id": int(batch_id)})
+    return commit(batch_df, path, meta={"batch_id": int(batch_id)})
 
 
 def _start_foreach_batch(

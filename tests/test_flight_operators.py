@@ -7,8 +7,6 @@ now=1693401600 ≈ 2023-08-30T12:40Z).
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F

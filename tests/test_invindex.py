@@ -7,7 +7,6 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from aws_flight_data_pipeline_spark.sources import invindex as ix
 from aws_flight_data_pipeline_spark.sources import versioned as vt

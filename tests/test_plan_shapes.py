@@ -22,14 +22,12 @@ _ensure_loaded()
 
 
 @pytest.fixture(autouse=True)
-def _lake_layout_plans():
+def _lake_layout_plans(monkeypatch):
     """Pin the shapes a multi-split lake produces: the single-split fan-out
     exchange (a local-testdata compensation, absent at scale) would otherwise
     show up in every documents/embeddings plan and mask real shuffle
     regressions behind a fixed +1."""
-    testdata.FAN_OUT_ENABLED = False
-    yield
-    testdata.FAN_OUT_ENABLED = True
+    monkeypatch.setattr(testdata, "_FAN_OUT_TABLES", {})
 
 
 def _plan(spark, sf_dir, name: str, mode: str = "formatted") -> str:

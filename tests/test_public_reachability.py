@@ -8,9 +8,11 @@ with ``_``; ``@query`` / ``@builder`` functions are exempt (the registry
 reaches them, and ``test_every_builder_is_reached`` covers builders). A
 name is reached when a non-test source refers to it outside its own body:
 an ``ast.Name`` or ``ast.Attribute`` node, an import alias, or a string
-constant equal to the name. Docstrings, comments and ``__all__`` do not
-count. The non-test sources are the package, ``bench.py``,
-``bench_scaling.py``, ``__spark_entry__.py`` and ``perfbench/*.py``."""
+constant equal to the name. Only the defining module and the modules that
+import it count, so one module's name cannot hide another's. Docstrings,
+comments and ``__all__`` do not count. The non-test sources are the
+package, ``bench.py``, ``bench_scaling.py``, ``__spark_entry__.py`` and
+``perfbench/*.py``."""
 
 from __future__ import annotations
 
@@ -62,13 +64,14 @@ ALLOWLIST: dict[str, str] = {
     "sliding_realtime_metrics": "the last-4-hours view as a stream (sql/athena/06:512-515)",
     "stateful_stuck_detector": "the stuck-aircraft history (anomaly_detector.py:656-681)",
     "streaming_sessionization": "per-key batch state as sessions (main_validator.py:108-153)",
+    "bearing_cardinal": "the bearing CASE (sql/athena/05:170-180); the twin of its SQL function",
+    "grid_cell": "the 2-degree geo grid (sql/athena/04:331-336); the twin of its SQL function",
     # -- owned by an open ROADMAP direction --
     "vacuum": "ROADMAP directions 4, 9, 13: the table's retention, reworked with the manifest",
     "optimize": "ROADMAP directions 4, 9, 13: folds tombstones, compacts the table",
     "rollback": "ROADMAP directions 4, 9, 13: restores a version over the manifest",
     "history": "ROADMAP directions 4, 9, 13: lists the manifest chain",
     "compact_index": "ROADMAP direction 4: folds the index tombstones into one mechanism",
-    "prune": "ROADMAP direction 6: deleted when the HLL registers ride the manifest",
     "streaming_unified_admission_gate": "ROADMAP direction 13: its append-per-batch workload",
 }
 
@@ -107,6 +110,29 @@ def _references(tree: ast.AST) -> list[tuple[str, int]]:
     return refs
 
 
+def _module_name(path: pathlib.Path, root: pathlib.Path) -> str:
+    parts = path.relative_to(root).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imports(tree: ast.AST, module: str, is_package: bool) -> set[str]:
+    """Dotted names of the modules ``tree`` imports, anywhere in the file;
+    ``from X import y`` adds ``X`` and ``X.y`` (``y`` may be a module)."""
+    package = module.split(".") if is_package else module.split(".")[:-1]
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out |= {a.name for a in node.names}
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parent = package[: len(package) - node.level + 1]
+                base = ".".join([*parent, *([node.module] if node.module else [])])
+            out.add(base)
+            out |= {f"{base}.{a.name}" for a in node.names}
+    return out
+
+
 def _registered(node: ast.AST) -> bool:
     for dec in getattr(node, "decorator_list", []):
         fn = dec.func if isinstance(dec, ast.Call) else dec
@@ -118,12 +144,15 @@ def _registered(node: ast.AST) -> bool:
 def unreached(package: pathlib.Path, callers: list[pathlib.Path]) -> list[str]:
     """``module:line name`` of each public top-level def or class in
     ``package`` that nothing in ``package`` or ``callers`` refers to outside
-    its own body."""
+    its own body, counting only the defining module and its importers."""
     modules = sorted(package.rglob("*.py"))
     trees = {p: ast.parse(p.read_text()) for p in [*modules, *callers]}
     refs = {p: _references(t) for p, t in trees.items()}
+    names = {p: _module_name(p, package.parent) for p in trees}
+    imports = {p: _imports(t, names[p], p.name == "__init__.py") for p, t in trees.items()}
     out = []
     for path in modules:
+        readers = [p for p in trees if p == path or names[path] in imports[p]]
         for node in trees[path].body:
             if (
                 not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
@@ -133,8 +162,8 @@ def unreached(package: pathlib.Path, callers: list[pathlib.Path]) -> list[str]:
                 continue
             if not any(
                 name == node.name and not (p == path and node.lineno <= line <= node.end_lineno)
-                for p, rs in refs.items()
-                for name, line in rs
+                for p in readers
+                for name, line in refs[p]
             ):
                 out.append(f"{path.relative_to(package.parent)}:{node.lineno} {node.name}")
     return out
@@ -179,3 +208,20 @@ def test_gate_reports_a_test_only_function(tmp_path):
         "pkg/mod.py:5 only_in_docstring",
         "pkg/mod.py:7 test_only",
     ]
+
+
+def test_gate_counts_only_the_defining_module_and_its_importers(tmp_path):
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "a.py").write_text("def shared():\n    return 1\n")
+    (pkg / "b.py").write_text("def shared():\n    return 2\n")
+    (pkg / "c.py").write_text(
+        "from . import a\n"
+        "def run():\n"
+        "    return a.shared()\n"
+    )
+    caller = tmp_path / "main.py"
+    caller.write_text("from pkg.c import run\nprint(run(), 'shared')\n")
+    # b.shared shares a's name, but nothing that refers to it imports b
+    assert unreached(pkg, [caller]) == ["pkg/b.py:1 shared"]

@@ -6,7 +6,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from aws_flight_data_pipeline_spark.operators.enrich import enrich
 from aws_flight_data_pipeline_spark.operators.quality import (
     batch_quality_summary,
     evaluate_alerts,

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
-
 from aws_flight_data_pipeline_spark.plans.sequences import seq_resample_grid
 
 

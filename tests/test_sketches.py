@@ -11,7 +11,6 @@ fails immediately under that bug.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from aws_flight_data_pipeline_spark.functions.sketches import (

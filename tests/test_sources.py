@@ -149,7 +149,6 @@ def test_single_split_scan_fans_out_to_all_cores(spark, sf_dir):
     # exchange than they gain — see testdata._FAN_OUT_TABLES).
     from aws_flight_data_pipeline_spark.sources import testdata
 
-    assert testdata.FAN_OUT_ENABLED
     d = testdata.load_table(spark, sf_dir, "documents", fan_out=True)
     raw = testdata.load_table(spark, sf_dir, "documents")
     if raw.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism:

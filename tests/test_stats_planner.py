@@ -5,6 +5,10 @@ the unhinted join."""
 
 from __future__ import annotations
 
+import os
+
+from pyspark.sql import functions as F
+
 from aws_flight_data_pipeline_spark.sources import table_stats as ts
 from aws_flight_data_pipeline_spark.sources import versioned as vt
 from aws_flight_data_pipeline_spark.sources.testdata import load_table
@@ -32,8 +36,8 @@ def _mk(spark, tmp_path):
 
 def test_row_count_is_exact_without_scan(spark, tmp_path):
     op, cp, orders, cust = _mk(spark, tmp_path)
-    assert ts.row_count(op) == orders.count()
-    assert ts.row_count(cp) == cust.count()
+    assert ts._Relation("orders", op).rows() == orders.count()
+    assert ts._Relation("cust", cp).rows() == cust.count()
 
 
 def _mk_q5(spark, tmp_path, sf=SF):
@@ -144,7 +148,7 @@ def test_filter_aware_rows_flip_broadcast_decision(spark, tmp_path):
     vt.commit(
         orders.repartitionByRange(4, "o_orderkey"), op, stats_cols=("o_orderkey",)
     )
-    n_orders = ts.row_count(op)
+    n_orders = ts._Relation("orders", op).rows()
     hi = 300  # a narrow head range: prunes to the first range file
     tables = {"lineitem": lp, "orders": op}
     edges = [("lineitem", "l_orderkey", "orders", "o_orderkey")]
@@ -274,7 +278,7 @@ def test_edges_from_predicates_resolution_and_errors():
         ts.edges_from_predicates(["l_orderkey < o_orderkey"], cols)
 
 
-def test_plain_parquet_relation_rows_read_ndv(spark):
+def test_plain_parquet_relation_rows_read_ndv(spark, tmp_path):
     # raw single-file parquet: footer count exact, filters apply as row
     # filters, select-spec renames project, NDV comes from the on-demand
     # session cache (second call must not rescan — same dict object)
@@ -303,6 +307,38 @@ def test_plain_parquet_relation_rows_read_ndv(spark):
     assert ndv1 == ndv2
     n = load_table(spark, SF, "orders").count()
     assert 0.8 * n <= ndv1["key"] <= 1.2 * n  # near-unique key, HLL++ error
+
+    # a versioned table takes the same pass over its head manifest's files:
+    # within 20% of the true distinct counts, exact for a tiny-cardinality
+    # column, and 0 for an all-NULL one
+    path = str(tmp_path / "orders_v")
+    cols = ("o_orderkey", "o_custkey", "o_orderstatus")
+    orders = load_table(spark, SF, "orders").select(*cols).withColumn(
+        "payload", F.lit(None).cast("string")
+    )
+    vt.commit(orders.repartition(4), path)
+    rel = ts._Relation("orders_v", path)
+    assert rel.versioned is True
+    est = rel.ndv(spark, (*cols, "payload"))
+    truth = {c: orders.select(c).distinct().count() for c in cols}
+    for c in cols:
+        assert abs(est[c] - truth[c]) <= max(0.2 * truth[c], 1), (c, est[c], truth[c])
+    assert est["o_orderstatus"] == truth["o_orderstatus"]
+    assert est["payload"] == 0
+    # the planner writes nothing beside the table
+    assert not os.path.exists(os.path.join(path, "_stats"))
+
+
+def test_versioned_ndv_follows_an_append(spark, tmp_path):
+    # a commit names new files, so the head manifest's file set — the
+    # session cache's key — changes, and the estimate sees the new keys
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(i, i % 10) for i in range(200)], "id bigint, k bigint")
+    vt.commit(df.repartition(2), path)
+    rel = ts._Relation("t", path)
+    assert rel.ndv(spark, ("k",)) == {"k": 10}
+    vt.commit(df.selectExpr("id", "k + 10 AS k").repartition(2), path, mode="append")
+    assert rel.ndv(spark, ("k",)) == {"k": 20}
 
 
 def test_planned_q8_matches_hand_tuned_production_query(spark):

@@ -419,7 +419,7 @@ def test_sketch_rollup_replay_of_committed_batch_is_skipped(spark, sf_dir, tmp_p
     the replay, so the state keeps its bytes, ``n_rows`` is not doubled and
     the estimates stay the batch sketch's, bit for bit. The state is a
     per-source HLL sketch rollup, committed by a foreachBatch local to this
-    test through ``versioned.commit_stream_batch``."""
+    test as a batch-stamped ``versioned.commit`` overwrite."""
     from aws_flight_data_pipeline_spark.functions.text import fingerprint
     from aws_flight_data_pipeline_spark.sources import versioned as vt
 
@@ -443,7 +443,7 @@ def test_sketch_rollup_replay_of_committed_batch_is_skipped(spark, sf_dir, tmp_p
             F.hll_union_agg("sk", F.lit(False)).alias("sk"),
             F.sum("n_rows").cast("bigint").alias("n_rows"),
         )
-        vt.commit_stream_batch(merged.coalesce(1), batch_id, state, mode="overwrite")
+        vt.commit(merged.coalesce(1), state, mode="overwrite", meta={"batch_id": batch_id})
 
     def run():
         q = vt._start_foreach_batch(

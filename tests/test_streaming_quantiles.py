@@ -3,7 +3,7 @@
 A DDSketch rollup (integer bucket counts, merged by addition) is folded
 per micro-batch by a foreachBatch local to these tests: each batch adds its
 histogram to the state table's head and commits the sum as one
-batch-stamped overwrite through ``versioned.commit_stream_batch``, and a
+batch-stamped ``versioned.commit`` overwrite, and a
 batch whose stamp is already committed is skipped whole. The tests pin what
 the commit path owes such a stream: ``vacuum`` under the state keeps reads
 and replay stamps intact, and a crash inside a state write leaves the last
@@ -43,7 +43,7 @@ def _quantile_rollup(spark, src: str, state: str, ckpt: str):
                 .groupBy("scope", "j")
                 .agg(F.sum("c").cast("bigint").alias("c"))
             )
-        vt.commit_stream_batch(hist.coalesce(1), batch_id, state, mode="overwrite")
+        vt.commit(hist.coalesce(1), state, mode="overwrite", meta={"batch_id": batch_id})
 
     stream = (
         spark.readStream.schema("scope string, x double")

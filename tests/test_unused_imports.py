@@ -1,4 +1,5 @@
-"""Lint gate: no package module keeps a top-level import it never uses.
+"""Lint gate: no package module or test file keeps a top-level import it
+never uses.
 
 The container ships no pyflakes or ruff, so this is the F401 subset as a
 plain ``ast`` pass: a name bound by a module-level ``import`` / ``from
@@ -11,7 +12,9 @@ from __future__ import annotations
 import ast
 import pathlib
 
-PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "aws_flight_data_pipeline_spark"
+REPO = pathlib.Path(__file__).resolve().parents[1]
+PACKAGE = REPO / "aws_flight_data_pipeline_spark"
+TESTS = REPO / "tests"
 
 
 def _unused_imports(path: pathlib.Path) -> list[str]:
@@ -34,13 +37,12 @@ def _unused_imports(path: pathlib.Path) -> list[str]:
             isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
         ):
             used |= {e.value for e in node.value.elts if isinstance(e, ast.Constant)}
-    return [f"{path.relative_to(PACKAGE.parent)}:{line} {name}"
+    return [f"{path.relative_to(REPO)}:{line} {name}"
             for name, line in sorted(bound.items(), key=lambda kv: kv[1])
             if name not in used]
 
 
 def test_no_unused_top_level_imports():
-    offenders = [
-        hit for path in sorted(PACKAGE.rglob("*.py")) for hit in _unused_imports(path)
-    ]
+    paths = [*sorted(PACKAGE.rglob("*.py")), *sorted(TESTS.glob("*.py"))]
+    offenders = [hit for path in paths for hit in _unused_imports(path)]
     assert offenders == []
