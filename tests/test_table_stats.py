@@ -1,7 +1,7 @@
-"""ANALYZE (per-file HLL NDV) contracts: accuracy against true distinct
-counts, O(churn) incrementality (append sketches only new files, and the
-merged estimate is bit-identical to a from-scratch analyze), and honest
-coverage reporting after a rewrite invalidates nothing but ADDS files."""
+"""NDV contracts of the planner's one statistics mechanism: a versioned
+table's distinct counts come from the session-cached approx_count_distinct
+pass over its head manifest's files, accurate against true distinct counts,
+0 for an all-NULL column, and nothing is written beside the table."""
 
 from __future__ import annotations
 
@@ -16,73 +16,21 @@ SF = "/root/testdata/sf0.001"
 
 def test_ndv_accuracy_and_nulls(spark, tmp_path):
     path = str(tmp_path / "t")
-    orders = load_table(spark, SF, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus"
-    )
+    cols = ("o_orderkey", "o_custkey", "o_orderstatus")
+    orders = load_table(spark, SF, "orders").select(*cols)
     vt.commit(orders.repartition(4), path)
-    res = ts.analyze(spark, path, ("o_orderkey", "o_custkey", "o_orderstatus"))
-    assert res["files_sketched"] == res["files_total"] > 0
+    rel = ts._Relation("orders", path)
+    assert rel.versioned is True
 
-    stats = ts.column_stats(path, ("o_orderkey", "o_custkey", "o_orderstatus"))
-    truth = {
-        c: orders.select(c).distinct().count()
-        for c in ("o_orderkey", "o_custkey", "o_orderstatus")
-    }
+    est = rel.ndv(spark, cols)
+    truth = {c: orders.select(c).distinct().count() for c in cols}
     for c, t in truth.items():
-        assert stats[c]["complete"]
-        est = stats[c]["ndv"]
-        # m=256 -> ~6.5% standard error; allow 3 sigma (and exactness for
-        # the tiny-cardinality status column via linear counting)
-        assert abs(est - t) <= max(0.2 * t, 1), (c, est, t)
-    assert stats["o_orderstatus"]["ndv"] == truth["o_orderstatus"]
-
-
-def test_incremental_equals_from_scratch(spark, tmp_path):
-    src = load_table(spark, SF, "orders").select("o_orderkey", "o_custkey")
-    first = src.where("o_orderkey % 2 = 0")
-    second = src.where("o_orderkey % 2 = 1")
-
-    inc = str(tmp_path / "inc")
-    vt.commit(first.repartition(3), inc)
-    ts.analyze(spark, inc, ("o_custkey",))
-    vt.commit(second.repartition(3), inc, mode="append")
-    res = ts.analyze(spark, inc, ("o_custkey",))
-    assert res["files_sketched"] == 3  # only the appended files
-    assert res["files_total"] == 6
-
-    scratch = str(tmp_path / "scratch")
-    vt.commit(first.repartition(3), scratch)
-    vt.commit(second.repartition(3), scratch, mode="append")
-    ts.analyze(spark, scratch, ("o_custkey",))
-
-    a = ts.column_stats(inc, ("o_custkey",))["o_custkey"]
-    b = ts.column_stats(scratch, ("o_custkey",))["o_custkey"]
-    assert a["complete"] and b["complete"]
-    # incremental maintenance must not drift: identical estimate, since
-    # per-file registers are independent of when they were computed.
-    # (file contents differ only by repartition task order; both tables
-    # hold the same rows, and the merged registers see the same value set)
-    assert a["ndv"] == b["ndv"]
-
-
-def test_rewrite_reports_incomplete_then_tops_up(spark, tmp_path):
-    path = str(tmp_path / "t")
-    orders = load_table(spark, SF, "orders").select("o_orderkey", "o_custkey")
-    vt.commit(orders.repartition(2), path, stats_cols=("o_orderkey",))
-    ts.analyze(spark, path, ("o_custkey",))
-    assert ts.column_stats(path, ("o_custkey",))["o_custkey"]["complete"]
-
-    # a rewrite (DELETE) produces NEW files the sketch store has not seen
-    hi = orders.agg({"o_orderkey": "max"}).first()[0]
-    vt.delete_where(spark, path, {"o_orderkey": (hi, hi)})
-    after = ts.column_stats(path, ("o_custkey",))["o_custkey"]
-    assert not after["complete"]
-    assert after["files_covered"] < after["files_total"]
-
-    res = ts.analyze(spark, path, ("o_custkey",))
-    assert 0 < res["files_sketched"] <= res["files_total"]
-    topped = ts.column_stats(path, ("o_custkey",))["o_custkey"]
-    assert topped["complete"] and topped["ndv"] is not None
+        # HLL++ error stays well inside 20%; the tiny-cardinality status
+        # column is counted exactly
+        assert abs(est[c] - t) <= max(0.2 * t, 1), (c, est[c], t)
+    assert est["o_orderstatus"] == truth["o_orderstatus"]
+    # the planner writes nothing beside the table
+    assert not os.path.exists(os.path.join(path, "_stats"))
 
 
 def test_all_null_column_is_zero(spark, tmp_path):
@@ -91,22 +39,4 @@ def test_all_null_column_is_zero(spark, tmp_path):
         [(i, None) for i in range(100)], "id bigint, payload string"
     )
     vt.commit(df.repartition(2), path)
-    ts.analyze(spark, path, ("payload",))
-    st = ts.column_stats(path, ("payload",))["payload"]
-    assert st["complete"] and st["ndv"] == 0
-
-
-def test_prune_drops_only_unreferenced_sketches(spark, tmp_path):
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame([(i, i % 7) for i in range(200)], "id bigint, k bigint")
-    vt.commit(df.repartition(2), path)
-    ts.analyze(spark, path, ("k",))
-    # overwrite makes v0's files unreferenced once history is vacuumed
-    vt.commit(df.where("id < 100").repartition(2), path, mode="overwrite")
-    ts.analyze(spark, path, ("k",))
-    assert ts.prune(path) == {"pruned": 0, "kept": 4}  # v0 still time-travelable
-    vt.vacuum(path, keep_last=1, min_age_seconds=0.0)
-    res = ts.prune(path)
-    assert res == {"pruned": 2, "kept": 2}
-    st = ts.column_stats(path, ("k",))["k"]
-    assert st["complete"] and st["ndv"] == 7
+    assert ts._Relation("t", path).ndv(spark, ("payload",)) == {"payload": 0}
